@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions.{current_timestamp, lit}
 import org.apache.spark.storage.StorageLevel
 
@@ -19,6 +19,10 @@ import graft.ops.Aggregations
   */
 object SilverToGold {
 
+  /** Full recompute-overwrite of the three gold tables from silver.
+    * The three sinks run concurrently, so a failure in one leaves the
+    * other two committed — rerun; do not trust partial gold.
+    */
   def run(spark: SparkSession, cfg: PipelineConfig): Unit = {
     val silver = Sources.silverParquet(spark, cfg.silverPath)
     // P7 — empty-input short-circuit (silver_to_gold.py:122-124)
@@ -50,6 +54,34 @@ object SilverToGold {
     } finally projected.unpersist()
   }
 
+  /** A silver-shaped batch staged ONCE (`localCheckpoint`), with the two
+    * facts the incremental path branches on observed on that same pass:
+    * its row count (the P6/P7 empty-batch test) and its touched
+    * (year, month) partitions (null keys excluded — P5 guard). Every
+    * consumer (silver append, gold maintenance) reads the checkpoint, so
+    * the bronze scan and the dedup shuffle run once per batch. The
+    * caller owns `rows` and unpersists it
+    * (`CheckpointUtils.unpersistLocalCheckpoint`).
+    */
+  final case class StagedBatch(rows: org.apache.spark.sql.DataFrame,
+      count: Long, pairs: Seq[(Int, Int)])
+
+  /** Stage `batch` (see [[StagedBatch]]): one job chain; the count and
+    * the touched-partition set ride the checkpoint job as observed
+    * metrics instead of separate `isEmpty` / `distinct().collect()` jobs.
+    */
+  def stage(batch: org.apache.spark.sql.DataFrame): StagedBatch = {
+    import org.apache.spark.sql.functions.{col, collect_set, count, struct, when}
+    val obs = org.apache.spark.sql.Observation()
+    val rows = batch.observe(obs, count(lit(1)).as("n"),
+        collect_set(when(col("year").isNotNull && col("month").isNotNull,
+          struct(col("year"), col("month")))).as("pairs"))
+      .localCheckpoint()
+    val pairs = obs.get("pairs").asInstanceOf[scala.collection.Seq[Row]]
+      .map(r => (r.getInt(0), r.getInt(1))).toSeq.sorted
+    StagedBatch(rows, obs.get("n").asInstanceOf[Long], pairs)
+  }
+
   /** PARTITION-RESTRICTED gold maintenance — the 100 TB path [[run]]'s
     * full recompute-overwrite cannot take: only the gold partitions the
     * just-ingested `batch` of silver rows touches are re-aggregated and
@@ -61,62 +93,83 @@ object SilverToGold {
     * partition), the same argument the reference's full overwrite relies
     * on, applied per partition.
     *
-    *  - Daily (y/m-partitioned): recompute the distinct (year, month)
-    *    pairs in `batch` from a silver scan STATICALLY pruned to those
-    *    partitions (the touched set is collected — bounded, a batch spans
-    *    a handful of months — and becomes partition-filter literals, so
-    *    the scan reads touched directories only).
-    *  - Monthly (year-partitioned): same with the touched years.
-    *  - Customer insights: a customer's metrics span all history, so this
-    *    is NOT partition-prunable — instead silver is semi-joined to the
-    *    batch's customer set (one scan, narrow output) and the resulting
-    *    rows key-merge into the customer table ([[Sinks.mergeGoldCustomer]]).
-    *
     * `batch` must be silver-shaped (the frame just appended — e.g.
-    * [[BronzeToSilver.transform]]'s output or the streaming ingest's
-    * micro-batch). Empty batch → no-op (P7 semantics).
+    * [[BronzeToSilver.transform]]'s output). It is staged once
+    * ([[stage]]); callers that already hold a [[StagedBatch]] (the
+    * streaming ingest) pass it directly. Empty batch → no-op (P7).
+    *
+    * FAILURE: the three sinks run concurrently, so a failure in one
+    * leaves the other two committed — rerun the same batch; do not trust
+    * partial gold. A rerun converges (spec-proven per failed sink).
     */
   def runIncremental(spark: SparkSession, cfg: PipelineConfig,
       batch: org.apache.spark.sql.DataFrame): Unit = {
+    val staged = stage(batch)
+    try runIncremental(spark, cfg, staged)
+    finally org.apache.spark.sql.graftx.CheckpointUtils
+      .unpersistLocalCheckpoint(staged.rows)
+  }
+
+  /** [[runIncremental]] over an already staged batch:
+    *
+    *  - Daily (y/m-partitioned): recompute the batch's touched (year,
+    *    month) pairs from a silver scan STATICALLY pruned to those
+    *    partitions (the observed touched set — bounded, a batch spans a
+    *    handful of months — becomes partition-filter literals, so the
+    *    scan reads touched directories only).
+    *  - Monthly (year-partitioned): same with the touched years.
+    *  - Customer insights: a customer's metrics span all history, so this
+    *    is NOT partition-prunable — instead silver is semi-joined to the
+    *    batch's customers (one scan, narrow output) and the resulting
+    *    rows key-merge into the customer table ([[Sinks.mergeGoldCustomer]]).
+    *    It runs even when every row has a null year/month (no touched
+    *    partition).
+    *
+    * The three sinks write three disjoint tables from silver as it stands
+    * after the batch's append, so they run concurrently (guide §2.6).
+    */
+  def runIncremental(spark: SparkSession, cfg: PipelineConfig,
+      staged: StagedBatch): Unit = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    if (batch.isEmpty) return
+    if (staged.count == 0L) return
     val silver = Sources.silverParquet(spark, cfg.silverPath)
     val createdAt = cfg.clock.map(t => lit(t)).getOrElse(current_timestamp())
-    // touched partitions: bounded driver state (P5 guard drops null keys)
-    val pairs = batch.select(col("year"), col("month")).distinct()
-      .filter("year IS NOT NULL AND month IS NOT NULL")
-      .collect().map(r => (r.getInt(0), r.getInt(1)))
-    if (pairs.nonEmpty) {
-      val years = pairs.map(_._1).distinct.toSeq
-      val ymPred = pairs.map { case (y, m) =>
-        col("year") === y && col("month") === m }.reduce(_ || _)
-      // one physical scan of the touched YEARS feeds both aggregates
-      // (monthly needs every month of a touched year; daily re-filters
-      // to the touched months)
-      val projected = silver.filter(col("year").isin(years: _*))
+    // one physical scan of the touched YEARS feeds both partition
+    // aggregates (monthly needs every month of a touched year; daily
+    // re-filters to the touched months); the block manager computes each
+    // cached partition once under a per-block lock, so the two concurrent
+    // consumers share it
+    val projected = if (staged.pairs.isEmpty) None else Some(
+      silver.filter(col("year").isin(staged.pairs.map(_._1).distinct: _*))
         .select("transaction_id", "customer_id", "amount",
           "transaction_date", "year", "month", "day")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val daily = Aggregations.daily(projected.filter(ymPred),
-            cfg.approxDistinct)
-          .withColumn("created_at", createdAt)
-        val monthly = Aggregations.monthly(projected, cfg.approxDistinct)
-          .withColumn("created_at", createdAt)
-        Sinks.overwriteGoldDailyPartitions(daily, cfg.goldDailyPath)
-        Sinks.overwriteGoldMonthlyPartitions(monthly, cfg.goldMonthlyPath)
-      } finally projected.unpersist()
+        .persist(StorageLevel.MEMORY_AND_DISK))
+    val partitionSinks = projected.toSeq.flatMap { p =>
+      val ymPred = staged.pairs.map { case (y, m) =>
+        col("year") === y && col("month") === m }.reduce(_ || _)
+      val daily = Aggregations.daily(p.filter(ymPred), cfg.approxDistinct)
+        .withColumn("created_at", createdAt)
+      val monthly = Aggregations.monthly(p, cfg.approxDistinct)
+        .withColumn("created_at", createdAt)
+      Seq(
+        () => Sinks.overwriteGoldDailyPartitions(daily, cfg.goldDailyPath),
+        () => Sinks.overwriteGoldMonthlyPartitions(monthly,
+          cfg.goldMonthlyPath))
     }
-    // customer insights for the batch's customers only, merged by key
-    val customers = batch.select(col("customer_id")).distinct()
+    // customer insights for the batch's customers only, merged by key;
+    // the broadcast semi-join build side ignores duplicate keys, so the
+    // batch's customer column needs no distinct (a shuffle job) first
     val touched = silver
-      .join(broadcast(customers), Seq("customer_id"), "left_semi")
+      .join(broadcast(staged.rows.select(col("customer_id"))),
+        Seq("customer_id"), "left_semi")
       .select("transaction_id", "customer_id", "amount", "transaction_date",
         "year", "month", "day")
     val insights = Aggregations.customerInsights(touched, cfg.approxDistinct)
       .withColumn("created_at", createdAt)
-    Sinks.mergeGoldCustomer(spark, insights, "customer_id",
-      cfg.goldCustomerPath)
+    try graft.orchestration.Par.run(partitionSinks :+ (() =>
+      Sinks.mergeGoldCustomer(spark, insights, "customer_id",
+        cfg.goldCustomerPath)))
+    finally projected.foreach(_.unpersist())
   }
 
   /** GDPR / right-to-be-forgotten erasure — the deletion path [[run]]'s

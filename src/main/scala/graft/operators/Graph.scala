@@ -1327,6 +1327,23 @@ object Graph {
     mst.distinct()
   }
 
+  /** SCC propagation's stop test: this round's observed (count, Σ label)
+    * signature against the previous round's; returns the new signature
+    * and whether it equals the previous one (fixpoint). A null Σ over a
+    * non-empty round is a DECIMAL(38,0) overflow (non-ANSI `sum` returns
+    * null): mapped to 0 it would let two overflowing rounds compare equal
+    * and declare a false fixpoint, so it fails loudly. An empty round
+    * (count 0, Σ null) is the signature (0, 0).
+    */
+  private[graft] def sccFixpoint(prev: Option[(Long, BigDecimal)], n: Long,
+      sum: java.math.BigDecimal): ((Long, BigDecimal), Boolean) = {
+    if (sum == null && n != 0L) throw new ArithmeticException(
+      s"scc: label sum over $n vertices overflowed DECIMAL(38,0); " +
+        "the fixpoint test cannot be trusted")
+    val sig = (n, if (sum == null) BigDecimal(0) else BigDecimal(sum))
+    (sig, prev.contains(sig))
+  }
+
   /** Strongly connected components of a DIRECTED graph — min-label
     * COLORING (Orzan 2004's coloring scheme with the random pivots
     * replaced by deterministic minimum labels): per outer round, over the
@@ -1418,13 +1435,13 @@ object Graph {
               .select(col(from).as("v"), col("l")))
             .groupBy(col("v")).agg(min(col("l")).as("l"))
             .observe(obs, count(lit(1)).as("n"),
-              coalesce(sum(col("l").cast("decimal(38,0)")),
-                lit(0).cast("decimal(38,0)")).as("x"))
+              sum(col("l").cast("decimal(38,0)")).as("x"))
             .localCheckpoint()
-          val nextSig = Some((obs.get("n").asInstanceOf[Long],
-            BigDecimal(obs.get("x").asInstanceOf[java.math.BigDecimal])))
-          stable = nextSig == sig
-          sig = nextSig
+          val (nextSig, nextStable) = sccFixpoint(sig,
+            obs.get("n").asInstanceOf[Long],
+            obs.get("x").asInstanceOf[java.math.BigDecimal])
+          stable = nextStable
+          sig = Some(nextSig)
           org.apache.spark.sql.graftx.CheckpointUtils
             .unpersistLocalCheckpoint(lbl)
           lbl = next

@@ -19,8 +19,9 @@ package graft.orchestration
 object Par {
 
   /** Evaluate every thunk concurrently (bounded pool), return results in
-    * order. The first failure propagates with its ORIGINAL exception type
-    * (unwrapped from ExecutionException) after every task has settled —
+    * order. The first failure (in task order) propagates with its ORIGINAL
+    * exception type (unwrapped from ExecutionException) after every task
+    * has settled, with every later failure attached via `addSuppressed` —
     * Spark actions are not safely interruptible mid-commit, so remaining
     * tasks are awaited, not cancelled.
     */
@@ -35,11 +36,17 @@ object Par {
           def call(): A = t()
         }))
       // settle all first (await every task), then surface the first error
-      val results = futs.map(f => scala.util.Try(f.get()))
-      results.map(_.recoverWith {
+      // carrying the rest
+      val results = futs.map(f => scala.util.Try(f.get()).recoverWith {
         case e: java.util.concurrent.ExecutionException =>
           scala.util.Failure(e.getCause)
-      }.get)
+      })
+      results.collect { case scala.util.Failure(e) => e } match {
+        case first +: rest =>
+          rest.foreach(e => if (e ne first) first.addSuppressed(e))
+          throw first
+        case _ => results.map(_.get)
+      }
     } finally pool.shutdown()
   }
 

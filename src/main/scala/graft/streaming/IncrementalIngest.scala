@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.config.PipelineConfig
 import graft.io.{Sinks, Sources}
-import graft.jobs.BronzeToSilver
+import graft.jobs.{BronzeToSilver, SilverToGold}
 
 /** Incremental bronze→silver with Glue-job-bookmark semantics
   * (`infrastructure/terraform/main.tf:174` "job-bookmark-enable",
@@ -27,13 +27,20 @@ object IncrementalIngest {
   def run(spark: SparkSession, cfg: PipelineConfig): Unit =
     run(spark, cfg, maintainGold = false)
 
-  /** `maintainGold = true` chains the round-6 partition-restricted gold
+  /** `maintainGold = true` chains the partition-restricted gold
     * maintenance into the same micro-batch: after the silver append, the
     * batch's touched gold partitions re-aggregate and replace
     * ([[graft.jobs.SilverToGold.runIncremental]]) — the full streaming
     * bronze→silver→gold path whose nightly cost scales with the batch,
     * not the table. The end state is spec-proven identical to a full
     * [[graft.jobs.SilverToGold.run]] over the accumulated silver.
+    *
+    * Either way the transformed batch is staged once
+    * ([[graft.jobs.SilverToGold.stage]]): the emptiness test and the
+    * touched partitions ride the staging job, and the silver append and
+    * the gold sinks all read the checkpoint, so the bronze scan and the
+    * dedup shuffle run once per batch. An empty (e.g. all-dirty) batch
+    * writes nothing (P6/P7).
     */
   def run(spark: SparkSession, cfg: PipelineConfig,
       maintainGold: Boolean): Unit = {
@@ -42,21 +49,13 @@ object IncrementalIngest {
     val stream = Sources.bronzeJsonStream(spark, cfg.rawPath)
     val query = stream.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val silver = BronzeToSilver.transform(batch, cfg.clock)
-        if (!silver.isEmpty) {
-          if (!maintainGold) Sinks.writeSilver(silver, cfg.silverPath)
-          else {
-            // staged: the silver write and the gold maintenance both read
-            // the transformed batch; without this the bronze scan +
-            // transform would re-execute per consumer
-            val staged = silver.localCheckpoint()
-            try {
-              Sinks.writeSilver(staged, cfg.silverPath)
-              graft.jobs.SilverToGold.runIncremental(spark, cfg, staged)
-            } finally org.apache.spark.sql.graftx.CheckpointUtils
-              .unpersistLocalCheckpoint(staged)
-          }
-        }
+        val staged = SilverToGold.stage(
+          BronzeToSilver.transform(batch, cfg.clock))
+        try if (staged.count > 0L) {
+          Sinks.writeSilver(staged.rows, cfg.silverPath)
+          if (maintainGold) SilverToGold.runIncremental(spark, cfg, staged)
+        } finally org.apache.spark.sql.graftx.CheckpointUtils
+          .unpersistLocalCheckpoint(staged.rows)
       }
       .option("checkpointLocation", cfg.checkpointPath)
       .trigger(Trigger.AvailableNow())

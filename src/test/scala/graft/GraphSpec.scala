@@ -679,6 +679,23 @@ class GraphSpec extends AnyFunSuite {
     assert(got === got7)
   }
 
+  test("scc fixpoint test: a null label sum over a non-empty round " +
+    "(DECIMAL overflow) fails loudly instead of reading as a fixpoint") {
+    val seven = new java.math.BigDecimal(7)
+    val (sig, stable) = Graph.sccFixpoint(None, 3L, seven)
+    assert(sig == ((3L, BigDecimal(7))) && !stable)
+    assert(Graph.sccFixpoint(Some(sig), 3L, seven)._2)
+    assert(!Graph.sccFixpoint(Some(sig), 3L, new java.math.BigDecimal(6))._2)
+    // two overflowing rounds would both have mapped to Σ 0 and compared equal
+    val e = intercept[ArithmeticException](
+      Graph.sccFixpoint(Some((3L, BigDecimal(0))), 3L, null))
+    assert(e.getMessage.contains("overflow"))
+    // an empty round is the one case with a null sum
+    val (empty, _) = Graph.sccFixpoint(None, 0L, null)
+    assert(empty == ((0L, BigDecimal(0))))
+    assert(Graph.sccFixpoint(Some(empty), 0L, null)._2)
+  }
+
   test("scc: exhausted propagation budget yields -1, never a split SCC") {
     // a 6-cycle needs ~5 min-propagation rounds; propRounds=2 exhausts
     // mid-flight — the old behavior assigned ids from the stale label

@@ -338,6 +338,137 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  private val goldTables =
+    Seq("daily_aggregations", "monthly_aggregations", "customer_insights")
+
+  /** Gold table `sub` under `cfg` equals the same table under `ref`. */
+  private def sameGold(cfg: PipelineConfig, ref: PipelineConfig,
+      sub: String): Boolean = {
+    val got = spark.read.parquet(s"${cfg.goldPath}/$sub")
+    val want = spark.read.parquet(s"${ref.goldPath}/$sub")
+      .select(got.columns.map(col): _*)
+    got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty
+  }
+
+  test("overlapped incremental gold: one failed sink surfaces only after " +
+    "the other two committed; a rerun of the batch equals a full recompute") {
+    for (failing <- goldTables) {
+      val root = tmp()
+      val cfg = PipelineConfig(s"$root/raw", s"$root/silver", s"$root/gold",
+        clock = clock)
+      TransactionGen.writeJsonl(TransactionGen.generate(spark, 600),
+        s"$root/raw")
+      val all = BronzeToSilver.transform(
+        graft.io.Sources.bronzeJson(spark, s"$root/raw"), clock)
+        .localCheckpoint()
+      val first = all.filter($"transaction_id" <= "txn_00000299")
+        .localCheckpoint()
+      val second = all.filter($"transaction_id" > "txn_00000299")
+        .localCheckpoint()
+      graft.io.Sinks.writeSilver(first, cfg.silverPath)
+      SilverToGold.runIncremental(spark, cfg, first)
+      graft.io.Sinks.writeSilver(second, cfg.silverPath)
+      // an outage of exactly one sink's table: its directory moves aside
+      // and a regular file takes its path, so only that sink can fail
+      val live = new java.io.File(s"${cfg.goldPath}/$failing")
+      val aside = new java.io.File(s"$root/aside")
+      assert(live.renameTo(aside))
+      Files.write(live.toPath, "outage".getBytes)
+      intercept[Exception](SilverToGold.runIncremental(spark, cfg, second))
+      assert(live.delete() && aside.renameTo(live))
+      // by the time the failure surfaced, the other two sinks had run to
+      // completion: committed, with no staging debris left behind
+      val full = cfg.copy(goldPath = s"$root/gold_full")
+      SilverToGold.run(spark, full)
+      for (sub <- goldTables.filterNot(_ == failing))
+        assert(sameGold(cfg, full, sub),
+          s"$sub did not commit before the $failing failure surfaced")
+      assert(new java.io.File(cfg.goldPath).list().sorted.toSeq ==
+        goldTables.sorted)
+      for (sub <- goldTables) assert(
+        !new java.io.File(s"${cfg.goldPath}/$sub").list()
+          .exists(_.startsWith(".spark-staging")), sub)
+      // partial gold: the failed table still holds the first batch only
+      assert(!sameGold(cfg, full, failing))
+      // rerun the same batch: every table converges
+      SilverToGold.runIncremental(spark, cfg, second)
+      for (sub <- goldTables) assert(sameGold(cfg, full, sub),
+        s"$sub != full recompute after rerunning past a $failing failure")
+    }
+  }
+
+  test("an incremental micro-batch is a short job chain; an all-dirty batch " +
+    "launches no silver-write or gold job and leaves every table " +
+    "byte-untouched") {
+    val root = tmp()
+    val cfg = PipelineConfig(s"$root/raw", s"$root/silver", s"$root/gold",
+      checkpointPath = s"$root/ckpt", clock = clock, incremental = true)
+    TransactionGen.writeJsonl(TransactionGen.generate(spark, 300),
+      s"$root/raw")
+    // every Spark job started, and every SQL action run (its action name
+    // and the root of its analyzed plan: writes are insert commands)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val q = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        actions.add(s"$f ${qe.analyzed.nodeName}")
+      def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = actions.add(s"$f failed")
+    }
+    def jobsOf(body: => Unit): (Int, Seq[String]) = {
+      org.apache.spark.sql.graftx.ListenerHook.drain(spark)
+      jobs.set(0)
+      actions.clear()
+      body
+      org.apache.spark.sql.graftx.ListenerHook.drain(spark)
+      (jobs.get(), actions.toArray(Array.empty[String]).toSeq)
+    }
+    def files(): Map[String, (Long, Long)] =
+      Seq(cfg.silverPath, cfg.goldPath).flatMap { d =>
+        java.nio.file.Files.walk(java.nio.file.Paths.get(d)).toArray.toSeq
+          .map(_.asInstanceOf[java.nio.file.Path].toFile)
+          .map(f => f.getPath -> (f.length(), f.lastModified()))
+      }.toMap
+    spark.sparkContext.addSparkListener(l)
+    spark.listenerManager.register(q)
+    try {
+      val (batchJobs, batchActions) =
+        jobsOf(IncrementalIngest.run(spark, cfg, maintainGold = true))
+      // one staging action (the count and touched partitions observed on
+      // it), then the silver append and the three gold sinks
+      assert(batchActions.map(_.split(' ').head) ==
+        Seq("localCheckpoint", "command", "command", "command", "command"),
+        batchActions.mkString("\n"))
+      assert(batchJobs <= 17, s"$batchJobs jobs for one micro-batch")
+      // every line fails a cleaning rule: null customer, non-positive
+      // amount, unparseable date, malformed JSON
+      Files.write(java.nio.file.Paths.get(s"$root/raw/dirty.json"), Seq(
+        """{"transaction_id":"d1","customer_id":null,"amount":5.0,"transaction_date":"2024-01-03 10:00:00"}""",
+        """{"transaction_id":"d2","customer_id":"c1","amount":-5.0,"transaction_date":"2024-01-03 10:00:00"}""",
+        """{"transaction_id":"d3","customer_id":"c1","amount":5.0,"transaction_date":"not a date"}""",
+        """{"transaction_id":"d4", broken""").mkString("\n").getBytes)
+      val before = files()
+      val (dirtyJobs, dirtyActions) =
+        jobsOf(IncrementalIngest.run(spark, cfg, maintainGold = true))
+      assert(dirtyActions.map(_.split(' ').head) == Seq("localCheckpoint"),
+        s"the all-dirty batch ran more than its staging:\n" +
+          dirtyActions.mkString("\n"))
+      assert(dirtyJobs > 0 && dirtyJobs < batchJobs)
+      assert(files() == before, "an all-dirty batch touched silver or gold")
+    } finally {
+      spark.listenerManager.unregister(q)
+      spark.sparkContext.removeSparkListener(l)
+    }
+  }
+
   test("incremental gold prunes the silver scan to touched partitions and " +
     "leaves other gold partition files byte-untouched") {
     val root = tmp()
@@ -436,6 +567,22 @@ class PipelineSpec extends AnyFunSuite {
         assert(slept.toSeq == Seq(10L, 10L)) // one backoff sleep per retry
       case other => fail(s"expected failure, got $other")
     }
+  }
+
+  test("Par.eval settles every task, then surfaces the first failure with " +
+    "every later one attached as suppressed") {
+    val settled = new java.util.concurrent.atomic.AtomicInteger()
+    val e = intercept[IllegalStateException] {
+      graft.orchestration.Par.eval[Int](Seq(
+        () => { settled.incrementAndGet(); 1 },
+        () => throw new IllegalStateException("first"),
+        () => { Thread.sleep(100); settled.incrementAndGet(); 3 },
+        () => throw new IllegalArgumentException("second")))
+    }
+    assert(e.getMessage == "first")
+    assert(e.getSuppressed.toSeq.map(x => (x.getClass, x.getMessage)) ==
+      Seq((classOf[IllegalArgumentException], "second")))
+    assert(settled.get() == 2, "a sibling task was abandoned, not awaited")
   }
 
   test("datagen is deterministic and matches the reference domains") {
