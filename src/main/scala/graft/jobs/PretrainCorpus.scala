@@ -257,14 +257,12 @@ object PretrainCorpus {
       hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
     }
     val fpPath = s"$workDir/fingerprints"
-    // the wave's min screened id rides the checkpoint's own
-    // materialization (observe — r13, the SCC/Borůvka pattern): the
-    // former separate min-aggregate job per wave is gone
-    val obsScr = org.apache.spark.sql.Observation()
-    val screened = langFilter(qualityFilter(clean(wave)), cfg.lang)
-      .observe(obsScr, min(col("doc_id")).as("mn"))
-      .localCheckpoint() // feeds fp compute, store ingest, and the output
-    val minScreened = Option(obsScr.get("mn"))
+    // the wave's min screened id rides the checkpoint's own job; the
+    // checkpoint feeds fp compute, store ingest, and the output
+    val (screened, obsScr) = org.apache.spark.sql.graftx.CheckpointUtils
+      .materialize(langFilter(qualityFilter(clean(wave)), cfg.lang),
+        min(col("doc_id")).as("mn"))
+    val minScreened = Option(obsScr("mn"))
       .map(_.asInstanceOf[Number].longValue())
     if (minScreened.isEmpty) return // nothing survived the screens: no-op
     val wid = waveId.getOrElse(minScreened.get)
@@ -344,10 +342,8 @@ object PretrainCorpus {
     // checkpointed: feeds the watermark max, the s4 semi-join, and its
     // own store commit — without the pin the prior-store probe would
     // re-execute per consumer (each one an O(store) scan). The stored-max
-    // watermark input rides the checkpoint job itself (observe — r13),
-    // retiring the former separate max-aggregate job per wave.
-    val obsFp = org.apache.spark.sql.Observation()
-    val newFp = (fpPrior match {
+    // watermark input rides the checkpoint job itself.
+    val unseen = fpPrior match {
       case None => firstInWave
       case Some(prev) =>
         // anti-join FLIPPED into a semi-probe: `firstInWave ANTI store`
@@ -362,7 +358,9 @@ object PretrainCorpus {
         val hits = prev.select(col("fp"))
           .join(firstInWave.select(col("fp")), Seq("fp"), "left_semi")
         firstInWave.join(hits, Seq("fp"), "left_anti")
-    }).observe(obsFp, max(col("doc_id")).as("mx")).localCheckpoint()
+    }
+    val (newFp, obsFp) = org.apache.spark.sql.graftx.CheckpointUtils
+      .materialize(unseen, max(col("doc_id")).as("mx"))
     // publish the INGEST WATERMARK — after the guard, before any commit:
     // curMax = what the fingerprint store's max doc_id WILL be once this
     // wave commits (prior bound ∨ the wave's stored max — the exact
@@ -371,7 +369,7 @@ object PretrainCorpus {
     // against the same state its first attempt did. The NEXT wave's
     // guard then reads one tiny file instead of max-scanning a store
     // that at 100 TB is TB-scale.
-    val waveMax = Option(obsFp.get("mx"))
+    val waveMax = Option(obsFp("mx"))
       .map(_.asInstanceOf[Number].longValue())
     (guardBound.toSeq ++ waveMax.toSeq).reduceOption(_ max _).foreach(cm =>
       graft.io.Sinks.writeMaxIdWatermark(spark, workDir, wid, guardBound,
@@ -414,7 +412,7 @@ object PretrainCorpus {
         s4wave.filter(pmod(col("doc_id"), lit(cfg.evalMod)) =!= 0),
         "doc_id", "text", bench, "text")
       .filter(col("contaminated") === 1).select(col("doc_id"))
-    // checkpointed (r13): admissions feeds its own store commit AND the
+    // checkpointed: admissions feeds its own store commit AND the
     // corpus commit's semi-join — un-staged, the contamination report's
     // 13-gram hashing pass over the wave executed TWICE (measured ~0.7 s
     // per wave at sf0.1 inside the admissions commit alone), and the

@@ -72,14 +72,13 @@ object SilverToGold {
     */
   def stage(batch: org.apache.spark.sql.DataFrame): StagedBatch = {
     import org.apache.spark.sql.functions.{col, collect_set, count, struct, when}
-    val obs = org.apache.spark.sql.Observation()
-    val rows = batch.observe(obs, count(lit(1)).as("n"),
-        collect_set(when(col("year").isNotNull && col("month").isNotNull,
-          struct(col("year"), col("month")))).as("pairs"))
-      .localCheckpoint()
-    val pairs = obs.get("pairs").asInstanceOf[scala.collection.Seq[Row]]
+    val (rows, obs) = org.apache.spark.sql.graftx.CheckpointUtils.materialize(
+      batch, count(lit(1)).as("n"),
+      collect_set(when(col("year").isNotNull && col("month").isNotNull,
+        struct(col("year"), col("month")))).as("pairs"))
+    val pairs = obs("pairs").asInstanceOf[scala.collection.Seq[Row]]
       .map(r => (r.getInt(0), r.getInt(1))).toSeq.sorted
-    StagedBatch(rows, obs.get("n").asInstanceOf[Long], pairs)
+    StagedBatch(rows, obs("n").asInstanceOf[Long], pairs)
   }
 
   /** PARTITION-RESTRICTED gold maintenance — the 100 TB path [[run]]'s

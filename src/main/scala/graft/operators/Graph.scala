@@ -1,8 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.CheckpointUtils.{Observed, iterate, materialize,
+  unpersistLocalCheckpoint, withoutOriginStats}
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
+
+/** An iterative operator hit its round cap before its fixpoint, and its
+  * output has no sentinel for unresolved rows: returning it would pass a
+  * partial answer off as a complete one.
+  */
+final class RoundCapExceededException(val operator: String, val cap: Int)
+  extends RuntimeException(s"$operator did not converge within $cap rounds; " +
+    "raise its round cap")
 
 /** Iterative graph operators for the dedup pipeline. The one that matters
   * at 100 TB: connected components over the near-duplicate pair graph, to
@@ -28,19 +38,19 @@ object Graph {
     * round materializes, so the loop holds ONE working-set copy, not
     * `rounds` copies. Convergence rides the same aggregation that computes
     * the new labels (each vertex's own row is flagged, so the group sees
-    * both min-candidate and previous label) — the changed-count is then a
-    * filter over the already-materialized checkpoint, NOT a second
-    * label-join per round. Rounds needed = component diameter; near-dup
+    * both min-candidate and previous label); the changed-count is observed
+    * on the round's own checkpoint job, with no second label-join and no
+    * count job per round. Rounds needed = component diameter; near-dup
     * clusters are shallow (a hub document links its variants), so a handful
     * of rounds suffices. For adversarially long chains, switch to
     * [[connectedComponentsStar]] (alternating large/small-star, Kiveris et
     * al., "Connected Components in MapReduce and Beyond"), which converges
     * in O(log² n) rounds — not needed for dedup graphs.
     *
-    * If `maxIter` rounds pass without convergence the loop STOPS and the
-    * returned labels are only partially propagated (components wider than
-    * `maxIter` hops split) — a warning is logged; size `maxIter` to the
-    * expected component diameter.
+    * If `maxIter` rounds pass without convergence the labels are only
+    * partially propagated (components wider than `maxIter` hops would
+    * split), so it throws [[RoundCapExceededException]]; size `maxIter` to
+    * the expected component diameter.
     */
   def connectedComponents(edges: DataFrame, src: String, dst: String,
       maxIter: Int = 20): DataFrame = {
@@ -49,40 +59,36 @@ object Graph {
       .unionByName(edges.select(col(dst).as("a"), col(src).as("b")))
       .distinct()
       .localCheckpoint()
-    var labels = und.select(col("a").as("v")).distinct()
-      .withColumn("label", col("v"))
-      .localCheckpoint()
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
+    val init = und.select(col("a").as("v")).distinct()
+      .select(col("v"), col("v").as("label"), col("v").as("__old"))
+    val (labels, _, converged) = iterate(init, maxIter,
+        count_if(col("label") =!= col("__old")).as("changed")) { labels =>
       // neighbor labels flow along edges: b's label becomes a candidate for a
       val viaNeighbor = und
-        .join(labels.withColumnRenamed("v", "b"), Seq("b"))
+        .join(labels.select(col("v").as("b"), col("label")), Seq("b"))
         .select(col("a").as("v"), col("label"))
       // own rows are flagged so one aggregation yields BOTH the new min
-      // label and the previous one — convergence needs no second join.
-      // (Measured: an observe() metric riding the materialization is
-      // SLOWER here than this count — the post-checkpoint count scans an
-      // in-memory local RDD in ~30 ms, while Observation.get waits on the
-      // async listener bus per round.)
-      val next = labels.withColumn("__own", lit(true))
+      // label and the previous one — convergence needs no second join
+      labels.select(col("v"), col("label"), lit(true).as("__own"))
         .unionByName(viaNeighbor.withColumn("__own", lit(false)))
         .groupBy(col("v"))
         .agg(min(col("label")).as("label"),
           max(when(col("__own"), col("label"))).as("__old"))
-        .localCheckpoint() // eager: materialized before the old round is freed
-      val changed = next.filter(col("label") =!= col("__old")).count()
-      org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint(labels)
-      labels = next.select(col("v"), col("label"))
-      converged = changed == 0
-      iter += 1
-    }
-    if (!converged)
-      System.err.println(s"[graft] connectedComponents: NOT converged after " +
-        s"$maxIter rounds — components wider than $maxIter hops are split; " +
-        "raise maxIter or use connectedComponentsStar")
+    } { (_, o) => o("changed") == 0L }
+    unpersistLocalCheckpoint(und)
+    if (!converged) capped("connectedComponents", maxIter, labels)
     labels.select(col("v").as("vertex"), col("label").as("component"))
   }
+
+  /** Frees `frames` and throws [[RoundCapExceededException]]. */
+  private def capped(operator: String, cap: Int, frames: DataFrame*): Nothing = {
+    frames.foreach(unpersistLocalCheckpoint)
+    throw new RoundCapExceededException(operator, cap)
+  }
+
+  /** The row count of a materialization, observed as `n`. */
+  private def rows: Column = count(lit(1)).as("n")
+  private def n(o: Observed): Long = o("n").asInstanceOf[Long]
 
   /** PageRank in fixed-point INTEGER arithmetic — every rank is a BIGINT in
     * units of `1/scale`, every operation is integer multiply / truncating
@@ -354,7 +360,8 @@ object Graph {
     * Convergence is detected by an (edge-count, xxhash64-xor) checksum of
     * the canonicalized edge set riding the round's own aggregation — star
     * steps are idempotent on their fixpoint, so a stable checksum IS the
-    * fixpoint (the hash guards against a same-size edge rewrite).
+    * fixpoint (the hash guards against a same-size edge rewrite). Hitting
+    * `maxIter` first throws [[RoundCapExceededException]].
     */
   def connectedComponentsStar(edges: DataFrame, src: String, dst: String,
       maxIter: Int = 50): DataFrame = {
@@ -363,32 +370,17 @@ object Graph {
       .distinct()
       .localCheckpoint()
     // canonical orientation a > b; self-loops drop out (rejoined at the end)
-    var e = edges.select(col(src).as("x"), col(dst).as("y"))
+    val init = edges.select(col(src).as("x"), col(dst).as("y"))
       .filter(col("x") =!= col("y"))
       .select(greatest(col("x"), col("y")).as("a"),
         least(col("x"), col("y")).as("b"))
       .distinct()
-      .localCheckpoint()
     // XOR of per-edge hashes: order-independent, no ANSI sum overflow, and
     // sound as a set fingerprint because the edge set is distinct. The
-    // checksum rides each round's OWN materialization as observe() metrics
-    // (localCheckpoint goes through withAction, so CollectMetrics fires) —
-    // no separate checksum job per round.
-    def sigMetrics: Seq[org.apache.spark.sql.Column] = Seq(
-      count(lit(1)).as("n"),
-      coalesce(call_function("bit_xor", xxhash64(col("a"), col("b"))), lit(0L))
-        .as("x"))
-    def readSig(obs: org.apache.spark.sql.Observation): (Long, Long) =
-      (obs.get("n").asInstanceOf[Long], obs.get("x").asInstanceOf[Long])
-    var sig = {
-      val r = e.agg(count(lit(1)),
-        coalesce(call_function("bit_xor", xxhash64(col("a"), col("b"))), lit(0L)))
-        .head()
-      (r.getLong(0), r.getLong(1))
-    }
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
+    // checksum rides each round's own checkpoint job, the initial one's too.
+    val (e, _, converged) = iterate(init, maxIter, rows,
+        coalesce(call_function("bit_xor", xxhash64(col("a"), col("b"))), lit(0L))
+          .as("x")) { e =>
       // LARGE-STAR. Neighborhoods need both directions; m(u) = least(u, min Γ(u)).
       val nbrs = e.select(col("a").as("u"), col("b").as("v"))
         .unionByName(e.select(col("b").as("u"), col("a").as("v"))) // distinct by construction (a>b)
@@ -400,30 +392,18 @@ object Graph {
         .filter(col("v") > col("u"))
         .select(col("v").as("a"), col("m").as("b"))
         .distinct()
-        .localCheckpoint()
-      org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint(e)
       // SMALL-STAR. Edges are already big→small, so Γ(u) here is all < u:
       // m = min Γ(u); attach u and every smaller neighbor except m itself.
+      // `large` is read twice; both reads share its shuffle (exchange reuse)
       val minsS = large.groupBy(col("a")).agg(min(col("b")).as("m"))
-      val obs = org.apache.spark.sql.Observation()
-      val small = large.join(minsS, Seq("a"))
+      large.join(minsS, Seq("a"))
         .select(col("b").as("v"), col("m"))
         .unionByName(minsS.select(col("a").as("v"), col("m")))
         .filter(col("v") =!= col("m")) // v ≥ m always, so what remains is v > m
         .select(col("v").as("a"), col("m").as("b"))
         .distinct()
-        .observe(obs, sigMetrics.head, sigMetrics.tail: _*)
-        .localCheckpoint()
-      org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint(large)
-      e = small
-      val nextSig = readSig(obs)
-      converged = nextSig == sig
-      sig = nextSig
-      iter += 1
-    }
-    if (!converged)
-      System.err.println(s"[graft] connectedComponentsStar: NOT converged " +
-        s"after $maxIter rounds — labels may be partially collapsed")
+    } { (prev, cur) => prev == cur }
+    if (!converged) capped("connectedComponentsStar", maxIter, vertices, e)
     // fixpoint stars: every non-center a points at its component min b;
     // centers and isolated/self-loop-only vertices label themselves
     val labels = e.groupBy(col("a")).agg(min(col("b")).as("component"))
@@ -463,23 +443,16 @@ object Graph {
   def kCorePeel(edges: DataFrame, src: String, dst: String, k: Int,
       iters: Int = 4): DataFrame = {
     require(iters >= 1, "kCorePeel needs at least one round")
-    var e = edges.select(col(src).cast("long").as("a"),
-        col(dst).cast("long").as("b"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
+    val (e, _, _) = iterate(edges.select(col(src).cast("long").as("a"),
+        col(dst).cast("long").as("b")), iters) { e =>
+      // read by both endpoint screens, which share its shuffle
       val surv = e.groupBy(col("a")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k)
         .select(col("a").as("v"))
-        .localCheckpoint() // read twice (both endpoint screens)
-      val next = e
-        .join(surv.select(col("v").as("a")), Seq("a"), "left_semi")
+      e.join(surv.select(col("v").as("a")), Seq("a"), "left_semi")
         .join(surv.select(col("v").as("b")), Seq("b"), "left_semi")
         .select(col("a"), col("b"))
-        .localCheckpoint()
-      org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint(e)
-      org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint(surv)
-      e = next
-    }
+    } { (_, _) => false }
     e.groupBy(col("a")).agg(count(lit(1)).as("deg"))
       .select(col("a").as("vertex"), col("deg"))
   }
@@ -513,7 +486,6 @@ object Graph {
       iters: Int = 3): DataFrame = {
     require(k >= 2, s"k-truss needs k >= 2, got $k")
     require(iters >= 1, "kTrussPeel needs at least one round")
-    var e = edges.select(col(src).as("a"), col(dst).as("b")).localCheckpoint()
     def support(ed: DataFrame): DataFrame = {
       val tri = ed.as("e1")
         .join(ed.as("e2"), col("e1.b") === col("e2.a"))
@@ -526,16 +498,14 @@ object Graph {
         .groupBy(col("t.x").as("a"), col("t.y").as("b"))
         .agg(count(lit(1)).as("support"))
     }
-    for (_ <- 1 to iters) {
-      val keep = support(e).filter(col("support") >= k - 2)
-        .select(col("a"), col("b"))
-      // k = 2 keeps support-0 edges, which have no support row at all —
-      // the semi-join would wrongly drop them, so short-circuit
-      val next = (if (k <= 2) e
-        else e.join(keep, Seq("a", "b"), "left_semi")).localCheckpoint()
-      org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint(e)
-      e = next
-    }
+    // k = 2 keeps support-0 edges, which have no support row at all —
+    // the semi-join would wrongly drop them, so short-circuit
+    val (e, _, _) = iterate(edges.select(col(src).as("a"), col(dst).as("b")),
+        iters) { e =>
+      if (k <= 2) e
+      else e.join(support(e).filter(col("support") >= k - 2)
+        .select(col("a"), col("b")), Seq("a", "b"), "left_semi")
+    } { (_, _) => false }
     e.join(support(e), Seq("a", "b"), "left")
       .select(col("a").as(src), col("b").as(dst),
         coalesce(col("support"), lit(0L)).as("support"))
@@ -555,9 +525,9 @@ object Graph {
     *   h′(u) = Σ_{u→v} a(v);  h(u) = (h′(u)·scale) div max h′
     *
     * Per round: two narrow (long, long) equi-joins + two map-side-
-    * combinable sums; the raw-score frames are checkpointed so the two
-    * tiny max fetches (single-row driver reads — bounded model state)
-    * don't recompute the round. Overflow bound: raw sums are ≤ N·scale,
+    * combinable sums; the raw-score frames are checkpointed, and each
+    * side's max (one scalar) is observed on its checkpoint job, so the
+    * rescale costs no job of its own. Overflow bound: raw sums are ≤ N·scale,
     * and the renormalization multiplies by `scale` before dividing, so
     * N·scale² must fit a signed long — N < 9·10⁶ at the default
     * micro-unit scale; lower `scale` for larger graphs (10⁹ vertices →
@@ -576,18 +546,21 @@ object Graph {
       .localCheckpoint()
     var h = e.select(col("u")).distinct().withColumn("h", lit(scale))
     var a: DataFrame = null
+    var superseded = Seq.empty[DataFrame]
     for (_ <- 1 to iters) {
-      val aRaw = e.join(h, Seq("u"))
-        .groupBy(col("v")).agg(sum(col("h")).as("ar"))
-        .localCheckpoint() // feeds both the max fetch and the rescale
-      val am = aRaw.agg(max(col("ar"))).head().getLong(0)
-      a = aRaw.select(col("v"), expr(s"(ar * $scale) div $am").as("a"))
-      val hRaw = e.join(a, Seq("v"))
-        .groupBy(col("u")).agg(sum(col("a")).as("hr"))
-        .localCheckpoint()
-      val hm = hRaw.agg(max(col("hr"))).head().getLong(0)
-      h = hRaw.select(col("u"), expr(s"(hr * $scale) div $hm").as("h"))
+      // each side's max rides its raw-score checkpoint job
+      val (aRaw, am) = materialize(e.join(h, Seq("u"))
+        .groupBy(col("v")).agg(sum(col("h")).as("ar")), max(col("ar")).as("m"))
+      // the last round's raw scores were read only by this round's join
+      superseded.foreach(unpersistLocalCheckpoint)
+      a = aRaw.select(col("v"), expr(s"(ar * $scale) div ${am("m")}").as("a"))
+      val (hRaw, hm) = materialize(e.join(a, Seq("v"))
+        .groupBy(col("u")).agg(sum(col("a")).as("hr")), max(col("hr")).as("m"))
+      h = hRaw.select(col("u"), expr(s"(hr * $scale) div ${hm("m")}").as("h"))
+      superseded = Seq(aRaw, hRaw)
     }
+    // the returned plan reads only the last round's two checkpoints
+    unpersistLocalCheckpoint(e)
     h.select(col("u").as("vertex"), col("h"))
       .join(a.select(col("v").as("vertex"), col("a")), Seq("vertex"), "full_outer")
       .select(col("vertex"), col("h").as("hub"), col("a").as("auth"))
@@ -615,21 +588,16 @@ object Graph {
     val verts = e.select(col("a").as("v"))
       .unionByName(e.select(col("b").as("v")))
       .distinct()
-      .localCheckpoint()
     val sd = seeds.select(col(seedCol).cast("long").as("v")).distinct()
-    var d = verts.join(sd.withColumn("__s", lit(0L)), Seq("v"), "left")
+    val init = verts.join(sd.withColumn("__s", lit(0L)), Seq("v"), "left")
       .select(col("v"), col("__s").as("dist"))
-      .localCheckpoint()
-    for (_ <- 1 to maxDepth) {
+    val (d, _, _) = iterate(init, maxDepth) { d =>
       val cand = e.join(d.filter(col("dist").isNotNull)
           .select(col("v").as("a"), col("dist")), Seq("a"))
         .select(col("b").as("v"), (col("dist") + 1L).as("dist"))
-      val next = d.unionByName(cand)
-        .groupBy(col("v")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
-      org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint(d)
-      d = next
-    }
+      d.unionByName(cand).groupBy(col("v")).agg(min(col("dist")).as("dist"))
+    } { (_, _) => false }
+    unpersistLocalCheckpoint(e)
     d.select(col("v").as("vertex"), col("dist"))
   }
 
@@ -644,18 +612,11 @@ object Graph {
     * collapses it map-side).
     *
     * Forward, per layer: σ(v)[s] = Σ over neighbor parents of σ[s]
-    * (exact long sums), masked to first-reach by a packed visited bitmap
-    * (⌈|S|/64⌉ words per vertex, maintained by codegen'd `bit_or`).
-    * Measured note (sf0.1, local[32], warm min-of-3): fusing the σ-sum
-    * and the bitmap union into ONE aggregation (carried rows with null
-    * sig through vector_sum_long) ran ~20% SLOWER than this two-step
-    * shape — the fused groupBy drags every carried |visited| row through
-    * the non-codegen ObjectHashAggregate, while here those rows fold in a
-    * whole-stage-codegen bit_or HashAggregate and only the frontier
-    * fan-out pays the object agg; pre-partitioning the edge list doesn't
-    * help either (localCheckpoint drops outputPartitioning, the join
-    * reshuffles regardless). Exchanges are not the bottleneck; per-row
-    * aggregation cost is.
+    * (exact long sums), masked to first-reach by the cumulative per-seed
+    * path-count array `cum` (seed s has reached v iff cum(v)[s] ≠ 0).
+    * Pre-partitioning the edge list doesn't help (localCheckpoint drops
+    * outputPartitioning, the join reshuffles regardless): exchanges are
+    * not the bottleneck, per-row aggregation cost is.
     * Backward, per layer, quantized per CHILD in micro-units: u publishes
     * tq(u)[s] = ⌊(10⁶ + δq(u)[s])·10⁶ / σ(u)[s]⌋, parents sum tq over
     * their out-edges element-wise, and δq(v)[s] = ⌊σ(v)[s]·Σtq / 10⁶⌋.
@@ -696,7 +657,6 @@ object Graph {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], outSchema)
     val n = seedIds.length
-    val nWords = (n + 63) / 64
     val e = edges.select(col(src).cast("long").as("a"),
         col(dst).cast("long").as("b"))
       .localCheckpoint()
@@ -714,15 +674,13 @@ object Graph {
     // earlier layer's sig, folded by the same typed vector sum the
     // candidates use): seed i has reached v iff cum[i] != 0, so the
     // first-reach mask is one zip_with over two plain ARRAY ATTRIBUTES.
-    // The r11 form packed visited into ⌈|S|/64⌉ bit words and re-tested
-    // them per element with a transform lambda over a freshly-CONCAT'd
-    // words array — CollapseProject inlines that concat into the lambda,
-    // so the 4-word array was REBUILT per element (|S|× per row):
-    // measured 9-45 s per BFS round at sf0.1 against ~1 s for everything
-    // else in the round. The cumulative-sum form was measured at
-    // interpreted-zip_with cost (~0.3 s/round) and keeps every value
-    // exact (layer path counts are nonnegative, so the cumulative sum is
-    // nonzero exactly where any layer's sig was).
+    // Packed bit words re-tested per element are a trap here: a transform
+    // lambda over a CONCAT'd words array gets the concat inlined by
+    // CollapseProject, so the array is REBUILT per element (|S|× per
+    // row), measured 9-45 s per BFS round at sf0.1 against ~0.3 s/round
+    // for this form. It keeps every value exact (layer path counts are
+    // nonnegative, so the cumulative sum is nonzero exactly where any
+    // layer's sig was).
     var visited = layers(0).localCheckpoint()
       .select(col("v"), col("sig").as("cum"))
     for (_ <- 1 to maxDepth) {
@@ -731,20 +689,17 @@ object Graph {
         .groupBy(col("b").as("v"))
         .agg(org.apache.spark.sql.graftx.VectorSumExpressions
           .vectorSumLong(col("sig"), n).as("cand"))
-      val nf = cand.join(visited, Seq("v"), "left")
+      val (nf, _) = materialize(cand.join(visited, Seq("v"), "left")
         .select(col("v"), expr("CASE WHEN cum IS NULL THEN cand " +
           "ELSE zip_with(cand, cum, (x, m) -> " +
           "IF(m != 0L, CAST(0 AS BIGINT), x)) END").as("sig"))
-        .filter(expr("exists(sig, x -> x != 0)"))
-        .localCheckpoint()
-      val nextVisited = visited
+        .filter(expr("exists(sig, x -> x != 0)")))
+      val (nextVisited, _) = materialize(visited
         .unionByName(nf.select(col("v"), col("sig").as("cum")))
         .groupBy(col("v"))
         .agg(org.apache.spark.sql.graftx.VectorSumExpressions
-          .vectorSumLong(col("cum"), n).as("cum"))
-        .localCheckpoint()
-      org.apache.spark.sql.graftx.CheckpointUtils
-        .unpersistLocalCheckpoint(visited)
+          .vectorSumLong(col("cum"), n).as("cum")))
+      unpersistLocalCheckpoint(visited)
       visited = nextVisited
       layers :+= nf
     }
@@ -764,21 +719,19 @@ object Graph {
         .groupBy(col("a").as("v"))
         .agg(org.apache.spark.sql.graftx.VectorSumExpressions
           .vectorSumLong(col("tq"), n).as("tsum"))
-      val dd = layers(d).join(tsum, Seq("v"), "left")
+      val (dd, _) = materialize(layers(d).join(tsum, Seq("v"), "left")
         .select(col("v"), col("sig"),
           expr(s"CASE WHEN tsum IS NULL THEN " +
             s"array_repeat(CAST(0 AS BIGINT), $n) ELSE " +
             s"zip_with(sig, tsum, (sg, t) -> (sg * t) div $unit) END")
-            .as("delta"))
-        .localCheckpoint()
+            .as("delta")))
       deltas = dd
       acc :+= dd
     }
     // every dd in acc is eagerly checkpointed — the returned plan
     // references only those; the edge list, seed/layer frames, and the
     // final visited bitmap can release their blocks now
-    (Seq(e, visited) ++ layers).foreach(
-      org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint)
+    (Seq(e, visited) ++ layers).foreach(unpersistLocalCheckpoint)
     acc.map(_.select(col("v"),
         expr("CAST(size(filter(sig, x -> x != 0)) AS BIGINT)").as("cnt"),
         expr("aggregate(delta, CAST(0 AS BIGINT), (a, x) -> a + x)")
@@ -835,7 +788,7 @@ object Graph {
       Row.fromSeq(s +:
         Seq.tabulate(nWords)(w => if (i / 64 == w) 1L << (i % 64) else 0L))
     }
-    def ckpt(df: DataFrame) = df.localCheckpoint()
+    def ckpt(df: DataFrame) = materialize(df)._1
     var frontier = ckpt(spark.createDataFrame(
       spark.sparkContext.parallelize(initRows.toSeq, 1), initSchema))
     var reached = ckpt(frontier.select(col("v") +: wNames.map(col): _*))
@@ -856,8 +809,7 @@ object Graph {
         .filter(wNames.map(wn => col(wn) =!= 0L).reduce(_ || _)))
       val nextReached = ckpt(reached.unionByName(nf)
         .groupBy(col("v")).agg(orAgg.head, orAgg.tail: _*))
-      org.apache.spark.sql.graftx.CheckpointUtils
-        .unpersistLocalCheckpoint(reached)
+      unpersistLocalCheckpoint(reached)
       reached = nextReached
       frontier = nf
       outFrames :+= nf.withColumn("dist", lit(d.toLong))
@@ -914,34 +866,33 @@ object Graph {
     val e = edges.select(col(src).cast("long").as("a"),
         col(dst).cast("long").as("b"))
       .localCheckpoint()
-    var state = sources
+    val init = sources
       .select(col(srcCol).cast("long").as("v"))
       .distinct()
       .groupBy(col("v"))
       .agg(hll_sketch_agg(col("v"), lit(lgK)).as("sk"))
-      .localCheckpoint()
-    def total(st: DataFrame): Long = st
-      .agg(sum(hll_sketch_estimate(col("sk"))).as("t"))
-      .collect()(0).getLong(0) // bounded: one scalar per round
-    var ests = Vector(0 -> total(state))
-    for (h <- 1 to maxDepth) {
+    // N(h) is observed on round h's own checkpoint job; `done` records it
+    def total(o: Observed): Long = o("t").asInstanceOf[Long]
+    var ests = Vector.empty[Long]
+    val (state, _, _) = iterate(init, maxDepth,
+        sum(hll_sketch_estimate(col("sk"))).as("t")) { state =>
       val cand = e
         .join(state.withColumnRenamed("v", "a"), Seq("a"))
         .groupBy(col("b").as("v"))
         .agg(hll_union_agg(col("sk"), lit(true)).as("nsk"))
-      val next = state.join(cand, Seq("v"), "full")
+      state.join(cand, Seq("v"), "full")
         .select(col("v"),
           when(col("sk").isNull, col("nsk"))
             .when(col("nsk").isNull, col("sk"))
             .otherwise(hll_union(col("sk"), col("nsk"), true)).as("sk"))
-        .localCheckpoint()
-      org.apache.spark.sql.graftx.CheckpointUtils
-        .unpersistLocalCheckpoint(state)
-      state = next
-      ests :+= h -> total(state)
+    } { (prev, cur) =>
+      if (ests.isEmpty) ests :+= total(prev)
+      ests :+= total(cur)
+      false
     }
+    Seq(e, state).foreach(unpersistLocalCheckpoint)
     import spark.implicits._
-    ests.toDF("h", "est")
+    ests.zipWithIndex.map(_.swap).toDF("h", "est")
   }
 
   /** Seeded LABEL SPREADING (the Zhou et al. 2004 shape in fixed-point
@@ -1093,17 +1044,16 @@ object Graph {
     for (k <- 1 to steps) {
       val h = col("vertex") * lit(1103515245L) + col("walk") * lit(12345L) +
         lit(k.toLong) * lit(2747636419L) + lit(seed)
-      val next = cur
+      // keeps hop plans flat; every hop frame stays materialized — each is
+      // |starts|·W narrow rows and the union output reads them all, so
+      // nothing is unpersisted here
+      cur = materialize(cur
         .join(deg.withColumnRenamed("a", "vertex"), Seq("vertex"))
         .select(col("start"), col("walk"), col("vertex").as("a"),
           (h % col("d")).as("idx"))
         .join(adj, Seq("a", "idx"))
         .select(col("start"), col("walk"), lit(k).as("step"),
-          col("b").as("vertex"))
-        .localCheckpoint() // keeps hop plans flat; every hop frame stays
-      // materialized — each is |starts|·W narrow rows and the union
-      // output reads them all, so nothing is unpersisted here
-      cur = next
+          col("b").as("vertex")))._1
       out = out.unionByName(cur)
     }
     out
@@ -1171,9 +1121,9 @@ object Graph {
     * would leave one merged tree under multiple labels and a later round
     * could then select a second edge between them, silently emitting a
     * cycle. Full contraction also means the component count at least
-    * halves per round, so `maxRounds` = ⌈log₂ n⌉ suffices; if the round
-    * budget is exhausted with cross edges remaining the output is still a
-    * forest but may not span — a stderr warning fires.
+    * halves per round, so `maxRounds` = ⌈log₂ n⌉ suffices; if cross edges
+    * remain after `maxRounds` rounds the forest does not span, and it
+    * throws [[RoundCapExceededException]].
     *
     * Scale posture: the state is (vertex → component) plus the shrinking
     * (component → parent) table; every step is a narrow equi-join or a
@@ -1199,37 +1149,23 @@ object Graph {
       .distinct()
       .withColumn("comp", col("vtx"))
       .localCheckpoint()
-    // the checkpoint-backed frame behind `comp` (comp itself may be an
-    // RDD-boundary wrapper after the stats rebase below — unpersisting
-    // the wrapper would miss the real blocks)
-    var compCp = comp
-    var mst = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id_a",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("id_b",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("w_q",
-          org.apache.spark.sql.types.LongType))))
+    var mst = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(Seq("id_a", "id_b", "w_q").map(StructField(_, LongType))))
     var round = 0
     var done = false
-    while (round < maxRounds && !done) {
-      // the cross-edge count rides the checkpoint's own materialization
-      // (observe — the connectedComponentsStar pattern): the emptiness
-      // probe costs no second job
-      val crossObs = org.apache.spark.sql.Observation()
-      val cross = e0
+    while (!done) {
+      // the cross-edge count rides the checkpoint's own job: the emptiness
+      // probe costs no second job, and the cap is checked against it, so
+      // only a forest that really does not span throws
+      val (cross, crossObs) = materialize(e0
         .join(comp.select(col("vtx").as("u"), col("comp").as("cu")), Seq("u"))
         .join(comp.select(col("vtx").as("v"), col("comp").as("cv")), Seq("v"))
-        .filter(col("cu") =!= col("cv"))
-        .observe(crossObs, count(lit(1)).as("n"))
-        .localCheckpoint()
-      if (crossObs.get("n").asInstanceOf[Long] == 0L) {
-        done = true
-        org.apache.spark.sql.graftx.CheckpointUtils
-          .unpersistLocalCheckpoint(cross)
-      } else {
+        .filter(col("cu") =!= col("cv")), rows)
+      done = n(crossObs) == 0L
+      if (done) unpersistLocalCheckpoint(cross)
+      else if (round == maxRounds)
+        capped("boruvkaMst", maxRounds, cross, e0, comp)
+      else {
         // both orientations so every component scores its incident cut;
         // the partner label rides the struct BEHIND the (w, u, v) total
         // order, so min() is argmin and carries the hook target for free
@@ -1237,13 +1173,11 @@ object Graph {
             struct(col("w"), col("u"), col("v"), col("cv").as("t")).as("k"))
           .unionByName(cross.select(col("cv").as("c"),
             struct(col("w"), col("u"), col("v"), col("cu").as("t")).as("k")))
-        val sel = both.groupBy(col("c")).agg(min(col("k")).as("k"))
+        val (sel, _) = materialize(both.groupBy(col("c")).agg(min(col("k")).as("k"))
           .select(col("c"), col("k.w").as("w"), col("k.u").as("u"),
-            col("k.v").as("v"), col("k.t").as("t"))
-          .localCheckpoint()
+            col("k.v").as("v"), col("k.t").as("t")))
         // sel is checkpointed — nothing downstream depends on cross now
-        org.apache.spark.sql.graftx.CheckpointUtils
-          .unpersistLocalCheckpoint(cross)
+        unpersistLocalCheckpoint(cross)
         mst = mst.unionByName(
           sel.select(col("u").as("id_a"), col("v").as("id_b"),
             col("w").as("w_q")).distinct())
@@ -1255,14 +1189,10 @@ object Graph {
           .select(col("x.c").as("c"),
             when(col("y.t") === col("x.c") && col("x.t") > col("x.c"),
               col("x.c")).otherwise(col("x.t")).as("p"))
-        // the component count rides the checkpoint's own materialization
-        // (observe) — no separate count job for the doubling bound
-        val pmapObs = org.apache.spark.sql.Observation()
-        var pmap = comp.select(col("comp").as("c")).distinct()
+        // the component count (the doubling bound) rides the checkpoint job
+        var (pmap, comps) = materialize(comp.select(col("comp").as("c")).distinct()
           .join(hooked, Seq("c"), "left")
-          .withColumn("p", coalesce(col("p"), col("c")))
-          .observe(pmapObs, count(lit(1)).as("n"))
-          .localCheckpoint()
+          .withColumn("p", coalesce(col("p"), col("c"))), rows)
         // chain depth is bounded by the live component count, so
         // ⌈log₂ comps⌉ doublings reach every root — a closed-form bound
         // (≤ 63, the count is a long) beats a stability-check join per
@@ -1270,7 +1200,7 @@ object Graph {
         // tree under multiple labels, which a later round can close into
         // a cycle
         val needed = 64 - java.lang.Long.numberOfLeadingZeros(
-          math.max(pmapObs.get("n").asInstanceOf[Long] - 1, 1L))
+          math.max(n(comps) - 1, 1L))
         // TWO doublings compose per materialization (stride ×4 per job):
         // the self-join references the cached map 4× — scans of a tiny
         // pinned table — but the JOB count halves, and at gate scales the
@@ -1282,48 +1212,29 @@ object Graph {
           val once = pmap.as("x")
             .join(pmap.as("y"), col("x.p") === col("y.c"))
             .select(col("x.c").as("c"), col("y.p").as("p"))
-          val next = once.as("x")
+          val (next, _) = materialize(once.as("x")
             .join(once.as("y"), col("x.p") === col("y.c"))
-            .select(col("x.c").as("c"), col("y.p").as("p"))
-            .localCheckpoint()
-          org.apache.spark.sql.graftx.CheckpointUtils
-            .unpersistLocalCheckpoint(pmap)
+            .select(col("x.c").as("c"), col("y.p").as("p")))
+          unpersistLocalCheckpoint(pmap)
           pmap = next
           jump += 2
         }
-        // STATS REBASE (load-bearing): localCheckpoint PRESERVES the origin
-        // plan's sizeInBytes, and the pointer-doubling self-join SQUARES it
-        // per jump — compounding across rounds into a doubly-exponential
-        // BigInteger that Catalyst's stats visitor then multiplies at
-        // million-digit widths (measured: round 3 of a K1000 graph never
-        // returns, driver pinned in BigInteger.multiplyToomCook3). Passing
-        // the materialized rows through an RDD boundary resets the
-        // estimate to the conf default, bounding per-round stats growth.
-        val relabeled = comp
+        val (relabeled, _) = materialize(comp
           .join(pmap.withColumnRenamed("c", "comp"), Seq("comp"))
-          .select(col("vtx"), col("p").as("comp"))
-          .localCheckpoint()
-        org.apache.spark.sql.graftx.CheckpointUtils
-          .unpersistLocalCheckpoint(pmap)
-        val nextComp = comp.sparkSession
-          .createDataFrame(relabeled.rdd, relabeled.schema)
-        org.apache.spark.sql.graftx.CheckpointUtils
-          .unpersistLocalCheckpoint(compCp)
-        comp = nextComp
-        compCp = relabeled
+          .select(col("vtx"), col("p").as("comp")))
+        Seq(pmap, comp).foreach(unpersistLocalCheckpoint)
+        // STATS REBASE (load-bearing): the pointer-doubling self-join
+        // squares the checkpoint's inherited sizeInBytes per jump (see
+        // withoutOriginStats — measured: round 3 of a K1000 graph never
+        // returns); the conf-default estimate bounds per-round growth
+        comp = withoutOriginStats(relabeled)
+        round += 1
       }
-      round += 1
     }
-    if (!done)
-      System.err.println(s"[graft] boruvkaMst: cross edges may remain " +
-        s"after $maxRounds rounds — output is a forest but may not span; " +
-        s"raise maxRounds")
     // the returned plan references the per-round sel checkpoints (the
     // forest edges, geometrically shrinking) but not e0 or the final
     // component map
-    org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint(e0)
-    org.apache.spark.sql.graftx.CheckpointUtils
-      .unpersistLocalCheckpoint(compCp)
+    Seq(e0, comp).foreach(unpersistLocalCheckpoint)
     mst.distinct()
   }
 
@@ -1343,6 +1254,8 @@ object Graph {
     val sig = (n, if (sum == null) BigDecimal(0) else BigDecimal(sum))
     (sig, prev.contains(sig))
   }
+  private def sccSig(o: Observed): (Long, BigDecimal) =
+    sccFixpoint(None, n(o), o("x").asInstanceOf[java.math.BigDecimal])._1
 
   /** Strongly connected components of a DIRECTED graph — min-label
     * COLORING (Orzan 2004's coloring scheme with the random pivots
@@ -1363,8 +1276,7 @@ object Graph {
     * against a label table plus a map-combinable min — the PageRank
     * shape. Budgets: `propRounds` bounds label propagation DISTANCE
     * (graph diameter-ish), `outerRounds` bounds condensation peeling;
-    * vertices still live after the budget get scc_id −1 and a loud
-    * stderr warning (the [[connectedComponents]] convention).
+    * vertices still live after either budget runs out get scc_id −1.
     *
     * Output: (`vertex`, `scc_id`) — scc_id = min vertex id of the SCC,
     * or −1 if unresolved within the budget.
@@ -1381,164 +1293,101 @@ object Graph {
       .distinct()
       .localCheckpoint()
     val spark = e0.sparkSession
-    var assigned = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("scc_id",
-          org.apache.spark.sql.types.LongType))))
+    var assigned = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(Seq("v", "scc_id").map(StructField(_, LongType))))
     // a SEPARATE checkpoint from verts: the outer loop unpersists the old
     // active set each round, and verts must survive to the final join.
-    // The active count rides each checkpoint's own materialization
-    // (observe) — per-round emptiness probes cost no extra job.
-    val obsA0 = org.apache.spark.sql.Observation()
-    var active = verts.observe(obsA0, count(lit(1)).as("n")).localCheckpoint()
-    var activeCount = obsA0.get("n").asInstanceOf[Long]
+    // The active count rides each checkpoint's own job.
+    var (active, activeObs) = materialize(verts, rows)
     var outer = 0
     var truncated = false
-    while (outer < outerRounds && !truncated && activeCount != 0L) {
-      val ea = e0
+    while (outer < outerRounds && !truncated && n(activeObs) != 0L) {
+      val (ea, _) = materialize(e0
         .join(active.withColumnRenamed("v", "a"), Seq("a"))
-        .join(active.withColumnRenamed("v", "b"), Seq("b"))
-        .localCheckpoint()
+        .join(active.withColumnRenamed("v", "b"), Seq("b")))
       // one monotone min-propagation to (early-exit) fixpoint over the
-      // forward (descendant) closure; the stable flag travels with the
-      // labels — assigning from a NON-fixpoint table would split a real
-      // SCC across ids (stale-label members miss this round's flood and
-      // get a different id later), so callers must skip on !stable.
+      // forward (descendant) closure. Assigning from a NON-fixpoint table
+      // would split a real SCC across ids (stale-label members miss this
+      // round's flood and get a different id later), so a capped
+      // propagation truncates instead.
       //
-      // Stability detection (r12) rides each round's OWN checkpoint as an
-      // observed EXACT monotone invariant (r13, VERDICT r12 ask #7): the
-      // vertex set is constant across rounds (every v reappears in the
-      // union's left leg) and labels only DECREASE under min-propagation,
-      // so (count, Σ l as DECIMAL(38,0)) unchanged ⇔ no label moved ⇔
-      // fixpoint — exactly, with no hash-collision bound (the r12 form
-      // compared count + bit_xor(xxhash64(v, l)), sound only up to a
-      // ~2⁻⁶⁴/round collision between successive label multisets). Same
-      // cost: one extra observed aggregate riding the checkpoint job; the
-      // former per-round stability join is still gone. (A delta-frontier
-      // variant — join only last round's changed labels — was measured
-      // SLOWER here: the extra join + changed-flag plan cost more than
-      // the shrinking wavefront saved at these depths.)
-      def propagate(): (DataFrame, Boolean) = {
-        val (from, to) = ("a", "b")
-        var lbl = active.withColumn("l", col("v")).localCheckpoint()
-        var sig: Option[(Long, BigDecimal)] = None
-        var j = 0
-        var stable = false
-        while (j < propRounds && !stable) {
-          val obs = org.apache.spark.sql.Observation()
-          val next = lbl
-            .unionByName(ea
-              .join(lbl.withColumnRenamed("v", to), Seq(to))
-              .select(col(from).as("v"), col("l")))
-            .groupBy(col("v")).agg(min(col("l")).as("l"))
-            .observe(obs, count(lit(1)).as("n"),
-              sum(col("l").cast("decimal(38,0)")).as("x"))
-            .localCheckpoint()
-          val (nextSig, nextStable) = sccFixpoint(sig,
-            obs.get("n").asInstanceOf[Long],
-            obs.get("x").asInstanceOf[java.math.BigDecimal])
-          stable = nextStable
-          sig = Some(nextSig)
-          org.apache.spark.sql.graftx.CheckpointUtils
-            .unpersistLocalCheckpoint(lbl)
-          lbl = next
-          j += 1
+      // The stop test is an EXACT monotone invariant observed on each
+      // round's own checkpoint: the vertex set is constant across rounds
+      // (every v reappears in the union's left leg) and labels only
+      // DECREASE under min-propagation, so (count, Σ l as DECIMAL(38,0))
+      // unchanged ⇔ no label moved ⇔ fixpoint, with no hash-collision
+      // bound. (A delta-frontier variant — join only last round's changed
+      // labels — was measured SLOWER here: the extra join + changed-flag
+      // plan cost more than the shrinking wavefront saved at these depths.)
+      val (f, _, fStable) = iterate(active.withColumn("l", col("v")),
+          propRounds, rows, sum(col("l").cast("decimal(38,0)")).as("x")) { lbl =>
+        lbl.unionByName(ea
+            .join(lbl.withColumnRenamed("v", "b"), Seq("b"))
+            .select(col("a").as("v"), col("l")))
+          .groupBy(col("v")).agg(min(col("l")).as("l"))
+      } { (prev, cur) => sccSig(prev) == sccSig(cur) }
+      var scratch = Seq(f, ea)
+      // deterministic recomputation over the same active set would hit
+      // the identical non-fixpoint — no progress is possible; bail out
+      // and let the still-active vertices surface as scc_id -1
+      if (!fStable) truncated = true
+      else {
+        // color-restricted pivot reach (Orzan coloring): an SCC lies wholly
+        // inside one F-color (F is an SCC invariant), every v with F(v) = c
+        // reaches c within the color class (any intermediate w on the path
+        // has F(w) = c — smaller would contradict F(v) = c), so the color's
+        // pivot SCC is exactly the vertices FORWARD-reachable from c inside
+        // the class: one SCC assigned PER COLOR per round, which is what
+        // peels DAG-like condensations in logarithmic rounds instead of one
+        // pivot per round
+        val fa = f.select(col("v").as("a"), col("l").as("la"))
+        val fb = f.select(col("v").as("b"), col("l").as("lb"))
+        val (colorEdges, _) = materialize(ea.join(fa, Seq("a")).join(fb, Seq("b"))
+          .filter(col("la") === col("lb"))
+          .select(col("a"), col("b")))
+        // frontier-based flood: only LAST round's newly-reached vertices
+        // can reach anything new, so the edge join runs against the
+        // frontier instead of the whole growing reach set, and the
+        // newly-reached count rides the checkpoint's job — emptiness IS
+        // the fixpoint test. The reached set is the union of the
+        // per-round frontiers (disjoint by construction: each round
+        // anti-joins what is already reached).
+        var frontier = materialize(f.filter(col("v") === col("l")).select(col("v")))._1
+        var reachFrames = Vector(frontier)
+        def reach = reachFrames.reduce(_ unionByName _)
+        var rj = 0
+        var rStable = false
+        while (rj < propRounds && !rStable) {
+          val (nf, obs) = materialize(colorEdges
+            .join(frontier.withColumnRenamed("v", "a"), Seq("a"))
+            .select(col("b").as("v")).distinct()
+            .join(reach, Seq("v"), "left_anti"), rows)
+          rStable = n(obs) == 0L
+          if (rStable) unpersistLocalCheckpoint(nf)
+          else { frontier = nf; reachFrames :+= nf }
+          rj += 1
         }
-        (lbl, stable)
-      }
-      val (f, fStable) = propagate()
-      if (!fStable) {
-        // deterministic recomputation over the same active set would hit
-        // the identical non-fixpoint — no progress is possible; bail out
-        // and let the still-active vertices surface as scc_id -1
-        System.err.println(s"[graft] scc: propagation NOT at fixpoint " +
-          s"after $propRounds rounds — raise propRounds; " +
-          s"unresolved vertices get scc_id -1")
-        truncated = true
-        org.apache.spark.sql.graftx.CheckpointUtils
-          .unpersistLocalCheckpoint(f)
-        org.apache.spark.sql.graftx.CheckpointUtils
-          .unpersistLocalCheckpoint(ea)
-      } else {
-      // color-restricted pivot reach (Orzan coloring): an SCC lies wholly
-      // inside one F-color (F is an SCC invariant), every v with F(v) = c
-      // reaches c within the color class (any intermediate w on the path
-      // has F(w) = c — smaller would contradict F(v) = c), so the color's
-      // pivot SCC is exactly the vertices FORWARD-reachable from c inside
-      // the class: one SCC assigned PER COLOR per round, which is what
-      // peels DAG-like condensations in logarithmic rounds instead of one
-      // pivot per round
-      val fa = f.select(col("v").as("a"), col("l").as("la"))
-      val fb = f.select(col("v").as("b"), col("l").as("lb"))
-      val colorEdges = ea.join(fa, Seq("a")).join(fb, Seq("b"))
-        .filter(col("la") === col("lb"))
-        .select(col("a"), col("b"))
-        .localCheckpoint()
-      // frontier-based flood (r12): only LAST round's newly-reached
-      // vertices can reach anything new, so the edge join runs against
-      // the frontier instead of the whole growing reach set, and the
-      // newly-reached count rides the checkpoint's materialization
-      // (observe) — emptiness IS the fixpoint test, no count jobs. The
-      // reached set is the union of the per-round frontiers (disjoint by
-      // construction: each round anti-joins what is already reached).
-      var frontier = f.filter(col("v") === col("l")).select(col("v"))
-        .localCheckpoint()
-      var reachFrames = Vector(frontier)
-      def reach = reachFrames.reduce(_ unionByName _)
-      var rj = 0
-      var rStable = false
-      while (rj < propRounds && !rStable) {
-        val obs = org.apache.spark.sql.Observation()
-        val nf = colorEdges
-          .join(frontier.withColumnRenamed("v", "a"), Seq("a"))
-          .select(col("b").as("v")).distinct()
-          .join(reach, Seq("v"), "left_anti")
-          .observe(obs, count(lit(1)).as("n"))
-          .localCheckpoint()
-        rStable = obs.get("n").asInstanceOf[Long] == 0L
-        if (rStable) org.apache.spark.sql.graftx.CheckpointUtils
-          .unpersistLocalCheckpoint(nf)
-        else { frontier = nf; reachFrames :+= nf }
-        rj += 1
-      }
-      if (!rStable) {
         // a partial flood under-covers the pivot SCC — assigning from it
         // would report one true SCC under several ids; same bail-out as
         // the propagation budget (deterministic retry cannot progress)
-        System.err.println(s"[graft] scc: pivot reach NOT at fixpoint " +
-          s"after $propRounds rounds — raise propRounds; " +
-          s"unresolved vertices get scc_id -1")
-        truncated = true
-      } else {
-        val newly = f.join(reach, Seq("v"))
-          .select(col("v"), col("l").as("scc_id"))
-          .localCheckpoint()
-        assigned = assigned.unionByName(newly)
-        val obsA = org.apache.spark.sql.Observation()
-        val nextActive = active.join(newly, Seq("v"), "left_anti")
-          .observe(obsA, count(lit(1)).as("n"))
-          .localCheckpoint()
-        org.apache.spark.sql.graftx.CheckpointUtils
-          .unpersistLocalCheckpoint(active)
-        active = nextActive
-        activeCount = obsA.get("n").asInstanceOf[Long]
+        if (!rStable) truncated = true
+        else {
+          val (newly, _) = materialize(f.join(reach, Seq("v"))
+            .select(col("v"), col("l").as("scc_id")))
+          assigned = assigned.unionByName(newly)
+          val (nextActive, nextObs) =
+            materialize(active.join(newly, Seq("v"), "left_anti"), rows)
+          unpersistLocalCheckpoint(active)
+          active = nextActive
+          activeObs = nextObs
+        }
+        scratch ++= Seq(reach, colorEdges)
       }
       // per-round scaffolding — nothing the result references
-      Seq(reach, colorEdges, f, ea).foreach(
-        org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint)
-      }
+      scratch.foreach(unpersistLocalCheckpoint)
       outer += 1
     }
-    if (activeCount != 0L)
-      System.err.println(s"[graft] scc: $activeCount vertices " +
-        s"unresolved after $outer outer rounds — raise " +
-        (if (truncated) "propRounds" else "outerRounds"))
-    org.apache.spark.sql.graftx.CheckpointUtils.unpersistLocalCheckpoint(e0)
-    org.apache.spark.sql.graftx.CheckpointUtils
-      .unpersistLocalCheckpoint(active)
+    Seq(e0, active).foreach(unpersistLocalCheckpoint)
     // the returned plan references verts + the per-round `newly`
     // checkpoints behind `assigned` — those must outlive the return
     verts.join(assigned, Seq("v"), "left")
@@ -1560,9 +1409,9 @@ object Graph {
     *
     * Output: (`vertex`, `mis_round`) — every vertex of the graph, with the
     * 1-based round it entered the MIS, 0 if it was dominated, or −1 if it
-    * was still undecided when `maxRounds` ran out (a loud stderr warning
-    * fires; −1 vertices may have no MIS neighbor, so maximality is only
-    * guaranteed when none are emitted).
+    * was still undecided when `maxRounds` ran out (−1 vertices may have no
+    * MIS neighbor, so maximality is only guaranteed when none are
+    * emitted).
     */
   def lubyMis(edges: DataFrame, src: String, dst: String,
       maxRounds: Int = 24): DataFrame = {
@@ -1572,21 +1421,14 @@ object Graph {
       .distinct()
       .localCheckpoint()
     val pri = struct(md5(col("vtx").cast("string")), col("vtx"))
-    // the active count rides each checkpoint's own materialization
-    // (observe) — the per-round emptiness probe costs no extra job
-    val obs0 = org.apache.spark.sql.Observation()
-    var active = e.select(col("a").as("vtx")).distinct()
-      .observe(obs0, count(lit(1)).as("n")).localCheckpoint()
-    var activeCount = obs0.get("n").asInstanceOf[Long]
-    var result = active.sparkSession.createDataFrame(
-      active.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vertex",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("mis_round",
-          org.apache.spark.sql.types.LongType))))
-    var round = 1
-    while (round <= maxRounds && activeCount != 0L) {
+    var result = e.sparkSession.createDataFrame(
+      e.sparkSession.sparkContext.emptyRDD[Row],
+      StructType(Seq("vertex", "mis_round").map(StructField(_, LongType))))
+    var round = 0
+    // the active count rides each round's checkpoint job
+    val (active, _, converged) = iterate(e.select(col("a").as("vtx")).distinct(),
+        maxRounds, rows) { active =>
+      round += 1
       // live edges: both endpoints active
       val live = e
         .join(active.withColumnRenamed("vtx", "a"), Seq("a"))
@@ -1595,38 +1437,23 @@ object Graph {
         .select(col("a").as("vtx"),
           struct(md5(col("b").cast("string")), col("b")).as("np"))
         .groupBy(col("vtx")).agg(min(col("np")).as("np"))
-      val winners = active.join(nbrMin, Seq("vtx"), "left")
+      val (winners, _) = materialize(active.join(nbrMin, Seq("vtx"), "left")
         .filter(col("np").isNull || pri < col("np"))
-        .select(col("vtx"))
-        .localCheckpoint()
+        .select(col("vtx")))
       result = result.unionByName(
         winners.select(col("vtx").as("vertex"),
           lit(round.toLong).as("mis_round")))
       val dominated = e
         .join(winners.withColumnRenamed("vtx", "a"), Seq("a"))
         .select(col("b").as("vtx")).distinct()
-      val obsN = org.apache.spark.sql.Observation()
-      val nextActive = active
-        .join(winners.unionByName(dominated).distinct(),
-          Seq("vtx"), "left_anti")
-        .observe(obsN, count(lit(1)).as("n"))
-        .localCheckpoint()
-      org.apache.spark.sql.graftx.CheckpointUtils
-        .unpersistLocalCheckpoint(active)
-      active = nextActive
-      activeCount = obsN.get("n").asInstanceOf[Long]
-      round += 1
-    }
-    if (activeCount != 0L) {
-      // budget exhausted with undecided vertices: emitting them as 0
-      // ("dominated") would silently break maximality — use a distinct
-      // sentinel and warn (the scc convention)
-      System.err.println(s"[graft] lubyMis: $activeCount vertices " +
-        s"still active after $maxRounds rounds — emitted as mis_round -1 " +
-        s"(undecided, NOT dominated); raise maxRounds")
-      result = result.unionByName(
-        active.select(col("vtx").as("vertex"), lit(-1L).as("mis_round")))
-    }
+      active.join(winners.unionByName(dominated).distinct(),
+        Seq("vtx"), "left_anti")
+    } { (_, cur) => n(cur) == 0L }
+    // budget exhausted with undecided vertices: emitting them as 0
+    // ("dominated") would silently break maximality — use a distinct
+    // sentinel (the scc convention)
+    if (!converged) result = result.unionByName(
+      active.select(col("vtx").as("vertex"), lit(-1L).as("mis_round")))
     val verts = e.select(col("a").as("vertex")).distinct()
     verts.join(result, Seq("vertex"), "left")
       .select(col("vertex"), coalesce(col("mis_round"), lit(0L)).as("mis_round"))

@@ -750,4 +750,107 @@ class GraphSpec extends AnyFunSuite {
       .as[(Long, Option[Long], Option[Long])].collect().toSet
     assert(a === b && a.nonEmpty)
   }
+
+  test("round caps throw a named exception instead of returning a partial " +
+    "answer: cc, cc-star, boruvka") {
+    import graft.operators.RoundCapExceededException
+    def capOf(body: => Unit): (String, Int) = {
+      val e = intercept[RoundCapExceededException](body)
+      (e.operator, e.cap)
+    }
+    // the 12-vertex path needs 11 label-propagation rounds
+    val path = (1L until 12L).map(i => (i + 1, i))
+    assert(capOf(Graph.connectedComponents(path.toDF("a", "b"), "a", "b",
+      maxIter = 3).collect()) == (("connectedComponents", 3)))
+    val chain = (1L until 200L).map(i => (i + 1, i))
+    assert(capOf(ccStar(2, chain: _*)) == (("connectedComponentsStar", 2)))
+    // chain of 40 triangles: one round contracts each triangle, and the
+    // path edges still cross components
+    val tri = (0L until 40L).flatMap { i =>
+      val b = i * 3
+      Seq((b, b + 1, 5L + i), (b + 1, b + 2, 6L + i), (b, b + 2, 7L + i))
+    }
+    val blobs = (0L until 39L).map(i => (i * 3 + 2, (i + 1) * 3, 100L + i))
+    assert(capOf(Graph.boruvkaMst((tri ++ blobs).toDF("a", "b", "w"),
+      "a", "b", "w", maxRounds = 1).collect()) == (("boruvkaMst", 1)))
+  }
+
+  test("hitsInt frees every per-round checkpoint the returned plan does " +
+    "not read") {
+    val e = Seq((1L, 10L), (1L, 11L), (1L, 12L), (2L, 10L), (3L, 11L))
+      .toDF("u", "v")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // the persisted-RDD registry holds its RDDs weakly, and the context
+    // cleaner unpersists one once it is garbage-collected: hold every
+    // checkpoint RDD strongly during the call, so only an explicit
+    // unpersist can take one off the registry
+    val held = java.util.concurrent.ConcurrentHashMap
+      .newKeySet[org.apache.spark.rdd.RDD[_]]()
+    val polling = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val poller = new Thread(() => while (polling.get()) {
+      sc.getPersistentRDDs.values.foreach(held.add)
+      Thread.sleep(1)
+    })
+    poller.start()
+    val out = try {
+      val o = Graph.hitsInt(e, "u", "v", iters = 4)
+      o.collect()
+      o
+    } finally { polling.set(false); poller.join() }
+    val read = out.asInstanceOf[org.apache.spark.sql.classic.DataFrame]
+      .queryExecution.analyzed
+      .collect { case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.id }.toSet
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.subsetOf(read), s"pinned $left, the plan reads $read")
+  }
+
+  test("withoutOriginStats: conf-default size estimate over the same " +
+    "checkpoint blocks") {
+    import org.apache.spark.sql.graftx.CheckpointUtils
+    val cp = spark.range(1000).toDF("v").localCheckpoint()
+    val rebased = CheckpointUtils.withoutOriginStats(cp)
+      .asInstanceOf[org.apache.spark.sql.classic.DataFrame]
+    assert(rebased.queryExecution.optimizedPlan.stats.sizeInBytes ==
+      BigInt(org.apache.spark.sql.internal.SQLConf.get.defaultSizeInBytes))
+    val ids = rebased.queryExecution.analyzed
+      .collect { case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.id }
+    assert(ids.nonEmpty && ids.forall(spark.sparkContext.getPersistentRDDs.contains))
+    assert(rebased.count() == 1000L)
+    CheckpointUtils.unpersistLocalCheckpoint(rebased)
+    assert(!ids.exists(spark.sparkContext.getPersistentRDDs.contains))
+  }
+
+  test("one graph loop's job counts: the stop test rides the round's " +
+    "checkpoint job") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def jobsOf(body: => Unit): Int = {
+      org.apache.spark.sql.graftx.ListenerHook.drain(spark)
+      jobs.set(0)
+      body
+      org.apache.spark.sql.graftx.ListenerHook.drain(spark)
+      jobs.get()
+    }
+    // two disjoint paths of 6 vertices (5 propagation rounds, then one
+    // confirming round)
+    val edges = ((1L until 6L).map(i => (i, i + 1)) ++
+      (11L until 16L).map(i => (i, i + 1))).toDF("a", "b")
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val cc = jobsOf(Graph.connectedComponents(edges, "a", "b").collect())
+      val anf = jobsOf(Graph.hyperAnf(edges, "a", "b", Seq(1L, 11L).toDF("v"),
+        "v", maxDepth = 3).collect())
+      // the count()/collect() stop tests cost 35 and 23 jobs here
+      assert(cc <= 23, s"connectedComponents launched $cc jobs")
+      assert(anf <= 15, s"hyperAnf launched $anf jobs")
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
