@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.config.PipelineConfig
 import graft.jobs.{BronzeToSilver, SilverToGold}
 import graft.orchestration.Pipeline
@@ -21,13 +19,9 @@ object PipelineApp {
   def main(args: Array[String]): Unit = {
     val cfg = PipelineConfig.fromArgs(args)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.expressions.GraftExtensions())
+    val spark = Sessions.builder(cpus)
       .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
       .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {

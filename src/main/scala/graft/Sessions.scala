@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared SparkSession construction for the runnable mains (Bench,
-  * BenchOne, Verify, PlanDump) — one place for the session config so the
-  * bench, the correctness dump, and plan capture all measure the SAME
-  * engine setup.
+  * BenchOne, Verify, PlanDump, PipelineApp) — one place for the session
+  * config so the bench, the correctness dump, plan capture and the
+  * pipeline CLI all run the SAME engine setup.
   *
   * Config experiments measured and REJECTED here in round 12 (recorded so
   * the next round does not re-run them):

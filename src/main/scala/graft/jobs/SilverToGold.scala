@@ -1,12 +1,14 @@
 package graft.jobs
 
-import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.functions.{current_timestamp, lit}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, collect_set, count, current_timestamp, lit, struct, when}
+import org.apache.spark.sql.graftx.CheckpointUtils
 import org.apache.spark.storage.StorageLevel
 
 import graft.config.PipelineConfig
 import graft.io.{Sinks, Sources}
 import graft.ops.Aggregations
+import graft.orchestration.Par
 
 /** Silver → gold job: three independent aggregations from one silver scan
   * (reference `src/glue_jobs/silver_to_gold.py:main`).
@@ -19,6 +21,14 @@ import graft.ops.Aggregations
   */
 object SilverToGold {
 
+  /** The silver columns the three gold aggregates read. */
+  private val goldInput = Seq("transaction_id", "customer_id", "amount",
+    "transaction_date", "year", "month", "day").map(col)
+
+  /** The `created_at` stamp of every gold row: the fixed clock, else now. */
+  private def createdAt(cfg: PipelineConfig): Column =
+    cfg.clock.map(t => lit(t)).getOrElse(current_timestamp())
+
   /** Full recompute-overwrite of the three gold tables from silver.
     * The three sinks run concurrently, so a failure in one leaves the
     * other two committed — rerun; do not trust partial gold.
@@ -27,19 +37,18 @@ object SilverToGold {
     val silver = Sources.silverParquet(spark, cfg.silverPath)
     // P7 — empty-input short-circuit (silver_to_gold.py:122-124)
     if (silver.isEmpty) return
-    val projected = silver.select("transaction_id", "customer_id", "amount",
-      "transaction_date", "year", "month", "day")
+    val projected = silver.select(goldInput: _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val createdAt = cfg.clock.map(t => lit(t)).getOrElse(current_timestamp())
+      val at = createdAt(cfg)
       val daily = Aggregations.daily(projected, cfg.approxDistinct)
-        .withColumn("created_at", createdAt)
+        .withColumn("created_at", at)
         .filter("year IS NOT NULL AND month IS NOT NULL") // P5 guard
       val monthly = Aggregations.monthly(projected, cfg.approxDistinct)
-        .withColumn("created_at", createdAt)
+        .withColumn("created_at", at)
         .filter("year IS NOT NULL")
       val customer = Aggregations.customerInsights(projected, cfg.approxDistinct)
-        .withColumn("created_at", createdAt)
+        .withColumn("created_at", at)
       // the three sinks are independent (three aggregations of the SAME
       // persisted projection, three disjoint output paths) — overlap them
       // (guide §2.6): the monthly/customer jobs back-fill the executors the
@@ -47,7 +56,7 @@ object SilverToGold {
       // scheduling round-trips overlap. Concurrent first-materialization of
       // `projected` is safe: the block manager computes each cached
       // partition once under a per-block lock.
-      graft.orchestration.Par.run(Seq(
+      Par.run(Seq(
         () => Sinks.writeGoldDaily(daily, cfg.goldDailyPath),
         () => Sinks.writeGoldMonthly(monthly, cfg.goldMonthlyPath),
         () => Sinks.writeGoldCustomer(customer, cfg.goldCustomerPath)))
@@ -63,16 +72,15 @@ object SilverToGold {
     * caller owns `rows` and unpersists it
     * (`CheckpointUtils.unpersistLocalCheckpoint`).
     */
-  final case class StagedBatch(rows: org.apache.spark.sql.DataFrame,
-      count: Long, pairs: Seq[(Int, Int)])
+  final case class StagedBatch(rows: DataFrame, count: Long,
+      pairs: Seq[(Int, Int)])
 
   /** Stage `batch` (see [[StagedBatch]]): one job chain; the count and
     * the touched-partition set ride the checkpoint job as observed
     * metrics instead of separate `isEmpty` / `distinct().collect()` jobs.
     */
-  def stage(batch: org.apache.spark.sql.DataFrame): StagedBatch = {
-    import org.apache.spark.sql.functions.{col, collect_set, count, struct, when}
-    val (rows, obs) = org.apache.spark.sql.graftx.CheckpointUtils.materialize(
+  def stage(batch: DataFrame): StagedBatch = {
+    val (rows, obs) = CheckpointUtils.materialize(
       batch, count(lit(1)).as("n"),
       collect_set(when(col("year").isNotNull && col("month").isNotNull,
         struct(col("year"), col("month")))).as("pairs"))
@@ -102,73 +110,38 @@ object SilverToGold {
     * partial gold. A rerun converges (spec-proven per failed sink).
     */
   def runIncremental(spark: SparkSession, cfg: PipelineConfig,
-      batch: org.apache.spark.sql.DataFrame): Unit = {
+      batch: DataFrame): Unit = {
     val staged = stage(batch)
     try runIncremental(spark, cfg, staged)
-    finally org.apache.spark.sql.graftx.CheckpointUtils
-      .unpersistLocalCheckpoint(staged.rows)
+    finally CheckpointUtils.unpersistLocalCheckpoint(staged.rows)
   }
 
-  /** [[runIncremental]] over an already staged batch:
-    *
-    *  - Daily (y/m-partitioned): recompute the batch's touched (year,
-    *    month) pairs from a silver scan STATICALLY pruned to those
-    *    partitions (the observed touched set — bounded, a batch spans a
-    *    handful of months — becomes partition-filter literals, so the
-    *    scan reads touched directories only).
-    *  - Monthly (year-partitioned): same with the touched years.
-    *  - Customer insights: a customer's metrics span all history, so this
-    *    is NOT partition-prunable — instead silver is semi-joined to the
-    *    batch's customers (one scan, narrow output) and the resulting
-    *    rows key-merge into the customer table ([[Sinks.mergeGoldCustomer]]).
-    *    It runs even when every row has a null year/month (no touched
-    *    partition).
-    *
-    * The three sinks write three disjoint tables from silver as it stands
-    * after the batch's append, so they run concurrently (guide §2.6).
+  /** [[runIncremental]] over an already staged batch. The gold
+    * partitions the batch touches — daily for its (year, month) pairs,
+    * monthly for their years — are re-aggregated from silver as it stands
+    * after the batch's append, by the same partition refresh the erasure
+    * uses. Customer insights are not partition-prunable (a customer's
+    * metrics span all history): silver is semi-joined to the batch's
+    * customers (one scan, narrow output) and the resulting rows key-merge
+    * into the customer table ([[Sinks.mergeGoldCustomer]]), concurrently
+    * with the two partition writes (three disjoint tables, guide §2.6).
+    * The merge runs even when every row has a null year/month (no touched
+    * partition).
     */
   def runIncremental(spark: SparkSession, cfg: PipelineConfig,
       staged: StagedBatch): Unit = {
-    import org.apache.spark.sql.functions.{broadcast, col}
     if (staged.count == 0L) return
     val silver = Sources.silverParquet(spark, cfg.silverPath)
-    val createdAt = cfg.clock.map(t => lit(t)).getOrElse(current_timestamp())
-    // one physical scan of the touched YEARS feeds both partition
-    // aggregates (monthly needs every month of a touched year; daily
-    // re-filters to the touched months); the block manager computes each
-    // cached partition once under a per-block lock, so the two concurrent
-    // consumers share it
-    val projected = if (staged.pairs.isEmpty) None else Some(
-      silver.filter(col("year").isin(staged.pairs.map(_._1).distinct: _*))
-        .select("transaction_id", "customer_id", "amount",
-          "transaction_date", "year", "month", "day")
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val partitionSinks = projected.toSeq.flatMap { p =>
-      val ymPred = staged.pairs.map { case (y, m) =>
-        col("year") === y && col("month") === m }.reduce(_ || _)
-      val daily = Aggregations.daily(p.filter(ymPred), cfg.approxDistinct)
-        .withColumn("created_at", createdAt)
-      val monthly = Aggregations.monthly(p, cfg.approxDistinct)
-        .withColumn("created_at", createdAt)
-      Seq(
-        () => Sinks.overwriteGoldDailyPartitions(daily, cfg.goldDailyPath),
-        () => Sinks.overwriteGoldMonthlyPartitions(monthly,
-          cfg.goldMonthlyPath))
-    }
-    // customer insights for the batch's customers only, merged by key;
     // the broadcast semi-join build side ignores duplicate keys, so the
     // batch's customer column needs no distinct (a shuffle job) first
-    val touched = silver
-      .join(broadcast(staged.rows.select(col("customer_id"))),
-        Seq("customer_id"), "left_semi")
-      .select("transaction_id", "customer_id", "amount", "transaction_date",
-        "year", "month", "day")
-    val insights = Aggregations.customerInsights(touched, cfg.approxDistinct)
-      .withColumn("created_at", createdAt)
-    try graft.orchestration.Par.run(partitionSinks :+ (() =>
-      Sinks.mergeGoldCustomer(spark, insights, "customer_id",
-        cfg.goldCustomerPath)))
-    finally projected.foreach(_.unpersist())
+    val insights = Aggregations.customerInsights(
+        silver.join(broadcast(staged.rows.select(col("customer_id"))),
+          Seq("customer_id"), "left_semi").select(goldInput: _*),
+        cfg.approxDistinct)
+      .withColumn("created_at", createdAt(cfg))
+    refreshGold(cfg, silver, staged.pairs, staged.pairs.map(_._1).distinct,
+      () => Sinks.mergeGoldCustomer(spark, insights, "customer_id",
+        cfg.goldCustomerPath))
   }
 
   /** GDPR / right-to-be-forgotten erasure — the deletion path [[run]]'s
@@ -178,27 +151,34 @@ object SilverToGold {
     * silver), and key-delete the customers from the customer table. Cost
     * scales with the erased customers' time footprint, never the table.
     *
-    * CRASH-SAFE / IDEMPOTENT: the touched-gold footprint is the UNION of
-    * the subject's silver footprint and their GOLD footprint (the daily
-    * and monthly tables carry customer_id), so a retry after a failure
-    * between the silver rewrite and the gold re-aggregation still finds
-    * the stale gold partitions and completes the erasure — deriving the
-    * footprint from silver alone would see an already-clean silver and
-    * silently leave the subject's rows in gold. The customer-table key
-    * delete runs UNCONDITIONALLY (even when silver is empty or already
-    * clean), and a second invocation after success is a no-op.
+    * CRASH-SAFE / IDEMPOTENT: the subject's footprint is scanned on every
+    * tier, and the gold partitions to refresh are the UNION of the silver
+    * and the gold footprints (the daily and monthly tables carry
+    * customer_id). A retry after any partial run therefore still finds
+    * every stale gold partition: after a crash between the silver rewrite
+    * and the gold refresh silver is already clean, and after a failed
+    * monthly write only gold monthly still holds the subject — the daily
+    * and monthly refreshes run independently, each on its own touched
+    * set. The customer-table key delete runs UNCONDITIONALLY (even when
+    * silver is empty or already clean), and a second invocation after
+    * success is a no-op. A table with no data file counts as absent, and
+    * the gold refresh reads the rewritten silver under the schema taken
+    * before the rewrite, so an erasure that takes silver's last rows
+    * completes, and so does its retry.
     *
     * Dynamic partition overwrite only replaces partitions PRESENT in the
     * written frame, so partitions left EMPTY by the erasure are dropped
     * explicitly ([[Sinks.deletePartitionDirs]]) — silver day dirs, gold
     * month dirs, and gold year dirs alike; without that the old files
-    * (and the data subject's rows) would silently survive.
+    * (and the data subject's rows) would silently survive. With no silver
+    * to recompute from, gold is rewritten without the subject's rows
+    * instead, so other customers' aggregates survive.
     *
-    * Erased-customer rows in NULL year/month/day partitions (hive default
-    * partition) fail LOUDLY: partition predicates cannot address them, so
+    * Erased-customer rows in a NULL partition (hive default partition) of
+    * any tier fail LOUDLY: partition predicates cannot address them, so
     * completing "successfully" while they survive would be a silent
-    * compliance violation. The silver writers guard partition keys (P5),
-    * so this only fires on tables written outside this library.
+    * compliance violation. The writers guard partition keys (P5), so this
+    * only fires on tables written outside this library.
     *
     * `customers`' first column is the erased customer-id set (bounded:
     * erasure requests are human-scale). Spec-proven: end state ≡ a full
@@ -220,221 +200,161 @@ object SilverToGold {
     * cover only what remained.
     */
   def runErasure(spark: SparkSession, cfg: PipelineConfig,
-      customers: org.apache.spark.sql.DataFrame,
+      customers: DataFrame,
       provenance: Option[(String, Long)] = None): Unit = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    def exists(path: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
     val keys = customers
       .select(col(customers.columns.head).cast("string").as("customer_id"))
       .distinct().localCheckpoint()
     try {
-      val haveSilver = exists(cfg.silverPath)
-      // the subject's footprint scans — silver (WITH row counts: the
-      // provenance card rides the same scan), gold daily, gold monthly,
-      // and the provenance customer-row count — are four INDEPENDENT
-      // read-only jobs over four different tables: run them concurrently
-      // (guide §2.6) instead of paying four sequential job round-trips.
-      // Nulls are collected, not filtered — they must fail, not survive.
-      def silverCountsThunk(): Seq[((Int, Int, Int), Long)] =
-        if (!haveSilver) Nil else {
-          val rows = Sources.silverParquet(spark, cfg.silverPath)
-            .join(broadcast(keys), Seq("customer_id"), "left_semi")
-            .groupBy(col("year"), col("month"), col("day"))
-            .agg(org.apache.spark.sql.functions.count(
-              org.apache.spark.sql.functions.lit(1)).as("__n"))
-            .collect()
-          val (nulls, complete) = rows.partition(r =>
-            r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))
-          if (nulls.nonEmpty) throw new IllegalStateException(
-            "runErasure: erased customers have silver rows in NULL " +
-              "year/month/day partitions (hive default partition) — " +
-              "partition-restricted rewrite cannot address them; repair the " +
-              "partition keys (P5 guard) before erasing")
-          complete.map(r =>
-            ((r.getInt(0), r.getInt(1), r.getInt(2)), r.getLong(3))).toSeq
-        }
-      // the subject's GOLD footprint — the retry path's source of truth
-      // after a crash that already rewrote silver
-      def goldPairCountsThunk(): Seq[((Int, Int), Long)] =
-        if (!exists(cfg.goldDailyPath)) Nil
-        else spark.read.parquet(cfg.goldDailyPath)
-          .join(broadcast(keys), Seq("customer_id"), "left_semi")
-          .groupBy(col("year"), col("month"))
-          .agg(org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("__n"))
-          .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getLong(2)))
-          .toSeq
-      def goldYearCountsThunk(): Seq[(Int, Long)] =
-        if (!exists(cfg.goldMonthlyPath)) Nil
-        else spark.read.parquet(cfg.goldMonthlyPath)
-          .join(broadcast(keys), Seq("customer_id"), "left_semi")
-          .groupBy(col("year"))
-          .agg(org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("__n"))
-          .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-      def custCountThunk(): Option[Long] =
-        if (provenance.isEmpty || !exists(cfg.goldCustomerPath)) None
-        else Some(spark.read.parquet(cfg.goldCustomerPath)
-          .join(broadcast(keys), Seq("customer_id"), "left_semi")
-          .count())
-      val footprints = graft.orchestration.Par.eval[Any](Seq(
-        () => silverCountsThunk(), () => goldPairCountsThunk(),
-        () => goldYearCountsThunk(), () => custCountThunk()))
-      val silverCounts =
-        footprints(0).asInstanceOf[Seq[((Int, Int, Int), Long)]]
-      val goldPairCounts =
-        footprints(1).asInstanceOf[Seq[((Int, Int), Long)]]
-      val goldYearCounts = footprints(2).asInstanceOf[Seq[(Int, Long)]]
-      val custCount = footprints(3).asInstanceOf[Option[Long]]
-      val silverTriples: Seq[(Int, Int, Int)] = silverCounts.map(_._1)
-      val goldPairs: Seq[(Int, Int)] = goldPairCounts.map(_._1)
-      val goldYears: Seq[Int] = goldYearCounts.map(_._1)
-      // erasure provenance card: counts MEASURED here, before any
-      // mutation destroys the evidence — but written only after every
-      // tier's rewrite succeeds (a card row for an epoch means that
-      // erasure COMPLETED; a crash mid-erasure must not leave a
-      // tombstone consumers would wrongly trust)
-      val cardRows: Seq[(Long, String, String, Long)] =
-        provenance match {
-          case None => Nil
-          case Some((_, epoch)) =>
-            val custRows: Seq[(Long, String, String, Long)] =
-              custCount.toSeq.map(n => (epoch, "gold_customer", "", n))
-            silverCounts.map { case ((y, m, d), n) =>
-              (epoch, "silver", s"year=$y/month=$m/day=$d", n) } ++
-              goldPairCounts.map { case ((y, m), n) =>
-                (epoch, "gold_daily", s"year=$y/month=$m", n) } ++
-              goldYearCounts.map { case (y, n) =>
-                (epoch, "gold_monthly", s"year=$y", n) } ++
-              custRows
-        }
-      // touched gold partitions (silver ∪ gold footprint) re-aggregate
-      // from the REWRITTEN silver
-      val pairs = (silverTriples.map(t => (t._1, t._2)) ++ goldPairs).distinct
-      val years = (pairs.map(_._1) ++ goldYears).distinct
-      // silver rewrite → gold re-aggregation is a dependent chain (gold
-      // recomputes from the REWRITTEN silver); the customer-table key
-      // delete below touches a table no step of that chain reads or
-      // writes, so the two run concurrently (guide §2.6)
-      def silverAndGoldPhase(): Unit = {
-      if (silverTriples.nonEmpty) {
-        val silver = Sources.silverParquet(spark, cfg.silverPath)
-        val dayPred = silverTriples.map { case (y, m, d) =>
-          col("year") === y && col("month") === m && col("day") === d
-        }.reduce(_ || _)
-        // staged BEFORE the overwrite — it reads the path it replaces
-        val retained = silver.filter(dayPred)
-          .join(broadcast(keys), Seq("customer_id"), "left_anti")
-          .localCheckpoint()
-        try {
-          Sinks.overwriteSilverPartitions(retained, cfg.silverPath)
-          val still = retained.select("year", "month", "day").distinct()
-            .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSet
-          Sinks.deletePartitionDirs(spark, cfg.silverPath,
-            silverTriples.filterNot(still).map { case (y, m, d) =>
-              s"year=$y/month=$m/day=$d" })
-        } finally org.apache.spark.sql.graftx.CheckpointUtils
-          .unpersistLocalCheckpoint(retained)
-      }
-      if (!haveSilver) {
-        // no silver to recompute from: other customers' aggregates in the
-        // touched partitions must survive, so drop ONLY the subject's gold
-        // rows by anti-join (partition-pruned rewrite, same staging rule)
-        def antiRewrite(path: String, pred: org.apache.spark.sql.Column,
-            write: (org.apache.spark.sql.DataFrame, String) => Unit,
-            partCols: Seq[String], touched: Set[Seq[Int]]): Unit = {
-          val retained = spark.read.parquet(path).filter(pred)
-            .join(broadcast(keys), Seq("customer_id"), "left_anti")
-            .localCheckpoint()
-          try {
-            write(retained, path)
-            // partitions holding ONLY the subject: dynamic overwrite wrote
-            // nothing there, so the old files must be dropped explicitly
-            val still: Set[Seq[Int]] =
-              retained.select(partCols.map(col): _*).distinct()
-                .collect()
-                .map(r => partCols.indices.map(r.getInt): Seq[Int]).toSet
-            Sinks.deletePartitionDirs(spark, path,
-              touched.filterNot(still).toSeq.map(vs =>
-                partCols.zip(vs).map { case (c, v) => s"$c=$v" }
-                  .mkString("/")))
-          } finally org.apache.spark.sql.graftx.CheckpointUtils
-            .unpersistLocalCheckpoint(retained)
-        }
-        // the two anti-rewrites touch disjoint tables — overlap them
-        graft.orchestration.Par.run(Seq(
-          () => if (goldPairs.nonEmpty)
-            antiRewrite(cfg.goldDailyPath,
-              goldPairs.map { case (y, m) =>
-                col("year") === y && col("month") === m }.reduce(_ || _),
-              Sinks.overwriteGoldDailyPartitions,
-              Seq("year", "month"),
-              goldPairs.map(p => Seq(p._1, p._2)).toSet),
-          () => if (goldYears.nonEmpty)
-            antiRewrite(cfg.goldMonthlyPath,
-              col("year").isin(goldYears: _*),
-              Sinks.overwriteGoldMonthlyPartitions,
-              Seq("year"), goldYears.map(Seq(_)).toSet)))
-      } else if (pairs.nonEmpty) {
-        val ymPred = pairs.map { case (y, m) =>
-          col("year") === y && col("month") === m }.reduce(_ || _)
-        val silver2 = Sources.silverParquet(spark, cfg.silverPath)
-        val projected = silver2.filter(col("year").isin(years: _*))
-          .select("transaction_id", "customer_id", "amount",
-            "transaction_date", "year", "month", "day")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val createdAt = cfg.clock.map(t => lit(t))
-            .getOrElse(current_timestamp())
-          val daily = Aggregations.daily(projected.filter(ymPred),
-              cfg.approxDistinct)
-            .withColumn("created_at", createdAt)
-          val monthly = Aggregations.monthly(projected, cfg.approxDistinct)
-            .withColumn("created_at", createdAt)
-          // daily and monthly chains (re-agg write + emptied-partition
-          // drop) touch disjoint gold tables from the SAME persisted
-          // projection — overlap them (guide §2.6); the block manager
-          // computes each cached partition once under a per-block lock
-          graft.orchestration.Par.run(Seq(
-            () => {
-              Sinks.overwriteGoldDailyPartitions(daily, cfg.goldDailyPath)
-              // gold partitions the erasure emptied entirely
-              val dailyStill = projected.filter(ymPred)
-                .select("year", "month").distinct()
-                .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
-              Sinks.deletePartitionDirs(spark, cfg.goldDailyPath,
-                pairs.filterNot(dailyStill).map { case (y, m) =>
-                  s"year=$y/month=$m" })
-            },
-            () => {
-              Sinks.overwriteGoldMonthlyPartitions(monthly,
-                cfg.goldMonthlyPath)
-              val monthlyStill = projected.select("year").distinct()
-                .collect().map(_.getInt(0)).toSet
-              Sinks.deletePartitionDirs(spark, cfg.goldMonthlyPath,
-                years.filterNot(monthlyStill).map(y => s"year=$y"))
-            }))
-        } finally projected.unpersist()
-      }
+      val tiers = Seq(
+        "silver" -> (cfg.silverPath, Seq("year", "month", "day")),
+        "gold_daily" -> (cfg.goldDailyPath, Seq("year", "month")),
+        "gold_monthly" -> (cfg.goldMonthlyPath, Seq("year"))) ++
+        provenance.map(_ => "gold_customer" -> (cfg.goldCustomerPath, Nil))
+      // independent read-only scans of different tables: overlap them
+      // (guide §2.6) instead of paying one job round-trip after another
+      val footprints = Par.eval(tiers.map { case (_, (path, partCols)) =>
+        () => footprint(spark, keys, path, partCols) })
+      val Seq(silver, daily, monthly) = footprints.take(3)
+      val pairs = (silver.touched.map(_.take(2)) ++ daily.touched).distinct
+        .map { case Seq(y, m) => (y, m) }
+      val years = (pairs.map(_._1) ++ monthly.touched.map(_.head)).distinct
+      // silver rewrite → gold refresh is a dependent chain (gold
+      // recomputes from the REWRITTEN silver)
+      def silverAndGold(): Unit = silver.table match {
+        case None => Par.run(Seq(
+          () => rewriteWithout(spark, keys, daily,
+            Sinks.overwriteGoldDailyPartitions),
+          () => rewriteWithout(spark, keys, monthly,
+            Sinks.overwriteGoldMonthlyPartitions)))
+        case Some(before) =>
+          rewriteWithout(spark, keys, silver, Sinks.overwriteSilverPartitions)
+          val after = spark.read.schema(before.schema).parquet(cfg.silverPath)
+          // the gold partitions the erasure emptied: the refresh writes
+          // nothing there, so their old files are dropped (disjoint from
+          // every partition the refresh writes)
+          refreshGold(cfg, after, pairs, years, () => if (years.nonEmpty) {
+            val left = after.filter(col("year").isin(years: _*))
+              .select("year", "month").distinct().collect()
+              .map(r => (r.getInt(0), r.getInt(1))).toSet
+            Sinks.deletePartitionDirs(spark, cfg.goldDailyPath,
+              pairs.filterNot(left).map { case (y, m) => s"year=$y/month=$m" })
+            Sinks.deletePartitionDirs(spark, cfg.goldMonthlyPath,
+              years.filterNot(left.map(_._1)).map(y => s"year=$y"))
+          })
       }
       // the customer table row is a pure key delete (a merge cannot
       // remove keys that no longer have any rows) — UNCONDITIONAL, so an
-      // empty or already-clean silver still erases the aggregate row
-      graft.orchestration.Par.run(Seq(
-        () => silverAndGoldPhase(),
-        () => Sinks.deleteGoldCustomerKeys(spark, keys, "customer_id",
-          cfg.goldCustomerPath)))
-      // every tier's mutation succeeded: publish the card
-      provenance.foreach { case (path, _) =>
+      // empty or already-clean silver still erases the aggregate row; no
+      // step of the silver/gold chain reads or writes that table
+      Par.run(Seq(() => silverAndGold(), () => Sinks.deleteGoldCustomerKeys(
+        spark, keys, "customer_id", cfg.goldCustomerPath)))
+      // every tier's mutation succeeded: publish the card, whose counts
+      // were measured before any mutation destroyed the evidence
+      provenance.foreach { case (path, epoch) =>
         import spark.implicits._
-        cardRows.toDF("tombstone_epoch", "tier", "partition", "rows_erased")
+        tiers.zip(footprints).flatMap { case ((tier, _), fp) =>
+          fp.counts.map { case (vs, n) => (epoch, tier, fp.rel(vs), n) } }
+          .toDF("tombstone_epoch", "tier", "partition", "rows_erased")
           .coalesce(1).write.mode("append")
           .option("compression", "snappy").parquet(path)
       }
-    } finally org.apache.spark.sql.graftx.CheckpointUtils
-      .unpersistLocalCheckpoint(keys)
+    } finally CheckpointUtils.unpersistLocalCheckpoint(keys)
   }
+
+  /** Re-aggregate gold daily for the (year, month) `pairs` and gold
+    * monthly for the `years` from `silver`, and replace exactly those
+    * partitions (dynamic partition overwrite). Each write runs when its
+    * own touched set is non-empty, concurrently with the other and with
+    * the `alongside` tasks. The touched sets are bounded (a batch or an
+    * erasure spans a handful of months), so they become partition-filter
+    * literals and the silver scan reads the touched years' directories
+    * only. That one scan is persisted and feeds both aggregates; the
+    * block manager computes each cached partition once under a per-block
+    * lock, so the concurrent consumers share it.
+    */
+  private def refreshGold(cfg: PipelineConfig, silver: DataFrame,
+      pairs: Seq[(Int, Int)], years: Seq[Int], alongside: (() => Unit)*)
+      : Unit = {
+    val projected = silver
+      .filter(col("year").isin((pairs.map(_._1) ++ years).distinct: _*))
+      .select(goldInput: _*).persist(StorageLevel.MEMORY_AND_DISK)
+    def stamped(agg: DataFrame) = agg.withColumn("created_at", createdAt(cfg))
+    val daily = if (pairs.isEmpty) Nil else Seq(() =>
+      Sinks.overwriteGoldDailyPartitions(stamped(Aggregations.daily(
+        projected.filter(inPartitions(Seq("year", "month"),
+          pairs.map { case (y, m) => Seq(y, m) })), cfg.approxDistinct)),
+        cfg.goldDailyPath))
+    val monthly = if (years.isEmpty) Nil else Seq(() =>
+      Sinks.overwriteGoldMonthlyPartitions(stamped(Aggregations.monthly(
+        projected.filter(col("year").isin(years: _*)), cfg.approxDistinct)),
+        cfg.goldMonthlyPath))
+    try Par.run(daily ++ monthly ++ alongside)
+    finally projected.unpersist()
+  }
+
+  /** The erased customers' rows in the table at `path`: the table as read
+    * (None when it holds no data file) and the row count per partition
+    * (one `partCols` value tuple each; a single total when `partCols` is
+    * empty).
+    */
+  private final case class Footprint(path: String, partCols: Seq[String],
+      table: Option[DataFrame], counts: Seq[(Seq[Int], Long)]) {
+    def touched: Seq[Seq[Int]] = counts.map(_._1)
+    /** The partition's directory relative to the table root. */
+    def rel(vs: Seq[Int]): String =
+      partCols.zip(vs).map { case (c, v) => s"$c=$v" }.mkString("/")
+  }
+
+  /** Scan the subject's [[Footprint]] in one table. Null partition values
+    * are collected, not filtered — they must fail, not survive.
+    */
+  private def footprint(spark: SparkSession, keys: DataFrame, path: String,
+      partCols: Seq[String]): Footprint =
+    if (Sinks.parquetFileCount(spark, path) == 0)
+      Footprint(path, partCols, None, Nil)
+    else {
+      val table = spark.read.parquet(path)
+      val rows = table.join(broadcast(keys), Seq("customer_id"), "left_semi")
+        .groupBy(partCols.map(col): _*).agg(count(lit(1))).collect()
+      if (rows.exists(r => partCols.indices.exists(r.isNullAt)))
+        throw new IllegalStateException(
+          s"runErasure: erased customers have rows in NULL " +
+            s"${partCols.mkString("/")} partitions (hive default " +
+            s"partition) of $path — partition-restricted rewrite cannot " +
+            "address them; repair the partition keys (P5 guard) before " +
+            "erasing")
+      Footprint(path, partCols, Some(table), rows.toSeq.map(r =>
+        (partCols.indices.map(r.getInt), r.getLong(partCols.size))))
+    }
+
+  /** Rewrite the touched partitions of `fp`'s table without the erased
+    * customers' rows (dynamic partition overwrite through `write`), then
+    * drop the partitions that held only them: dynamic overwrite writes
+    * nothing there, so their old files would survive. The kept rows are
+    * staged first, because the write replaces the path they are read from,
+    * and the set of partitions still holding rows rides that staging job.
+    */
+  private def rewriteWithout(spark: SparkSession, keys: DataFrame,
+      fp: Footprint, write: (DataFrame, String) => Unit): Unit =
+    fp.table.filter(_ => fp.counts.nonEmpty).foreach { table =>
+      val (kept, obs) = CheckpointUtils.materialize(
+        table.filter(inPartitions(fp.partCols, fp.touched))
+          .join(broadcast(keys), Seq("customer_id"), "left_anti"),
+        collect_set(struct(fp.partCols.map(col): _*)).as("left"))
+      try {
+        write(kept, fp.path)
+        val left: Set[Seq[Int]] = obs("left")
+          .asInstanceOf[scala.collection.Seq[Row]]
+          .map(r => fp.partCols.indices.map(r.getInt)).toSet
+        Sinks.deletePartitionDirs(spark, fp.path,
+          fp.touched.filterNot(left).map(fp.rel))
+      } finally CheckpointUtils.unpersistLocalCheckpoint(kept)
+    }
+
+  /** `partCols` equal one of the `touched` value tuples. */
+  private def inPartitions(partCols: Seq[String],
+      touched: Seq[Seq[Int]]): Column =
+    touched.map(vs => partCols.zip(vs)
+      .map { case (c, v) => col(c) === v }.reduce(_ && _)).reduce(_ || _)
 }

@@ -216,6 +216,37 @@ class ClusteringSpec extends AnyFunSuite {
     assert(sampled == full)
   }
 
+  test("fit and trainCodebooks free every checkpoint they stage") {
+    import graft.operators.Pq
+    val df = planted()
+    val sc = spark.sparkContext
+    // the persisted-RDD registry holds its RDDs weakly, and the context
+    // cleaner unpersists one once it is garbage-collected: hold every
+    // persisted RDD strongly during the call, so only an explicit
+    // unpersist can take one off the registry
+    def pinnedBy(call: => Any): Set[Int] = {
+      val before = sc.getPersistentRDDs.keySet
+      val held = java.util.concurrent.ConcurrentHashMap
+        .newKeySet[org.apache.spark.rdd.RDD[_]]()
+      val polling = new java.util.concurrent.atomic.AtomicBoolean(true)
+      val poller = new Thread(() => while (polling.get()) {
+        sc.getPersistentRDDs.values.foreach(held.add)
+        Thread.sleep(1)
+      })
+      poller.start()
+      try call finally { polling.set(false); poller.join() }
+      (sc.getPersistentRDDs.keySet -- before).toSet
+    }
+    // unsampled, sampled seeding, and a sample under k (the fallback)
+    for (mod <- Seq(1L, 2L, 1000000007L)) {
+      assert(pinnedBy(Clustering.fit(df, "vec_id", "embedding", 3,
+        seedSampleMod = mod)).isEmpty, s"fit, seedSampleMod = $mod")
+      assert(pinnedBy(Pq.trainCodebooks(df, "vec_id", "embedding", m = 2,
+        k = 3, maxIter = 2, seedSampleMod = mod)).isEmpty,
+        s"trainCodebooks, seedSampleMod = $mod")
+    }
+  }
+
   test("kmeans tolerates k larger than the distinct-point count") {
     val df = Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(0.0f, 1.0f)))
       .toDF("vec_id", "embedding")

@@ -294,6 +294,126 @@ class PipelineSpec extends AnyFunSuite {
     assert(e.getMessage.contains("NULL"))
   }
 
+  test("erasure retry after a failed monthly refresh: silver, daily and " +
+    "the customer row already committed, and the retry still scrubs " +
+    "gold monthly") {
+    val root = tmp()
+    val cfg = PipelineConfig(s"$root/raw", s"$root/silver", s"$root/gold",
+      clock = clock)
+    val silver = Seq(
+      ("t1", "A", 10.0, "2024-01-01 10:00:00", 2024, 1, 1),
+      ("t2", "B", 20.0, "2024-01-02 10:00:00", 2024, 1, 2),
+      ("t3", "A", 30.0, "2024-02-03 11:00:00", 2024, 2, 3))
+      .toDF("transaction_id", "customer_id", "amount", "transaction_date",
+        "year", "month", "day")
+      .withColumn("transaction_date", to_timestamp($"transaction_date"))
+    graft.io.Sinks.writeSilver(silver, cfg.silverPath)
+    SilverToGold.run(spark, cfg)
+    val monthly = new java.io.File(cfg.goldMonthlyPath)
+    val saved = new java.io.File(s"$root/monthly_before")
+    org.apache.commons.io.FileUtils.copyDirectory(monthly, saved)
+    SilverToGold.runErasure(spark, cfg, Seq("A").toDF("customer_id"))
+    // the state a failed monthly write leaves: every other tier committed
+    org.apache.commons.io.FileUtils.deleteDirectory(monthly)
+    org.apache.commons.io.FileUtils.copyDirectory(saved, monthly)
+    assert(spark.read.parquet(cfg.goldMonthlyPath)
+      .filter($"customer_id" === "A").count() > 0, "precondition: stale")
+    SilverToGold.runErasure(spark, cfg, Seq("A").toDF("customer_id"))
+    assert(spark.read.parquet(cfg.goldMonthlyPath)
+      .filter($"customer_id" === "A").count() == 0,
+      "the retry left the subject's rows in gold monthly")
+    val full = cfg.copy(silverPath = s"$root/silver_b",
+      goldPath = s"$root/gold_full")
+    graft.io.Sinks.writeSilver(silver.filter($"customer_id" === "B"),
+      full.silverPath)
+    SilverToGold.run(spark, full)
+    for (sub <- goldTables) assert(sameGold(cfg, full, sub), sub)
+  }
+
+  test("an erasure that takes silver's last rows completes on every tier, " +
+    "publishes its card, and a second run is a no-op") {
+    val root = tmp()
+    val cfg = PipelineConfig(s"$root/raw", s"$root/silver", s"$root/gold",
+      clock = clock)
+    // the only customer, with rows in two days of two years
+    val silver = Seq(
+      ("t1", "A", 10.0, "2023-12-31 10:00:00", 2023, 12, 31),
+      ("t2", "A", 20.0, "2024-01-01 10:00:00", 2024, 1, 1))
+      .toDF("transaction_id", "customer_id", "amount", "transaction_date",
+        "year", "month", "day")
+      .withColumn("transaction_date", to_timestamp($"transaction_date"))
+    graft.io.Sinks.writeSilver(silver, cfg.silverPath)
+    SilverToGold.run(spark, cfg)
+    val card = s"$root/card"
+    val touched = Seq(
+      s"${cfg.silverPath}/year=2023/month=12/day=31",
+      s"${cfg.silverPath}/year=2024/month=1/day=1",
+      s"${cfg.goldDailyPath}/year=2023/month=12",
+      s"${cfg.goldDailyPath}/year=2024/month=1",
+      s"${cfg.goldMonthlyPath}/year=2023",
+      s"${cfg.goldMonthlyPath}/year=2024")
+    assert(touched.forall(new java.io.File(_).exists()))
+    SilverToGold.runErasure(spark, cfg, Seq("A").toDF("customer_id"),
+      provenance = Some((card, 1L)))
+    for (d <- touched) assert(!new java.io.File(d).exists(), d)
+    def cardOf(epoch: Long) = spark.read.parquet(card)
+      .filter($"tombstone_epoch" === epoch)
+      .select($"tier", $"partition", $"rows_erased")
+      .as[(String, String, Long)].collect().toSet
+    assert(cardOf(1L) == Set(
+      ("silver", "year=2023/month=12/day=31", 1L),
+      ("silver", "year=2024/month=1/day=1", 1L),
+      ("gold_daily", "year=2023/month=12", 1L),
+      ("gold_daily", "year=2024/month=1", 1L),
+      ("gold_monthly", "year=2023", 1L),
+      ("gold_monthly", "year=2024", 1L),
+      ("gold_customer", "", 1L)))
+    def customerIds() =
+      if (graft.io.Sinks.parquetFileCount(spark, cfg.goldCustomerPath) == 0)
+        Seq.empty[String]
+      else spark.read.parquet(cfg.goldCustomerPath)
+        .select("customer_id").as[String].collect().toSeq
+    assert(customerIds().isEmpty)
+    // the retry finds nothing left to erase and changes nothing
+    SilverToGold.runErasure(spark, cfg, Seq("A").toDF("customer_id"),
+      provenance = Some((card, 2L)))
+    for (d <- touched) assert(!new java.io.File(d).exists(), d)
+    assert(customerIds().isEmpty)
+    assert(spark.read.parquet(card).filter($"tombstone_epoch" === 1L)
+      .count() == 7)
+    assert(cardOf(2L).forall(_._3 == 0L), cardOf(2L))
+  }
+
+  test("erasure job count: two customers erased from a 2,000-row landing") {
+    val root = tmp()
+    val cfg = PipelineConfig(s"$root/raw", s"$root/silver", s"$root/gold",
+      clock = clock)
+    TransactionGen.writeJsonl(TransactionGen.generate(spark, 2000),
+      s"$root/raw")
+    BronzeToSilver.run(spark, cfg)
+    SilverToGold.run(spark, cfg)
+    val erased = spark.read.parquet(cfg.silverPath).select("customer_id")
+      .distinct().orderBy("customer_id").limit(2).localCheckpoint()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.sql.graftx.ListenerHook.drain(spark)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      SilverToGold.runErasure(spark, cfg, erased)
+      org.apache.spark.sql.graftx.ListenerHook.drain(spark)
+    } finally spark.sparkContext.removeSparkListener(l)
+    // three footprint scans, the staged silver rewrite, the gold refresh
+    // and the customer-key delete: 32 jobs on this fixture
+    assert(jobs.get() <= 32, s"${jobs.get()} Spark jobs for one erasure")
+    assert(spark.read.parquet(cfg.silverPath)
+      .join(erased, Seq("customer_id"), "left_semi").isEmpty)
+  }
+
 
   test("gold overwrite is idempotent: re-run produces identical tables") {
     val root = tmp()
