@@ -332,74 +332,6 @@ case class CosineArgmaxCell(left: Expression, right: Expression,
   override def prettyName: String = "cosine_argmax_cell"
 }
 
-/** Best (maximum) cosine of a vector against the embedded centroid set —
-  * the scan-side primitive k-means‖ seeding needs (per-row sampling
-  * probability ∝ 1 − best cosine): same fold order and norm guards as
-  * [[CosineArgmaxCell]], but returning the SCORE rather than the argmax,
-  * under the same O(1)-plan embedded-array transport. NaN propagates as
-  * the SQL ordering's maximum (matching the struct-max formulation).
-  */
-case class CosineBestScore(left: Expression, right: Expression,
-    centroids: Seq[Seq[Double]])
-    extends BinaryExpression with ExpectsInputTypes {
-  import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(
-    TypeCollection(ArrayType(FloatType), ArrayType(DoubleType)), DoubleType)
-  override def dataType: DataType = DoubleType
-
-  @transient private lazy val cents: Array[Array[Double]] =
-    centroids.map(_.toArray).toArray
-  @transient private lazy val safeNorm: Array[Double] =
-    cents.map { c =>
-      val cn = math.sqrt(c.foldLeft(0.0)((a, x) => a + x * x))
-      if (cn == 0.0) 1.0 else cn
-    }
-  private def elemIsFloat: Boolean =
-    left.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  def best(arr: ArrayData, nrm: Double): Double = {
-    val isF = elemIsFloat
-    val nv = arr.numElements()
-    var bestS = Double.NegativeInfinity
-    var first = true
-    var j = 0
-    while (j < cents.length) {
-      val c = cents(j)
-      val n = math.min(nv, c.length)
-      var d = 0.0
-      var i = 0
-      while (i < n) {
-        val xv = if (isF) arr.getFloat(i).toDouble else arr.getDouble(i)
-        d += xv * c(i)
-        i += 1
-      }
-      val s = d / (nrm * safeNorm(j))
-      if (first || SQLOrderingUtil.compareDoubles(s, bestS) > 0) {
-        bestS = s; first = false
-      }
-      j += 1
-    }
-    bestS
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    best(a.asInstanceOf[ArrayData], b.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cosBestExpr", this,
-      classOf[CosineBestScore].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.best($a, $b);")
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-
-  override def toString: String =
-    s"cosine_best_score($left, $right, k=${centroids.size})"
-  override def prettyName: String = "cosine_best_score"
-}
-
 object PqExpressions {
   def pqCodes(v: Column, codebooks: Seq[Seq[Seq[Double]]]): Column =
     ExpressionUtils.column(PqCodes(ExpressionUtils.expression(v), codebooks))
@@ -419,10 +351,5 @@ object PqExpressions {
   def cosineArgmaxCell(v: Column, nrm: Column,
       centroids: Seq[Seq[Double]]): Column =
     ExpressionUtils.column(CosineArgmaxCell(ExpressionUtils.expression(v),
-      ExpressionUtils.expression(nrm), centroids))
-
-  def cosineBestScore(v: Column, nrm: Column,
-      centroids: Seq[Seq[Double]]): Column =
-    ExpressionUtils.column(CosineBestScore(ExpressionUtils.expression(v),
       ExpressionUtils.expression(nrm), centroids))
 }

@@ -72,10 +72,8 @@ object TextFunctions {
     length(c) - length(regexp_replace(c, "[^a-zA-Z0-9\\s]", ""))
 
   /** Tokens matching a stopword list. */
-  def stopwordCount(c: Column, words: Seq[String] = defaultStopwords): Column = {
-    val list = words.map(w => s"'$w'").mkString(", ")
-    size(filter(tokens(c), t => t.isin(words.map(lit): _*))) // scalastyle:ignore
-  }
+  def stopwordCount(c: Column, words: Seq[String] = defaultStopwords): Column =
+    size(filter(tokens(c), t => t.isin(words.map(lit): _*)))
 
   /** Mean normalized-token length; 0.0 for empty text. Integer sum and count
     * divided as doubles — bit-identical in any IEEE engine.

@@ -1,7 +1,7 @@
 package graft.io
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
-import org.apache.spark.sql.functions.{col, floor, greatest, least, lit, max, min, pmod, shiftleft, shiftright, struct, xxhash64}
+import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.functions.col
 
 /** Sink writers (SURVEY.md §2.1 S4-S7): parquet + snappy, hive-style
   * partition layout matching the reference
@@ -507,227 +507,5 @@ object Sinks {
           .unionByName(updates)
       else updates
     stagedSwapParquet(spark, merged, path)
-  }
-
-  /** Bucketed fact-table layout: `bucketBy` + `sortBy` on the join key,
-    * registered through the session catalog (`saveAsTable` — bucket specs
-    * live in table metadata, not parquet, so path-based reads can't use
-    * them; on a cluster this is the metastore-backed catalog).
-    *
-    * This is the 100 TB fact⋈fact contract: two facts bucketed on their
-    * join key with the same bucket count join with NO shuffle on either
-    * side — the single biggest cost in lineitem⋈orders-shaped queries.
-    * Bucket count is a layout-time choice: size it so one bucket of the
-    * LARGER table fits an executor core's sort buffer (e.g. 100 TB / 4096
-    * buckets ≈ 25 GB per bucket pre-pruning). PlanSpec asserts the
-    * no-Exchange plan.
-    */
-  /** Compacted partitioned write — the small-files control a 1000-executor
-    * append pipeline needs. A naive `partitionBy` write emits one file per
-    * (task × live partition): 32 shuffle partitions × 365 days = 10k+ tiny
-    * files per run, and every downstream scan pays per-file open/footer
-    * cost. This routes all rows of one partition value to `filesPerPart`
-    * tasks (hash-repartition on the partition columns plus a row-hash
-    * salt), so each partition directory gets exactly that many files —
-    * while `maxRecordsPerFile` still splits a genuinely huge partition so
-    * no single file becomes unsplittable-scan-sized.
-    *
-    * Skew note: `filesPerPart` is the lever when one partition dwarfs the
-    * rest (one hot day → one task without the salt). The salt spreads a
-    * hot partition over N writers at the cost of N files for every
-    * partition.
-    */
-  def writeCompacted(df: DataFrame, path: String, partitionCols: Seq[String],
-      filesPerPart: Int = 1, maxRecordsPerFile: Long = 5000000L): Unit = {
-    val salt = pmod(xxhash64(struct(df.columns.map(col): _*)), lit(filesPerPart))
-    df.repartition(partitionCols.map(col) :+ salt: _*)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .option("compression", "snappy")
-      .parquet(path)
-  }
-
-  /** OPTIMIZE-style small-file compaction of an EXISTING parquet directory
-    * — the table-maintenance pass that fixes the many-tiny-files state
-    * streaming/incremental writers accumulate (every downstream scan pays
-    * per-file open + footer + scheduling costs; at 100 TB a 10⁶-file table
-    * is a planning-time problem before it is an IO one).
-    *
-    * Target file count = ceil(total data bytes / targetFileBytes), rewrite
-    * via `coalesce` — shuffle-FREE bin-packing of input partitions (no
-    * Exchange in the plan; rows never repartition by content, so the
-    * rewrite moves bytes exactly once). The scan itself already packs
-    * small files toward `spark.sql.files.maxPartitionBytes`, so when that
-    * packing is COARSER than the target the read partitioning stands
-    * (coalesce only reduces) — the file count written is
-    * min(target, scan partitions), which the method returns. Writes to
-    * `outPath`, never in place: readers of `inPath` stay correct mid-run,
-    * and the atomic swap/rename is the caller's step.
-    */
-  def compactDir(spark: org.apache.spark.sql.SparkSession, inPath: String,
-      outPath: String, targetFileBytes: Long = 128L << 20): Int = {
-    require(targetFileBytes > 0, s"bad target size: $targetFileBytes")
-    val p = new org.apache.hadoop.fs.Path(inPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
-    var totalBytes = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) totalBytes += f.getLen
-    }
-    val n = math.max(1L,
-      (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val df = spark.read.parquet(inPath)
-    val scanParts = df.rdd.getNumPartitions
-    val out = math.max(1, math.min(n, scanParts))
-    (if (scanParts > out) df.coalesce(out) else df)
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "snappy")
-      .parquet(outPath)
-    out
-  }
-
-  def writeBucketed(df: DataFrame, table: String, bucketKey: String,
-      buckets: Int = 32): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .format("parquet")
-      .option("compression", "snappy")
-      .bucketBy(buckets, bucketKey)
-      .sortBy(bucketKey)
-      .saveAsTable(table)
-
-  /** Range-clustered layout: range-repartition on the sort keys, then sort
-    * WITHIN each partition before writing. Every output file covers a
-    * narrow, non-overlapping key range, so parquet row-group min/max
-    * statistics turn a point or range predicate into file/row-group skips
-    * — the scan-pruning story for the axis a table is most queried on
-    * (time for events, key range for lookups). Works on plain paths (no
-    * catalog needed, unlike bucketing) and composes with `partitionBy`
-    * pruning one level up.
-    *
-    * The range exchange samples the keys to build balanced boundaries —
-    * skew-safe by construction. `sortWithinPartitions` (not a global
-    * `orderBy`) keeps it one exchange: the final sort is per-task.
-    */
-  def writeRangeClustered(df: DataFrame, path: String, sortCols: Seq[String],
-      partitions: Int, maxRecordsPerFile: Long = 5000000L): Unit =
-    df.repartitionByRange(partitions, sortCols.map(col): _*)
-      .sortWithinPartitions(sortCols.map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .option("compression", "snappy")
-      .parquet(path)
-
-  /** Z-order (Morton) layout over TWO numeric columns: each value maps to an
-    * 8-bit grid cell over its global [min, max] span, the cell coordinates'
-    * bits interleave into one z-value, and the data range-clusters on that
-    * z-value. Each output file then covers a compact 2-D tile, so parquet
-    * min/max stats prune file reads for predicates on EITHER column — the
-    * layout answer when a table has two hot filter axes and
-    * [[writeRangeClustered]] could serve only one. Per-column pruning is
-    * weaker than a dedicated single-axis sort (a z tile spans ~1/16 of each
-    * axis at 8 bits × 16 files, vs 1/files for the sorted axis) — that is
-    * the inherent trade, not an implementation limit.
-    *
-    * The 256-cell grid is UNIFORM over [min, max] (one cheap min/max agg,
-    * no global sort): heavy skew concentrates cells, degrading tiling
-    * toward single-axis behavior while staying correct. For skewed axes,
-    * quantile-boundary cells (percentile_approx cuts broadcast as a
-    * binning array) are the refinement; the z-value mechanics are
-    * unchanged.
-    */
-  /** Uniform 256-cell grid coordinates over each column's [min, max]
-    * span — the shared normalization of the curve writers (one min/max
-    * agg, no global sort). Degenerate spans collapse to cell 0.
-    */
-  private def uniformCells(df: DataFrame, colA: String, colB: String)
-      : (Column, Column) = {
-    val r = df.agg(
-      min(col(colA).cast("double")), max(col(colA).cast("double")),
-      min(col(colB).cast("double")), max(col(colB).cast("double"))).head()
-    def cell(c: String, lo: Double, hi: Double) =
-      if (hi <= lo) lit(0L)
-      else least(lit(255L), greatest(lit(0L),
-        floor((col(c).cast("double") - lo) / (hi - lo) * 256.0).cast("long")))
-    (cell(colA, r.getDouble(0), r.getDouble(1)),
-      cell(colB, r.getDouble(2), r.getDouble(3)))
-  }
-
-  /** Morton interleave of two 8-bit cell coordinates. */
-  private def mortonOfCells(cellA: Column, cellB: Column): Column = {
-    def spread(bits: Column, offset: Int) = (0 until 8)
-      .map(i => shiftleft(shiftright(bits, i).bitwiseAND(lit(1L)), 2 * i + offset))
-      .reduce(_ bitwiseOR _)
-    spread(cellA, 0).bitwiseOR(spread(cellB, 1))
-  }
-
-  /** Shared write tail of the curve layouts: range-cluster on the curve
-    * index, sort within partitions, drop the helper column, write.
-    */
-  private def writeCurveClustered(df: DataFrame, path: String,
-      curve: Column, partitions: Int, maxRecordsPerFile: Long): Unit =
-    df.withColumn("__curve", curve)
-      .repartitionByRange(partitions, col("__curve"))
-      .sortWithinPartitions(col("__curve"))
-      .drop("__curve")
-      .write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .option("compression", "snappy")
-      .parquet(path)
-
-  def writeZOrdered(df: DataFrame, path: String, colA: String, colB: String,
-      partitions: Int, maxRecordsPerFile: Long = 5000000L): Unit = {
-    val (ca, cb) = uniformCells(df, colA, colB)
-    writeCurveClustered(df, path, mortonOfCells(ca, cb), partitions,
-      maxRecordsPerFile)
-  }
-
-  /** Hilbert-curve layout over TWO numeric columns — [[writeZOrdered]]
-    * with the Morton interleave replaced by the Hilbert index
-    * ([[graft.ops.Locality.hilbertValue2]]): consecutive curve positions
-    * are always ADJACENT grid cells, so range-clustered files get
-    * strictly better worst-case bounding boxes than Morton tiles (the
-    * Morton curve teleports across the grid at every power-of-two
-    * boundary; Hilbert never does). Same uniform 256-cell normalization,
-    * same one-exchange write shape, same trade-offs otherwise.
-    */
-  def writeHilbert(df: DataFrame, path: String, colA: String, colB: String,
-      partitions: Int, maxRecordsPerFile: Long = 5000000L): Unit = {
-    val (ca, cb) = uniformCells(df, colA, colB)
-    writeCurveClustered(df, path,
-      graft.ops.Locality.hilbertValue2(ca, cb, 8), partitions,
-      maxRecordsPerFile)
-  }
-
-  /** QUANTILE-boundary Z-order — the skew refinement [[writeZOrdered]]
-    * documents: cell boundaries are the axes' EXACT percentile cuts (one
-    * `percentile` aggregation per axis — deterministic, unlike
-    * approx_percentile whose sketch merges are partitioning-dependent),
-    * so every cell holds ~1/256 of the rows no matter how skewed an axis
-    * is, and the Morton tiling keeps its two-axis pruning power where the
-    * uniform grid degrades to single-axis behavior. The cut array (255
-    * doubles per axis) folds back as a literal; binning is one
-    * higher-order fold per row — a one-shot, IO-bound write pass, where
-    * CodegenFallback is irrelevant. Z-value mechanics are unchanged from
-    * [[writeZOrdered]].
-    */
-  def writeZOrderedQuantile(df: DataFrame, path: String, colA: String,
-      colB: String, partitions: Int,
-      maxRecordsPerFile: Long = 5000000L): Unit = {
-    import org.apache.spark.sql.functions.{aggregate, expr, typedlit, when}
-    val ps = (1 until 256).map(_ / 256.0)
-    val r = df.agg(
-      expr(s"percentile(CAST($colA AS DOUBLE), array(${ps.mkString(",")}))"),
-      expr(s"percentile(CAST($colB AS DOUBLE), array(${ps.mkString(",")}))"))
-      .head()
-    def cuts(i: Int): Seq[Double] =
-      Option(r.getSeq[Double](i)).getOrElse(Seq.fill(255)(0.0))
-    def cell(c: String, cu: Seq[Double]) =
-      aggregate(typedlit(cu), lit(0L), (acc, b) =>
-        acc + when(col(c).cast("double") >= b, 1L).otherwise(0L))
-    writeCurveClustered(df, path,
-      mortonOfCells(cell(colA, cuts(0)), cell(colB, cuts(1))), partitions,
-      maxRecordsPerFile)
   }
 }

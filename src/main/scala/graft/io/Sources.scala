@@ -38,38 +38,4 @@ object Sources {
   /** S3 — silver parquet scan (partition-pruning capable via y/m/d layout). */
   def silverParquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
-
-  /** CSV scan with the same posture as the JSON reader: explicit schema (no
-    * inference pass), PERMISSIVE corrupt capture, header honored. CSV is
-    * the interchange format partners actually send; at 100 TB the explicit
-    * schema matters twice over — inference would be a full extra scan AND
-    * is batch-dependent (a shard of all-null columns infers differently).
-    */
-  def csvScan(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read
-      .schema(schema)
-      .option("header", "true")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .option("recursiveFileLookup", "true")
-      .csv(path)
-
-  /** ORC scan — same columnar pushdown/pruning class as parquet (predicate
-    * pushdown + column projection reach the stripe reader), for estates
-    * standardized on ORC.
-    */
-  def orcScan(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
-  /** Parquet scan across schema generations (`mergeSchema`): a long-lived
-    * silver table accretes columns over time, and a 100 TB backfill to
-    * rewrite old files is exactly what a lakehouse avoids — instead the
-    * reader unions footer schemas and backfills missing columns as nulls.
-    * Off by default in Spark because footer-merging costs one footer read
-    * per file; use THIS reader only on evolved tables, `silverParquet`
-    * (latest-footer-wins) on homogeneous ones.
-    */
-  def parquetEvolved(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
 }

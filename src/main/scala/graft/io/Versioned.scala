@@ -213,13 +213,13 @@ object Versioned {
     * segment's exact row count (one count + one aggregate per column);
     * fpp 0.001 keeps a false hit — a needlessly opened segment, never a
     * wrong row — at one in a thousand. Long and string columns (the id /
-    * URL shapes equality lookups actually use).
+    * URL shapes equality lookups actually use). `rows` is the segment read
+    * back from `seg`, shared with the caller's stats aggregate.
     */
   private def writeBlooms(spark: SparkSession, seg: String,
-      bloomCols: Seq[String], pre: Option[DataFrame] = None): Unit = {
+      bloomCols: Seq[String], rows: DataFrame): Unit = {
     if (bloomCols.isEmpty) return
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
-    val rows = pre.getOrElse(spark.read.parquet(seg))
     val types = rows.schema.fields.map(f => f.name -> f.dataType).toMap
     bloomCols.foreach { c =>
       require(types.get(c).exists(t => t == LongType || t == IntegerType ||
@@ -308,7 +308,7 @@ object Versioned {
       .parquet(seg)
     val segDf = spark.read.parquet(seg)
     val segSt = segmentStats(segDf, statsCols)
-    writeBlooms(spark, seg, bloomCols, Some(segDf))
+    writeBlooms(spark, seg, bloomCols, segDf)
     // the cached table schema evolves by one merge per append: previous
     // manifest's cached schema (or the one-time legacy footer merge)
     // unioned with the new segment's — so readers never re-derive it
@@ -591,7 +591,7 @@ object Versioned {
         // folded segments re-record the union of their members' blooms
         // (singleton groups carry theirs inside the dir, untouched)
         writeBlooms(spark, out,
-          group.flatMap(bloomColsOf(spark, _)).distinct, Some(outDf))
+          group.flatMap(bloomColsOf(spark, _)).distinct, outDf)
         out
     }.toSeq
     val keptSet = newFiles.toSet
@@ -670,7 +670,7 @@ object Versioned {
           val outDf = spark.read.parquet(out)
           val st = segmentStats(outDf, cols)
           if (st.nonEmpty) newStats += (out -> st)
-          writeBlooms(spark, out, bloomColsOf(spark, seg), Some(outDf))
+          writeBlooms(spark, out, bloomColsOf(spark, seg), outDf)
           replaced ::= seg
           out
         }

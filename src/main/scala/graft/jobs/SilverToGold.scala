@@ -34,6 +34,10 @@ object SilverToGold {
     * other two committed — rerun; do not trust partial gold.
     */
   def run(spark: SparkSession, cfg: PipelineConfig): Unit = {
+    // a silver table with no data file (an erasure took its last rows) is
+    // absent, as the erasure counts it: reading it would fail schema
+    // inference before the empty-input test below
+    if (Sinks.parquetFileCount(spark, cfg.silverPath) == 0) return
     val silver = Sources.silverParquet(spark, cfg.silverPath)
     // P7 — empty-input short-circuit (silver_to_gold.py:122-124)
     if (silver.isEmpty) return

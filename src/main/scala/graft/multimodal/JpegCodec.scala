@@ -140,7 +140,6 @@ object JpegCodec {
     private var acc = 0
     private var nbits = 0
     var hitMarker: Int = -1 // marker byte seen mid-stream (RSTn, EOI, …)
-    def bytePos: Int = pos
     private def fill(): Boolean = {
       if (hitMarker >= 0) return false
       if (pos >= bytes.length) return false

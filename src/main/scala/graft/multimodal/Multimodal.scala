@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: media (image/audio/video) as opaque `binary`
@@ -14,11 +14,7 @@ import org.apache.spark.sql.functions._
   * VIDEO container paths are real too: [[audioTable]]/[[videoTable]] emit
   * genuine WAV (PCM16) and AVI (uncompressed DIB) files and
   * [[audioMetaTable]]/[[sampleContainerFrames]] parse metadata, samples,
-  * and frames back out of the RIFF chunks via [[MediaContainers]]. What
-  * remains stubbed (`decodeStub`) is COMPRESSED-codec work — pixel/sample
-  * decode of JPEG/MP3/H.264 — because no codec libraries exist in this
-  * environment; swap `decodeStub` for a real library call and nothing
-  * else changes.
+  * and frames back out of the RIFF chunks via [[MediaContainers]].
   *
   * Scale posture: `mapPartitions` over a `Dataset[MediaRecord]` processes
   * records in partition-sized batches (the decoder amortizes init per
@@ -37,36 +33,11 @@ object Multimodal {
       height: Int,
       duration_ms: Long)
 
-  case class MediaFeatures(
-      media_id: Long,
-      kind: String,
-      n_bytes: Long,
-      feature: Array[Float])
-
   case class GifFrame(
       media_id: Long,
       frame_index: Int,
       n_px: Int,
       pix_sum: Long)
-
-  /** ======= STUB ======= Deterministic fake decoder: derives a fixed-width
-    * feature vector from the payload bytes via a rolling hash. A real
-    * implementation would decode pixels/samples here; the call signature
-    * (bytes → float[dim]) is what an image library would satisfy.
-    */
-  def decodeStub(bytes: Array[Byte], dim: Int): Array[Float] = {
-    val out = new Array[Float](dim)
-    var h = 1125899906842597L
-    var i = 0
-    while (i < bytes.length) { h = 31 * h + bytes(i); i += 1 }
-    var j = 0
-    while (j < dim) {
-      h ^= h << 13; h ^= h >>> 7; h ^= h << 17 // xorshift64
-      out(j) = (h % 1000L) / 1000.0f
-      j += 1
-    }
-    out
-  }
 
   /** Wrap a text/binary table into the media schema (for testdata, document
     * text bytes stand in for an encoded image payload).
@@ -495,39 +466,6 @@ object Multimodal {
     h.join(partners, Seq("media_id"), "left")
       .select(col("media_id"), col("ahash"),
         coalesce(col("n_neardups"), lit(0L)).as("n_neardups"))
-  }
-
-  /** STUB feature extraction for OPAQUE payloads (formats with no
-    * in-sandbox codec): deterministic fake features, loudly labeled —
-    * kept for the plumbing spec. For image payloads the REAL path is
-    * [[gridFeatures]] (decoded-pixel pooling, oracle-verified). Batch
-    * shape (one decoder instance per partition, iterator-processed) is
-    * the mapInPandas equivalent either way.
-    */
-  def extractFeatures(media: Dataset[MediaRecord], dim: Int = 16): Dataset[MediaFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { records =>
-      // per-partition init cost would go here (decoder/model load)
-      records.map { r =>
-        MediaFeatures(r.media_id, r.kind, r.bytes.length.toLong,
-          decodeStub(r.bytes, dim))
-      }
-    }
-  }
-
-  /** ======= STUB ======= "Resize": deterministic payload reshaping standing
-    * in for a pixel resample — output size scales with target dims.
-    */
-  def resize(media: Dataset[MediaRecord], w: Int, h: Int): Dataset[MediaRecord] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { records =>
-      records.map { r =>
-        val n = math.max(1, math.min(r.bytes.length, w * h / 64))
-        r.copy(bytes = java.util.Arrays.copyOf(r.bytes, n), width = w, height = h)
-      }
-    }
   }
 
   /** REAL animated-GIF payloads: each document becomes a genuine GIF89a —
@@ -1185,10 +1123,4 @@ object Multimodal {
       }
     }
   }
-
-  /** Embedding-ready output: features as array<float> column joined back to
-    * metadata — the handoff point into [[graft.operators.Similarity]].
-    */
-  def featureTable(spark: SparkSession, docs: DataFrame, dim: Int = 16): DataFrame =
-    extractFeatures(fromDocuments(docs), dim).toDF()
 }

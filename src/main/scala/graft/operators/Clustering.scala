@@ -158,112 +158,6 @@ object Clustering {
     centroids
   }
 
-  /** Convenience: fit + assign in one call. */
-  def kmeans(df: DataFrame, id: String, vec: String, k: Int,
-      maxIter: Int = 10, cellCol: String = "cell"): DataFrame =
-    assign(df, vec, fit(df, id, vec, k, maxIter), cellCol)
-
-  /** k-means‖ seeding (Bahmani, Moseley, Vattani, Kumar, Vassilvitskii,
-    * "Scalable k-means++", VLDB 2012) + Lloyd — the LARGE-k fit path.
-    * [[fit]]'s Gonzalez seeding runs k sequential corpus scans (one per
-    * seed), which is the training-side ceiling for coarse quantizers at
-    * k ≈ 2¹⁵; this replaces them with `seedRounds` scans TOTAL (≈5),
-    * independent of k:
-    *
-    *  - each round scans once, scoring every row's best cosine to the
-    *    current candidate set through the embedded-array
-    *    [[org.apache.spark.sql.graftx.CosineBestScore]] kernel (plan O(1)
-    *    in |candidates|), and samples rows with probability
-    *    min(1, ℓ·d²/φ) where d² = 1 − bestCos and φ = Σ d² — expected ℓ
-    *    new candidates per round, landing preferentially in uncovered
-    *    regions;
-    *  - candidates are then weighted by one assignment scan (cluster
-    *    sizes) and reduced to k seeds DRIVER-SIDE by greedy weighted
-    *    farthest-first (first = heaviest, next = argmax weight·d² to the
-    *    chosen — the deterministic stand-in for weighted k-means++'s
-    *    random draw);
-    *  - Lloyd then iterates the full corpus exactly as [[fit]] does.
-    *
-    * Fully deterministic on any partitioning: the per-row sampling
-    * uniform is `xxhash64(id, round) / 2⁵³` (no RNG), candidate collection
-    * is capped and ordered by (uniform, id), and every tie breaks by
-    * index — a re-fit is bit-identical (spec-asserted).
-    */
-  def fitParallelSeed(df: DataFrame, id: String, vec: String, k: Int,
-      maxIter: Int = 10, tol: Double = 1e-9, oversample: Int = 0,
-      seedRounds: Int = 5): Seq[Seq[Double]] = {
-    require(seedRounds >= 1, s"seedRounds must be >= 1, got $seedRounds")
-    val ell = if (oversample > 0) oversample else math.max(1, 2 * k)
-    val base = df.select(col(id).cast("string").as("__id"), col(vec).as("__v"))
-      .withColumn("__nrm", l2Norm(col("__v")))
-      .localCheckpoint()
-    def vecOf(r: org.apache.spark.sql.Row): Seq[Double] =
-      r.getSeq[Any](0).map(_.asInstanceOf[Number].doubleValue).toSeq
-    val first = base.withColumn("__h", md5(col("__id")))
-      .orderBy(col("__h"), col("__id"))
-      .limit(1).select(col("__v")).collect()
-    if (first.isEmpty) return Seq.empty
-    var cands: Vector[Seq[Double]] = Vector(vecOf(first(0)))
-    val twoTo53 = 9007199254740992.0
-    for (r <- 1 to seedRounds) {
-      val bestCos = org.apache.spark.sql.graftx.PqExpressions
-        .cosineBestScore(col("__v"), col("__nrm"), cands)
-      val u = shiftrightunsigned(xxhash64(col("__id"), lit(r)), 11)
-        .cast("double") / twoTo53
-      // one computation, two actions: φ then the φ-dependent sample
-      val scored = base
-        .withColumn("__d2", greatest(lit(0.0), lit(1.0) - bestCos))
-        .withColumn("__u", u)
-        .localCheckpoint()
-      val phi = scored.agg(sum(col("__d2"))).head().getDouble(0)
-      if (phi > 0.0) {
-        // u < min(1, ℓ·d²/φ) ⇔ u·φ < ℓ·d² (u < 1 covers the clamp);
-        // capped + (u, id)-ordered so the collect stays bounded and
-        // deterministic even under adversarial φ drift
-        val sampled = scored
-          .filter(col("__u") * phi < lit(ell.toDouble) * col("__d2"))
-          .orderBy(col("__u"), col("__id"))
-          .limit(10 * ell)
-          .select(col("__v")).collect().map(vecOf)
-        cands = cands ++ sampled
-      }
-      org.apache.spark.sql.graftx.CheckpointUtils
-        .unpersistLocalCheckpoint(scored)
-    }
-    // weight candidates by assignment counts (one scan; missing = 0)
-    val wRows = base
-      .withColumn("__c", assignCell(col("__v"), col("__nrm"), cands))
-      .groupBy(col("__c")).agg(count(lit(1)).as("__n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val weights = cands.indices.map(i => wRows.getOrElse(i, 0L)).toArray
-    // driver-side greedy weighted farthest-first down to k
-    def cosv(a: Seq[Double], b: Seq[Double]): Double = {
-      val na = math.sqrt(a.map(x => x * x).sum)
-      val nb = math.sqrt(b.map(x => x * x).sum)
-      val sa = if (na == 0.0) 1.0 else na
-      val sb = if (nb == 0.0) 1.0 else nb
-      a.zip(b).map { case (x, y) => x * y }.sum / (sa * sb)
-    }
-    val chosen = scala.collection.mutable.ArrayBuffer[Int]()
-    if (cands.nonEmpty) {
-      chosen += weights.indices.maxBy(i => (weights(i), -i))
-      while (chosen.size < math.min(k, cands.size)) {
-        val next = cands.indices
-          .filterNot(chosen.contains)
-          .maxBy { i =>
-            val d2 = 1.0 - chosen.map(j => cosv(cands(i), cands(j))).max
-            (weights(i) * math.max(0.0, d2), -i)
-          }
-        chosen += next
-      }
-    }
-    val seeds = chosen.toSeq.map(cands)
-    val out = lloyd(base, seeds, maxIter, tol)
-    org.apache.spark.sql.graftx.CheckpointUtils
-      .unpersistLocalCheckpoint(base)
-    out
-  }
-
   /** SemDeDup-style semantic deduplication (cluster-then-prune, after
     * Abbas et al. 2023, arXiv:2303.09540): k-means the corpus, then inside
     * each cluster mark every row that has a SMALLER-id neighbor with

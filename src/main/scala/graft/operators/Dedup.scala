@@ -103,20 +103,10 @@ object Dedup {
     * explode → self-join on shingle → per-pair intersection count → Jaccard.
     * The standard scalable formulation — cost is Σ over shingles of df²,
     * not |docs|². `hashShingles` narrows the join key to 8 bytes.
-    *
-    * `maxShingleDf` caps the inverted index's document frequency: a shingle
-    * present in more than `maxShingleDf` docs is dropped from candidate
-    * generation (one stopword-like shingle with df=10⁶ would otherwise emit
-    * 10¹² join rows). Dropped shingles still count in each doc's size, so
-    * Jaccard is under- (never over-) estimated for pairs whose overlap
-    * includes a hot shingle — the standard trade. The hot set is found with
-    * one narrow groupBy and removed via broadcast anti-join (the hot set is
-    * bounded by pathology count, so the index rows never reshuffle).
     */
   def jaccardPairs(df: DataFrame, id: String, text: String,
-      minJaccard: Double, n: Int = 3, hashShingles: Boolean = false,
-      maxShingleDf: Int = Int.MaxValue): DataFrame =
-    intersectionCounts(df, id, text, n, hashShingles, maxShingleDf)
+      minJaccard: Double, n: Int = 3, hashShingles: Boolean = false): DataFrame =
+    intersectionCounts(df, id, text, n, hashShingles)
       .withColumn("jaccard",
         col("n_common").cast("double") /
           (col("n_a") + col("n_b") - col("n_common")).cast("double"))
@@ -128,7 +118,7 @@ object Dedup {
     * exact shingle-intersection size plus both docs' shingle counts.
     */
   private def intersectionCounts(df: DataFrame, id: String, text: String,
-      n: Int, hashShingles: Boolean, maxShingleDf: Int): DataFrame = {
+      n: Int, hashShingles: Boolean): DataFrame = {
     // size travels WITH each exploded row, so no extra per-doc sizes join —
     // one scan per join side instead of three. The per-doc arrays are
     // materialized once (executor-local MEMORY_AND_DISK via localCheckpoint)
@@ -140,15 +130,8 @@ object Dedup {
     val sh0 = docShingleArrays(df, id, text, n).localCheckpoint()
       .select(col(id), size(col("shingles")).as("n_sh"),
         explode(col("shingles")).as("shingle"))
-    val shKeyed = if (hashShingles)
+    val sh = if (hashShingles)
       sh0.withColumn("shingle", xxhash64(col("shingle"))) else sh0
-    val sh = if (maxShingleDf == Int.MaxValue) shKeyed else {
-      val hot = shKeyed.groupBy(col("shingle"))
-        .agg(count(lit(1)).as("__df"))
-        .filter(col("__df") > maxShingleDf)
-        .select(col("shingle"))
-      shKeyed.join(hot, Seq("shingle"), "left_anti")
-    }
     val a = sh.select(col(id).as("id_a"), col("n_sh").as("n_a"), col("shingle"))
     val b = sh.select(col(id).as("id_b"), col("n_sh").as("n_b"), col("shingle"))
     a.join(b, Seq("shingle"))
@@ -165,14 +148,12 @@ object Dedup {
     * boilerplate-wrapper / quoted-article case in crawl dedup. Same
     * inverted-index shape and cost model as [[jaccardPairs]]; each
     * intersecting pair is scored in both directions and emitted once per
-    * qualifying direction as (contained_id, container_id). Under a
-    * `maxShingleDf` cap, dropped hot shingles still count in |A|, so
-    * containment only under-estimates — the cap never invents a pair.
+    * qualifying direction as (contained_id, container_id).
     */
   def containmentPairs(df: DataFrame, id: String, text: String,
-      minContainment: Double, n: Int = 3, hashShingles: Boolean = false,
-      maxShingleDf: Int = Int.MaxValue): DataFrame = {
-    val pairs = intersectionCounts(df, id, text, n, hashShingles, maxShingleDf)
+      minContainment: Double, n: Int = 3,
+      hashShingles: Boolean = false): DataFrame = {
+    val pairs = intersectionCounts(df, id, text, n, hashShingles)
     val ab = pairs.select(col("id_a").as("contained_id"),
       col("id_b").as("container_id"), col("n_common"), col("n_a").as("n_self"))
     val ba = pairs.select(col("id_b").as("contained_id"),
@@ -182,60 +163,6 @@ object Dedup {
         col("n_common").cast("double") / col("n_self").cast("double"))
       .filter(col("containment") >= minContainment)
       .select(col("contained_id"), col("container_id"), col("containment"))
-  }
-
-  /** Exact Jaccard pairs via PREFIX FILTERING (the set-similarity-join
-    * technique of Chaudhuri/Bayardo et al.): order each document's shingles
-    * by ascending global document frequency and index only the first
-    * |d| − ⌈τ·|d|⌉ + 1 of them. Any pair with Jaccard ≥ τ must share at
-    * least ⌈τ·|x|⌉ shingles (since |y| ≥ τ·|x|), so its globally-smallest
-    * common shingle falls inside BOTH prefixes — candidates from a
-    * prefix⋈prefix join provably cover every qualifying pair, and the
-    * final exact verification keeps the result identical to
-    * [[jaccardPairs]].
-    *
-    * Scale properties: hot (stopword-like) shingles sort to the END of each
-    * doc's order and drop out of the index automatically — skew protection
-    * without an approximating cap; the size filter |y| ≥ τ·|x| prunes
-    * mismatched-length pairs before verification; candidate volume follows
-    * Σ over PREFIX shingles of df², which the frequency ordering drives
-    * toward the rare tail. Wide stages carry (id, shingle-key, sizes) only;
-    * full shingle arrays appear once, at the verify join, where AQE
-    * broadcasts the candidate ids.
-    */
-  def jaccardPairsPrefix(df: DataFrame, id: String, text: String,
-      minJaccard: Double, n: Int = 3, hashShingles: Boolean = true): DataFrame = {
-    val docShingles = docShingleArrays(df, id, text, n)
-      .filter(size(col("shingles")) > 0).localCheckpoint()
-    val sh0 = docShingles
-      .select(col(id), size(col("shingles")).as("n_sh"),
-        explode(col("shingles")).as("shingle"))
-    val sh = if (hashShingles)
-      sh0.withColumn("shingle", xxhash64(col("shingle"))) else sh0
-    val dfreq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("__df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(id)).orderBy(col("__df"), col("shingle"))
-    val prefix = sh.join(dfreq, Seq("shingle"))
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") <=
-        col("n_sh") - ceil(col("n_sh") * lit(minJaccard)).cast("int") + 1)
-    val a = prefix.select(col("shingle"), col(id).as("id_a"), col("n_sh").as("n_a"))
-    val b = prefix.select(col("shingle"), col(id).as("id_b"), col("n_sh").as("n_b"))
-    val candidates = a.join(b, Seq("shingle"))
-      .filter(col("id_a") < col("id_b"))
-      // size filter: τ·|x| ≤ |y| (and symmetrically) is necessary for j ≥ τ
-      .filter(col("n_b") >= ceil(col("n_a") * lit(minJaccard)) &&
-        col("n_a") >= ceil(col("n_b") * lit(minJaccard)))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    val shA = docShingles.select(col(id).as("id_a"), col("shingles").as("sh_a"))
-    val shB = docShingles.select(col(id).as("id_b"), col("shingles").as("sh_b"))
-    candidates.join(shA, Seq("id_a")).join(shB, Seq("id_b"))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
   /** MinHash signature column: `numHashes` independent min-hashes of the

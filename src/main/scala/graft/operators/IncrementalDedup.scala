@@ -17,9 +17,7 @@ import org.apache.spark.sql.functions._
   *     collisions (new×old and new×new — old×old pairs were already found
   *     when their docs arrived);
   *  3. exact Jaccard verification re-reads just the COLLIDING old docs by
-  *     id — a semi-join point fetch, which the range-clustered layout
-  *     ([[graft.io.Sinks.writeRangeClustered]]) turns into a stats-pruned
-  *     scan instead of a full pass;
+  *     id — a semi-join point fetch;
   *  4. the batch's own index rows ([[bandIndex]] of the batch) append to the
   *     store, keeping the invariant for the next batch.
   *

@@ -168,26 +168,6 @@ object Opq {
   case class IvfModel(mean: Array[Double], rotation: Array[Array[Double]],
       coarse: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]])
 
-  /** Train the composed stack: [[fit]] learns (mean, R) on the
-    * whole-space PQ objective (the Ge et al. recipe; its whole-space
-    * books are discarded), then the coarse quantizer and the residual
-    * codebooks train in the rotated space. Deterministic end to end.
-    */
-  def fitIvf(df: DataFrame, id: String, vec: String, cells: Int, m: Int,
-      k: Int, alternations: Int = 2, initIters: Int = 1,
-      coarseIters: Int = 3, codeIters: Int = 3): IvfModel = {
-    val model = fit(df, id, vec, m, k, alternations, initIters)
-    val rotated = rotate(df, vec, model).localCheckpoint()
-    try {
-      val coarse = Clustering.fit(rotated, id, "rvec", cells,
-        maxIter = coarseIters)
-      val books = Pq.trainResidualCodebooks(rotated, id, "rvec", coarse,
-        m, k, maxIter = codeIters)
-      IvfModel(model.mean, model.rotation, coarse, books)
-    } finally org.apache.spark.sql.graftx.CheckpointUtils
-      .unpersistLocalCheckpoint(rotated)
-  }
-
   /** Search the composed stack: rotate both sides (zero-shuffle
     * projections), then the plain IVFADC probe — identical plan shape,
     * so every scale property of [[Pq.ivfAdcTopK]] carries over verbatim.

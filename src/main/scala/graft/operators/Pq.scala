@@ -284,54 +284,6 @@ object Pq {
   def writeIndex(index: DataFrame, path: String): Unit =
     index.write.mode("overwrite").partitionBy("cell").parquet(path)
 
-  /** Right-to-be-forgotten erasure of a persisted ([[writeIndex]]) IVFADC
-    * index: the erased vectors' CELLS are recomputed from the frozen coarse
-    * model (encoding is deterministic per-row, the same property that makes
-    * the index incrementally appendable), so only those cell partitions are
-    * read, anti-joined, and dynamically overwritten — cost bounded by the
-    * subject's cell footprint, never the index. Cells the erasure empties
-    * are dropped explicitly (dynamic overwrite only replaces partitions
-    * PRESENT in the written frame). Spec-proven: the erased index
-    * hash-matches [[encodeIndex]] rebuilt from scratch on the retained
-    * corpus, and searches over it equal searches over the rebuild.
-    *
-    * `erased` carries the subject rows' (id, vector) — the vector is what
-    * localizes the cell without scanning the index.
-    */
-  def eraseFromIndex(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, erased: DataFrame, id: String, vec: String,
-      coarse: Seq[Seq[Double]],
-      literalMax: Int = LiteralCellThreshold): Unit = {
-    val p = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return
-    val keyed = withResidual(erased, vec, coarse, literalMax = literalMax)
-      .select(col(id).as("neighbor_id"), col("__cell").as("cell"))
-      .distinct().localCheckpoint()
-    try {
-      // the subject's cell footprint: bounded driver state (≤ |erased|)
-      val cells = keyed.select(col("cell")).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      if (cells.isEmpty) return
-      val retained = spark.read.parquet(indexPath)
-        .filter(col("cell").isin(cells: _*))
-        .join(broadcast(keyed.select(col("neighbor_id"))),
-          Seq("neighbor_id"), "left_anti")
-        .localCheckpoint() // staged: it reads the path it replaces
-      try {
-        retained.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("cell").parquet(indexPath)
-        val still = retained.select(col("cell")).distinct()
-          .collect().map(_.getInt(0)).toSet
-        graft.io.Sinks.deletePartitionDirs(spark, indexPath,
-          cells.filterNot(still).map(c => s"cell=$c"))
-      } finally org.apache.spark.sql.graftx.CheckpointUtils
-        .unpersistLocalCheckpoint(retained)
-    } finally org.apache.spark.sql.graftx.CheckpointUtils
-      .unpersistLocalCheckpoint(keyed)
-  }
-
   /** [[ivfAdcTopK]] against a pre-encoded (possibly disk-resident) index —
     * bit-identical results by construction: the raw-corpus entry point
     * delegates here after encoding.

@@ -71,8 +71,7 @@ object Similarity {
 
   /** All corpus pairs with cosine ≥ threshold (embedding near-dup detection).
     * Exact O(n²) baseline via BroadcastNestedLoopJoin — small-corpus oracle
-    * cross-check only; [[cosineNearDupBlocked]] is the exact scale path and
-    * [[cosineNearDupLsh]] the sub-quadratic one for gapped thresholds.
+    * cross-check only; [[cosineNearDupBlocked]] is the exact scale path.
     */
   def cosineNearDupPairs(df: DataFrame, id: String, vec: String,
       minCosine: Double): DataFrame = {
@@ -164,48 +163,6 @@ object Similarity {
       .filter(col("cosine_sim") >= minCosine)
       .select(least(col("__ida"), col("__idb")).as("id_a"),
         greatest(col("__ida"), col("__idb")).as("id_b"), col("cosine_sim"))
-  }
-
-  /** Sub-quadratic near-dup pairs for GAPPED thresholds (true near-dup
-    * detection: τ ≥ ~0.8 with background well below): random-hyperplane
-    * signature sliced into `bands` buckets, candidates = pairs sharing any
-    * band bucket, verified by exact cosine. Mirrors the minhash pattern:
-    * every wide stage moves (band, bucket, id) only; vectors re-attach at
-    * the final verify join where AQE broadcasts the candidate ids.
-    *
-    * Recall: a pair at angle θ agrees per bit with p = 1 − θ/π; miss
-    * probability is (1 − p^bitsPerBand)^bands — at cosine 0.95 (p ≈ .90,
-    * defaults) ≈ 2e-8; at cosine 0.9 (p ≈ .86) ≈ 2e-5. Background pairs
-    * (p ≈ .5) collide somewhere with probability ≈ 11% — the candidate
-    * volume trade for that recall. NOT suitable for thresholds inside the
-    * background bulk — use [[cosineNearDupBlocked]] there (see its scaladoc
-    * for why that boundary is fundamental).
-    */
-  def cosineNearDupLsh(df: DataFrame, id: String, vec: String,
-      minCosine: Double, bands: Int = 32, bitsPerBand: Int = 8,
-      maxBucketSize: Int = 10000): DataFrame = {
-    val banded = df.select(col(id),
-      posexplode(hyperplaneBandBuckets(col(vec), bands, bitsPerBand))
-        .as(Seq("band", "bucket")))
-    val oversized = banded.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("__bsz"))
-      .filter(col("__bsz") > maxBucketSize)
-      .select(col("band"), col("bucket"))
-    val pruned = banded.join(oversized, Seq("band", "bucket"), "left_anti")
-    val candidates = pruned.select(col("band"), col("bucket"), col(id).as("id_a"))
-      .join(pruned.select(col("band"), col("bucket"), col(id).as("id_b")),
-        Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    val n = withNorm(df, vec)
-    val va = n.select(col(id).as("id_a"), col(vec).as("__va"), col("__nrm").as("__na"))
-    val vb = n.select(col(id).as("id_b"), col(vec).as("__vb"), col("__nrm").as("__nb"))
-    candidates.join(va, Seq("id_a")).join(vb, Seq("id_b"))
-      .withColumn("cosine_sim",
-        cosineWithNorms(col("__va"), col("__vb"), col("__na"), col("__nb")))
-      .filter(col("cosine_sim") >= minCosine)
-      .select(col("id_a"), col("id_b"), col("cosine_sim"))
   }
 
   /** Approximate top-k via random-hyperplane LSH: both sides keyed by

@@ -1,21 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Z-order (Morton) multi-dimensional clustering for scan locality — the
-  * `OPTIMIZE ZORDER BY` primitive of modern lakehouse layouts: interleave
-  * the bits of two column values so that range-partitioning on ONE long
-  * co-locates rows that are close in BOTH dimensions. Parquet row-group
-  * min/max pruning then skips data for predicates on EITHER dimension —
-  * where a plain sort gives locality only on its lead key, and a
-  * predicate on the second key scans everything.
-  *
-  * At 100 TB this is a WRITE-SIDE operator: cluster once, save scan time
-  * on every subsequent query. The z-value is pure integer bit arithmetic
-  * — `((x >> i) & 1) << 2i | ((y >> i) & 1) << (2i+1)` summed over bit
-  * positions — identical in any engine, so the layout-quality report
-  * gates value-exactly against the oracle.
+/** Space-filling-curve keys over two integer columns: the Morton (z-order)
+  * and Hilbert codes that `OPTIMIZE ZORDER BY`-style layouts range-cluster
+  * on, so that rows close in BOTH dimensions share files and parquet
+  * min/max pruning works for predicates on either one. Here they feed the
+  * layout-quality reports (`SamplingQueries`). Both codes are pure integer
+  * arithmetic — identical in any engine — so those reports gate
+  * value-exactly against the oracle.
   */
 object Locality {
 
@@ -77,34 +71,5 @@ object Locality {
           when(rx === 1, lit(n - 1) - ax).otherwise(ax)).otherwise(ay)
         struct(nd.as("d"), nx.as("x"), ny.as("y"))
       }).getField("d")
-  }
-
-  /** `df` physically clustered by the Hilbert index of (`xCol`, `yCol`)
-    * — the [[zOrdered]] sibling with the adjacency guarantee; same
-    * one-exchange write shape (range partition + within-partition sort).
-    */
-  def hilbertOrdered(df: DataFrame, xCol: String, yCol: String, bits: Int,
-      partitions: Int): DataFrame = {
-    val h = hilbertValue2(col(xCol), col(yCol), bits).as("__h")
-    df.withColumn("__h", h)
-      .repartitionByRange(partitions, col("__h"))
-      .sortWithinPartitions(col("__h"))
-      .drop("__h")
-  }
-
-  /** `df` physically clustered by the z-order of (`xCol`, `yCol`):
-    * range-partitioned on the z-value and sorted by it within partitions,
-    * so every output partition (→ parquet file at write time) covers a
-    * compact z-range = a small bounding box in (x, y) space. This is the
-    * frame to hand straight to `.write.parquet` — min/max footer stats on
-    * x and y then prune on both.
-    */
-  def zOrdered(df: DataFrame, xCol: String, yCol: String, bits: Int,
-      partitions: Int): DataFrame = {
-    val z = zValue2(col(xCol), col(yCol), bits).as("__z")
-    df.withColumn("__z", z)
-      .repartitionByRange(partitions, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
   }
 }

@@ -1,16 +1,14 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Snapshot merge / slowly-changing-dimension maintenance: classify a new
-  * dimension snapshot against the stored one (delta), apply it as a Type-1
-  * upsert, or evolve a Type-2 history table.
+  * dimension snapshot against the stored one (delta), or evolve a Type-2
+  * history table.
   *
   * Scale posture: every operation is one or two equi-shuffles on the
-  * dimension key — no windows over the whole table except the Type-1
-  * keep-latest (keyed, two-row partitions), no driver-side row handling.
+  * dimension key — no windows, no driver-side row handling.
   * Dimensions are small next to facts, but "small" at 100 TB can still be
   * billions of rows, so nothing here assumes a broadcastable side; AQE
   * downgrades the joins to broadcast when a side does fit.
@@ -25,20 +23,6 @@ object Merge {
     val rest = df.columns.filterNot(keys.contains).sorted
     md5(concat_ws("",
       rest.map(c => coalesce(col(c).cast("string"), lit(""))): _*))
-  }
-
-  /** Type-1 upsert: rows of `updates` override same-key rows of `base`;
-    * unmatched update keys append. `updates` must be unique per key.
-    * One keyed shuffle; ≤2-row window partitions.
-    */
-  def upsert(base: DataFrame, updates: DataFrame, keys: Seq[String]): DataFrame = {
-    val cols = base.columns.toSeq
-    val tagged = base.withColumn("__pri", lit(0))
-      .unionByName(updates.select(cols.map(col): _*).withColumn("__pri", lit(1)))
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col("__pri").desc)
-    tagged.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(cols.map(col): _*)
   }
 
   /** Classify each key of cur ⊔ next: `unchanged` / `updated` (content hash

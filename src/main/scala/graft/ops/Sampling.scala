@@ -108,10 +108,6 @@ object Sampling {
     bucket < cutoff
   }
 
-  def mixtureSample(df: DataFrame, keyCol: String, strataCol: String,
-      rates: Map[String, Double], salt: String = "mix"): DataFrame =
-    df.filter(mixtureKeep(col(keyCol), col(strataCol), rates, salt))
-
   /** Oracle-side boolean expression for the same keep decision. */
   def mixtureKeepSql(keyExpr: String, strataExpr: String,
       rates: Map[String, Double], salt: String = "mix"): String = {

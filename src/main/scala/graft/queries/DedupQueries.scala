@@ -122,12 +122,9 @@ object DedupQueries extends QueryPack {
     // The production configuration for HEALTHY shingle distributions:
     // 8-byte xxhash64 join keys (~10× narrower shuffle + cheaper sort than
     // raw shingle strings; 64-bit hashing is collision-free at these
-    // cardinalities, so it shares the exact oracle). Skew protection is a
-    // deliberate non-default here — it costs two extra stages: turn on
-    // `maxShingleDf` (approximate under extreme skew, cap spec-proven to
-    // bind) or switch to Dedup.jaccardPairsPrefix (prefix filtering — hot
-    // shingles provably drop out of the index, EXACT under arbitrary skew,
-    // spec-proven on a corpus where the cap loses pairs).
+    // cardinalities, so it shares the exact oracle). The inverted index
+    // has no hot-shingle cap: cost is Σ df² over shingles, so a corpus
+    // with stopword-like shingles needs MinHash LSH (d_minhash_pairs).
     "d_jaccard_pairs_fast" -> ((s, dir) =>
       Dedup.jaccardPairs(Tables.load(s, dir, "documents"), "doc_id", "text",
         minJaccard = tau, hashShingles = true)

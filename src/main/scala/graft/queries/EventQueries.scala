@@ -600,9 +600,7 @@ object EventQueries extends QueryPack {
           col("n"), col("total_value"))
         .orderBy(col("window_start"), col("event_type"))),
 
-    // Gap-based sessionization (30-minute gap) — batch form of the
-    // flatMapGroupsWithState streaming operator (StreamingSpec proves the
-    // closed-session stream equals this result).
+    // Gap-based sessionization (30-minute gap) over window functions.
     "e_sessions" -> ((s, dir) =>
       graft.streaming.Sessionize
         .sessionsBatch(Tables.load(s, dir, "events"), gapMinutes = 30)

@@ -400,8 +400,7 @@ object SimilarityQueries extends QueryPack {
     // inside the corpus's similarity bulk (background max ≈ 0.4497 at
     // sf0.1), so no LSH gap exists and the exact n²/2 is inherent — the
     // blocked equi-join spreads it across executors with no driver
-    // broadcast. Similarity.cosineNearDupLsh is the sub-quadratic path for
-    // gapped thresholds (spec-verified on planted high-cosine dups).
+    // broadcast.
     "v_cosine_neardup" -> ((s, dir) =>
       Similarity.cosineNearDupBlocked(Tables.load(s, dir, "embeddings"),
         "vec_id", "embedding", minCosine = tau)

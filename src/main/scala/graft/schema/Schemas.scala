@@ -1,7 +1,6 @@
 package graft.schema
 
 import org.apache.spark.sql.types._
-import java.sql.Timestamp
 
 /** Typed schemas for the medallion pipeline.
   *
@@ -33,41 +32,3 @@ object Schemas {
     // records silently; we keep them observable)
     StructField("_corrupt_record", StringType)))
 }
-
-/** Bronze row as a case class, for `Dataset[Transaction]` at module
-  * boundaries.
-  */
-case class Transaction(
-    transaction_id: String,
-    customer_id: String,
-    amount: Option[Double],
-    transaction_date: String,
-    transaction_type: String,
-    merchant_id: String,
-    payment_method: String,
-    currency: String,
-    status: String,
-    category: String)
-
-/** Silver row: bronze's 10 columns type-hardened plus 8 derived
-  * (`bronze_to_silver.py:44-45,57-69`).
-  */
-case class SilverTransaction(
-    transaction_id: String,
-    customer_id: String,
-    amount: Double,
-    transaction_date: Timestamp,
-    transaction_type: String,
-    merchant_id: String,
-    payment_method: String,
-    currency: String,
-    status: String,
-    category: String,
-    data_quality_score: Double,
-    processed_timestamp: Timestamp,
-    year: Int,
-    month: Int,
-    day: Int,
-    hour: Int,
-    amount_category: String,
-    transaction_type_derived: String)

@@ -3,12 +3,12 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{broadcast, col, lit, pmod, when, xxhash64}
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.IncrementalDedup
 
-/** Streaming front end for [[graft.operators.IncrementalDedup]]: a
-  * `foreachBatch` sink that maintains the three stores of a continuously
+/** Streaming front end for [[graft.operators.IncrementalDedup]]: the
+  * per-batch step of a `foreachBatch` sink ([[ingestBatch]], with the batch
+  * id as its epoch) that maintains the three stores of a continuously
   * deduped corpus —
   *
   *   - `<storeDir>/corpus`: every ingested document,
@@ -41,21 +41,6 @@ import graft.operators.IncrementalDedup
   * that manage their own replay).
   */
 object IncrementalDedupStream {
-
-  /** Attach the incremental-dedup sink to a streaming document frame.
-    * `checkpointDir` is the Structured Streaming checkpoint location.
-    */
-  def attach(stream: DataFrame, id: String, text: String, storeDir: String,
-      checkpointDir: String, minJaccard: Double, n: Int = 3,
-      numHashes: Int = 64, bands: Int = 16,
-      maxBucketSize: Int = 10000, nBuckets: Int = 16): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, id, text, storeDir, minJaccard, n, numHashes,
-          bands, maxBucketSize, nBuckets, epoch = Some(batchId))
-      }
-      .start()
 
   private def exists(df: DataFrame, p: String): Boolean = {
     val hp = new Path(p)

@@ -1,49 +1,21 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.ops.Aggregations.sumStable
 
-/** Gap-based sessionization of the event stream, in two equivalent forms:
+/** Gap-based sessionization of the event stream: window functions (lag →
+  * new-session flag → running-sum session id → groupBy). Fully
+  * SQL-expressible, so the `e_sessions` query has a DuckDB oracle. Event
+  * times truncate to seconds, ties break by event_id, and totals go
+  * through exact decimal accumulation.
   *
-  *  - [[sessionsBatch]]: window functions (lag → new-session flag →
-  *    running-sum session id → groupBy). Fully SQL-expressible, so the
-  *    `e_sessions` query has a DuckDB oracle.
-  *  - [[sessionsStream]]: `flatMapGroupsWithState` with event-time timeout —
-  *    the Structured Streaming custom-state form. A session closes (and is
-  *    emitted, append-mode) only once the watermark passes its end + gap,
-  *    so no later event can reopen it; open sessions live in the state
-  *    store keyed by user and time out rather than leak.
-  *
-  * Equivalence contract (asserted in StreamingSpec): both forms truncate
-  * event times to seconds, break ties by event_id, and total values through
-  * exact decimal accumulation — closed streaming sessions are value-equal
-  * to the batch result.
-  *
-  * Scale posture: state is one open session buffer per ACTIVE user (closed
-  * sessions leave the store immediately; inactive users' state dies by
-  * timeout), so state size follows concurrent-active users, not history.
-  * The batch form's windows partition by user_id — high cardinality, tiny
-  * per-partition state.
+  * Scale posture: the windows partition by user_id — high cardinality,
+  * tiny per-partition state.
   */
 object Sessionize {
-
-  case class SessionRow(
-      user_id: Long,
-      session_start: Timestamp,
-      session_end: Timestamp,
-      n_events: Long,
-      total_value: Double)
-
-  /** One buffered event inside an open session (seconds-truncated micros). */
-  case class Ev(tsMicros: Long, eventId: Long, value: Double)
-
-  case class UserSessions(open: List[Ev])
 
   /** Batch sessionization: a new session starts when the gap to the previous
     * event (per user, ordered by truncated ts then event_id) exceeds
@@ -68,81 +40,5 @@ object Sessionize {
         sumStable(col("value")).as("total_value"))
       .select(col("user_id"), col("session_start"), col("session_end"),
         col("n_events"), col("total_value"))
-  }
-
-  /** Exact-decimal total in buffer order — matches `sumStable`'s
-    * DECIMAL(38,10) accumulation bit-for-bit.
-    */
-  private def decimalTotal(evs: Seq[Ev]): Double = {
-    var acc = java.math.BigDecimal.ZERO
-    evs.foreach { e =>
-      acc = acc.add(new java.math.BigDecimal(java.lang.Double.toString(e.value))
-        .setScale(10, java.math.RoundingMode.HALF_UP))
-    }
-    acc.doubleValue()
-  }
-
-  private def toRow(userId: Long, evs: List[Ev]): SessionRow =
-    SessionRow(userId,
-      new Timestamp(evs.head.tsMicros / 1000L),
-      new Timestamp(evs.last.tsMicros / 1000L),
-      evs.length.toLong, decimalTotal(evs))
-
-  /** Split a (sorted) event buffer into gap-delimited runs. */
-  private def splitSessions(sorted: List[Ev], gapMicros: Long): List[List[Ev]] =
-    sorted.foldLeft(List.empty[List[Ev]]) {
-      case (Nil, e) => List(List(e))
-      case (cur :: done, e) =>
-        if (e.tsMicros - cur.head.tsMicros > gapMicros) List(e) :: cur :: done
-        else (e :: cur) :: done
-    }.map(_.reverse).reverse
-
-  /** State-transition function for one user and one micro-batch — object-
-    * level factory so the serialized closure captures only `gapMicros`, not
-    * the driver-side session scope.
-    */
-  private def mkHandler(gapMicros: Long): (Long,
-      Iterator[(Long, Long, Timestamp, Double)], GroupState[UserSessions]) =>
-      Iterator[SessionRow] = { (userId, rows, state) =>
-    val buffered = state.getOption.map(_.open).getOrElse(Nil)
-    val incoming = rows.map { case (_, eid, ts, v) =>
-      Ev(ts.getTime / 1000L * 1000000L, eid, v) // second-truncated micros
-    }.toList
-    val all = (buffered ++ incoming).sortBy(e => (e.tsMicros, e.eventId))
-    val wmMicros = state.getCurrentWatermarkMs() * 1000L
-    if (all.isEmpty) { state.remove(); Iterator.empty }
-    else {
-      val sessions = splitSessions(all, gapMicros)
-      // a session is safely closed once the watermark passed end + gap: no
-      // event that could extend or bridge it can still arrive
-      val (closed, open) =
-        sessions.partition(s => s.last.tsMicros + gapMicros < wmMicros)
-      if (open.isEmpty) state.remove()
-      else {
-        state.update(UserSessions(open.flatten))
-        // wake up when the earliest open session becomes closable
-        state.setTimeoutTimestamp(
-          (open.map(_.last.tsMicros).min + gapMicros) / 1000L + 1000L)
-      }
-      closed.iterator.map(toRow(userId, _))
-    }
-  }
-
-  /** Streaming sessionization. Input must be a streaming DataFrame with
-    * (event_id long, user_id long, ts timestamp, value double); output is
-    * append-mode closed sessions.
-    */
-  def sessionsStream(events: DataFrame, gapMinutes: Int,
-      watermarkDelay: String = "10 minutes"): Dataset[SessionRow] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .select(col("user_id"), col("event_id"), col("ts"), col("value"))
-      .as[(Long, Long, Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[UserSessions, SessionRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        mkHandler(gapMinutes * 60L * 1000000L))
   }
 }

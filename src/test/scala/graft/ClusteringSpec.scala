@@ -183,29 +183,6 @@ class ClusteringSpec extends AnyFunSuite {
     assert(cells.map(_._2).distinct.length == 3, s"merged groups: ${cells.toSeq}")
   }
 
-  test("k-means-parallel seeding recovers planted clusters with O(rounds) " +
-    "scans, deterministically on any partitioning") {
-    val df = planted()
-    val c1 = Clustering.fitParallelSeed(df, "vec_id", "embedding", 3)
-    val c2 = Clustering.fitParallelSeed(df.repartition(7), "vec_id",
-      "embedding", 3)
-    assert(c1 == c2, "parallel-seeded fit must be bit-identical on any " +
-      "partitioning")
-    val cells = Clustering.assign(df, "embedding", c1)
-      .select((col("vec_id") / 100).cast("int").as("g"), col("cell"))
-      .distinct().collect().map(r => (r.getInt(0), r.getInt(1)))
-    assert(cells.groupBy(_._1).forall(_._2.length == 1),
-      s"split group: ${cells.toSeq}")
-    assert(cells.map(_._2).distinct.length == 3,
-      s"merged groups: ${cells.toSeq}")
-    // the large-k shape it exists for: k > LiteralCellThreshold would be
-    // absurd on 24 rows, but k=12 on the same fixture must still return a
-    // full valid model (k-center reduction + Lloyd tolerate k near n)
-    val big = Clustering.fitParallelSeed(df, "vec_id", "embedding", 12,
-      maxIter = 2)
-    assert(big.size == 12 && big.map(_.size).distinct == Seq(6))
-  }
-
   test("seeding sample under k rows falls back to the full frame") {
     val df = planted()
     // a mod this large leaves (deterministically) no sampled rows, so the

@@ -303,49 +303,7 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(h == s)
   }
 
-  test("hashed+capped jaccardPairs (skew-insurance config) gives the same pairs") {
-    val s = Dedup.jaccardPairs(docs, "doc_id", "text", 0.5)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val hc = Dedup.jaccardPairs(docs, "doc_id", "text", 0.5,
-      hashShingles = true, maxShingleDf = 100)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(hc == s)
-  }
-
-  test("prefix-filtered jaccard join is exact: identical pairs AND values") {
-    val s = Dedup.jaccardPairs(docs, "doc_id", "text", 0.5)
-      .as[(Long, Long, Double)].collect().toSet
-    val p = Dedup.jaccardPairsPrefix(docs, "doc_id", "text", 0.5)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(s.nonEmpty && p == s)
-  }
-
-  test("prefix-filtered jaccard stays exact on the hot-shingle corpus") {
-    val s = Dedup.jaccardPairs(hotShingleCorpus, "doc_id", "text", 0.4)
-      .as[(Long, Long, Double)].collect().toSet
-    val p = Dedup.jaccardPairsPrefix(hotShingleCorpus, "doc_id", "text", 0.4)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(s.nonEmpty && p == s)
-  }
-
   // --- skew-stress: the caps must BIND on pathological corpora ---
-
-  /** 60 docs all sharing one stopword-like phrase (4 shingles of df=60 out of
-    * 5 per doc → pairwise jaccard 4/6). Pairs overlap ONLY through hot
-    * shingles.
-    */
-  private def hotShingleCorpus = (1L to 60L).map { i =>
-    (i, s"the common header line repeats number $i")
-  }.toDF("doc_id", "text")
-
-  test("jaccardPairs df-cap prunes hot shingles from candidate generation") {
-    val uncapped = Dedup.jaccardPairs(hotShingleCorpus, "doc_id", "text", 0.4)
-    assert(uncapped.count() > 0, "uncapped index must blow up into pairs")
-    val capped = Dedup.jaccardPairs(hotShingleCorpus, "doc_id", "text", 0.4,
-      maxShingleDf = 30)
-    // every common shingle has df=60 > 30 → zero candidates survive the cap
-    assert(capped.count() == 0)
-  }
 
   test("minhash maxBucketSize drops degenerate buckets") {
     // 50 identical docs: every band hashes to one bucket of size 50
@@ -406,30 +364,6 @@ class ExtensionsSpec extends AnyFunSuite {
       .as[(Long, Long, Double)].collect().toSet
     assert(exact.nonEmpty)
     assert(blocked == exact)
-  }
-
-  /** Corpus with planted high-cosine near-dups: 150 random base vectors plus
-    * 15 slightly-perturbed copies (cosine ≥ ~0.99 to their base) — the
-    * GAPPED regime where banded hyperplane LSH is sound.
-    */
-  private def plantedNearDups = {
-    val rnd = new scala.util.Random(7)
-    def vec() = Array.fill(32)(rnd.nextGaussian().toFloat)
-    val base = (0L until 150L).map(i => (i, vec()))
-    val dups = base.take(15).map { case (i, v) =>
-      (i + 1000L, v.map(x => x + 0.02f * rnd.nextGaussian().toFloat))
-    }
-    (base ++ dups).toDF("vec_id", "embedding")
-  }
-
-  test("banded cosine near-dup equals the exact pair set on planted dups") {
-    val df = plantedNearDups
-    val exact = Similarity.cosineNearDupPairs(df, "vec_id", "embedding", 0.9)
-      .as[(Long, Long, Double)].collect().toSet
-    val lsh = Similarity.cosineNearDupLsh(df, "vec_id", "embedding", 0.9)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(exact.size == 15, s"expected the 15 planted pairs, got ${exact.size}")
-    assert(lsh == exact)
   }
 
   test("brute-force topk: rank 1 is the most similar non-self vector") {

@@ -7,224 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Aggregations
 
-/** Format interop (CSV/JSON/parquet roundtrips preserve the silver schema)
-  * and the approximate-distinct scale path.
+/** The I/O layer: WARC parsing, versioned tables, the staged parquet swap,
+  * the Hilbert key and the approximate-distinct scale path.
   */
 class IoSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  test("evolved parquet: mergeSchema unions generations, nulls backfill") {
-    val dir = Files.createTempDirectory("graft-evolve").toString
-    // generation 1: (id, amount); generation 2 adds channel
-    Seq((1L, 10.0), (2L, 20.0)).toDF("id", "amount")
-      .write.parquet(s"$dir/t/g=1")
-    Seq((3L, 30.0, "web"), (4L, 40.0, "app")).toDF("id", "amount", "channel")
-      .write.parquet(s"$dir/t/g=2")
-    val df = graft.io.Sources.parquetEvolved(spark, s"$dir/t")
-    assert(df.columns.toSet == Set("id", "amount", "channel", "g"))
-    val rows = df.orderBy($"id")
-      .select($"id", $"channel").as[(Long, Option[String])].collect().toSeq
-    assert(rows == Seq((1L, None), (2L, None), (3L, Some("web")), (4L, Some("app"))))
-    // the latest-footer default reader would MISS gen-2 columns when a
-    // gen-1 footer wins; evolved tables must go through parquetEvolved
-    val plain = spark.read.parquet(s"$dir/t")
-    assert(plain.columns.toSet.subsetOf(df.columns.toSet))
-  }
-
-  test("CSV roundtrip preserves values with explicit schema and header") {
-    val dir = Files.createTempDirectory("graft-csv").toString
-    val df = graft.datagen.TransactionGen.generate(spark, 100)
-    df.write.option("header", "true").csv(s"$dir/out")
-    val back = graft.io.Sources.csvScan(spark, s"$dir/out", df.schema)
-      .drop("_corrupt_record")
-    assert(back.count() == 100)
-    assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
-  }
-
-  test("ORC roundtrip preserves values and schema") {
-    val dir = Files.createTempDirectory("graft-orc").toString
-    val df = graft.datagen.TransactionGen.generate(spark, 100)
-    df.write.orc(s"$dir/out")
-    val back = graft.io.Sources.orcScan(spark, s"$dir/out")
-    // a format read is always nullable — compare names and types
-    assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-      df.schema.fields.map(f => (f.name, f.dataType)).toSeq)
-    assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
-  }
-
-  test("csvScan routes malformed lines to _corrupt_record, keeps good rows") {
-    val dir = Files.createTempDirectory("graft-csv-bad").toString
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/part.csv"),
-      "id,amount\n1,10.5\n2,not_a_number\n3,7.25\n".getBytes)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("amount",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("_corrupt_record",
-        org.apache.spark.sql.types.StringType)))
-    // cache: Spark disallows filtering ONLY the corrupt column off a raw scan
-    val got = graft.io.Sources.csvScan(spark, dir, schema).cache()
-    try {
-      assert(got.count() == 3)
-      assert(got.filter($"_corrupt_record".isNotNull).count() == 1)
-      assert(got.filter($"_corrupt_record".isNull).count() == 2)
-    } finally got.unpersist()
-  }
-
-  test("compacted write: one file per partition dir, naive write many") {
-    import java.io.File
-    def parquetFiles(root: String): Map[String, Int] = {
-      def walk(f: File): Seq[File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new File(root))
-        .filter(_.getName.endsWith(".parquet"))
-        .groupBy(_.getParentFile.getPath.stripPrefix(root))
-        .map { case (d, fs) => (d, fs.size) }
-    }
-
-    val dir = Files.createTempDirectory("graft-compact").toString
-    val events = Tables.events(spark, "/root/testdata/sf0.001")
-      .select($"event_id", $"value", year($"ts").as("y"), month($"ts").as("m"))
-      .repartition(8) // simulate upstream shuffle fragmentation
-
-    events.write.partitionBy("y", "m").parquet(s"$dir/naive")
-    val naive = parquetFiles(s"$dir/naive")
-    assert(naive.values.max > 1, "fixture must fragment without compaction")
-
-    graft.io.Sinks.writeCompacted(events, s"$dir/compact", Seq("y", "m"))
-    val compact = parquetFiles(s"$dir/compact")
-    assert(compact.keySet == naive.keySet) // same partition dirs
-    assert(compact.values.forall(_ == 1), s"expected 1 file/dir, got $compact")
-
-    // values survive the extra repartition+salt intact
-    val back = spark.read.parquet(s"$dir/compact")
-      .select($"event_id", $"value", $"y", $"m")
-    assert(back.exceptAll(events).isEmpty && events.exceptAll(back).isEmpty)
-
-    // filesPerPart spreads a hot partition over exactly N writers
-    graft.io.Sinks.writeCompacted(events, s"$dir/salted", Seq("y", "m"),
-      filesPerPart = 3)
-    assert(parquetFiles(s"$dir/salted").values.forall(_ <= 3))
-  }
-
-  test("range-clustered write: disjoint per-file key ranges, stats prune " +
-    "a point lookup to one file") {
-    val dir = Files.createTempDirectory("graft-range").toString
-    val events = Tables.events(spark, "/root/testdata/sf0.001")
-      .select($"event_id", $"user_id", $"value")
-      .repartition(8) // scramble any incidental input ordering
-    graft.io.Sinks.writeRangeClustered(events, s"$dir/out",
-      Seq("event_id"), partitions = 4)
-
-    // every file owns a disjoint event_id range — that is what lets
-    // parquet row-group min/max stats skip files on a range predicate
-    import java.io.File
-    val files = new File(s"$dir/out").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSeq
-    assert(files.size >= 3, s"expected >=3 range files, got ${files.size}")
-    val ranges = files.map { f =>
-      spark.read.parquet(f).agg(min($"event_id"), max($"event_id"))
-        .as[(Long, Long)].head()
-    }.sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Seq((_, hi), (lo, _)) => assert(hi < lo, s"overlap: $ranges")
-      case _ => ()
-    }
-
-    // nothing lost in the layout rewrite
-    val back = spark.read.parquet(s"$dir/out")
-    assert(back.exceptAll(events).isEmpty && events.exceptAll(back).isEmpty)
-
-    // a point predicate scans only the one file whose range contains it:
-    // with pushed filters + stats, the other files contribute 0 rows, so
-    // the executed scan's row count is bounded by one file's rows
-    val probe = events.agg(max($"event_id")).as[Long].head()
-    val scan = back.filter($"event_id" === probe)
-    assert(scan.count() >= 1)
-    val p = scan.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    assert(p.contains("PushedFilters") && p.contains("EqualTo(event_id"), p)
-  }
-
-  test("z-ordered write: files tile BOTH axes, prunable on either; lossless") {
-    val dir = Files.createTempDirectory("graft-zorder").toString
-    val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-      .select($"l_orderkey", $"l_partkey", $"l_quantity")
-      .repartition(8)
-    graft.io.Sinks.writeZOrdered(li, s"$dir/out", "l_orderkey", "l_partkey",
-      partitions = 16)
-
-    import java.io.File
-    val files = new File(s"$dir/out").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSeq
-    assert(files.size >= 8, s"expected >=8 z files, got ${files.size}")
-    val ranges = files.map { f =>
-      spark.read.parquet(f).agg(
-        min($"l_orderkey"), max($"l_orderkey"),
-        min($"l_partkey"), max($"l_partkey"))
-        .as[(Long, Long, Long, Long)].head()
-    }
-    // a mid-range point on EITHER axis must be containable by only a
-    // fraction of the files — the two-axis pruning a single-column sort
-    // can't give (on the unsorted axis every file would contain it)
-    val (loO, hiO) = (ranges.map(_._1).min, ranges.map(_._2).max)
-    val (loP, hiP) = (ranges.map(_._3).min, ranges.map(_._4).max)
-    val midO = (loO + hiO) / 2
-    val midP = (loP + hiP) / 2
-    val hitO = ranges.count(r => r._1 <= midO && midO <= r._2)
-    val hitP = ranges.count(r => r._3 <= midP && midP <= r._4)
-    assert(hitO <= files.size * 3 / 4, s"orderkey axis not tiled: $hitO/${files.size}")
-    assert(hitP <= files.size * 3 / 4, s"partkey axis not tiled: $hitP/${files.size}")
-
-    // nothing lost in the rewrite, and the helper z column is gone
-    val back = spark.read.parquet(s"$dir/out")
-    assert(back.columns.toSeq == Seq("l_orderkey", "l_partkey", "l_quantity"))
-    assert(back.exceptAll(li).isEmpty && li.exceptAll(back).isEmpty)
-  }
-
-  test("quantile z-order keeps two-axis pruning under heavy skew where " +
-    "the uniform grid collapses; lossless") {
-    val dir = Files.createTempDirectory("graft-zq").toString
-    // 99% of x mass packed into [0, 4), 1% flung to a huge sparse tail:
-    // the uniform 256-cell grid puts the whole dense region in ONE x-cell
-    // (z can no longer distinguish x there), while quantile cuts spend
-    // ~253 cells inside it
-    val df = (0 until 10000).map { i =>
-      val x = if (i % 100 < 99) (i % 400) * 0.01 else 10000.0 + i
-      (x, (i % 50).toDouble, i.toLong)
-    }.toDF("x", "y", "id").repartition(8)
-    graft.io.Sinks.writeZOrdered(df, s"$dir/u", "x", "y", partitions = 16)
-    graft.io.Sinks.writeZOrderedQuantile(df, s"$dir/q", "x", "y",
-      partitions = 16)
-    // a dense-region range predicate: files whose stats could contain it
-    def hitFiles(path: String): (Int, Int) = {
-      import java.io.File
-      val files = new File(path).listFiles()
-        .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSeq
-      val hits = files.count { f =>
-        val r = spark.read.parquet(f).agg(min($"x"), max($"x"))
-          .as[(Double, Double)].head()
-        // a NARROW dense-region predicate (~5% of the dense mass): the
-        // uniform grid holds the whole dense region in one x-cell so
-        // every file matches, while quantile cells resolve it — the wide
-        // margin keeps the assertion clear of range-boundary sampling
-        // jitter (this was a rare marginal flake at [1.0, 2.0])
-        r._1 <= 1.2 && 1.0 <= r._2 // overlaps [1.0, 1.2]
-      }
-      (hits, files.size)
-    }
-    val (hu, nu) = hitFiles(s"$dir/u")
-    val (hq, nq) = hitFiles(s"$dir/q")
-    assert(nq >= 8 && nu >= 8)
-    // quantile tiling must prune the skewed axis at least 2× better
-    assert(hq * 2 <= hu, s"quantile $hq/$nq vs uniform $hu/$nu")
-    // lossless rewrite
-    val back = spark.read.parquet(s"$dir/q")
-    assert(back.columns.toSeq == Seq("x", "y", "id"))
-    assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
-  }
 
   test("hilbertValue2: matches reference xy2d, bijective, and ADJACENT — " +
     "consecutive codes are 1-manhattan-step cells") {
@@ -263,62 +51,6 @@ class IoSpec extends AnyFunSuite {
       val (x2, y2) = byD(d)
       assert(math.abs(x1 - x2) + math.abs(y1 - y2) == 1, s"jump at d=$d")
     }
-  }
-
-  test("hilbert write: files tile BOTH axes, prunable on either; lossless") {
-    val dir = Files.createTempDirectory("graft-hilbert").toString
-    val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-      .select($"l_orderkey", $"l_partkey", $"l_quantity")
-      .repartition(8)
-    graft.io.Sinks.writeHilbert(li, s"$dir/out", "l_orderkey", "l_partkey",
-      partitions = 16)
-    import java.io.File
-    val files = new File(s"$dir/out").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSeq
-    assert(files.size >= 8, s"expected >=8 hilbert files, got ${files.size}")
-    val ranges = files.map { f =>
-      spark.read.parquet(f).agg(
-        min($"l_orderkey"), max($"l_orderkey"),
-        min($"l_partkey"), max($"l_partkey"))
-        .as[(Long, Long, Long, Long)].head()
-    }
-    val (loO, hiO) = (ranges.map(_._1).min, ranges.map(_._2).max)
-    val (loP, hiP) = (ranges.map(_._3).min, ranges.map(_._4).max)
-    val midO = (loO + hiO) / 2
-    val midP = (loP + hiP) / 2
-    val hitO = ranges.count(r => r._1 <= midO && midO <= r._2)
-    val hitP = ranges.count(r => r._3 <= midP && midP <= r._4)
-    assert(hitO <= files.size * 3 / 4, s"orderkey axis not tiled: $hitO/${files.size}")
-    assert(hitP <= files.size * 3 / 4, s"partkey axis not tiled: $hitP/${files.size}")
-    val back = spark.read.parquet(s"$dir/out")
-    assert(back.columns.toSeq == Seq("l_orderkey", "l_partkey", "l_quantity"))
-    assert(back.exceptAll(li).isEmpty && li.exceptAll(back).isEmpty)
-  }
-
-  test("compactDir: many small files → target count, lossless, no shuffle") {
-    import graft.io.Sinks
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
-    val df = (1L to 5000L).map(i => (i, s"row$i", i * 1.5)).toDF("id", "s", "v")
-    df.repartition(32).write.parquet(s"$dir/small")
-    def parquetFiles(p: String) = new java.io.File(p).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(parquetFiles(s"$dir/small") == 32, "fixture must start fragmented")
-    // huge target → everything packs into one file
-    val n1 = Sinks.compactDir(spark, s"$dir/small", s"$dir/one")
-    assert(n1 == 1 && parquetFiles(s"$dir/one") == 1)
-    val back = spark.read.parquet(s"$dir/one")
-    assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
-    // tiny target → several files (bounded by the scan's own small-file
-    // packing), still lossless
-    val n2 = Sinks.compactDir(spark, s"$dir/small", s"$dir/few",
-      targetFileBytes = 16 * 1024)
-    assert(n2 > 1 && parquetFiles(s"$dir/few") == n2, s"n2=$n2")
-    val back2 = spark.read.parquet(s"$dir/few")
-    assert(back2.exceptAll(df).isEmpty && df.exceptAll(back2).isEmpty)
-    // the rewrite plan is coalesce-only: no Exchange
-    val p = spark.read.parquet(s"$dir/small").coalesce(2)
-      .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
-    assert(!p.contains("Exchange"), p)
   }
 
   test("approx_count_distinct path: HLL counts within 5% of exact on daily agg") {

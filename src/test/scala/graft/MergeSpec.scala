@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Merge
 
-/** Snapshot merge / SCD semantics: Type-1 upsert, CDC delta classification,
-  * Type-2 history evolution across successive applies.
+/** Snapshot merge / SCD semantics: CDC delta classification, Type-2
+  * history evolution across successive applies.
   */
 class MergeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -14,15 +14,6 @@ class MergeSpec extends AnyFunSuite {
 
   private def dim(rows: (Long, String, String)*) =
     rows.toDF("k", "name", "city")
-
-  test("upsert overrides matched keys, appends new ones, keeps the rest") {
-    val base = dim((1L, "a", "x"), (2L, "b", "y"), (3L, "c", "z"))
-    val updates = dim((2L, "B", "Y"), (9L, "i", "w"))
-    val got = Merge.upsert(base, updates, Seq("k"))
-      .orderBy($"k").as[(Long, String, String)].collect().toSeq
-    assert(got == Seq((1L, "a", "x"), (2L, "B", "Y"), (3L, "c", "z"),
-      (9L, "i", "w")))
-  }
 
   test("snapshotDelta classifies all four change types; null ≠ empty string") {
     val cur = dim((1L, "a", "x"), (2L, "b", "y"), (3L, "c", "z"))

@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.multimodal.{ImageCodec, MediaContainers, Multimodal}
 
-/** Multimodal binary-column plumbing: schema, batch shape, determinism of
-  * the stub decoder, frame sampling layout.
+/** Multimodal binary-column plumbing: schema, batch shape, the image,
+  * audio and video codecs, frame sampling layout.
   */
 class MultimodalSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -19,31 +19,6 @@ class MultimodalSpec extends AnyFunSuite {
     val r = media.head()
     assert(r.kind == "image" && r.bytes.nonEmpty && r.width >= 64 && r.height >= 48)
     assert(media.count() == docs.count())
-  }
-
-  test("feature extraction is deterministic and fixed-width") {
-    val f1 = Multimodal.extractFeatures(Multimodal.fromDocuments(docs), dim = 16)
-      .collect().map(f => f.media_id -> f.feature.toSeq).toMap
-    val f2 = Multimodal.extractFeatures(Multimodal.fromDocuments(docs), dim = 16)
-      .collect().map(f => f.media_id -> f.feature.toSeq).toMap
-    assert(f1 == f2)
-    assert(f1.values.forall(_.length == 16))
-  }
-
-  test("features flow into the similarity operators (array<float> handoff)") {
-    val feats = Multimodal.featureTable(spark, docs)
-      .withColumnRenamed("media_id", "vec_id")
-      .withColumnRenamed("feature", "embedding")
-    val qs = feats.filter($"vec_id" % 100 === 0)
-    val topk = graft.operators.Similarity.bruteForceTopK(
-      feats, qs, "vec_id", "embedding", k = 3)
-    assert(topk.count() == qs.count() * 3)
-  }
-
-  test("resize bounds payloads and stamps target dims") {
-    val resized = Multimodal.resize(Multimodal.fromDocuments(docs), 128, 96)
-    assert(resized.filter(r => r.width != 128 || r.height != 96).count() == 0)
-    assert(resized.filter(r => r.bytes.length > 128 * 96 / 64).count() == 0)
   }
 
   test("BMP/PNG encode→decode roundtrips dimensions and format") {

@@ -638,33 +638,6 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("zOrdered: partitions cover disjoint z-ranges with compact 2-D boxes") {
-    import graft.ops.Locality
-    val grid = for { x <- 0 until 64; y <- 0 until 64 } yield (x.toLong, y.toLong)
-    val df = grid.toDF("x", "y").repartition(13) // scrambled input layout
-    val parts = Locality.zOrdered(df, "x", "y", bits = 6, partitions = 8)
-    val withPid = parts
-      .withColumn("z", Locality.zValue2(col("x"), col("y"), 6))
-      .withColumn("p", spark_partition_id())
-      .localCheckpoint()
-    val ranges = withPid.groupBy("p")
-      .agg(min("z").as("lo"), max("z").as("hi"), count(lit(1)).as("n"))
-      .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sortBy(_._1)
-    assert(ranges.map(_._3).sum == 4096L)
-    // range partitioning on z ⇒ partitions own disjoint z-intervals
-    ranges.sliding(2).foreach {
-      case Array((_, hi, _), (lo2, _, _)) => assert(hi < lo2, ranges.toSeq)
-      case _ =>
-    }
-    // the point of the interleave: every partition is a COMPACT box in
-    // (x, y), not a stripe — bounding-box area well under the full grid
-    val maxArea = withPid.groupBy("p")
-      .agg(((max("x") - min("x") + 1) * (max("y") - min("y") + 1)).as("a"))
-      .agg(max("a")).head().getLong(0)
-    assert(maxArea <= 4096 / 2, s"partition bounding box too fat: $maxArea")
-  }
-
   test("winsorized mean: tails clamp to boundary order statistics; n constant") {
     import graft.ops.Robust
     // 10 values 1..9 + 1000 at trim 0.1: cut = 1, lo = value at rank 2 = 2,

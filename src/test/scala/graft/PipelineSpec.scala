@@ -382,6 +382,19 @@ class PipelineSpec extends AnyFunSuite {
     assert(spark.read.parquet(card).filter($"tombstone_epoch" === 1L)
       .count() == 7)
     assert(cardOf(2L).forall(_._3 == 0L), cardOf(2L))
+    // a full run over the emptied silver finds it absent: it does not
+    // throw, and no tier's files or directories change
+    def tiers(): Map[String, (Long, Long)] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        f +: Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+      Seq(cfg.silverPath, cfg.goldDailyPath, cfg.goldMonthlyPath,
+          cfg.goldCustomerPath)
+        .flatMap(p => walk(new java.io.File(p)))
+        .map(f => f.getPath -> ((f.length(), f.lastModified()))).toMap
+    }
+    val before = tiers()
+    SilverToGold.run(spark, cfg)
+    assert(tiers() == before)
   }
 
   test("erasure job count: two customers erased from a 2,000-row landing") {

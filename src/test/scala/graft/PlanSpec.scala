@@ -171,12 +171,24 @@ class PlanSpec extends AnyFunSuite {
 
   test("opq x ivfadc: the rotation is a zero-shuffle projection — the " +
       "composed search keeps the exact ivfadc probe plan shape") {
-    import graft.operators.Opq
+    import graft.operators.{Clustering, Opq, Pq}
     import org.apache.spark.sql.functions.col
     val emb = Tables.load(spark, dir, "embeddings")
-    val model = Opq.fitIvf(emb, "vec_id", "embedding", cells = 4, m = 8,
-      k = 4, alternations = 1, initIters = 1, coarseIters = 1,
-      codeIters = 1)
+    // the v_opq_ivf_check stack: (mean, R) from Opq.fit, the plain coarse
+    // centroids rotated into the transformed space, residual books
+    // trained there
+    val coarse = Clustering.fit(emb, "vec_id", "embedding", 4, maxIter = 1)
+    val opq = Opq.fit(emb, "vec_id", "embedding", 8, 4, alternations = 1,
+      initIters = 1)
+    val coarseR = coarse.map { c =>
+      opq.rotation.map { r =>
+        r.zip(c.zip(opq.mean).map { case (x, mn) => x - mn })
+          .map { case (a, b) => a * b }.sum
+      }.toSeq
+    }
+    val books = Pq.trainResidualCodebooks(Opq.rotate(emb, "embedding", opq),
+      "vec_id", "rvec", coarseR, m = 8, k = 4, maxIter = 1)
+    val model = Opq.IvfModel(opq.mean, opq.rotation, coarseR, books)
     val qs = emb.filter(col("vec_id") % 97 === 0)
     val p = Opq.ivfAdcTopK(emb, qs, "vec_id", "embedding", model,
         k = 5, nProbe = 2)
@@ -309,40 +321,6 @@ class PlanSpec extends AnyFunSuite {
     val bnlj = p.linesIterator.filter(_.contains("BroadcastNestedLoopJoin")).toSeq
     assert(bnlj.nonEmpty, p)
     assert(bnlj.forall(!_.contains("embedding")), bnlj.mkString("\n"))
-  }
-
-  test("bucketed fact tables join with no exchange on either side") {
-    import org.apache.spark.sql.functions.col
-    val s = spark
-    // the in-memory catalog is empty in a fresh JVM but the warehouse dir
-    // persists — clear both so saveAsTable can recreate the managed tables
-    Seq("li_bucketed", "o_bucketed").foreach { t =>
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(
-        new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath, t)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(): Unit
-      }
-      if (loc.exists()) rm(loc)
-    }
-    graft.io.Sinks.writeBucketed(
-      s.read.parquet(s"$dir/lineitem.parquet"), "li_bucketed", "l_orderkey", 8)
-    graft.io.Sinks.writeBucketed(
-      s.read.parquet(s"$dir/orders.parquet"), "o_bucketed", "o_orderkey", 8)
-    val prevBroadcast = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val j = s.table("li_bucketed")
-        .join(s.table("o_bucketed"), col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_orderkey"), col("l_quantity"), col("o_totalprice"))
-      val p = j.queryExecution.explainString(FormattedMode)
-      assert(p.contains("SortMergeJoin"), p)
-      assert(!p.contains("Exchange"), p) // bucketing replaces both shuffles
-      assert(j.count() > 0)
-    } finally {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-    }
   }
 
   test("aggregations are two-phase partial+final around one exchange") {

@@ -287,10 +287,9 @@ class PqSpec extends AnyFunSuite {
     assert(err < 1e-12, s"recovery error $err")
   }
 
-  test("OPQ x IVFADC: fitIvf is deterministic, the composed search " +
-    "returns k rows per query, and rotating the corpus does not change " +
-    "exact L2 neighbor geometry") {
-    import graft.operators.Opq
+  test("OPQ x IVFADC: the composed search returns k rows per query and " +
+    "is partitioning-invariant") {
+    import graft.operators.{Clustering, Opq}
     val df = (0 until 400).map { i =>
       val z1 = ((i * 31 % 23) - 11) * 0.5
       val z2 = ((i * 17 % 19) - 9) * 0.3
@@ -298,12 +297,19 @@ class PqSpec extends AnyFunSuite {
       val n2 = ((i * 29 % 11) - 5) * 0.01
       (i.toLong, Seq(z1 + n1, z2 + n2, z1 - n1, z2 - n2))
     }.toDF("vec_id", "embedding").repartition(5).localCheckpoint()
-    val m1 = Opq.fitIvf(df, "vec_id", "embedding", cells = 4, m = 2, k = 4,
+    // the v_opq_ivf_check stack: Opq.fit's rotation, the plain coarse
+    // centroids rotated, residual books trained in the rotated space
+    val opq = Opq.fit(df, "vec_id", "embedding", m = 2, k = 4,
       alternations = 2, initIters = 1)
-    val m2 = Opq.fitIvf(df, "vec_id", "embedding", cells = 4, m = 2, k = 4,
-      alternations = 2, initIters = 1)
-    assert(m1.rotation.map(_.toSeq).toSeq == m2.rotation.map(_.toSeq).toSeq)
-    assert(m1.coarse == m2.coarse && m1.codebooks == m2.codebooks)
+    val coarse = Clustering.fit(df, "vec_id", "embedding", 4).map { c =>
+      opq.rotation.map { r =>
+        r.zip(c.zip(opq.mean).map { case (x, mn) => x - mn })
+          .map { case (a, b) => a * b }.sum
+      }.toSeq
+    }
+    val m1 = Opq.IvfModel(opq.mean, opq.rotation, coarse,
+      Pq.trainResidualCodebooks(Opq.rotate(df, "embedding", opq), "vec_id",
+        "rvec", coarse, m = 2, k = 4))
     val qs = df.filter($"vec_id" % 37 === 0)
     val topk = Opq.ivfAdcTopK(df, qs, "vec_id", "embedding", m1,
       k = 3, nProbe = 2)
@@ -314,53 +320,6 @@ class PqSpec extends AnyFunSuite {
     val topk7 = Opq.ivfAdcTopK(df.repartition(7), qs, "vec_id", "embedding",
       m1, k = 3, nProbe = 2)
     assert(topk.exceptAll(topk7).isEmpty && topk7.exceptAll(topk).isEmpty)
-  }
-
-  test("index erasure: cell-pruned rewrite matches a from-scratch re-encode " +
-    "of the retained corpus; searches agree and never return erased ids") {
-    val coarse = Seq(Seq(1.0, 1.0, 5.0, 5.0), Seq(-1.0, -1.0, -5.0, -5.0))
-    val tmp = java.nio.file.Files.createTempDirectory("pq_erase").toString
-    Pq.writeIndex(Pq.encodeIndex(df, "vec_id", "embedding", coarse, books),
-      tmp)
-    // erase ids 2 and 3 (cluster 1) — their cell footprint is cell 0 only,
-    // so cell 1's directory must stay byte-untouched
-    val cell1Mtime = {
-      val d = new java.io.File(s"$tmp/cell=1")
-      d.listFiles().map(_.lastModified()).max
-    }
-    val erased = df.filter($"vec_id".isin(2L, 3L))
-    Pq.eraseFromIndex(spark, tmp, erased, "vec_id", "embedding", coarse)
-    val after = spark.read.parquet(tmp)
-      .select($"neighbor_id", $"cell".cast("int").as("cell"), $"code")
-    val rebuilt = Pq.encodeIndex(df.filter(!$"vec_id".isin(2L, 3L)),
-      "vec_id", "embedding", coarse, books)
-      .select($"neighbor_id", $"cell".cast("int").as("cell"), $"code")
-    assert(after.exceptAll(rebuilt).isEmpty &&
-      rebuilt.exceptAll(after).isEmpty,
-      "erased index != from-scratch re-encode of the retained corpus")
-    assert(new java.io.File(s"$tmp/cell=1").listFiles()
-      .map(_.lastModified()).max == cell1Mtime,
-      "untouched cells must not be rewritten")
-    // searches over the erased index equal searches over the rebuild and
-    // never surface the data subject
-    val qs = df.filter($"vec_id" === 1L)
-    val viaErased = Pq.ivfAdcTopKIndexed(spark.read.parquet(tmp), qs,
-      "vec_id", "embedding", coarse, books, k = 2, nProbe = 2)
-    val viaRebuilt = Pq.ivfAdcTopKIndexed(rebuilt, qs,
-      "vec_id", "embedding", coarse, books, k = 2, nProbe = 2)
-    assert(viaErased.exceptAll(viaRebuilt).isEmpty &&
-      viaRebuilt.exceptAll(viaErased).isEmpty)
-    assert(viaErased.filter($"neighbor_id".isin(2L, 3L)).isEmpty)
-    // erasing a cluster's whole membership drops its cell directory
-    Pq.eraseFromIndex(spark, tmp,
-      df.filter($"vec_id" === 1L), "vec_id", "embedding", coarse)
-    assert(!new java.io.File(s"$tmp/cell=0").exists(),
-      "a cell emptied by erasure must be byte-gone")
-    // ghost erasure (id not in the index) is a no-op and never throws
-    Pq.eraseFromIndex(spark, tmp,
-      Seq((99L, Seq(-1.0f, -1.0f, -5.0f, -5.0f))).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", coarse)
-    assert(spark.read.parquet(tmp).count() == 3)
   }
 
 }

@@ -153,9 +153,11 @@ class PretrainSpec extends AnyFunSuite {
   test("mixture: subset, deterministic across re-runs, rate 1 keeps all") {
     val docs = (1L to 400L).map(i => (i, s"s${i % 4}")).toDF("doc_id", "source")
     val rates = Map("s0" -> 1.0, "s1" -> 0.5, "s2" -> 0.0)
-    val kept = Sampling.mixtureSample(docs, "doc_id", "source", rates)
+    val kept = docs.filter(
+      Sampling.mixtureKeep(col("doc_id"), col("source"), rates))
     val k1 = kept.select("doc_id").as[Long].collect().toSet
-    val k2 = Sampling.mixtureSample(docs, "doc_id", "source", rates)
+    val k2 = docs.filter(
+        Sampling.mixtureKeep(col("doc_id"), col("source"), rates))
       .select("doc_id").as[Long].collect().toSet
     assert(k1 == k2, "re-run changed membership")
     assert(kept.filter(col("source") === "s0").count() == 100, "rate 1.0 must keep all")
@@ -170,8 +172,8 @@ class PretrainSpec extends AnyFunSuite {
     val docs = (1L to 2000L).map(i => (i, "s")).toDF("doc_id", "source")
     val withSplit = Sampling.splitAssign(docs, "doc_id",
       Seq("train" -> 0.5, "test" -> 0.5))
-    val kept = Sampling.mixtureSample(withSplit, "doc_id", "source",
-      Map("s" -> 0.5))
+    val kept = withSplit.filter(
+      Sampling.mixtureKeep(col("doc_id"), col("source"), Map("s" -> 0.5)))
     val trainKept = kept.filter(col("split") === "train").count().toDouble
     val trainAll = withSplit.filter(col("split") === "train").count().toDouble
     val ratio = trainKept / trainAll

@@ -5,43 +5,15 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{EventStreamAggs, IncrementalDedupStream, Sessionize, StreamDedup, StreamEnrich, StreamJoin}
+import graft.streaming.IncrementalDedupStream
 
-/** Structured Streaming: watermarked windowed aggregation driven through a
-  * real streaming query (file source → memory sink), checked against the
-  * identical batch plan.
+/** Structured Streaming: stateless and aggregating operators driven through
+  * real streaming queries (file source → memory sink) and checked against
+  * the identical batch plan; the incremental dedup store and its erasure.
   */
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  test("streaming hourly windows equal the batch computation over the same files") {
-    val dir = Files.createTempDirectory("graft-stream").toString
-    // materialize events with micros timestamps (the raw testdata parquet is
-    // TIMESTAMP(NANOS), unreadable by a fresh schema'd stream)
-    val events = Tables.events(spark, "/root/testdata/sf0.001")
-      .select($"event_id", $"ts", $"event_type", $"value")
-    events.write.parquet(s"$dir/in")
-
-    val stream = spark.readStream
-      .schema(events.schema)
-      .parquet(s"$dir/in")
-    val q = EventStreamAggs.hourlyByType(stream)
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName("hourly_stream")
-      .start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("hourly_stream")
-        .orderBy($"window_start", $"event_type").collect()
-      val batch = EventStreamAggs.hourlyByType(events)
-        .orderBy($"window_start", $"event_type").collect()
-      assert(streamed.nonEmpty)
-      assert(streamed.toSeq == batch.toSeq)
-    } finally q.stop()
-  }
 
   test("streaming SpaceSaving heavy hitters equal the batch summary") {
     import org.apache.spark.sql.graftx.SpaceSavingExpressions.spaceSaving
@@ -70,207 +42,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(streamed.nonEmpty && streamed == batch)
       assert(streamed.forall(_._3 == 0L)) // exact regime either way
     } finally q.stop()
-  }
-
-  test("flatMapGroupsWithState sessions: closed stream output equals batch") {
-    import java.sql.Timestamp
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val events = Tables.events(spark, "/root/testdata/sf0.001")
-      .select($"event_id", $"user_id", $"ts", $"value")
-    val tuples = events.as[(Long, Long, Timestamp, Double)].collect().toSeq
-    val maxTs = tuples.map(_._3.getTime).max
-
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[(Long, Long, Timestamp, Double)]
-    val input = ms.toDF().toDF("event_id", "user_id", "ts", "value")
-    val q = Sessionize.sessionsStream(input, gapMinutes = 30, "1 second")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("sessions_stream").start()
-    try {
-      ms.addData(tuples)
-      q.processAllAvailable()
-      // two flush batches: the first advances the watermark past every
-      // real session's end + gap; the second makes the event-time timeouts
-      // fire under that watermark
-      ms.addData(Seq((-1L, -1L, new Timestamp(maxTs + 86400000L), 0.0)))
-      q.processAllAvailable()
-      ms.addData(Seq((-2L, -2L, new Timestamp(maxTs + 2 * 86400000L), 0.0)))
-      q.processAllAvailable()
-      val streamed = spark.table("sessions_stream")
-        .filter($"user_id" >= 0)
-        .orderBy($"user_id", $"session_start")
-        .collect().toSeq
-      val batch = Sessionize.sessionsBatch(events, gapMinutes = 30)
-        .orderBy($"user_id", $"session_start")
-        .collect().toSeq
-      assert(batch.nonEmpty)
-      assert(streamed == batch)
-    } finally q.stop()
-  }
-
-  test("streaming dedup within watermark equals batch dropDuplicates") {
-    import java.sql.Timestamp
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val events = Tables.events(spark, "/root/testdata/sf0.001")
-      .select($"event_id", $"ts", $"event_type", $"value")
-    val rows = events.as[(Long, Timestamp, String, Double)].collect().toSeq
-    // plant exact duplicates: every 3rd row appears twice, adjacent in
-    // arrival order (well inside the watermark horizon)
-    val withDups = rows.zipWithIndex.flatMap { case (r, i) =>
-      if (i % 3 == 0) Seq(r, r) else Seq(r)
-    }
-
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[(Long, Timestamp, String, Double)]
-    val input = ms.toDF().toDF("event_id", "ts", "event_type", "value")
-    val q = StreamDedup.dedupWithinWatermark(input, "ts", "30 days", Seq("event_id"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("dedup_stream").start()
-    try {
-      ms.addData(withDups)
-      q.processAllAvailable()
-      val streamed = spark.table("dedup_stream")
-        .orderBy($"event_id").collect().toSeq
-      val batch = StreamDedup.dedupExact(events, Seq("event_id"))
-        .orderBy($"event_id").collect().toSeq
-      assert(streamed.nonEmpty)
-      assert(streamed == batch)
-    } finally q.stop()
-  }
-
-  test("streaming dedup state is bounded by the watermark horizon") {
-    import java.sql.Timestamp
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val events = Tables.events(spark, "/root/testdata/sf0.001")
-      .select($"event_id", $"ts", $"event_type", $"value")
-    val rows = events.as[(Long, Timestamp, String, Double)].collect()
-      .sortBy(_._2.getTime).toSeq
-
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[(Long, Timestamp, String, Double)]
-    val input = ms.toDF().toDF("event_id", "ts", "event_type", "value")
-    // 10-minute horizon over a multi-day event stream: after the watermark
-    // advances past the first chunk, its ids must leave the state store
-    val q = StreamDedup.dedupWithinWatermark(input, "ts", "10 minutes", Seq("event_id"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("dedup_bounded").start()
-    try {
-      val (early, late) = rows.splitAt(rows.length / 2)
-      ms.addData(early)
-      q.processAllAvailable()
-      ms.addData(late)
-      q.processAllAvailable()
-      // one more empty-ish batch so progress reflects post-eviction state
-      ms.addData(Seq(rows.last))
-      q.processAllAvailable()
-      val stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-      assert(stateRows < rows.length / 2,
-        s"state held $stateRows rows; expected eviction below ${rows.length / 2}")
-    } finally q.stop()
-  }
-
-  test("stream-stream join within horizon equals the batch join") {
-    import java.sql.Timestamp
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val events = Tables.events(spark, "/root/testdata/sf0.001")
-      .select($"event_id", $"ts", $"user_id", $"event_type")
-    val clicks = events.filter($"event_type" === "click")
-      .select($"event_id", $"ts", $"user_id")
-    val purchases = events.filter($"event_type" === "purchase")
-      .select($"event_id", $"ts", $"user_id")
-
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val msL = MemoryStream[(Long, Timestamp, Long)]
-    val msR = MemoryStream[(Long, Timestamp, Long)]
-    val left = msL.toDF().toDF("event_id", "ts", "user_id")
-    val right = msR.toDF().toDF("event_id", "ts", "user_id")
-    val q = StreamJoin.joinWithinHorizon(left, right, "user_id",
-        "1 hour", horizonMinutes = 120)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("join_stream").start()
-    try {
-      msL.addData(clicks.as[(Long, Timestamp, Long)].collect().toSeq)
-      msR.addData(purchases.as[(Long, Timestamp, Long)].collect().toSeq)
-      q.processAllAvailable()
-      val streamed = spark.table("join_stream")
-        .orderBy($"event_id", $"right_id").collect().toSeq
-      val batch = StreamJoin.joinWithinHorizon(clicks, purchases, "user_id",
-          "1 hour", horizonMinutes = 120)
-        .orderBy($"event_id", $"right_id").collect().toSeq
-      assert(batch.nonEmpty)
-      assert(streamed == batch)
-    } finally q.stop()
-  }
-
-  test("stream-static dim enrichment equals the batch join and broadcasts") {
-    import java.sql.Timestamp
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val events = Tables.events(spark, "/root/testdata/sf0.001")
-      .select($"event_id", $"ts", $"user_id", $"value")
-    // even user_ids only, so odd-id events exercise the left-join null path
-    val dim = spark.range(0, 1000).filter($"id" % 2 === 0)
-      .select($"id".as("user_id"),
-        concat(lit("seg"), ($"id" % 5).cast("string")).as("segment"))
-
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[(Long, Timestamp, Long, Double)]
-    val stream = ms.toDF().toDF("event_id", "ts", "user_id", "value")
-    val q = StreamEnrich.enrichWithDim(stream, dim, "user_id")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("enrich_stream").start()
-    try {
-      ms.addData(events.as[(Long, Timestamp, Long, Double)].collect().toSeq)
-      q.processAllAvailable()
-      val streamed = spark.table("enrich_stream")
-        .orderBy($"event_id").collect().toSeq
-      val batch = StreamEnrich.enrichWithDim(events, dim, "user_id")
-        .orderBy($"event_id").collect().toSeq
-      assert(batch.nonEmpty)
-      assert(streamed == batch)
-      // unmatched stream rows survive (left join), matched ones enrich
-      assert(streamed.exists(_.getAs[String]("segment") != null))
-      assert(streamed.exists(r => r.isNullAt(r.fieldIndex("segment"))))
-    } finally q.stop()
-    // stateless broadcast join: dim broadcasts, no state store operator
-    val p = StreamEnrich.enrichWithDim(events, dim, "user_id")
-      .queryExecution.executedPlan.toString
-    assert(p.contains("BroadcastHashJoin"), p.take(2000))
-  }
-
-  test("streaming CDC apply: upserts accumulate, conflicts resolve, replay is idempotent") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.CdcApplyStream
-    val dimPath = Files.createTempDirectory("graft-cdc-dim").toString
-    val ckpt = Files.createTempDirectory("graft-cdc-ckpt").toString
-
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[(Long, String, Long)]
-    val stream = ms.toDF().toDF("id", "name", "seq")
-    val q = CdcApplyStream.attach(stream, dimPath, Seq("id"), "seq", ckpt)
-    try {
-      ms.addData(Seq((1L, "a1", 10L), (2L, "b1", 11L)))
-      q.processAllAvailable()
-      // batch 2: update id=1 (two conflicting rows — seq 21 must win),
-      // insert id=3
-      ms.addData(Seq((1L, "a2", 20L), (1L, "a3", 21L), (3L, "c1", 22L)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val dim = CdcApplyStream.current(spark, dimPath).get
-      .orderBy($"id").as[(Long, String, Long)].collect().toSeq
-    assert(dim == Seq((1L, "a3", 21L), (2L, "b1", 11L), (3L, "c1", 22L)))
-
-    // at-least-once replay: re-applying the same change set as a new epoch
-    // leaves the dimension unchanged (upsert idempotence)
-    val replay = Seq((1L, "a2", 20L), (1L, "a3", 21L), (3L, "c1", 22L))
-      .toDF("id", "name", "seq")
-    CdcApplyStream.applyBatch(replay, dimPath, Seq("id"), "seq", epoch = 99L)
-    val dim2 = CdcApplyStream.current(spark, dimPath).get
-      .orderBy($"id").as[(Long, String, Long)].collect().toSeq
-    assert(dim2 == dim)
-    // superseded epoch dirs are retired; only the live one remains
-    val epochs = new java.io.File(dimPath).listFiles()
-      .filter(_.isDirectory).map(_.getName).toSeq
-    assert(epochs == Seq("e99"), epochs.toString)
   }
 
   test("PII redaction and mixture keep run identically under readStream") {
@@ -381,10 +152,16 @@ class StreamingSpec extends AnyFunSuite {
       .mode("append").parquet(s"$base/in")
     docs.filter($"doc_id" % 2 =!= 0).coalesce(1).write
       .mode("append").parquet(s"$base/in")
-    val q = IncrementalDedupStream.attach(
-      spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$base/in"),
-      "doc_id", "text", s"$base/store", s"$base/ckpt", minJaccard = 0.5)
+    // the foreachBatch sink: each micro-batch ingests under its batch id
+    // as the epoch, so a redelivered batch overwrites its own output
+    val q = spark.readStream.schema(docs.schema)
+      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
+      .writeStream.option("checkpointLocation", s"$base/ckpt")
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+        IncrementalDedupStream.ingestBatch(batch, "doc_id", "text",
+          s"$base/store", minJaccard = 0.5, epoch = Some(id))
+      }
+      .start()
     try q.processAllAvailable() finally q.stop()
     val got = IncrementalDedupStream.pairs(spark, s"$base/store")
       .select($"id_a", $"id_b").as[(Long, Long)].collect()
@@ -393,25 +170,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(full.nonEmpty)
     assert(got.length == got.toSet.size, "a pair was emitted twice")
     assert(got.toSet == full)
-  }
-
-  test("watermarked stream keeps bounded state keys (windows × types)") {
-    val dir = Files.createTempDirectory("graft-stream2").toString
-    val events = Tables.events(spark, "/root/testdata/sf0.001")
-      .select($"event_id", $"ts", $"event_type", $"value")
-    events.write.parquet(s"$dir/in")
-    val stream = spark.readStream.schema(events.schema).parquet(s"$dir/in")
-    val q = EventStreamAggs.hourlyByType(stream)
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("hourly_bounded").start()
-    try {
-      q.processAllAvailable()
-      val nKeys = spark.table("hourly_bounded").count()
-      val expected = events
-        .select(date_trunc("hour", $"ts").as("w"), $"event_type")
-        .distinct().count()
-      assert(nKeys == expected)
-    } finally q.stop()
   }
 
   test("naive bayes scoring streams ≡ batch (frozen model, stateless projection)") {
