@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every declared query on
   * `SPARK_GRAFT_SF_DIR`, writes per-query seconds to `bench_out.json`, and
   * prints ONE COMPACT JSON line on stdout.

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc timing for a subset of queries: `runMain graft.BenchOne q1 q2 ...`
   * (all queries if no args). Same session config as [[Bench]]; one warmup +
   * 3 timed runs per query, prints min/median. For iterating on a single

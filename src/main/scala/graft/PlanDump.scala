@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool for the optimization rounds: dump `.explain("formatted")` for
   * named queries to files, without timing them.
   *

@@ -211,8 +211,9 @@ object Sinks {
   }
 
   /** Recursive count of `.parquet` data files under `path` (0 when the
-    * path does not exist) — the file-hygiene signal the compaction
-    * thresholds key on.
+    * path does not exist). A store with none holds no rows and cannot
+    * be read without a schema, so its callers treat 0 as "nothing
+    * there" rather than reading it.
     */
   def parquetFileCount(spark: org.apache.spark.sql.SparkSession,
       path: String): Int = {
@@ -246,30 +247,8 @@ object Sinks {
     t.fold(named)(dt => named.select(col(id).cast(dt).as(id)))
   }
 
-  /** Record the COMMIT FRONTIER of a wave/epoch-managed store family: the
-    * highest wave id known fully committed (every strictly-older wave's
-    * foreachBatch/caller completed, so none of them can ever replay).
-    * Ingest writes `v = currentWave - 1` BEFORE its own commits — a value
-    * that stays correct whatever happens to the in-flight wave — and the
-    * marker only ever rises (a replayed wave rewrites its own value;
-    * out-of-order writes are absorbed by the max). Compaction reads it to
-    * fold exactly the provably-final prefix. One tiny `_frontier` file at
-    * the store-family root; tmp + rename publish.
-    */
-  def writeFrontier(spark: org.apache.spark.sql.SparkSession,
-      dir: String, v: Long): Unit = {
-    if (readFrontier(spark, dir).exists(_ >= v)) return
-    writeMarkerFile(spark, dir, "_frontier", v.toString)
-  }
-
-  /** The recorded commit frontier, if any ingest has published one. */
-  def readFrontier(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[Long] =
-    readMarkerFile(spark, dir, "_frontier")
-      .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
-
   /** Tmp + rename publish of one tiny marker file at a store root — the
-    * shared mechanics of `_frontier` / `_nbuckets` / `_maxid`.
+    * shared mechanics of `_nbuckets` / `_maxid`.
     */
   private def writeMarkerFile(spark: org.apache.spark.sql.SparkSession,
       dir: String, name: String, content: String): Unit = {
@@ -288,8 +267,8 @@ object Sinks {
 
   /** Read a marker file to EOF (a single read() may legally return a
     * prefix on remote-FS streams — parsing that prefix would yield a
-    * silently wrong value, e.g. a smaller frontier or a negative number
-    * with its '-' cut). None when absent or empty.
+    * silently wrong value, e.g. a smaller bucket modulus or a negative
+    * number with its '-' cut). None when absent or empty.
     */
   private def readMarkerFile(spark: org.apache.spark.sql.SparkSession,
       dir: String, name: String): Option[String] = {
@@ -319,7 +298,7 @@ object Sinks {
   }
 
   /** Record the store family's ID-HASH BUCKET MODULUS at ingest time —
-    * the `_nbuckets` marker next to `_frontier`. The bucket layout
+    * the `_nbuckets` marker at the store-family root. The bucket layout
     * (`__bk = xxhash64(id) mod n`) is fixed the moment the first wave
     * commits: a later ingest or erasure computing buckets with a
     * DIFFERENT modulus silently writes to / rewrites the wrong bucket
@@ -443,23 +422,6 @@ object Sinks {
           parts(2).toLong)
       }.toOption
     }
-
-  /** Shared body of the epoch-store compactions
-    * ([[graft.jobs.PretrainCorpus.compactStores]],
-    * [[graft.streaming.IncrementalDedupStream.compact]]): when `path`
-    * holds more than `minFiles` parquet files, read it, let `plan` shape
-    * the folded frame and its partition columns, and publish via the
-    * disk-staged atomic swap. A missing or already-compact store no-ops,
-    * and `plan` may return None to decline the fold (e.g. a store erased
-    * down to its schema anchor, which is already maximally compact).
-    */
-  def compactEpochStore(spark: org.apache.spark.sql.SparkSession,
-      path: String, minFiles: Int)
-      (plan: DataFrame => Option[(DataFrame, Seq[String])]): Unit =
-    if (parquetFileCount(spark, path) > minFiles)
-      plan(spark.read.parquet(path)).foreach { case (df, parts) =>
-        stagedSwapParquet(spark, df, path, partitionCols = parts)
-      }
 
   /** S7 erasure — DELETE rows for `keyCol` values in `keys` from the
     * unpartitioned customer table ([[mergeGoldCustomer]]'s missing

@@ -32,8 +32,7 @@ import org.apache.spark.sql.functions.{broadcast, col}
   * bloom sidecars (`bloomCols`); [[readWhere]] then prunes
   * range-disjoint segments and [[readEquals]] bloom-rejects segments
   * that cannot hold the key — data skipping for both the range and the
-  * point-lookup shape, maintained through erasure rewrites and
-  * compaction.
+  * point-lookup shape, maintained through erasure rewrites.
   */
 object Versioned {
 
@@ -65,8 +64,8 @@ object Versioned {
     * undo the very economy segment skipping buys (a point lookup on a
     * 10,000-segment table would still pay 10,000 footer reads). Appends
     * merge the previous manifest's cached schema with the new segment's
-    * (one footer set); compaction and erasure carry it over (neither
-    * changes columns). Manifests written before this field fall back to
+    * (one footer set); erasure carries it over (it never changes
+    * columns). Manifests written before this field fall back to
     * the footer merge once and re-cache on their next commit.
     */
   private[graft] case class Manifest(version: Int, files: Seq[String],
@@ -76,7 +75,7 @@ object Versioned {
 
   /** Per-JVM manifest cache. A committed version's manifest file is
     * IMMUTABLE — [[writeManifest]] refuses to overwrite an existing
-    * version, and erasure/compaction publish NEW versions (they purge
+    * version, and erasure publishes NEW versions (it purges
     * segment files, never rewrite commit JSONs) — so a manifest's BYTES
     * never change in place. The one way the same (root, version) can
     * legitimately mean different content is a DELETE-AND-REBUILD of the
@@ -209,7 +208,7 @@ object Versioned {
     * just-written segment: `<seg>/_bloom_<col>` — the underscore prefix
     * makes it invisible to parquet scans, and living INSIDE the segment
     * dir means it shares the segment's lifecycle for free (erase's purge
-    * and compact's carry-over need no bookkeeping). Capacity is the
+    * needs no bookkeeping). Capacity is the
     * segment's exact row count (one count + one aggregate per column);
     * fpp 0.001 keeps a false hit — a needlessly opened segment, never a
     * wrong row — at one in a thousand. Long and string columns (the id /
@@ -545,74 +544,14 @@ object Versioned {
       allowMissingColumns = true)
   }
 
-  /** OPTIMIZE-style segment compaction: rewrite the latest version's
-    * file list into at most `targetSegments` segments (each a union of
-    * CONSECUTIVE manifest entries — append order, so range-ordered
-    * appends keep their range locality and [[readWhere]]'s skipping
-    * stays selective after compaction) and publish a new version.
-    * History is untouched: older manifests keep referencing the original
-    * segment bytes — only [[erase]] purges — so time travel below the
-    * compaction is unaffected; readers of the new version list
-    * `targetSegments` segments instead of thousands. Stats are
-    * RE-RECORDED over each consolidated segment for every column any of
-    * its inputs tracked (exact by construction — recomputed from the
-    * written bytes, not merged estimates). A table already at or below
-    * the target no-ops. Crash contract = [[append]]'s: segments land
-    * before the manifest rename, so a crash leaves orphan bytes and a
-    * readable old latest, never a torn table.
-    */
-  def compact(spark: SparkSession, root: String,
-      targetSegments: Int = 16): Int = {
-    require(targetSegments > 0, "compact: targetSegments must be positive")
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no commits at $root")
-    val latest = readManifest(spark, root, vs.last)
-    if (latest.files.length <= targetSegments) return latest.version
-    val v = vs.last + 1
-    val groupSize =
-      (latest.files.length + targetSegments - 1) / targetSegments
-    var newStats = latest.stats
-    val newFiles = latest.files.grouped(groupSize).zipWithIndex.map {
-      // singleton groups carry over VERBATIM — original path, original
-      // stats, zero I/O, byte-sharing with older manifests preserved;
-      // only genuine multi-segment folds pay the rewrite
-      case (Seq(only), _) => only
-      case (group, i) =>
-        val out = s"$root/seg-$v-c$i-${spark.sparkContext.applicationId}"
-        spark.read.option("mergeSchema", "true").parquet(group: _*)
-          .write.mode(SaveMode.Overwrite).option("compression", "snappy")
-          .parquet(out)
-        val cols = group.flatMap(f =>
-          latest.stats.get(f).fold(Seq.empty[String])(_.map(_._1))).distinct
-        val outDf = spark.read.parquet(out)
-        val st = segmentStats(outDf, cols)
-        group.foreach(f => newStats -= f)
-        if (st.nonEmpty) newStats += (out -> st)
-        // folded segments re-record the union of their members' blooms
-        // (singleton groups carry theirs inside the dir, untouched)
-        writeBlooms(spark, out,
-          group.flatMap(bloomColsOf(spark, _)).distinct, outDf)
-        out
-    }.toSeq
-    val keptSet = newFiles.toSet
-    writeManifest(spark, root, Manifest(v, newFiles,
-      latest.redactedBelow, latest.tombstoneEpoch,
-      newStats.filter { case (f, _) => keptSet.contains(f) },
-      // compaction never changes columns: carry the cached schema (or
-      // pay the legacy footer merge once and cache it going forward)
-      schemaJson = latest.schemaJson
-        .orElse(Some(mergedSchema(spark, latest).json))))
-    v
-  }
-
   /** Right-to-be-forgotten erasure: rewrite only the segments holding the
     * subject's rows (untouched segments stay byte-identical and shared),
     * publish a new version whose redaction floor makes every OLDER
     * version unreadable — stated, not silent — and then purge EVERY
     * on-disk segment outside the new manifest: the floor just made all
-    * older versions unreadable, so the superseded originals [[compact]]
-    * had left behind for time travel (which may also hold the subject)
-    * die with the rewritten ones. Returns the new version.
+    * older versions unreadable, so no readable version references them
+    * (segments a crashed writer left behind go too). Returns the new
+    * version.
     *
     * The hit-segment set is found in ONE job: the latest version is read
     * as a single union, semi-joined to the keys, and the distinct
@@ -642,7 +581,7 @@ object Versioned {
       // input_file_name() returns a URI-ENCODED string, so a root
       // containing a space/%/non-ASCII char would never string-match the
       // manifest's raw path and the erase would silently ghost. Segment
-      // names are generated here (seg-<v>[-<i>|-c<i>]-<appId>, URL-safe
+      // names are generated here (seg-<v>[-<i>]-<appId>, URL-safe
       // ASCII) and unique within a manifest (the version is baked in),
       // so the name IS the identity.
       import org.apache.spark.sql.functions.{input_file_name, regexp_extract}
@@ -712,10 +651,7 @@ object Versioned {
         // crash in between leaves a readable latest either way. The
         // redaction floor just made EVERY older version unreadable, so
         // every on-disk segment outside the new manifest is purged — not
-        // only the rewritten ones: [[compact]] leaves superseded
-        // originals on disk for time travel, and those may hold the
-        // subject too (they also garbage-collect crashed writers'
-        // orphans here)
+        // only the rewritten ones (crashed writers' orphans go too)
         purgeOutside(newFiles)
       }
       v

@@ -3,7 +3,7 @@ package graft.io
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, EOFException}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** WARC/WET crawl-archive ingestion — the first mile of a real pretraining

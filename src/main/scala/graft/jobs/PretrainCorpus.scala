@@ -266,20 +266,14 @@ object PretrainCorpus {
       .map(_.asInstanceOf[Number].longValue())
     if (minScreened.isEmpty) return // nothing survived the screens: no-op
     val wid = waveId.getOrElse(minScreened.get)
-    // `__wv=-1` is RESERVED for compacted history (compactStores): a
-    // negative wave id would wholesale-overwrite it and break replay
-    // exclusion — enforce the documented contract, don't assume it
-    require(wid >= 0, s"ingestWave: wave id $wid is negative — __wv=-1 " +
-      "is reserved for compacted history; pass an explicit non-negative " +
-      "waveId (default is the wave's min screened doc_id)")
     // prior fingerprint state: the store minus this wave's own partition
     // (so a crash replay sees what the first attempt saw). A store whose
     // every row was erased is an ANCHOR-ONLY read (stagedSwapParquet's
     // flat schema anchor carries no __wv column): zero rows, prior =
-    // none. A NON-empty no-__wv store is a legacy append-mode layout —
+    // none. A NON-empty no-__wv store was written outside this code —
     // silently treating it as bootstrap would dedup against nothing and
     // then hide the flat files behind partition discovery: fail loudly
-    // (the same rule IncrementalDedupStream.prior enforces).
+    // (the same rule IncrementalDedupStream.ingestBatch enforces).
     val fpPrior =
       if (!exists(fpPath)) None
       else {
@@ -325,14 +319,6 @@ object PretrainCorpus {
           "(PretrainCorpus.corpus / manifest) as the arbiter for " +
           "this corpus instead")
     }
-    // publish the commit frontier BEFORE any of this wave's writes:
-    // every wave strictly below the current one completed its ingest (a
-    // checkpointed source never re-delivers it, and the ordering guard
-    // above proves all prior wave ids sit below this wave's min id), so
-    // `wid - 1` is final whatever happens to THIS wave — compactStores
-    // folds exactly that prefix with no crash-replay hazard; the dedup
-    // store's own marker lands inside ingestBatch with the same value
-    graft.io.Sinks.writeFrontier(spark, workDir, wid - 1)
     // exact dedup: first copy in the WAVE wins (min id per fp), and any
     // fp already in the store blocks the whole wave group
     val waveFp = screened
@@ -383,7 +369,7 @@ object PretrainCorpus {
     val storeDir = s"$workDir/dedup_store"
     graft.streaming.IncrementalDedupStream.ingestBatch(s4wave, "doc_id",
       "text", storeDir, cfg.minJaccard, nBuckets = cfg.nBuckets,
-      epoch = Some(wid))
+      epoch = wid)
     // only this wave's docs can be dropped (the anti-join target below is
     // s4wave), and id-ordered waves put every prior wave's later-member
     // id_b BELOW this wave's min id — so restricting the pairs store to
@@ -502,85 +488,6 @@ object PretrainCorpus {
       }
       .start()
 
-  /** Compact the wave-partitioned fingerprint/admission stores. Each
-    * [[ingestWave]] commits one file set per `__wv` partition, so after
-    * thousands of waves every ordering-guard aggregate and every erasure
-    * replay lists and opens thousands of small files. Compaction folds
-    * all committed waves into the RESERVED `__wv=-1` partition (a real
-    * wave id is a min doc_id — never negative) as `nBuckets`
-    * doc_id-partitioned files: same rows, flat file count, via the
-    * disk-staged atomic swap. The `__wv` column and layout survive, so
-    * post-compaction waves keep their replay-overwrite semantics
-    * unchanged, and the no-op threshold (`minFiles`) keeps the rewrite
-    * from running when the store is already compact.
-    *
-    * CONTRACT (the rule every log-structured store applies — compact
-    * behind the commit frontier): run at a wave BOUNDARY, with no
-    * crashed wave awaiting replay. A replayed wave excludes only its own
-    * `__wv` partition from prior state; if compaction folded that
-    * partition into `__wv=-1`, the replay would see its own first
-    * attempt as already-ingested state and drop the wave's documents as
-    * exact dups. The contract is CODE, two ways: with an EXPLICIT
-    * `frontier` (the caller's assertion that every wave ≤ it is final)
-    * a store holding any newer wave fails loudly; with `frontier =
-    * None` the `_frontier` marker [[ingestWave]] publishes before each
-    * wave (= previous wave, provably final) bounds a PARTIAL fold —
-    * waves at or below it fold into `__wv=-1`, newer waves carry
-    * through under their own partitions, so a pending replay still
-    * finds and replay-overwrites its own `__wv`. Neither (pre-marker
-    * stores) folds everything, the caller-asserted legacy behavior.
-    *
-    * The `__bk` id-hash layout survives the fold verbatim (one file per
-    * bucket): the erasure's bucket pruning and the bucket modulus both
-    * outlive compaction.
-    *
-    * SIGNATURE NOTE (round 10): the former `nBuckets` parameter is gone —
-    * bucketing is fixed at ingest by [[Config.nBuckets]] and must survive
-    * compaction unchanged, so a compaction-time bucket knob was a
-    * correctness trap. Positional callers of the old
-    * `(spark, workDir, nBuckets, minFiles)` shape must update.
-    */
-  def compactStores(spark: SparkSession, workDir: String,
-      minFiles: Int = 64, frontier: Option[Long] = None): Unit = {
-    val marker =
-      if (frontier.isDefined) None
-      else graft.io.Sinks.readFrontier(spark, workDir)
-    for (sub <- Seq("fingerprints", "admissions"))
-      graft.io.Sinks.compactEpochStore(spark, s"$workDir/$sub", minFiles) {
-        full =>
-          // a store erased down to its flat schema anchor has no __wv
-          // column and no rows: already maximally compact — no-op
-          // (ingestWave treats exactly this state as bootstrap)
-          if (!full.columns.contains("__wv") && full.isEmpty) None
-          else {
-            require(full.columns.contains("__wv"),
-              s"compactStores: $workDir/$sub is not wave-managed (no " +
-                "__wv layout) — legacy append-mode stores manage their " +
-                "own file hygiene")
-            frontier.foreach { fr =>
-              val over = full.filter(col("__wv") =!= lit(-1L) &&
-                col("__wv") > lit(fr)).limit(1).count()
-              require(over == 0L,
-                s"compactStores: $workDir/$sub holds waves beyond the " +
-                  s"commit frontier $fr — folding a possibly-uncommitted " +
-                  "wave into __wv=-1 would make its crash replay read " +
-                  "its own first attempt as history and drop the wave " +
-                  "as exact dups; complete or roll back the wave first")
-            }
-            val flat = marker match {
-              case Some(fr) => full.withColumn("__wv",
-                when(col("__wv") <= lit(fr), lit(-1L))
-                  .otherwise(col("__wv")))
-              case None => full.withColumn("__wv", lit(-1L))
-            }
-            Some(
-              if (full.columns.contains("__bk"))
-                (flat.repartition(col("__bk")), Seq("__bk", "__wv"))
-              else (flat.repartition(16, col("doc_id")), Seq("__wv")))
-          }
-      }
-  }
-
   /** Right-to-be-forgotten erasure of the incremental corpus state — and
     * the REPLAY of every admission decision the subject influenced: a doc
     * previously suppressed as the later member of a near-dup pair with an
@@ -615,10 +522,11 @@ object PretrainCorpus {
     * parameter is now an optional assertion — a caller value that
     * contradicts the marker fails loudly
     * ([[graft.io.Sinks.resolveNBuckets]]); pre-marker stores fall back
-    * to the caller's value, else the historical default. Stores from
-    * the pre-bucketing layout (no `__bk` directories) fall back to the
-    * full staged-swap rewrite. Ids are coerced to the stores' ingested
-    * doc_id type before hashing (the bucket hash is type-sensitive).
+    * to the caller's value, else the historical default. Every store is
+    * rewritten in the (`__bk`, `__wv`) layout [[ingestWave]] writes; a
+    * store holding rows without a `__bk` column fails loudly. Ids are
+    * coerced to the stores' ingested doc_id type before hashing (the
+    * bucket hash is type-sensitive).
     *
     * Crash posture of the in-place bucket rewrite (the same one
     * [[graft.streaming.IncrementalDedupStream.erase]] carries): task and
@@ -631,7 +539,9 @@ object PretrainCorpus {
     * `.spark-staging-*` directory for manual recovery. A re-run after
     * any crash outside that window converges: stale subject-only
     * partitions are re-filtered and the delete list is recomputed from
-    * the ids.
+    * the ids. A store with no data files, or only the flat schema
+    * anchor, has nothing to erase, so a re-run after a completed
+    * erasure is a no-op.
     */
   def eraseDocs(spark: SparkSession, workDir: String,
       ids: DataFrame, nBuckets: Option[Int] = None): Unit = {
@@ -661,16 +571,44 @@ object PretrainCorpus {
       .select(parts.map(col): _*).distinct().collect()
       .map(r => parts.indices.map(i => s"${parts(i)}=${r.get(i)}")
         .mkString("/")).toSet
-    // a store rewritten down to zero data files stays readable (and
-    // reads as ingestWave's bootstrap state) via the flat anchor
-    def anchorIfEmpty(path: String,
-        schema: org.apache.spark.sql.types.StructType): Unit =
-      if (graft.io.Sinks.parquetFileCount(spark, path) == 0)
-        spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(
-              schema.filterNot(f => f.name == "__bk" || f.name == "__wv")))
-          .write.mode("append").option("compression", "snappy").parquet(path)
+    // a store's rows, or None when it has none to erase: absent, no data
+    // files, or only the flat schema anchor a rewrite down to zero rows
+    // leaves. Rows outside the (__bk, __wv) layout fail loudly — the
+    // same rule ingestWave applies to a store without __wv.
+    def bucketedStore(path: String): Option[DataFrame] =
+      if (graft.io.Sinks.parquetFileCount(spark, path) == 0) None
+      else {
+        val df = spark.read.parquet(path)
+        if (df.columns.contains("__bk")) Some(df)
+        else if (df.isEmpty) None
+        else throw new IllegalStateException(
+          s"eraseDocs over a non-empty store without the __bk layout at " +
+            s"$path — a bucket-pruned rewrite cannot find the subject's " +
+            "rows; migrate the store (rewrite under __bk/__wv) first")
+      }
+    // dynamic overwrite of `rebuilt` (already restricted to `buckets`)
+    // over the store's rows in those buckets; partitions left with no
+    // rows are dropped explicitly, and a store rewritten down to zero
+    // data files keeps a flat schema anchor so it stays readable (and
+    // reads as ingestWave's bootstrap state)
+    def rewrite(path: String, store: Option[DataFrame], buckets: Seq[Long],
+        rebuilt: DataFrame): Unit = {
+      // staged before the overwrite: it reads the path it replaces
+      val touched = store.fold(Set.empty[String])(df =>
+        partDirs(df.filter(col("__bk").isin(buckets: _*))))
+      val kept = rebuilt.localCheckpoint()
+      try {
+        kept.write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .option("compression", "snappy")
+          .partitionBy(parts: _*).parquet(path)
+        graft.io.Sinks.deletePartitionDirs(spark, path,
+          (touched -- partDirs(kept)).toSeq)
+        if (graft.io.Sinks.parquetFileCount(spark, path) == 0)
+          kept.drop(parts: _*).limit(0).write.mode("append")
+            .option("compression", "snappy").parquet(path)
+      } finally unpersist(kept)
+    }
     // the bucket hash is TYPE-SENSITIVE: coerce the ids to the stores'
     // ingested doc_id type before hashing (shared guard —
     // [[graft.io.Sinks.coerceToStoreIdType]]); the fingerprint store is
@@ -706,111 +644,48 @@ object PretrainCorpus {
         // fingerprint/admission stores: rewrite ONLY the subject's
         // buckets, at (__bk, __wv) granularity — replay exclusion and
         // future wave commits keep working on the surviving layout
-        for (sub <- Seq("fingerprints", "admissions")) {
-          val p = s"$workDir/$sub"
-          if (exists(p) && subjectBuckets.nonEmpty) {
-            val full = spark.read.parquet(p)
-            if (!full.columns.contains("__bk")) {
-              // pre-bucketing layout: the full rewrite is the only option
-              graft.io.Sinks.stagedSwapParquet(spark,
-                full.join(broadcast(keys), Seq("doc_id"), "left_anti"), p,
-                partitionCols =
-                  if (full.columns.contains("__wv")) Seq("__wv") else Nil)
-            } else {
-              val inB = full.filter(col("__bk").isin(subjectBuckets: _*))
-              val touched = partDirs(inB)
-              val retained = inB.join(broadcast(keys), Seq("doc_id"),
-                "left_anti").localCheckpoint()
-              try {
-                retained.write.mode("overwrite")
-                  .option("partitionOverwriteMode", "dynamic")
-                  .option("compression", "snappy")
-                  .partitionBy(parts: _*).parquet(p)
-                // partitions holding ONLY the subject: dynamic overwrite
-                // wrote nothing there — drop the stale files explicitly
-                graft.io.Sinks.deletePartitionDirs(spark, p,
-                  (touched -- partDirs(retained)).toSeq)
-                anchorIfEmpty(p, full.schema)
-              } finally unpersist(retained)
-            }
+        if (subjectBuckets.nonEmpty)
+          for (sub <- Seq("fingerprints", "admissions")) {
+            val p = s"$workDir/$sub"
+            bucketedStore(p).foreach(full => rewrite(p, Some(full),
+              subjectBuckets,
+              full.filter(col("__bk").isin(subjectBuckets: _*))
+                .join(broadcast(keys), Seq("doc_id"), "left_anti")))
           }
-        }
         // corpus rebuild from retained stored state, restricted to the
         // affected buckets: s4 population minus later-members of RETAINED
         // pairs, gated by the replayed admission flags; each doc keeps
         // the dedup store's wave tag. An erasure that swallowed the
-        // ENTIRE corpus leaves the dedup store file-less or anchor-only:
-        // the corpus is then empty by definition — drop it and stop.
+        // ENTIRE corpus leaves the dedup store file-less: the corpus is
+        // then empty by definition — drop it and stop.
         val corpusPath = s"$workDir/corpus"
         val dedupCorpus =
-          try {
-            val dc = spark.read.parquet(s"$workDir/dedup_store/corpus")
-            if (dc.isEmpty) {
-              val c = new org.apache.hadoop.fs.Path(corpusPath)
-              c.getFileSystem(spark.sparkContext.hadoopConfiguration)
-                .delete(c, true)
-              return
-            }
-            dc
-          } catch {
-            case _: org.apache.spark.sql.AnalysisException =>
-              val c = new org.apache.hadoop.fs.Path(corpusPath)
-              c.getFileSystem(spark.sparkContext.hadoopConfiguration)
-                .delete(c, true)
-              return
-          }
-        val laters = graft.streaming.IncrementalDedupStream
-          .pairs(spark, s"$workDir/dedup_store")
-          .select(col("id_b").as("doc_id")).distinct()
-        val admissionsDf = spark.read.parquet(s"$workDir/admissions")
-        def admitted(pruneTo: Option[Seq[Long]]): DataFrame = {
-          val flags = admissionsDf.filter(!col("in_eval") &&
-            !col("contaminated") && col("mix_keep"))
-          pruneTo match {
-            // the semi-join key determines the bucket, so the probe side
-            // prunes to the same buckets as the rebuilt side
-            case Some(bs) if admissionsDf.columns.contains("__bk") =>
-              flags.filter(col("__bk").isin(bs: _*)).select(col("doc_id"))
-            case _ => flags.select(col("doc_id"))
-          }
+          bucketedStore(s"$workDir/dedup_store/corpus").filterNot(_.isEmpty)
+        if (dedupCorpus.isEmpty) {
+          val c = new org.apache.hadoop.fs.Path(corpusPath)
+          c.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .delete(c, true)
+          return
         }
-        // the dedup store's own bucket modulus may differ — recompute
-        // __bk from doc_id with THIS store's law before filtering
-        // (__wv — the arrival wave — carries over from the dedup store)
-        val s4 = dedupCorpus.drop("__bk")
-          .withColumn("__bk", bk(col("doc_id")))
-        val corpusStore =
-          if (exists(corpusPath)) Some(spark.read.parquet(corpusPath))
-          else None
-        corpusStore match {
-          case Some(cs) if cs.columns.contains("__bk") =>
-            if (corpusBuckets.nonEmpty) {
-              val touched =
-                partDirs(cs.filter(col("__bk").isin(corpusBuckets: _*)))
-              val rebuilt = s4.filter(col("__bk").isin(corpusBuckets: _*))
-                .join(laters, Seq("doc_id"), "left_anti")
-                .join(admitted(Some(corpusBuckets)), Seq("doc_id"),
-                  "left_semi")
-                .localCheckpoint()
-              try {
-                rebuilt.write.mode("overwrite")
-                  .option("partitionOverwriteMode", "dynamic")
-                  .option("compression", "snappy")
-                  .partitionBy(parts: _*).parquet(corpusPath)
-                graft.io.Sinks.deletePartitionDirs(spark, corpusPath,
-                  (touched -- partDirs(rebuilt)).toSeq)
-                anchorIfEmpty(corpusPath, cs.schema)
-              } finally unpersist(rebuilt)
-            }
-          case _ =>
-            // pre-bucketing corpus layout (or a corpus that never got a
-            // non-empty commit): full rebuild via the staged swap
-            val rebuilt = dedupCorpus.drop("__bk")
+        if (corpusBuckets.nonEmpty) {
+          val laters = graft.streaming.IncrementalDedupStream
+            .pairs(spark, s"$workDir/dedup_store")
+            .select(col("id_b").as("doc_id")).distinct()
+          // the semi-join key determines the bucket, so the probe side
+          // prunes to the same buckets as the rebuilt side
+          val admitted = bucketedStore(s"$workDir/admissions")
+            .fold(keys.limit(0))(_.filter(!col("in_eval") &&
+              !col("contaminated") && col("mix_keep") &&
+              col("__bk").isin(corpusBuckets: _*)).select(col("doc_id")))
+          // the dedup store's own bucket modulus may differ — recompute
+          // __bk from doc_id with THIS store's law before filtering
+          // (__wv — the arrival wave — carries over from the dedup store)
+          rewrite(corpusPath, bucketedStore(corpusPath), corpusBuckets,
+            dedupCorpus.get.drop("__bk")
+              .withColumn("__bk", bk(col("doc_id")))
+              .filter(col("__bk").isin(corpusBuckets: _*))
               .join(laters, Seq("doc_id"), "left_anti")
-              .join(admitted(None), Seq("doc_id"), "left_semi")
-            graft.io.Sinks.stagedSwapParquet(spark, rebuilt, corpusPath,
-              partitionCols =
-                if (rebuilt.columns.contains("__wv")) Seq("__wv") else Nil)
+              .join(admitted, Seq("doc_id"), "left_semi"))
         }
       } finally unpersist(candidates)
     } finally unpersist(keys)

@@ -15,7 +15,8 @@ import org.apache.spark.sql.graftx.VectorExpressions
   * broadcast hash join exactly once and NEVER shuffles its text. The only
   * shuffle is the per-doc hit count on the (id, partial-count) pairs, with
   * map-side combine. The contaminated-id set is then small by construction
-  * and broadcasts back for the anti-join in [[decontaminate]].
+  * (the pretrain job drops it with an anti-join,
+  * [[graft.jobs.PretrainCorpus.decontaminate]]).
   */
 object Decontaminate {
 
@@ -135,18 +136,6 @@ object Decontaminate {
       .select(col(id), col("n_toks"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
         coalesce(col("kept_fp"), md5(lit(""))).as("kept_fp"))
-  }
-
-  /** `corpus` with contaminated documents removed. The flagged-id set is
-    * broadcast for the anti-join — the corpus side stays shuffle-free.
-    */
-  def decontaminate(corpus: DataFrame, id: String, text: String,
-      benchmark: DataFrame, benchText: String,
-      n: Int = 13, minHits: Int = 1, unicode: Boolean = false): DataFrame = {
-    val bad = contaminationReport(corpus, id, text, benchmark, benchText,
-      n, minHits, hashGrams = true, unicode = unicode)
-      .filter(col("contaminated") === 1).select(col(id))
-    corpus.join(broadcast(bad), Seq(id), "left_anti")
   }
 
   /** Semantic decontamination — the embedding-space complement of the n-gram

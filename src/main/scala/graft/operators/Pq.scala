@@ -56,7 +56,6 @@ object Pq {
     */
   def trainCodebooks(df: DataFrame, id: String, vec: String, m: Int, k: Int,
       maxIter: Int = 5, seedSampleMod: Long = 1): Seq[Seq[Seq[Double]]] = {
-    import graft.ops.Aggregations.sumStable
     require(seedSampleMod >= 1, s"seedSampleMod must be >= 1, got $seedSampleMod")
     val base = df.select(col(id).cast("string").as("__id"),
         col(vec).cast("array<double>").as("__v"))

@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
   * (row, bucket, cnt) frame of at most depth×width rows, built by one
   * map-side-combinable aggregation. No custom aggregate buffer — Spark's
   * hash aggregation over the exploded (row, bucket) cells is the sketch
-  * update, and two sketches merge by union + re-aggregation (spec-proven
-  * associative), which is exactly how per-partition / per-day sketches
-  * roll up at 100 TB without touching raw data twice.
+  * update. The sketch is linear: two sketches of the same depth/width
+  * sum cell-wise to the sketch of their union (spec-proven), which is
+  * how per-partition / per-day sketches roll up at 100 TB without
+  * touching raw data twice.
   *
   * Guarantees (standard CMS, Cormode & Muthukrishnan): estimates never
   * undercount; a point estimate exceeds the true count by more than
@@ -33,12 +34,6 @@ object Cms {
       .select(cells(key, depth, width).as(Seq("row", "bucket")))
       .groupBy(col("row"), col("bucket"))
       .agg(count(lit(1)).as("cnt"))
-
-  /** Merge sketches built with the SAME depth/width: cell-wise sum. */
-  def merge(sketches: DataFrame*): DataFrame =
-    sketches.reduce(_ unionByName _)
-      .groupBy(col("row"), col("bucket"))
-      .agg(sum(col("cnt")).as("cnt"))
 
   /** Point estimates for `probes` (a frame with a `k` column of the keyed
     * type): min over depth rows of the probed cells. A key hitting an

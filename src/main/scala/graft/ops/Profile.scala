@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.Aggregations.{avgStable, sumStable}
+import graft.ops.Aggregations.avgStable
 
 /** One-pass column profiler: the data-quality summary every ingest wants
   * (null counts, distincts, span, mean) computed as ONE aggregation over

@@ -68,7 +68,7 @@ object DedupQueries extends QueryPack {
       for (i <- 0 until 3)
         IncrementalDedupStream.ingestBatch(
           docs.filter(pmod(col("doc_id"), lit(3)) === i),
-          "doc_id", "text", tmp, minJaccard = tau)
+          "doc_id", "text", tmp, minJaccard = tau, epoch = i.toLong)
       val erased = docs
         .filter(substring(md5(col("doc_id").cast("string")), 1, 1) === "0")
         .select(col("doc_id"))

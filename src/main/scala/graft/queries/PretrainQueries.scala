@@ -153,7 +153,6 @@ object PretrainQueries extends QueryPack {
     * both engines replay. Mirrored in the oracle SQL.
     */
   private def injectedCards = {
-    import graft.functions.PiiFunctions
     val id = col("doc_id")
     val body = concat(lit("4242424"),
       lpad(pmod(id, lit(100000000L)).cast("string"), 8, "0"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.Aggregations.{avgStable, sumStable}
+import graft.ops.Aggregations.sumStable
 import org.apache.spark.sql.expressions.Window
 
 /** Join / window / sort / set-operation layer.

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{broadcast, col, lit, pmod, when, xxhash64}
+import org.apache.spark.sql.functions.{broadcast, col, lit, pmod, xxhash64}
 
 import graft.operators.IncrementalDedup
 
@@ -28,17 +28,14 @@ import graft.operators.IncrementalDedup
   * `nBuckets` so one bucket is a tractable rewrite (at 100 TB and 1024
   * buckets, ~100 GB per bucket).
   *
-  * Delivery: with an `epoch` (the streaming path always passes the
-  * foreachBatch batch id), every store write lands under a `__wv=<epoch>`
-  * partition via DYNAMIC OVERWRITE, and every read of prior state
-  * excludes the current epoch's own rows — so a crash-replayed batch
-  * overwrites its own partial output and recomputes against exactly the
-  * state the first attempt saw. foreachBatch's at-least-once redelivery
-  * becomes exactly-once EFFECT on the stores (spec-proven). Epochs must
-  * be unique per batch (batch ids are); a store is epoch-managed from
-  * birth — don't mix with `epoch = None` appends, whose layout has no
-  * `__wv` directories (that legacy mode remains for one-shot backfills
-  * that manage their own replay).
+  * Delivery: every store write lands under a `__wv=<epoch>` partition
+  * via DYNAMIC OVERWRITE (the streaming path passes the foreachBatch
+  * batch id as the epoch), and every read of prior state excludes the
+  * current epoch's own rows — so a crash-replayed batch overwrites its
+  * own partial output and recomputes against exactly the state the
+  * first attempt saw. foreachBatch's at-least-once redelivery becomes
+  * exactly-once EFFECT on the stores (spec-proven). Epochs must be
+  * unique per batch (batch ids are).
   */
 object IncrementalDedupStream {
 
@@ -50,24 +47,15 @@ object IncrementalDedupStream {
 
   /** One ingest step: dedup `batch` against the store, then fold the batch
     * into it. Also usable directly for a batch (backfill) ingest loop —
-    * stream and backfill share this exact code path. Pass a unique
-    * `epoch` per batch to make a crash-replayed batch overwrite its own
+    * stream and backfill share this exact code path. `epoch` must be
+    * unique per batch: a crash-replayed batch then overwrites its own
     * output instead of double-appending (see the delivery note above).
     */
   def ingestBatch(batch: DataFrame, id: String, text: String,
       storeDir: String, minJaccard: Double, n: Int = 3, numHashes: Int = 64,
       bands: Int = 16, maxBucketSize: Int = 10000,
-      nBuckets: Int = 16, epoch: Option[Long] = None): Unit = {
+      nBuckets: Int = 16, epoch: Long): Unit = {
     val spark = batch.sparkSession
-    epoch.foreach(e => require(e >= 0, s"ingestBatch: epoch $e is " +
-      "negative — __wv=-1 is reserved for compacted history"))
-    // publish the commit frontier BEFORE this batch writes anything:
-    // every epoch strictly below the current one has completed its
-    // foreachBatch (a checkpointed source never re-delivers it), so
-    // `e - 1` is final whatever happens to THIS batch — compaction can
-    // fold exactly that prefix with no crash-replay hazard
-    epoch.foreach(e =>
-      graft.io.Sinks.writeFrontier(spark, storeDir, e - 1))
     // the __bk layout is fixed at the store's first batch: record the
     // modulus once, fail loudly on any later batch hashing differently
     // (a silent mismatch would scatter ids across moduli and break the
@@ -83,28 +71,23 @@ object IncrementalDedupStream {
     // batch sees exactly what its first attempt saw; a store whose every
     // commit so far was EMPTY has partition dirs but no data files and
     // reads as schema-less — that is bootstrap state, not an error.
-    // A readable store WITHOUT the __wv layout under an epoch-tagged
-    // ingest is either (a) fully erased down to the flat schema anchor —
-    // zero rows, bootstrap — or (b) a NON-EMPTY legacy append-mode store,
-    // where silently treating it as bootstrap would dedup the batch
-    // against nothing AND let the first __wv dir hide the flat legacy
-    // files from every later partition-discovery read: fail loudly.
+    // A readable store WITHOUT the __wv layout is either (a) fully
+    // erased down to the flat schema anchor — zero rows, bootstrap — or
+    // (b) a NON-EMPTY flat store written outside this code, where
+    // silently treating it as bootstrap would dedup the batch against
+    // nothing AND let the first __wv dir hide the flat files from every
+    // later partition-discovery read: fail loudly.
     def prior(p: String): Option[DataFrame] =
       if (!exists(batch, p)) None
       else try {
         val df = spark.read.parquet(p)
-        epoch match {
-          case None => Some(df)
-          case Some(e) if df.columns.contains("__wv") =>
-            Some(df.filter(col("__wv") =!= e))
-          case Some(_) if df.isEmpty => None // erased-to-anchor store
-          case Some(_) => throw new IllegalStateException(
-            s"epoch-tagged ingest over a non-empty legacy (no __wv) " +
-              s"store at $p — its accumulated state would be silently " +
-              "ignored and then hidden by partition discovery; migrate " +
-              "the store (rewrite under a __wv partition) or keep " +
-              "ingesting with epoch = None")
-        }
+        if (df.columns.contains("__wv")) Some(df.filter(col("__wv") =!= epoch))
+        else if (df.isEmpty) None // erased-to-anchor store
+        else throw new IllegalStateException(
+          s"ingest over a non-empty legacy (no __wv) store at $p — its " +
+            "accumulated state would be silently ignored and then hidden " +
+            "by partition discovery; migrate the store (rewrite under a " +
+            "__wv partition) first")
       } catch {
         case _: org.apache.spark.sql.AnalysisException => None
       }
@@ -117,103 +100,19 @@ object IncrementalDedupStream {
     val newPairs = IncrementalDedup
       .incrementalPairs(stable, id, text, oldIndex, oldDocs, minJaccard,
         n, numHashes, bands, maxBucketSize)
-    def write(df: DataFrame, path: String, parts: Seq[String]): Unit =
-      epoch match {
-        case None =>
-          val w = df.write.mode("append")
-          (if (parts.isEmpty) w else w.partitionBy(parts: _*)).parquet(path)
-        case Some(e) if parts.isEmpty =>
-          // explicit epoch subdir: a replay overwrites it wholesale, and
-          // an EMPTY commit still writes a schema-bearing flat part file,
-          // so the store stays readable from the first batch on
-          df.write.mode("overwrite").parquet(s"$path/__wv=$e")
-        case Some(e) =>
-          val w = df.withColumn("__wv", lit(e)).write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-          w.partitionBy(parts :+ "__wv": _*).parquet(path)
-      }
-    write(newPairs, pairsPath, Nil)
-    def bucketed(df: DataFrame) =
+    // pairs: an explicit epoch subdir — a replay overwrites it wholesale,
+    // and an EMPTY commit still writes a schema-bearing flat part file,
+    // so the store stays readable from the first batch on
+    newPairs.write.mode("overwrite").parquet(s"$pairsPath/__wv=$epoch")
+    // corpus/index: (__bk, __wv) partitions by dynamic overwrite
+    def bucketed(df: DataFrame, path: String): Unit =
       df.withColumn("__bk", pmod(xxhash64(col(id)), lit(nBuckets.toLong)))
-    write(bucketed(
-        IncrementalDedup.bandIndex(stable, id, text, n, numHashes, bands)),
-      indexPath, Seq("__bk"))
-    write(bucketed(stable), corpusPath, Seq("__bk"))
-  }
-
-  /** Compact an epoch-managed dedup store: every micro-batch commits one
-    * file set per `__wv` epoch into each `__bk` bucket (corpus/index) and
-    * one `__wv` subdir into pairs, so after thousands of epochs every
-    * collision point-fetch and erasure rewrite lists and opens thousands
-    * of small files per bucket. Compaction folds all committed epochs
-    * into the RESERVED `__wv=-1` partition (real epochs — batch ids or
-    * wave min-ids — are never negative), keeping the `__bk` layout (the
-    * erasure's bucket pruning must survive) and landing ONE file per
-    * bucket (`repartition(__bk)`), via the disk-staged atomic swap.
-    * Post-compaction ingest, collision detection, and erasure are
-    * unchanged (spec-proven against an uncompacted twin).
-    *
-    * CONTRACT (compact behind the commit frontier, same as
-    * [[graft.jobs.PretrainCorpus.compactStores]]): run at a batch
-    * boundary with no crashed batch awaiting replay — a replayed batch
-    * excludes only its own `__wv` partition from prior state, and
-    * compaction would fold that partition into `__wv=-1` where the
-    * replay reads it as someone else's history. The contract is CODE,
-    * two ways: with an EXPLICIT `frontier` (the caller's assertion that
-    * every epoch ≤ it is final) a store holding any newer epoch fails
-    * loudly; with `frontier = None` the marker [[ingestBatch]] publishes
-    * before each batch (`_frontier` = previous epoch — provably final)
-    * bounds a PARTIAL fold: epochs at or below it fold into `__wv=-1`,
-    * newer epochs carry through untouched under their own partitions, so
-    * a pending replay still finds — and replay-overwrites — its own
-    * `__wv`. A store with neither (pre-marker layouts) folds everything,
-    * the caller-asserted legacy behavior.
-    */
-  def compact(spark: org.apache.spark.sql.SparkSession, storeDir: String,
-      minFiles: Int = 64, frontier: Option[Long] = None): Unit = {
-    val marker =
-      if (frontier.isDefined) None
-      else graft.io.Sinks.readFrontier(spark, storeDir)
-    for (store <- Seq("corpus", "index", "pairs"))
-      graft.io.Sinks.compactEpochStore(spark, s"$storeDir/$store",
-        minFiles) { full =>
-        // a store fully erased down to the flat schema anchor reads with
-        // no __wv column and zero rows — already maximally compact, and
-        // the exact state ingestBatch treats as bootstrap: no-op rather
-        // than tripping the epoch-management check below
-        if (!full.columns.contains("__wv") && full.isEmpty) None
-        else {
-          require(full.columns.contains("__wv"),
-            s"compact: $storeDir/$store is not epoch-managed (no __wv " +
-              "layout) — legacy append-mode stores manage their own file " +
-              "hygiene")
-          frontier.foreach { fr =>
-            val over = full.filter(col("__wv") =!= lit(-1L) &&
-              col("__wv") > lit(fr)).limit(1).count()
-            require(over == 0L,
-              s"compact: $storeDir/$store holds epochs beyond the commit " +
-                s"frontier $fr — folding a possibly-uncommitted batch " +
-                "into __wv=-1 would make its crash replay read its own " +
-                "first attempt as history; complete or roll back the " +
-                "batch first")
-          }
-          val parts =
-            if (full.columns.contains("__bk")) Seq("__bk", "__wv")
-            else Seq("__wv")
-          // marker mode: fold the provably-final prefix, carry the tail
-          val flat = marker match {
-            case Some(fr) => full.withColumn("__wv",
-              when(col("__wv") <= lit(fr), lit(-1L)).otherwise(col("__wv")))
-            case None => full.withColumn("__wv", lit(-1L))
-          }
-          // corpus/index: one file per bucket (nBuckets is already the
-          // erasure-cost knob that sizes a bucket tractably); pairs (no
-          // bucket layout, collisions-only but unbounded): a fixed fan-out
-          // keyed on id_a so no single task absorbs the whole store
-          Some((if (parts.contains("__bk")) flat.repartition(col("__bk"))
-            else flat.repartition(16, xxhash64(col("id_a"))), parts))
-        }
-      }
+        .withColumn("__wv", lit(epoch)).write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__bk", "__wv").parquet(path)
+    bucketed(IncrementalDedup.bandIndex(stable, id, text, n, numHashes,
+      bands), indexPath)
+    bucketed(stable, corpusPath)
   }
 
   /** Right-to-be-forgotten erasure of the dedup stores: remove the `ids`
@@ -224,9 +123,11 @@ object IncrementalDedupStream {
     * is collisions-only, orders of magnitude smaller than the corpus).
     * End state is spec-proven to hash-match stores rebuilt from scratch on
     * the retained corpus, and the store stays ingestable afterwards.
-    * Epoch-managed stores keep their `__wv` layout (rewrites happen at
-    * (bucket, epoch) granularity), so replay exclusion and future
-    * epoch-tagged ingest keep working after an erasure.
+    * The stores keep their `__wv` layout (rewrites happen at (bucket,
+    * epoch) granularity), so replay exclusion and future ingest keep
+    * working after an erasure. A store with no data files (never
+    * written, or already erased empty) has nothing to erase, so a retry
+    * of a completed erasure is a no-op.
     *
     * `ids` are coerced to the corpus store's ingested id type before
     * hashing — the bucket hash is type-sensitive (xxhash64(int) !=
@@ -252,15 +153,14 @@ object IncrementalDedupStream {
       val buckets = keys
         .select(pmod(xxhash64(col(id)), lit(nb.toLong)).as("__bk"))
         .distinct().collect().map(_.getLong(0)).toSeq
+      // dir nesting order is __bk outer, __wv inner (ingest's
+      // partitionBy order) — parts must match for the rewrite
+      val parts = Seq("__bk", "__wv")
       for (store <- Seq("corpus", "index")) {
         val path = s"$storeDir/$store"
-        if (buckets.nonEmpty && exists(keys, path)) {
+        if (buckets.nonEmpty &&
+            graft.io.Sinks.parquetFileCount(spark, path) > 0) {
           val full = spark.read.parquet(path)
-          // dir nesting order is __bk outer, __wv inner (ingest's
-          // partitionBy order) — parts must match for the rewrite
-          val parts =
-            if (full.columns.contains("__wv")) Seq("__bk", "__wv")
-            else Seq("__bk")
           def dirs(df: DataFrame): Set[String] = df
             .select(parts.map(col): _*).distinct().collect()
             .map(r => parts.indices.map(i => s"${parts(i)}=${r.get(i)}")

@@ -473,7 +473,6 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("unicode normalize: CJK/accented text survives; ASCII chain is blind") {
-    import org.apache.spark.sql.graftx.VectorExpressions
     val rows = Seq(
       (1L, "Café «DÉJÀ Vu»!!"), // accented Latin, punct, case
       (2L, "数据 处理 引擎"), // CJK
@@ -495,7 +494,6 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("unicode normalize NFKC folds compatibility forms; NFC keeps them") {
-    import org.apache.spark.sql.graftx.VectorExpressions
     val rows = Seq(
       (1L, "ﬁle"), // ﬁ ligature → "file" under NFKC
       (2L, "ＡＢＣ １２"), // full-width ＡＢＣ １２ → abc 12

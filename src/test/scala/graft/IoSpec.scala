@@ -524,18 +524,11 @@ class IoSpec extends AnyFunSuite {
     Versioned.erase(spark, root, Seq(1L).toDF("id"), "id", 12L)
     assert(Versioned.read(spark, root).select($"id").as[Long]
       .collect().toSet == Set(2L))
-    // compaction folds evolved segments into one union-schema segment
-    Versioned.append(spark, root, Seq((4L, "d")).toDF("id", "v"),
-      statsCols = Seq("id"))
-    Versioned.compact(spark, root, targetSegments = 1)
-    val compacted = Versioned.read(spark, root)
-    assert(compacted.columns.toSet == Set("id", "v", "extra"))
-    assert(compacted.select($"id").as[Long].collect().toSet == Set(2L, 4L))
   }
 
   test("versioned table bloom sidecars: readEquals opens only segments " +
     "that might hold the key where min/max can't prune interleaved " +
-    "ids, equals read+filter, and survives erasure and compaction") {
+    "ids, equals read+filter, and survives erasure") {
     import graft.io.Versioned
     val root = Files.createTempDirectory("graft-versioned-bloom")
       .toString + "/t"
@@ -570,11 +563,6 @@ class IoSpec extends AnyFunSuite {
     assert(after.select($"v").as[String].collect().toSeq == Seq("row10"))
     assert(segsOf(after) == 2, // the rewritten owner + the sidecar-less
       "the rewritten segment must carry a fresh bloom")
-    // compaction folds the table; equality lookups stay exact
-    Versioned.compact(spark, root, targetSegments = 1)
-    assert(Versioned.readEquals(spark, root, "id", 10L)
-      .select($"v").as[String].collect().toSeq == Seq("row10"))
-    assert(Versioned.readEquals(spark, root, "id", 7L).count() == 0)
     // a type-mismatched probe fails LOUDLY: the bloom hashes by type,
     // so "7" against a long column would silently return nothing
     intercept[IllegalArgumentException] {
@@ -589,68 +577,6 @@ class IoSpec extends AnyFunSuite {
       Versioned.append(spark, root,
         Seq((1L, "x")).toDF("id", "a=b"), bloomCols = Seq("a=b"))
     }
-  }
-
-  test("versioned table compaction: consecutive segments fold to the " +
-    "target count, history stays time-travelable, skipping stays " +
-    "selective over the folded ranges, and erasure still purges") {
-    import graft.io.Versioned
-    val root = Files.createTempDirectory("graft-versioned-opt").toString +
-      "/t"
-    for (i <- 0 until 12)
-      Versioned.append(spark, root,
-        Seq((i.toLong, s"row$i")).toDF("id", "v"), statsCols = Seq("id"))
-    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
-      df.select($"id").as[Long].collect().toSet
-    def segsOf(df: org.apache.spark.sql.DataFrame): Int =
-      df.inputFiles.map(f => new java.io.File(f).getParent).distinct.length
-    val before = ids(Versioned.read(spark, root))
-    val cv = Versioned.compact(spark, root, targetSegments = 3)
-    assert(cv == 12, "compaction publishes a new version")
-    assert(Versioned.compact(spark, root, 3) == cv,
-      "a table at the target no-ops")
-    val latest = Versioned.read(spark, root)
-    assert(ids(latest) == before && segsOf(latest) == 3,
-      "latest = same rows, 3 consolidated segments")
-    // history untouched: pre-compaction versions still time-travel
-    assert(Versioned.read(spark, root, 5).count() == 6)
-    // consecutive grouping keeps ranges tight: ids {0-3},{4-7},{8-11},
-    // so [4,7] opens exactly one consolidated segment with fresh stats
-    val mid = Versioned.readWhere(spark, root, "id", 4L, 7L)
-    assert(segsOf(mid) == 1 && ids(mid) == (4L to 7L).toSet)
-    // a 3-segment table compacted to target 2: groups of (2, 1) — the
-    // singleton carries over VERBATIM (zero I/O, original path on disk)
-    val r2 = Files.createTempDirectory("graft-versioned-opt2").toString +
-      "/t"
-    for (i <- 0 until 3)
-      Versioned.append(spark, r2, Seq((i.toLong, "x")).toDF("id", "v"),
-        statsCols = Seq("id"))
-    val dirsBefore = Versioned.read(spark, r2).inputFiles
-      .map(f => new java.io.File(f).getParent).distinct.toSet
-    Versioned.compact(spark, r2, targetSegments = 2)
-    val dirsAfter = Versioned.read(spark, r2).inputFiles
-      .map(f => new java.io.File(f).getParent).distinct.toSet
-    assert(dirsAfter.size == 2 &&
-      dirsAfter.exists(dirsBefore.contains),
-      "the singleton group must keep its original segment, unrewritten")
-    // erasure after compaction: purges, floors, and keeps the rest —
-    // INCLUDING the superseded pre-compaction originals, which the
-    // redaction floor just made unreadable anyway (the purge contract
-    // must survive compaction, or the subject's bytes outlive the
-    // erasure in segments only old manifests reference)
-    Versioned.erase(spark, root, Seq(5L).toDF("id"), "id", 9L)
-    assert(ids(Versioned.read(spark, root)) == before - 5L)
-    intercept[IllegalStateException] {
-      Versioned.read(spark, root, 5)
-    }
-    val liveSegs = Versioned.read(spark, root).inputFiles
-      .map(f => new java.io.File(f.stripPrefix("file:")).getParent)
-      .distinct.toSet
-    val onDisk = new java.io.File(root).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("seg-"))
-      .map(_.getAbsolutePath).toSet
-    assert(onDisk == liveSegs,
-      s"superseded segments outlived the erasure: ${onDisk -- liveSegs}")
   }
 
   test("stagedSwapParquet is crash-safe at every protocol step: recovery " +

@@ -470,9 +470,10 @@ class OpsSpec extends AnyFunSuite {
     val df = (1 to 500).map(i => (i % 37).toString).toDF("k")
     val whole = Cms.build(df, $"k").orderBy($"row", $"bucket")
       .as[(Int, Long, Long)].collect().toSeq
-    val merged = Cms.merge(
-      Cms.build(df.filter(xxhash64($"k") % 2 === 0), $"k"),
-      Cms.build(df.filter(xxhash64($"k") % 2 =!= 0), $"k"))
+    // cell-wise sum of the two part sketches
+    val merged = Cms.build(df.filter(xxhash64($"k") % 2 === 0), $"k")
+      .unionByName(Cms.build(df.filter(xxhash64($"k") % 2 =!= 0), $"k"))
+      .groupBy($"row", $"bucket").agg(sum($"cnt").as("cnt"))
       .orderBy($"row", $"bucket").as[(Int, Long, Long)].collect().toSeq
     assert(merged == whole)
   }

@@ -11,7 +11,7 @@ import graft.datagen.TransactionGen
 import graft.jobs.{BronzeToSilver, PretrainCorpus, SilverToGold}
 import graft.orchestration.Pipeline
 import graft.quality.QualityChecks
-import graft.streaming.{IncrementalDedupStream, IncrementalIngest}
+import graft.streaming.IncrementalIngest
 
 /** End-to-end medallion pipeline: datagen → bronze→silver (batch and
   * incremental/bookmark mode) → silver→gold, plus orchestration retry and
@@ -815,6 +815,9 @@ class PipelineSpec extends AnyFunSuite {
     PretrainCorpus.ingestWave(spark, wave(1L, t1), raw, root, cfg)
     // forget EVERYTHING: stores swap down to their flat schema anchors
     PretrainCorpus.eraseDocs(spark, root, Seq(1L).toDF("doc_id"))
+    // a retry of the completed erasure finds nothing left to erase: the
+    // stores it emptied hold no data files (or only the anchor)
+    PretrainCorpus.eraseDocs(spark, root, Seq(1L).toDF("doc_id"))
     // the next (id-ordered) wave must ingest cleanly from anchor state
     PretrainCorpus.ingestWave(spark, wave(50L, t2), raw, root, cfg)
     assert(spark.read.parquet(s"$root/corpus")
@@ -822,12 +825,6 @@ class PipelineSpec extends AnyFunSuite {
     // and the ordering guard still has no prior ids to trip on
     assert(spark.read.parquet(s"$root/fingerprints")
       .select($"doc_id").as[Long].collect().toSet == Set(50L))
-    // negative wave ids are rejected (the reserved compaction partition)
-    val e = intercept[IllegalArgumentException] {
-      PretrainCorpus.ingestWave(spark, wave(60L, t1), raw, root, cfg,
-        waveId = Some(-1L))
-    }
-    assert(e.getMessage.contains("reserved"), e.getMessage)
     // a NON-empty legacy (no __wv) fingerprint store fails loudly rather
     // than silently deduping the wave against nothing
     val legacy = tmp()
@@ -837,6 +834,12 @@ class PipelineSpec extends AnyFunSuite {
       PretrainCorpus.ingestWave(spark, wave(80L, t1), raw, legacy, cfg)
     }
     assert(le.getMessage.contains("legacy"), le.getMessage)
+    // and an erasure over it fails loudly too: rows without the __bk
+    // layout cannot be bucket-pruned
+    val ee = intercept[IllegalStateException] {
+      PretrainCorpus.eraseDocs(spark, legacy, Seq(7L).toDF("doc_id"))
+    }
+    assert(ee.getMessage.contains("__bk"), ee.getMessage)
   }
 
   test("incremental ingest enforces the id-ordering precondition: an " +
@@ -917,80 +920,6 @@ class PipelineSpec extends AnyFunSuite {
       s"replayed stores diverged:\n got=${snapshot(rep)}\nwant=$want")
   }
 
-  test("store compaction folds wave partitions flat without changing any " +
-    "law: post-compaction ingest, replay, and erasure land on the " +
-    "uncompacted stores' answers exactly") {
-    val raw = Tables.load(spark, "/root/testdata/sf0.001", "documents")
-      .localCheckpoint()
-    val w = raw.agg(max($"doc_id")).head().getLong(0) / 3 + 1
-    def wave(i: Long) = raw.filter(expr(s"doc_id div $w") === i)
-    def fileCount(root: String, sub: String): Int = {
-      def walk(f: java.io.File): Int =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(walk).sum
-        else if (f.getName.endsWith(".parquet")) 1 else 0
-      walk(new java.io.File(s"$root/$sub"))
-    }
-    val plain = tmp()
-    for (i <- 0L until 3L) PretrainCorpus.ingestWave(spark, wave(i), raw,
-      plain)
-    val comp = tmp()
-    PretrainCorpus.ingestWave(spark, wave(0), raw, comp)
-    PretrainCorpus.ingestWave(spark, wave(1), raw, comp)
-    // a threshold ABOVE the store's file count is a no-op
-    val untouched = fileCount(comp, "fingerprints")
-    PretrainCorpus.compactStores(spark, comp, minFiles = 1000000)
-    assert(fileCount(comp, "fingerprints") == untouched,
-      "compaction must no-op below the file-count threshold")
-    // compacting past the commit frontier fails loudly: the store holds
-    // waves the caller has not declared committed
-    val maxWv = new java.io.File(s"$comp/fingerprints").listFiles()
-      .filter(_.getName.startsWith("__bk="))
-      .flatMap(b => Option(b.listFiles()).toSeq.flatten.map(_.getName))
-      .filter(_.startsWith("__wv=")).map(_.stripPrefix("__wv=").toLong).max
-    val fe = intercept[IllegalArgumentException] {
-      PretrainCorpus.compactStores(spark, comp, minFiles = 0,
-        frontier = Some(maxWv - 1))
-    }
-    assert(fe.getMessage.contains("frontier"), fe.getMessage)
-    // forced compaction AT the frontier: one file per occupied bucket
-    // (+ possibly the schema anchor), strictly fewer than the per-wave
-    // commits left behind
-    val beforeCounts = Seq("fingerprints", "admissions")
-      .map(sub => sub -> fileCount(comp, sub)).toMap
-    PretrainCorpus.compactStores(spark, comp, minFiles = 0,
-      frontier = Some(maxWv))
-    for (sub <- Seq("fingerprints", "admissions")) {
-      assert(fileCount(comp, sub) < beforeCounts(sub) ||
-        beforeCounts(sub) <= 17,
-        s"$sub: compaction must shrink the file count")
-      assert(fileCount(comp, sub) <= 17, s"$sub: ≤16 buckets + anchor")
-      assert(new java.io.File(s"$comp/$sub").listFiles()
-        .exists(b => b.getName.startsWith("__bk=") &&
-          new java.io.File(b, "__wv=-1").exists()),
-        s"$sub: compacted rows live in the reserved partition inside " +
-          "the surviving bucket layout")
-    }
-    // the next wave ingests — and crash-replays — exactly as before
-    PretrainCorpus.ingestWave(spark, wave(2), raw, comp)
-    PretrainCorpus.ingestWave(spark, wave(2), raw, comp) // full redelivery
-    def state(root: String): Seq[(String, Set[Long], Long)] =
-      Seq("corpus", "fingerprints", "admissions").map { sub =>
-        val df = spark.read.parquet(s"$root/$sub")
-        (sub, df.select($"doc_id").distinct().as[Long].collect().toSet,
-          df.count())
-      }
-    assert(state(comp) == state(plain),
-      "compacted stores diverged from the uncompacted run")
-    // erasure over the compacted stores lands on the same corpus
-    val erased = raw
-      .filter(substring(md5($"doc_id".cast("string")), 1, 1) === "0")
-      .select($"doc_id")
-    PretrainCorpus.eraseDocs(spark, plain, erased)
-    PretrainCorpus.eraseDocs(spark, comp, erased)
-    assert(state(comp) == state(plain),
-      "post-compaction erasure diverged from the uncompacted run")
-  }
-
   test("eraseDocs coerces mismatched id types before bucket hashing: an " +
     "IntegerType GDPR list against LongType stores erases fully instead " +
     "of hashing into the wrong buckets and silently erasing nothing") {
@@ -1017,46 +946,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$root/corpus")
       .filter($"doc_id" === 50L).count() == 1,
       "the retained doc must survive the typed erase")
-  }
-
-  test("marker-bounded compaction folds only the provably-final wave " +
-    "prefix: the in-flight wave's partitions survive the fold and its " +
-    "crash replay still lands on the single-ingest state") {
-    val raw = Tables.load(spark, "/root/testdata/sf0.001", "documents")
-      .localCheckpoint()
-    val w = raw.agg(max($"doc_id")).head().getLong(0) / 3 + 1
-    def wave(i: Long) = raw.filter(expr(s"doc_id div $w") === i)
-    def state(root: String): Seq[(String, Set[Long], Long)] =
-      Seq("corpus", "fingerprints", "admissions", "dedup_store/corpus")
-        .map { sub =>
-          val df = spark.read.parquet(s"$root/$sub")
-          (sub, df.select($"doc_id").distinct().as[Long].collect().toSet,
-            df.count())
-        }
-    val ref = tmp()
-    for (i <- 0L until 3L)
-      PretrainCorpus.ingestWave(spark, wave(i), raw, ref)
-    val m = tmp()
-    for (i <- 0L until 3L)
-      PretrainCorpus.ingestWave(spark, wave(i), raw, m)
-    // ingestWave published _frontier = wave2.id - 1 BEFORE wave 2's
-    // commits: a no-frontier compaction must fold waves 0-1 and carry
-    // wave 2's partitions (it may still be awaiting a crash replay)
-    PretrainCorpus.compactStores(spark, m, minFiles = 0)
-    IncrementalDedupStream.compact(spark, s"$m/dedup_store", minFiles = 0)
-    for (sub <- Seq("fingerprints", "admissions", "dedup_store/corpus")) {
-      val wvs = spark.read.parquet(s"$m/$sub")
-        .select($"__wv").distinct().as[Long].collect().toSet
-      assert(wvs.size == 2 && wvs.contains(-1L) && wvs.max >= 0,
-        s"$sub: marker-bounded fold must keep exactly the in-flight " +
-          s"wave: $wvs")
-    }
-    // the in-flight wave crash-replays: exactly-once effect survives the
-    // partial fold (its own __wv partitions are still there to overwrite)
-    PretrainCorpus.ingestWave(spark, wave(2), raw, m)
-    assert(state(m) == state(ref),
-      s"replay after marker-bounded fold diverged:\n got=${state(m)}\n" +
-        s"want=${state(ref)}")
   }
 
   test("eraseDocs is footprint-bounded: bucket directories outside the " +

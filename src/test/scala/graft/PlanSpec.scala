@@ -64,7 +64,6 @@ class PlanSpec extends AnyFunSuite {
 
   test("weighted reservoir: single-pass bounded heap, no per-stratum " +
       "window sort") {
-    import org.apache.spark.sql.functions.col
     val docs = Tables.load(spark, dir, "documents")
     val p = graft.ops.Sampling
       .weightedSample(docs, "doc_id", "source", "n_chars", k = 5)
@@ -264,7 +263,6 @@ class PlanSpec extends AnyFunSuite {
       "hash aggregations, no BNLJ") {
     // the full query checkpoints the hash frame (staging), which truncates
     // its visible plan — assert the dctHash segment on its own
-    import org.apache.spark.sql.functions._
     val grid = graft.multimodal.Multimodal.gridFeatures(
       graft.multimodal.Multimodal.imageTable(
         spark.read.parquet(s"$dir/documents.parquet")), grid = 8).toDF()
@@ -583,7 +581,7 @@ class PlanSpec extends AnyFunSuite {
         .createTempDirectory("graft-plan-incidx").toString
       graft.streaming.IncrementalDedupStream.ingestBatch(
         raw.filter($"doc_id" <= mid), "doc_id", "text", s"$root/store",
-        minJaccard = 0.5, epoch = Some(0L))
+        minJaccard = 0.5, epoch = 0L)
       // prior state exactly as ingestBatch's wave 2 would read it
       val oldIndex = spark.read.parquet(s"$root/store/index")
         .filter($"__wv" =!= 1L)

@@ -385,8 +385,10 @@ class PretrainSpec extends AnyFunSuite {
       .orderBy("doc_id")
       .as[(Long, Long, Int)].collect().toSeq
     assert(rep == Seq((1L, 1L, 1), (2L, 0L, 0), (3L, 0L, 0), (4L, 0L, 0)))
-    val kept = Decontaminate
-      .decontaminate(corpus, "doc_id", "text", bench, "text")
+    val kept = corpus.join(Decontaminate
+        .contaminationReport(corpus, "doc_id", "text", bench, "text")
+        .filter($"contaminated" === 1).select("doc_id"),
+        Seq("doc_id"), "left_anti")
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(kept == Seq(2L, 3L, 4L))
   }

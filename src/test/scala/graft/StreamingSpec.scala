@@ -119,9 +119,10 @@ class StreamingSpec extends AnyFunSuite {
       val scored = df.withColumn("q",
         graft.functions.TextFunctions.qualityScore($"text"))
         .filter($"q" > 0.2)
-      graft.operators.Decontaminate
-        .decontaminate(scored, "doc_id", "text", bench, "text", n = 3)
-        .select($"doc_id", $"q")
+      val bad = graft.operators.Decontaminate
+        .contaminationReport(scored, "doc_id", "text", bench, "text", n = 3)
+        .filter($"contaminated" === 1).select($"doc_id")
+      scored.join(bad, Seq("doc_id"), "left_anti").select($"doc_id", $"q")
     }
     val q = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
@@ -159,7 +160,7 @@ class StreamingSpec extends AnyFunSuite {
       .writeStream.option("checkpointLocation", s"$base/ckpt")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
         IncrementalDedupStream.ingestBatch(batch, "doc_id", "text",
-          s"$base/store", minJaccard = 0.5, epoch = Some(id))
+          s"$base/store", minJaccard = 0.5, epoch = id)
       }
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -212,9 +213,9 @@ class StreamingSpec extends AnyFunSuite {
     val w1 = docs.filter($"doc_id" % 3 === 1)
     val w2 = docs.filter($"doc_id" % 3 === 2)
     IncrementalDedupStream.ingestBatch(w0, "doc_id", "text", s"$base/store",
-      minJaccard = 0.5)
+      minJaccard = 0.5, epoch = 0L)
     IncrementalDedupStream.ingestBatch(w1, "doc_id", "text", s"$base/store",
-      minJaccard = 0.5)
+      minJaccard = 0.5, epoch = 1L)
     // erase every ingested doc whose md5(doc_id) starts with '0'
     val ingested = w0.unionByName(w1)
     val erased = ingested
@@ -245,7 +246,7 @@ class StreamingSpec extends AnyFunSuite {
     // the store stays a valid ingest target: a post-erasure wave dedups
     // against the retained corpus exactly as a full recompute would
     IncrementalDedupStream.ingestBatch(w2, "doc_id", "text", s"$base/store",
-      minJaccard = 0.5)
+      minJaccard = 0.5, epoch = 2L)
     val finalPairs = IncrementalDedupStream.pairs(spark, s"$base/store")
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
     val finalWant = Dedup
@@ -253,132 +254,33 @@ class StreamingSpec extends AnyFunSuite {
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
     assert(finalPairs == finalWant,
       "post-erasure ingest diverged from the full recompute law")
-  }
-
-
-  test("compacting a dedup store fully erased down to its schema anchor " +
-    "no-ops (already maximally compact) instead of tripping the " +
-    "epoch-management check, and the store stays ingestable after") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .limit(40).localCheckpoint()
-    val base = Files.createTempDirectory("graft-anchor-compact").toString
-    IncrementalDedupStream.ingestBatch(docs, "doc_id", "text",
-      s"$base/store", minJaccard = 0.5, epoch = Some(0L))
-    // erase EVERYTHING: pairs swaps down to the flat schema anchor
-    // (no __wv column, zero rows) — exactly the state ingestBatch
-    // treats as bootstrap, which compact used to reject
-    IncrementalDedupStream.erase(spark, s"$base/store",
-      docs.select($"doc_id"), "doc_id")
-    IncrementalDedupStream.compact(spark, s"$base/store", minFiles = 0)
-    // compacting behind a frontier that excludes a pending epoch throws
-    val base2 = Files.createTempDirectory("graft-frontier").toString
-    IncrementalDedupStream.ingestBatch(docs, "doc_id", "text",
-      s"$base2/store", minJaccard = 0.5, epoch = Some(0L))
-    IncrementalDedupStream.ingestBatch(
-      docs.withColumn("doc_id", $"doc_id" + 100000L), "doc_id", "text",
-      s"$base2/store", minJaccard = 0.5, epoch = Some(5L))
-    val fe = intercept[IllegalArgumentException] {
-      IncrementalDedupStream.compact(spark, s"$base2/store", minFiles = 0,
-        frontier = Some(4L))
-    }
-    assert(fe.getMessage.contains("frontier"), fe.getMessage)
-    // NO frontier: the marker ingestBatch published (= 4, the epoch
-    // before the possibly-in-flight 5) bounds a PARTIAL fold — epoch 0
-    // folds into -1, epoch 5's partitions carry through so its crash
-    // replay still finds its own __wv to overwrite
-    IncrementalDedupStream.compact(spark, s"$base2/store", minFiles = 0)
-    val wvs = spark.read.parquet(s"$base2/store/corpus")
-      .select($"__wv").distinct().as[Long].collect().toSet
-    assert(wvs == Set(-1L, 5L),
-      s"marker-bounded fold must keep the in-flight epoch: $wvs")
-    val beforeReplay = spark.read.parquet(s"$base2/store/corpus").count()
-    IncrementalDedupStream.ingestBatch(
-      docs.withColumn("doc_id", $"doc_id" + 100000L), "doc_id", "text",
-      s"$base2/store", minJaccard = 0.5, epoch = Some(5L)) // crash replay
-    assert(spark.read.parquet(s"$base2/store/corpus").count()
-      == beforeReplay, "replay after the marker-bounded fold double-added")
-    // at the explicit frontier it folds fully; the erased store stays
-    // ingestable
-    IncrementalDedupStream.compact(spark, s"$base2/store", minFiles = 0,
-      frontier = Some(5L))
-    IncrementalDedupStream.ingestBatch(docs, "doc_id", "text",
-      s"$base/store", minJaccard = 0.5, epoch = Some(1L))
-    assert(spark.read.parquet(s"$base/store/corpus")
-      .select($"doc_id").count() == docs.count())
+    // a store erased down to nothing: a retry of the completed erasure
+    // finds no data files to rewrite and no-ops, and the store still
+    // bootstraps the next epoch
+    val few = w0.limit(40).localCheckpoint()
+    IncrementalDedupStream.ingestBatch(few, "doc_id", "text",
+      s"$base/small", minJaccard = 0.5, epoch = 0L)
+    IncrementalDedupStream.erase(spark, s"$base/small",
+      few.select($"doc_id"), "doc_id")
+    IncrementalDedupStream.erase(spark, s"$base/small",
+      few.select($"doc_id"), "doc_id")
+    IncrementalDedupStream.ingestBatch(few, "doc_id", "text",
+      s"$base/small", minJaccard = 0.5, epoch = 1L)
+    assert(spark.read.parquet(s"$base/small/corpus").count() == few.count())
   }
 
   test("epoch-tagged ingest over a NON-empty legacy (no __wv) dedup " +
-    "store fails loudly instead of silently deduping against nothing; " +
-    "negative epochs are rejected") {
+    "store fails loudly instead of silently deduping against nothing") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .limit(50).localCheckpoint()
     val base = Files.createTempDirectory("graft-legacy-store").toString
-    // a legacy store: flat append-mode layout, real accumulated state
-    IncrementalDedupStream.ingestBatch(docs, "doc_id", "text",
-      s"$base/store", minJaccard = 0.5)
+    // a legacy store: flat layout, real accumulated state
+    docs.write.parquet(s"$base/store/corpus")
     val e = intercept[IllegalStateException] {
       IncrementalDedupStream.ingestBatch(docs, "doc_id", "text",
-        s"$base/store", minJaccard = 0.5, epoch = Some(1L))
+        s"$base/store", minJaccard = 0.5, epoch = 1L)
     }
     assert(e.getMessage.contains("legacy"), e.getMessage)
-    val neg = intercept[IllegalArgumentException] {
-      IncrementalDedupStream.ingestBatch(docs, "doc_id", "text",
-        s"$base/store2", minJaccard = 0.5, epoch = Some(-2L))
-    }
-    assert(neg.getMessage.contains("reserved"), neg.getMessage)
-  }
-
-  test("dedup-store compaction folds epochs into __wv=-1 keeping the " +
-    "bucket layout: post-compaction ingest, pairs, and erasure equal an " +
-    "uncompacted twin, and the file count drops to ~one per bucket") {
-    import graft.operators.Dedup
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .localCheckpoint()
-    val waves = (0 to 2).map(i => docs.filter($"doc_id" % 3 === i))
-    def fileCount(p: String): Int = {
-      def walk(f: java.io.File): Int =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(walk).sum
-        else if (f.getName.endsWith(".parquet")) 1 else 0
-      walk(new java.io.File(p))
-    }
-    val plain = Files.createTempDirectory("graft-compact-a").toString
-    val comp = Files.createTempDirectory("graft-compact-b").toString
-    for (root <- Seq(plain, comp); i <- 0 to 1)
-      IncrementalDedupStream.ingestBatch(waves(i), "doc_id", "text",
-        s"$root/store", minJaccard = 0.5, epoch = Some(i.toLong))
-    val before = fileCount(s"$comp/store/corpus")
-    // explicit frontier = the caller's assertion that both epochs are
-    // final: everything folds (the marker-default partial fold is
-    // spec'd separately)
-    IncrementalDedupStream.compact(spark, s"$comp/store", minFiles = 0,
-      frontier = Some(1L))
-    assert(fileCount(s"$comp/store/corpus") < before,
-      s"corpus file count must drop (was $before)")
-    // one file per bucket (16 default buckets) + the flat schema anchor
-    assert(fileCount(s"$comp/store/corpus") <= 17)
-    assert(new java.io.File(s"$comp/store/corpus").listFiles()
-      .exists(f => f.getName.startsWith("__bk=") &&
-        new java.io.File(f, "__wv=-1").exists()),
-      "bucket layout must survive with the reserved epoch inside")
-    // the next epoch ingests identically; erasure lands identically
-    for (root <- Seq(plain, comp))
-      IncrementalDedupStream.ingestBatch(waves(2), "doc_id", "text",
-        s"$root/store", minJaccard = 0.5, epoch = Some(2L))
-    val erased = docs
-      .filter(substring(md5($"doc_id".cast("string")), 1, 1) === "0")
-      .select($"doc_id").localCheckpoint()
-    for (root <- Seq(plain, comp))
-      IncrementalDedupStream.erase(spark, root + "/store", erased, "doc_id")
-    def state(root: String) = (
-      spark.read.parquet(s"$root/store/corpus")
-        .select($"doc_id").as[Long].collect().toSet,
-      spark.read.parquet(s"$root/store/index")
-        .select($"doc_id", $"band", $"bucket").as[(Long, Int, Long)]
-        .collect().toSet,
-      IncrementalDedupStream.pairs(spark, s"$root/store")
-        .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet)
-    assert(state(comp) == state(plain),
-      "compacted store diverged from the uncompacted twin")
   }
 
   test("WET archives landing across triggers flow through ingestWave to " +
