@@ -33,7 +33,7 @@ object PlanDump {
           txt.getBytes("UTF-8"))
         println(s"PLANDUMP wrote $planDir/$name$suffix.txt")
       } catch {
-        case e: Throwable =>
+        case scala.util.control.NonFatal(e) =>
           System.err.println(s"PLANDUMP FAILED $name: $e")
       } finally org.apache.spark.sql.graftx.CheckpointUtils
         .purgeAllPersisted(spark)

@@ -261,14 +261,12 @@ case class CoarseResidual(left: Expression, right: Expression,
   override def prettyName: String = "coarse_residual"
 }
 
-/** Max-cosine cell argmax with embedded centroids — the large-k form of
-  * [[graft.operators.Clustering.assignCell]]'s struct-max over k literal
-  * structs (same k-means plan-size ceiling as the probe above). Bit-parity:
-  * per-cell score is `(v·c) / (nrm · ‖c‖)` with the same ascending-index
-  * dot fold, driver-side `math.sqrt` norm (0 → 1 guard), and ties to the
-  * smallest cell under Spark's SQL double ordering (struct-max compares the
-  * score first, then prefers the earlier index — a strict
-  * compare-greater scan reproduces that, NaN cases included).
+/** Max-cosine cell argmax with embedded centroids — k-means cell
+  * assignment ([[graft.operators.Clustering]]), plan size O(1) in k.
+  * Per-cell score is `(v·c) / (nrm · ‖c‖)` with an ascending-index dot
+  * fold and a driver-side `math.sqrt` norm (0 → 1 guard); a strict
+  * compare-greater scan under Spark's SQL double ordering breaks ties to
+  * the smallest cell, NaN cases included.
   */
 case class CosineArgmaxCell(left: Expression, right: Expression,
     centroids: Seq[Seq[Double]])

@@ -11,8 +11,8 @@ import graft.functions.VectorFunctions
   * rotation R JOINTLY with the PQ codebooks by alternating
   *
   *   1. rotate:    y = R·(x − mean)            (zero-shuffle projection)
-  *   2. quantize:  one Lloyd round per subspace on y (warm-started —
-  *                 [[Pq.refineCodebooks]], one corpus scan)
+  *   2. quantize:  one Lloyd round per subspace on y (warm-started
+  *                 from the previous codebooks, one corpus scan)
   *   3. rotate-update: R ← argmin_{R orthonormal} Σ‖R·xc − ŷ‖², solved
   *                 exactly by orthogonal Procrustes on the cross-moment
   *                 matrix M = Σ xc·ŷᵀ ([[Pca.procrustesRotation]])
@@ -112,8 +112,11 @@ object Opq {
       // first-order init: PCA rotation + hash-seeded codebooks
       var rotated = rotate(base, "__v", mean, rot, "rvec", "__cv")
         .localCheckpoint()
-      var books = Pq.trainCodebooks(rotated, "__id", "rvec", m, k,
-        maxIter = initIters)
+      // the codebook trainer's input: a projection of the current
+      // checkpointed `rotated`, so training stages no copy of its own
+      def trainFrame = rotated.select(col("__id").cast("string").as("__id"),
+        col("rvec").as("__v"))
+      var books = Pq.seedAndLloyd(trainFrame, m, k, initIters)
       val dists = scala.collection.mutable.ArrayBuffer[Double]()
       // one combined pass: decimal-exact distortion + the dim² cross-
       // moment matrix for the next Procrustes step
@@ -142,7 +145,7 @@ object Opq {
         org.apache.spark.sql.graftx.CheckpointUtils
           .unpersistLocalCheckpoint(rotated)
         rotated = next
-        books = Pq.refineCodebooks(rotated, "__id", "rvec", books, maxIter = 1)
+        books = Pq.lloydRounds(trainFrame, books, maxIter = 1)
         val (e, nextMm) = measure()
         dists += e
         mm = nextMm

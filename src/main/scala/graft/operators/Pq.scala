@@ -45,62 +45,46 @@ object Pq {
 
   /** Train per-subspace L2 codebooks: `m` subspaces × `k` centroids each.
     * Seeds are the k smallest-md5(id) rows' subvectors (deterministic on
-    * any partitioning); with `seedSampleMod` = s > 1 the seed scan runs on
-    * the deterministic hash-sample `xxhash64(id) % s == 0` (the
-    * [[Clustering.fit]] knob — same fallback to the full frame when the
-    * sample holds under k rows; Lloyd always scans the full corpus). Each
-    * Lloyd round is ONE corpus scan — all subspaces assigned in the same
-    * projection, partial sums shuffled as k·D narrow accumulator rows.
-    * Empty cells keep their previous centroid. Returns
-    * codebooks[m][cell][dim].
+    * any partitioning). Each Lloyd round is ONE corpus scan — all
+    * subspaces assigned in the same projection, partial sums shuffled as
+    * k·D narrow accumulator rows. Empty cells keep their previous
+    * centroid. Returns codebooks[m][cell][dim].
     */
   def trainCodebooks(df: DataFrame, id: String, vec: String, m: Int, k: Int,
-      maxIter: Int = 5, seedSampleMod: Long = 1): Seq[Seq[Seq[Double]]] = {
-    require(seedSampleMod >= 1, s"seedSampleMod must be >= 1, got $seedSampleMod")
+      maxIter: Int = 5): Seq[Seq[Seq[Double]]] = {
     val base = df.select(col(id).cast("string").as("__id"),
         col(vec).cast("array<double>").as("__v"))
       .localCheckpoint()
-    try {
-      val dim = base.select(size(col("__v"))).head().getInt(0)
-      require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
-      val sub = dim / m
-      val seedBase =
-        if (seedSampleMod == 1L) base
-        else {
-          val sampled = base
-            .filter(pmod(xxhash64(col("__id")), lit(seedSampleMod)) === 0)
-          if (sampled.count() < k) base else sampled
-        }
-      val seedRows = seedBase.withColumn("__h", md5(col("__id")))
-        .orderBy(col("__h"), col("__id"))
-        .limit(k).select(col("__v")).collect()
-        .map(_.getSeq[Double](0).toSeq)
-      val books: Seq[Seq[Seq[Double]]] = (0 until m).map(mi =>
-        seedRows.toSeq.map(v => v.slice(mi * sub, mi * sub + sub)))
-      lloydRounds(base, books, m, sub, maxIter)
-    } finally org.apache.spark.sql.graftx.CheckpointUtils
-      .unpersistLocalCheckpoint(base)
-  }
-
-  /** Continue Lloyd from GIVEN codebooks — the warm restart OPQ's
-    * alternations need (re-seeding each alternation would discard the
-    * coupled rotation/codebook state and break the monotone-distortion
-    * guarantee). Same single-scan round shape as [[trainCodebooks]].
-    */
-  def refineCodebooks(df: DataFrame, id: String, vec: String,
-      books: Seq[Seq[Seq[Double]]], maxIter: Int): Seq[Seq[Seq[Double]]] = {
-    val base = df.select(col(id).cast("string").as("__id"),
-        col(vec).cast("array<double>").as("__v"))
-      .localCheckpoint()
-    try lloydRounds(base, books, books.size, books.head.head.size, maxIter)
+    try seedAndLloyd(base, m, k, maxIter)
     finally org.apache.spark.sql.graftx.CheckpointUtils
       .unpersistLocalCheckpoint(base)
   }
 
-  private def lloydRounds(base: DataFrame, init: Seq[Seq[Seq[Double]]],
-      m: Int, sub: Int, maxIter: Int): Seq[Seq[Seq[Double]]] = {
+  /** [[trainCodebooks]] on a frame the caller has already staged, with
+    * columns `__id` (string) and `__v` (array<double>).
+    */
+  private[operators] def seedAndLloyd(base: DataFrame, m: Int, k: Int,
+      maxIter: Int): Seq[Seq[Seq[Double]]] = {
+    val dim = base.select(size(col("__v"))).head().getInt(0)
+    require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
+    val sub = dim / m
+    val seedRows = base.withColumn("__h", md5(col("__id")))
+      .orderBy(col("__h"), col("__id"))
+      .limit(k).select(col("__v")).collect()
+      .map(_.getSeq[Double](0).toSeq)
+    lloydRounds(base, (0 until m).map(mi =>
+      seedRows.toSeq.map(v => v.slice(mi * sub, mi * sub + sub))), maxIter)
+  }
+
+  /** `maxIter` Lloyd rounds from the given codebooks over a staged
+    * `__v` frame — also the warm restart OPQ's alternations need
+    * (re-seeding each alternation would discard the coupled
+    * rotation/codebook state and break the monotone-distortion guarantee).
+    */
+  private[operators] def lloydRounds(base: DataFrame,
+      init: Seq[Seq[Seq[Double]]], maxIter: Int): Seq[Seq[Seq[Double]]] = {
     import graft.ops.Aggregations.sumStable
-    val k = init.head.size
+    val (m, k, sub) = (init.size, init.head.size, init.head.head.size)
     var books = init
     for (_ <- 1 to maxIter) {
       // stage the assignment BEFORE the posexplode: CollapseProject would
@@ -190,17 +174,19 @@ object Pq {
   // coding keeps quantization error far below raw-vector PQ at equal bits.
   // ---------------------------------------------------------------------
 
-  /** Above this coarse-cell count the probe/residual paths switch from
-    * plan-LITERAL centroids (C struct expressions / a C·dim `typedlit`) to
-    * the embedded-array kernels ([[org.apache.spark.sql.graftx.CoarseProbe]]
+  /** Above this coarse-cell count the IVFADC probe/residual paths switch
+    * from plan-LITERAL centroids (C struct expressions / a C·dim `typedlit`)
+    * to the embedded-array kernels ([[org.apache.spark.sql.graftx.CoarseProbe]]
     * etc.): the literal plan tree is linear in C — Janino recompiles it per
     * plan and the driver serializes it per stage — which caps C at a few
     * hundred, while the kernels keep the plan O(1) and ship the centroid
     * table once per stage inside the broadcast task binary (the same
     * transport [[codesExpr]] has always used for the codebooks). Both paths
-    * are bit-identical by construction (same score shape, fold order, and
-    * SQL-ordering tie-breaks — spec-asserted at equal C), so the switch is
-    * purely mechanical.
+    * are bit-identical (same score shape, fold order, and SQL-ordering
+    * tie-breaks — spec-asserted at equal C). At small C neither path is
+    * faster on every input (SCALING.md records the measurements), so the
+    * switch stays here; k-means assignment has no such switch —
+    * [[Clustering]] always uses the cosine-argmax kernel.
     */
   val LiteralCellThreshold: Int = 256
 
@@ -235,10 +221,9 @@ object Pq {
     * as [[trainCodebooks]], over the residual projection.
     */
   def trainResidualCodebooks(df: DataFrame, id: String, vec: String,
-      coarse: Seq[Seq[Double]], m: Int, k: Int, maxIter: Int = 5,
-      seedSampleMod: Long = 1): Seq[Seq[Seq[Double]]] =
-    trainCodebooks(withResidual(df, vec, coarse), id, "__res", m, k, maxIter,
-      seedSampleMod)
+      coarse: Seq[Seq[Double]], m: Int, k: Int,
+      maxIter: Int = 5): Seq[Seq[Seq[Double]]] =
+    trainCodebooks(withResidual(df, vec, coarse), id, "__res", m, k, maxIter)
 
   /** IVFADC search: probe the `nProbe` L2-closest coarse cells per query,
     * ADC-score only those cells' residual codes, reduce with the bounded

@@ -18,6 +18,9 @@ package graft.orchestration
   */
 object Par {
 
+  /** Pool bound of one call: at most this many jobs in flight per batch. */
+  private val Parallelism = 4
+
   /** Evaluate every thunk concurrently (bounded pool), return results in
     * order. The first failure (in task order) propagates with its ORIGINAL
     * exception type (unwrapped from ExecutionException) after every task
@@ -25,11 +28,11 @@ object Par {
     * Spark actions are not safely interruptible mid-commit, so remaining
     * tasks are awaited, not cancelled.
     */
-  def eval[A](tasks: Seq[() => A], parallelism: Int = 4): Seq[A] = {
+  def eval[A](tasks: Seq[() => A]): Seq[A] = {
     if (tasks.isEmpty) return Nil
     if (tasks.size == 1) return Seq(tasks.head())
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(parallelism, tasks.size))
+      math.min(Parallelism, tasks.size))
     try {
       val futs = tasks.map(t =>
         pool.submit(new java.util.concurrent.Callable[A] {
@@ -51,8 +54,8 @@ object Par {
   }
 
   /** Run independent side-effecting actions concurrently. */
-  def run(tasks: Seq[() => Unit], parallelism: Int = 4): Unit = {
-    eval[Unit](tasks, parallelism)
+  def run(tasks: Seq[() => Unit]): Unit = {
+    eval[Unit](tasks)
     ()
   }
 }

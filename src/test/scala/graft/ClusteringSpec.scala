@@ -168,33 +168,8 @@ class ClusteringSpec extends AnyFunSuite {
     assert(cells.map(_._2).distinct.length == 3, s"merged groups: ${cells.toSeq}")
   }
 
-  test("sampled seeding recovers planted clusters and stays deterministic") {
-    val df = planted()
-    // s=2 halves the seeding scans' input; with 8 members per planted
-    // group the hash-sample still covers every group, so recovery holds
-    val c1 = Clustering.fit(df, "vec_id", "embedding", 3, seedSampleMod = 2)
-    val c2 = Clustering.fit(df.repartition(7), "vec_id", "embedding", 3,
-      seedSampleMod = 2)
-    assert(c1 == c2, "sampled fit must be bit-identical on any partitioning")
-    val cells = Clustering.assign(df, "embedding", c1)
-      .select((col("vec_id") / 100).cast("int").as("g"), col("cell"))
-      .distinct().collect().map(r => (r.getInt(0), r.getInt(1)))
-    assert(cells.groupBy(_._1).forall(_._2.length == 1), s"split group: ${cells.toSeq}")
-    assert(cells.map(_._2).distinct.length == 3, s"merged groups: ${cells.toSeq}")
-  }
-
-  test("seeding sample under k rows falls back to the full frame") {
-    val df = planted()
-    // a mod this large leaves (deterministically) no sampled rows, so the
-    // fit must equal the unsampled one exactly
-    val sampled = Clustering.fit(df, "vec_id", "embedding", 3,
-      seedSampleMod = 1000000007L)
-    val full = Clustering.fit(df, "vec_id", "embedding", 3)
-    assert(sampled == full)
-  }
-
   test("fit and trainCodebooks free every checkpoint they stage") {
-    import graft.operators.Pq
+    import graft.operators.{Opq, Pq}
     val df = planted()
     val sc = spark.sparkContext
     // the persisted-RDD registry holds its RDDs weakly, and the context
@@ -214,14 +189,12 @@ class ClusteringSpec extends AnyFunSuite {
       try call finally { polling.set(false); poller.join() }
       (sc.getPersistentRDDs.keySet -- before).toSet
     }
-    // unsampled, sampled seeding, and a sample under k (the fallback)
-    for (mod <- Seq(1L, 2L, 1000000007L)) {
-      assert(pinnedBy(Clustering.fit(df, "vec_id", "embedding", 3,
-        seedSampleMod = mod)).isEmpty, s"fit, seedSampleMod = $mod")
-      assert(pinnedBy(Pq.trainCodebooks(df, "vec_id", "embedding", m = 2,
-        k = 3, maxIter = 2, seedSampleMod = mod)).isEmpty,
-        s"trainCodebooks, seedSampleMod = $mod")
-    }
+    assert(pinnedBy(Clustering.fit(df, "vec_id", "embedding", 3)).isEmpty,
+      "fit")
+    assert(pinnedBy(Pq.trainCodebooks(df, "vec_id", "embedding", m = 2,
+      k = 3, maxIter = 2)).isEmpty, "trainCodebooks")
+    assert(pinnedBy(Opq.fit(df, "vec_id", "embedding", m = 2, k = 3,
+      alternations = 2, initIters = 1)).isEmpty, "Opq.fit")
   }
 
   test("kmeans tolerates k larger than the distinct-point count") {
@@ -287,56 +260,6 @@ class ClusteringSpec extends AnyFunSuite {
       .select("vec_id").as[Long].collect().toSet
     assert(odd == (0 until 200).filter(_ % 2 == 1).map(_.toLong).toSet,
       s"pruned set wrong: $odd")
-  }
-
-  test("semDeDup boundary probing catches planted cross-cell near-dups; " +
-    "margin 0 keeps single-cell semantics bit-unchanged") {
-    // two clean clusters around e1 and e2 in 3-D, plus a near-identical
-    // pair STRADDLING the Voronoi boundary. The third dimension is what
-    // makes the split a STABLE Lloyd fixpoint (in the pair's own 2-D plane
-    // "both rows on one side" is stable — the capturing mean drifts toward
-    // the pair and keeps both): the pair sits at 45° ± ε in dims 1/2 with
-    // opposite tiny dim-3 offsets, so each row is strictly closest to its
-    // own side while their mutual cosine ≈ 0.998 stays far above every
-    // other pair's (anchors are spread along dim 3: adjacent cosine
-    // ≤ 0.957; pair-to-anchor ≤ 0.72; tau = 0.99 separates them all)
-    val df = (
-      Seq(-0.8f, -0.4f, 0.0f, 0.4f, 0.8f).zipWithIndex.map { case (j, i) =>
-        (10L + i) -> Seq(1.0f, 0.0f, j) } ++
-      Seq(-0.8f, -0.4f, 0.0f, 0.4f, 0.8f).zipWithIndex.map { case (j, i) =>
-        (20L + i) -> Seq(0.0f, 1.0f, j) } ++
-      Seq(100L -> Seq(0.705f, 0.695f, 0.03f),
-        101L -> Seq(0.695f, 0.705f, -0.03f))
-    ).toDF("vec_id", "embedding")
-    val plain = Clustering.semDeDupLabels(df, "vec_id", "embedding",
-      k = 2, tau = 0.99)
-      .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2)))).toMap
-    // the boundary pair lands in DIFFERENT cells and is missed
-    assert(plain(100L)._1 != plain(101L)._1,
-      s"fixture must straddle cells: $plain")
-    assert(plain(100L)._2 == 0 && plain(101L)._2 == 0,
-      s"single-cell pass should miss the straddling pair: $plain")
-    // with a probe margin both rows also probe the neighboring cell and
-    // the pair meets: the larger id is pruned, everything else unchanged
-    val probedL = Clustering.semDeDupLabels(df, "vec_id", "embedding",
-      k = 2, tau = 0.99, probeMargin = 0.05)
-      .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2)))).toMap
-    assert(probedL(101L)._2 == 1 && probedL(100L)._2 == 0,
-      s"probing must prune the larger id of the boundary pair: $probedL")
-    assert(probedL.view.filterKeys(_ < 100L).toMap ==
-      plain.view.filterKeys(_ < 100L).toMap,
-      "interior rows must be unaffected by probing")
-    // primary cell labels never change — probing affects only pair recall
-    assert(probedL.view.mapValues(_._1).toMap ==
-      plain.view.mapValues(_._1).toMap)
-    // explicit margin 0 ≡ default (the v_semdedup_check contract)
-    val zero = Clustering.semDeDupLabels(df, "vec_id", "embedding",
-      k = 2, tau = 0.99, probeMargin = 0.0)
-      .orderBy("vec_id").collect().toSeq
-    val dflt = Clustering.semDeDupLabels(df, "vec_id", "embedding",
-      k = 2, tau = 0.99)
-      .orderBy("vec_id").collect().toSeq
-    assert(zero == dflt)
   }
 
   test("semDeDup labels partition the corpus and are deterministic") {

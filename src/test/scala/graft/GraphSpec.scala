@@ -824,32 +824,17 @@ class GraphSpec extends AnyFunSuite {
 
   test("one graph loop's job counts: the stop test rides the round's " +
     "checkpoint job") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    def jobsOf(body: => Unit): Int = {
-      org.apache.spark.sql.graftx.ListenerHook.drain(spark)
-      jobs.set(0)
-      body
-      org.apache.spark.sql.graftx.ListenerHook.drain(spark)
-      jobs.get()
-    }
+    import org.apache.spark.sql.graftx.ListenerHook.countJobs
     // two disjoint paths of 6 vertices (5 propagation rounds, then one
     // confirming round)
     val edges = ((1L until 6L).map(i => (i, i + 1)) ++
       (11L until 16L).map(i => (i, i + 1))).toDF("a", "b")
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val cc = jobsOf(Graph.connectedComponents(edges, "a", "b").collect())
-      val anf = jobsOf(Graph.hyperAnf(edges, "a", "b", Seq(1L, 11L).toDF("v"),
-        "v", maxDepth = 3).collect())
-      // the count()/collect() stop tests cost 35 and 23 jobs here
-      assert(cc <= 23, s"connectedComponents launched $cc jobs")
-      assert(anf <= 15, s"hyperAnf launched $anf jobs")
-    } finally spark.sparkContext.removeSparkListener(l)
+    val cc = countJobs(spark)(
+      Graph.connectedComponents(edges, "a", "b").collect())
+    val anf = countJobs(spark)(Graph.hyperAnf(edges, "a", "b",
+      Seq(1L, 11L).toDF("v"), "v", maxDepth = 3).collect())
+    // the count()/collect() stop tests cost 35 and 23 jobs here
+    assert(cc <= 23, s"connectedComponents launched $cc jobs")
+    assert(anf <= 15, s"hyperAnf launched $anf jobs")
   }
 }

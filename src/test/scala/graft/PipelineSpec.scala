@@ -407,22 +407,11 @@ class PipelineSpec extends AnyFunSuite {
     SilverToGold.run(spark, cfg)
     val erased = spark.read.parquet(cfg.silverPath).select("customer_id")
       .distinct().orderBy("customer_id").limit(2).localCheckpoint()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.sql.graftx.ListenerHook.drain(spark)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      SilverToGold.runErasure(spark, cfg, erased)
-      org.apache.spark.sql.graftx.ListenerHook.drain(spark)
-    } finally spark.sparkContext.removeSparkListener(l)
+    val jobs = org.apache.spark.sql.graftx.ListenerHook.countJobs(spark)(
+      SilverToGold.runErasure(spark, cfg, erased))
     // three footprint scans, the staged silver rewrite, the gold refresh
     // and the customer-key delete: 32 jobs on this fixture
-    assert(jobs.get() <= 32, s"${jobs.get()} Spark jobs for one erasure")
+    assert(jobs <= 32, s"$jobs Spark jobs for one erasure")
     assert(spark.read.parquet(cfg.silverPath)
       .join(erased, Seq("customer_id"), "left_semi").isEmpty)
   }

@@ -193,23 +193,26 @@ class PqSpec extends AnyFunSuite {
       .filter(col("count") =!= 3).count() == 0)
   }
 
+  /** Planted CROSS-SUBSPACE correlation (m=2 cuts at dim 2): two latents
+    * drive dims (0,2) and (1,3), so axis-aligned subspace quantization
+    * wastes its codewords on duplicated information — the case OPQ's
+    * learned rotation exists for.
+    */
+  private def correlated() = (0 until 400).map { i =>
+    val z1 = ((i * 31 % 23) - 11) * 0.5
+    val z2 = ((i * 17 % 19) - 9) * 0.3
+    val n1 = ((i * 13 % 7) - 3) * 0.01
+    val n2 = ((i * 29 % 11) - 5) * 0.01
+    (i.toLong, Seq(z1 + n1, z2 + n2, z1 - n1, z2 - n2))
+  }.toDF("vec_id", "embedding").repartition(5).localCheckpoint()
+
   test("full OPQ: distortion is monotone non-increasing across " +
     "alternations, beats the same-budget axis-aligned PQ on correlated " +
     "data, stays orthonormal, and is deterministic") {
     import graft.operators.{Opq, Pq}
     import graft.ops.Aggregations.sumStable
     import graft.functions.VectorFunctions.l2DistanceSq
-    // planted CROSS-SUBSPACE correlation (m=2 cuts at dim 2): two latents
-    // drive dims (0,2) and (1,3), so axis-aligned subspace quantization
-    // wastes its codewords on duplicated information — the case OPQ's
-    // learned rotation exists for
-    val df = (0 until 400).map { i =>
-      val z1 = ((i * 31 % 23) - 11) * 0.5
-      val z2 = ((i * 17 % 19) - 9) * 0.3
-      val n1 = ((i * 13 % 7) - 3) * 0.01
-      val n2 = ((i * 29 % 11) - 5) * 0.01
-      (i.toLong, Seq(z1 + n1, z2 + n2, z1 - n1, z2 - n2))
-    }.toDF("vec_id", "embedding").repartition(5).localCheckpoint()
+    val df = correlated()
     val model = Opq.fit(df, "vec_id", "embedding", m = 2, k = 4,
       alternations = 3, initIters = 2)
     // (1) orthonormal rotation
@@ -248,22 +251,47 @@ class PqSpec extends AnyFunSuite {
     assert(model.distortions == model2.distortions)
   }
 
-  test("large-k assignCell: cosine argmax kernel ≡ literal struct-max, " +
-    "ties and zero-norm edge cases included") {
-    import graft.operators.Clustering
+  test("cosine argmax kernel ≡ a driver-side fold, ties and zero norms") {
     import graft.functions.VectorFunctions.l2Norm
     // duplicate centroids force score ties (must resolve to the SMALLER
-    // cell in both paths); a zero centroid exercises the 0-norm guard
+    // cell); a zero centroid exercises the 0-norm guard, a zero row NaN
+    // scores (all equal under SQL ordering, so cell 0)
     val cents = Seq(Seq(1.0, 0.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0, 0.0),
       Seq(1.0, 0.0, 0.0, 0.0), Seq(0.0, 0.0, 0.0, 0.0)) ++
       gridCentroids(30)
     val corpus = gridCorpus(200)
-    val base = corpus.withColumn("__nrm", l2Norm(col("embedding")))
-    val lit = base.select(col("vec_id"), Clustering.assignCell(
-      col("embedding"), col("__nrm"), cents, literalMax = Int.MaxValue).as("c"))
-    val ker = base.select(col("vec_id"), Clustering.assignCell(
-      col("embedding"), col("__nrm"), cents, literalMax = 0).as("c"))
-    assert(lit.exceptAll(ker).isEmpty && ker.exceptAll(lit).isEmpty)
+      .union(Seq((200L, Seq.fill(4)(0.0f))).toDF("vec_id", "embedding"))
+      .withColumn("__nrm", l2Norm(col("embedding")))
+    val got = corpus.select(col("vec_id"),
+        org.apache.spark.sql.graftx.PqExpressions.cosineArgmaxCell(
+          col("embedding"), col("__nrm"), cents))
+      .as[(Long, Int)].collect().toMap
+    // SQL double ordering: NaN is the largest value
+    def greater(a: Double, b: Double) = (a.isNaN && !b.isNaN) || a > b
+    val want = corpus.select("vec_id", "embedding", "__nrm")
+      .as[(Long, Seq[Float], Double)].collect().map { case (id, v, nrm) =>
+        val scores = cents.map { c =>
+          val cn = math.sqrt(c.foldLeft(0.0)((a, x) => a + x * x))
+          val d = v.indices.foldLeft(0.0)((a, i) => a + v(i).toDouble * c(i))
+          d / (nrm * (if (cn == 0.0) 1.0 else cn))
+        }
+        id -> scores.indices.foldLeft(0)((best, j) =>
+          if (greater(scores(j), scores(best))) j else best)
+      }.toMap
+    assert(got == want)
+    assert(want.values.toSet.contains(0) && !want.values.toSet.contains(2),
+      "the tied duplicate centroid must never win")
+  }
+
+  test("Opq.fit's job count: Lloyd reads the checkpointed rotated frame") {
+    import graft.operators.Opq
+    val df = correlated()
+    val jobs = org.apache.spark.sql.graftx.ListenerHook.countJobs(spark)(
+      Opq.fit(df, "vec_id", "embedding", m = 2, k = 4, alternations = 2,
+        initIters = 1))
+    // a re-staged training frame costs one more checkpoint job per
+    // training call: 1 + alternations here
+    assert(jobs <= 24, s"Opq.fit launched $jobs jobs")
   }
 
   test("procrustesRotation recovers a planted orthogonal map from the " +
@@ -290,13 +318,7 @@ class PqSpec extends AnyFunSuite {
   test("OPQ x IVFADC: the composed search returns k rows per query and " +
     "is partitioning-invariant") {
     import graft.operators.{Clustering, Opq}
-    val df = (0 until 400).map { i =>
-      val z1 = ((i * 31 % 23) - 11) * 0.5
-      val z2 = ((i * 17 % 19) - 9) * 0.3
-      val n1 = ((i * 13 % 7) - 3) * 0.01
-      val n2 = ((i * 29 % 11) - 5) * 0.01
-      (i.toLong, Seq(z1 + n1, z2 + n2, z1 - n1, z2 - n2))
-    }.toDF("vec_id", "embedding").repartition(5).localCheckpoint()
+    val df = correlated()
     // the v_opq_ivf_check stack: Opq.fit's rotation, the plain coarse
     // centroids rotated, residual books trained in the rotated space
     val opq = Opq.fit(df, "vec_id", "embedding", m = 2, k = 4,

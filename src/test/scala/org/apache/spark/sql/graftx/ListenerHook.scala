@@ -11,4 +11,20 @@ object ListenerHook {
   /** Block until every queued listener event has been delivered. */
   def drain(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The number of Spark jobs `body` launches. */
+  def countJobs(spark: SparkSession)(body: => Any): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    drain(spark)
+    spark.sparkContext.addSparkListener(l)
+    try { body; drain(spark) }
+    finally spark.sparkContext.removeSparkListener(l)
+    jobs.get()
+  }
 }
