@@ -1,7 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json for the DuckDB oracle compare, and
+  * verify_failed.json: each query that threw, by name, with its exception
+  * class and message (`{}` when none did). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -17,13 +19,16 @@ object Verify {
     // iteration aid; the driver leaves it unset and dumps everything
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
+    val failed = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case scala.util.control.NonFatal(e) =>
+      .flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> e)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -42,6 +47,10 @@ object Verify {
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/verify_failed.json"), failed
+      .map { case (name, e) => s"${q(name)}: {\"class\": " +
+        s"${q(e.getClass.getName)}, \"message\": ${q(String.valueOf(e.getMessage))}}" }
+      .mkString("{", ",", "}"))
     spark.stop()
   }
 }

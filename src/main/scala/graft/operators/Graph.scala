@@ -23,60 +23,69 @@ final class RoundCapExceededException(val operator: String, val cap: Int)
 object Graph {
 
   /** Connected components of an undirected edge list via iterative
-    * min-label propagation: every vertex starts labeled with itself; each
-    * round every vertex takes the min of its own and its neighbors' labels;
-    * fixpoint = each vertex labeled with its component's smallest id.
+    * min-label propagation: every vertex takes the min of its own and its
+    * neighbors' labels each round; fixpoint = each vertex labeled with its
+    * component's smallest id.
     *
     * Output: (`vertex`, `component`) for every vertex appearing in `edges`
     * — `component` is the component's minimum vertex id.
     *
-    * Scale posture: each round is one shuffled (edge ⋈ label) equi-join
-    * plus a groupBy-min — all narrow (two longs per row). Lineage is
-    * truncated every round with localCheckpoint (an iterative DataFrame
-    * loop otherwise compounds the plan until analysis itself dominates);
-    * superseded rounds' checkpoint blocks are freed as soon as the next
-    * round materializes, so the loop holds ONE working-set copy, not
-    * `rounds` copies. Convergence rides the same aggregation that computes
-    * the new labels (each vertex's own row is flagged, so the group sees
-    * both min-candidate and previous label); the changed-count is observed
-    * on the round's own checkpoint job, with no second label-join and no
-    * count job per round. Rounds needed = component diameter; near-dup
-    * clusters are shallow (a hub document links its variants), so a handful
-    * of rounds suffices. For adversarially long chains, switch to
-    * [[connectedComponentsStar]] (alternating large/small-star, Kiveris et
-    * al., "Connected Components in MapReduce and Beyond"), which converges
-    * in O(log² n) rounds — not needed for dedup graphs.
+    * Scale posture: vertex-centric, as in Pregel (Malewicz et al., SIGMOD
+    * 2010) — each vertex's state row carries its adjacency, so a round is
+    * ONE shuffle and needs no join or broadcast. The build is round 1: one
+    * groupBy of the two-direction edge list gives every vertex its
+    * neighbor set (duplicate edges and self-loops fold into the set) and
+    * its first label, the min over itself and its neighbors. Each later
+    * round groups by vertex the union of the own state rows and the
+    * messages `(neighbor, label)` sent by the vertices whose label moved
+    * in the previous round; the new label is the group min. Sending only
+    * moved labels does not change the answer: every label a vertex ever
+    * held already reached its neighbors in the round after it was set, so
+    * late rounds carry messages from the frontier only (the state rows,
+    * adjacency included, cross the shuffle every round). A hub vertex's
+    * adjacency is one array in one row. Lineage is truncated every round with
+    * localCheckpoint, and a superseded round's blocks are freed once the
+    * next round materializes (one working-set copy). The changed-count
+    * rides each round's own checkpoint job. Rounds needed = component
+    * diameter; near-dup clusters are shallow (a hub document links its
+    * variants), so a handful of rounds suffices. For adversarially long
+    * chains, switch to [[connectedComponentsStar]] (alternating
+    * large/small-star, Kiveris et al., "Connected Components in MapReduce
+    * and Beyond"), which converges in O(log² n) rounds — not needed for
+    * dedup graphs.
     *
-    * If `maxIter` rounds pass without convergence the labels are only
-    * partially propagated (components wider than `maxIter` hops would
-    * split), so it throws [[RoundCapExceededException]]; size `maxIter` to
-    * the expected component diameter.
+    * If `maxIter` rounds (the build included) pass without convergence the
+    * labels are only partially propagated (components wider than `maxIter`
+    * hops would split), so it throws [[RoundCapExceededException]]; size
+    * `maxIter` to the expected component diameter.
     */
   def connectedComponents(edges: DataFrame, src: String, dst: String,
       maxIter: Int = 20): DataFrame = {
-    // both directions once, deduplicated — neighbors(v) for every v
-    val und = edges.select(col(src).as("a"), col(dst).as("b"))
-      .unionByName(edges.select(col(dst).as("a"), col(src).as("b")))
-      .distinct()
-      .localCheckpoint()
-    val init = und.select(col("a").as("v")).distinct()
-      .select(col("v"), col("v").as("label"), col("v").as("__old"))
-    val (labels, _, converged) = iterate(init, maxIter,
-        count_if(col("label") =!= col("__old")).as("changed")) { labels =>
-      // neighbor labels flow along edges: b's label becomes a candidate for a
-      val viaNeighbor = und
-        .join(labels.select(col("v").as("b"), col("label")), Seq("b"))
-        .select(col("a").as("v"), col("label"))
-      // own rows are flagged so one aggregation yields BOTH the new min
-      // label and the previous one — convergence needs no second join
-      labels.select(col("v"), col("label"), lit(true).as("__own"))
-        .unionByName(viaNeighbor.withColumn("__own", lit(false)))
+    val moved = col("label") =!= col("__old")
+    // round 1: both directions grouped by vertex — neighbors(v) and the
+    // first min label in one shuffle
+    val built = edges.select(col(src).as("v"), col(dst).as("b"))
+      .unionByName(edges.select(col(dst).as("v"), col(src).as("b")))
+      .groupBy(col("v")).agg(collect_set(col("b")).as("nbrs"))
+      .select(col("v"), least(col("v"), array_min(col("nbrs"))).as("label"),
+        col("v").as("__old"), col("nbrs"))
+    val (labels, _, converged) = iterate(built, maxIter - 1,
+        count_if(moved).as("changed")) { cur =>
+      val noNbrs = lit(null).cast(cur.schema("nbrs").dataType)
+      // own rows carry the adjacency; message rows carry none, so a null
+      // `nbrs` marks a message in the aggregate
+      cur.select(col("v"), col("label"), col("nbrs"))
+        .unionByName(cur.where(moved).select(explode(col("nbrs")).as("v"),
+          col("label"), noNbrs.as("nbrs")))
         .groupBy(col("v"))
         .agg(min(col("label")).as("label"),
-          max(when(col("__own"), col("label"))).as("__old"))
+          max(when(col("nbrs").isNotNull, col("label"))).as("__old"),
+          first(col("nbrs"), ignoreNulls = true).as("nbrs"))
     } { (_, o) => o("changed") == 0L }
-    unpersistLocalCheckpoint(und)
-    if (!converged) capped("connectedComponents", maxIter, labels)
+    // at a cap of 1 the build is the only round: it converged if no label
+    // moved (an edgeless or self-loop-only graph)
+    if (!converged && !(maxIter == 1 && labels.where(moved).isEmpty))
+      capped("connectedComponents", maxIter, labels)
     labels.select(col("v").as("vertex"), col("label").as("component"))
   }
 

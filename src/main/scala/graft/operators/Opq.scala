@@ -116,7 +116,7 @@ object Opq {
       // checkpointed `rotated`, so training stages no copy of its own
       def trainFrame = rotated.select(col("__id").cast("string").as("__id"),
         col("rvec").as("__v"))
-      var books = Pq.seedAndLloyd(trainFrame, m, k, initIters)
+      var books = Pq.seedAndLloyd(trainFrame, dim, m, k, initIters)
       val dists = scala.collection.mutable.ArrayBuffer[Double]()
       // one combined pass: decimal-exact distortion + the dim² cross-
       // moment matrix for the next Procrustes step

@@ -55,17 +55,17 @@ object Pq {
     val base = df.select(col(id).cast("string").as("__id"),
         col(vec).cast("array<double>").as("__v"))
       .localCheckpoint()
-    try seedAndLloyd(base, m, k, maxIter)
+    try seedAndLloyd(base, base.select(size(col("__v"))).head().getInt(0),
+      m, k, maxIter)
     finally org.apache.spark.sql.graftx.CheckpointUtils
       .unpersistLocalCheckpoint(base)
   }
 
   /** [[trainCodebooks]] on a frame the caller has already staged, with
-    * columns `__id` (string) and `__v` (array<double>).
+    * columns `__id` (string) and `__v` (array<double>) of length `dim`.
     */
-  private[operators] def seedAndLloyd(base: DataFrame, m: Int, k: Int,
-      maxIter: Int): Seq[Seq[Seq[Double]]] = {
-    val dim = base.select(size(col("__v"))).head().getInt(0)
+  private[operators] def seedAndLloyd(base: DataFrame, dim: Int, m: Int,
+      k: Int, maxIter: Int): Seq[Seq[Seq[Double]]] = {
     require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
     val sub = dim / m
     val seedRows = base.withColumn("__h", md5(col("__id")))

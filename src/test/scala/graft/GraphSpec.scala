@@ -45,6 +45,66 @@ class GraphSpec extends AnyFunSuite {
     assert(got === Map(5L -> 5L, 6L -> 5L))
   }
 
+  test("round cap counts the build as round 1: a 12-vertex path converges " +
+    "at maxIter = 12 and throws at 11") {
+    import graft.operators.RoundCapExceededException
+    // 11 rounds move the min label across the path, the 12th confirms
+    val path = (1L until 12L).map(i => (i + 1, i)).toDF("a", "b")
+    val got = Graph.connectedComponents(path, "a", "b", maxIter = 12)
+      .as[(Long, Long)].collect().toMap
+    assert(got === (1L to 12L).map(_ -> 1L).toMap)
+    val e = intercept[RoundCapExceededException](
+      Graph.connectedComponents(path, "a", "b", maxIter = 11).collect())
+    assert((e.operator, e.cap) == (("connectedComponents", 11)))
+  }
+
+  test("self-loop-only vertices label themselves at maxIter = 1") {
+    val got = Graph.connectedComponents(Seq((4L, 4L), (9L, 9L), (4L, 4L))
+      .toDF("a", "b"), "a", "b", maxIter = 1).as[(Long, Long)].collect()
+    assert(got.toMap === Map(4L -> 4L, 9L -> 9L) && got.length == 2)
+  }
+
+  test("string vertex ids with duplicate and reversed edges") {
+    val edges = Seq(("d", "c"), ("c", "d"), ("c", "b"), ("c", "b"),
+      ("b", "a"), ("x", "y"), ("y", "x"), ("z", "z")).toDF("a", "b")
+    val got = Graph.connectedComponents(edges, "a", "b")
+      .as[(String, String)].collect()
+    assert(got.toMap === Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a",
+      "x" -> "x", "y" -> "x", "z" -> "z") && got.length == 7)
+  }
+
+  test("a connected-components round is one shuffle: one Exchange, no join " +
+    "or broadcast") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object plans extends AdaptiveSparkPlanHelper
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (f == "localCheckpoint") { seen.add(qe.executedPlan); () }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val edges = ((1L until 6L).map(i => (i, i + 1)) :+ ((3L, 9L))).toDF("a", "b")
+    org.apache.spark.sql.graftx.ListenerHook.drain(spark)
+    spark.listenerManager.register(l)
+    try {
+      Graph.connectedComponents(edges, "a", "b").collect()
+      org.apache.spark.sql.graftx.ListenerHook.drain(spark)
+    } finally spark.listenerManager.unregister(l)
+    import scala.jdk.CollectionConverters._
+    val checkpoints = seen.asScala.toSeq
+    // the build, 4 moving rounds and 1 confirming round
+    assert(checkpoints.size == 6, s"${checkpoints.size} checkpoints")
+    for (p <- checkpoints) {
+      val nodes = plans.collect(p) { case n => n }
+      assert(nodes.count(_.isInstanceOf[Exchange]) == 1 &&
+        !nodes.exists(n => n.nodeName.contains("Join") ||
+          n.nodeName.contains("Broadcast")), s"a round's plan:\n$p")
+    }
+  }
+
   private def ccStar(maxIter: Int, edges: (Long, Long)*): Map[Long, Long] =
     Graph.connectedComponentsStar(edges.toDF("a", "b"), "a", "b", maxIter)
       .as[(Long, Long)].collect().toMap
@@ -825,16 +885,17 @@ class GraphSpec extends AnyFunSuite {
   test("one graph loop's job counts: the stop test rides the round's " +
     "checkpoint job") {
     import org.apache.spark.sql.graftx.ListenerHook.countJobs
-    // two disjoint paths of 6 vertices (5 propagation rounds, then one
-    // confirming round)
+    // two disjoint paths of 6 vertices (5 propagation rounds, the build
+    // being the first, then one confirming round)
     val edges = ((1L until 6L).map(i => (i, i + 1)) ++
       (11L until 16L).map(i => (i, i + 1))).toDF("a", "b")
     val cc = countJobs(spark)(
       Graph.connectedComponents(edges, "a", "b").collect())
     val anf = countJobs(spark)(Graph.hyperAnf(edges, "a", "b",
       Seq(1L, 11L).toDF("v"), "v", maxDepth = 3).collect())
-    // the count()/collect() stop tests cost 35 and 23 jobs here
-    assert(cc <= 23, s"connectedComponents launched $cc jobs")
+    // the count()/collect() stop tests cost 35 and 23 jobs here, and a CC
+    // round that joins the edges to a broadcast of the labels 23
+    assert(cc <= 13, s"connectedComponents launched $cc jobs")
     assert(anf <= 15, s"hyperAnf launched $anf jobs")
   }
 }
