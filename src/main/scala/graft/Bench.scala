@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Benchmark main (driver contract): runs every declared query on
   * `SPARK_GRAFT_SF_DIR`, writes per-query seconds to `bench_out.json`, and
   * prints ONE COMPACT JSON line on stdout.
@@ -13,6 +15,11 @@ package graft
   * starved budget round-1 samples can stand — fewer good samples beats the
   * empty artifact a fixed four-pass schedule produced when the host was
   * slow (r9: rc=124).
+  *
+  * A query that throws (any non-fatal exception) in a sample keeps its
+  * other samples; the file names it under `failed` with its exception's
+  * class, and the stdout line carries the `failed` count, so a total that
+  * lost a query says so.
   *
   * Artifact protocol: the full per-query JSON goes to the file, flushed
   * after the pre-warm round and after EVERY re-measure round, so a timeout
@@ -57,6 +64,16 @@ object Bench {
       sampleCount(name) = sampleCount.getOrElse(name, 0L) + 1
       dt
     }
+    // every query that threw in some sample, with the class of its first
+    // exception: a failed sample reads -1 and drops out of the total, so
+    // the artifact and the stdout line name the failures
+    val failed = scala.collection.mutable.TreeMap[String, String]()
+    def attempt(name: String): Double =
+      try timed(name) catch {
+        case NonFatal(e) =>
+          failed.getOrElseUpdate(name, e.getClass.getName)
+          -1.0
+      }
     // one-line host-speed probes for the artifact: /proc/loadavg at run
     // start and at each flush (a contended host explains itself), plus
     // the measured pre-warm time below (slow JIT ⇒ slow host)
@@ -109,7 +126,10 @@ object Bench {
       val ks = names.map(n => "\"" + n + "\":" + sampleCount.getOrElse(n, 0L))
         .mkString("{", ",", "}")
       val total = results.map(_._2).filter(_ >= 0).sum
+      val fs = failed.map { case (n, c) => "\"" + n + "\":\"" + c + "\"" }
+        .mkString("{", ",", "}")
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+        s""""failed":$fs,""" +
         s""""samples":$ks,"prewarm_sec":$prewarmSec,""" +
         s""""loadavg_start":"$loadavgStart","loadavg_now":"$loadavg",""" +
         s""""sf":"$sfDir"}"""
@@ -150,7 +170,7 @@ object Bench {
     // a real sample).
     val sample = scala.collection.mutable.Map[String, Double]()
     names.zipWithIndex.foreach { case (name, i) =>
-      sample(name) = try timed(name) catch { case _: Throwable => -1.0 }
+      sample(name) = attempt(name)
       if ((i + 1) % 20 == 0) flush(sample)
     }
     flush(sample)
@@ -181,7 +201,7 @@ object Bench {
       val order = if (round == 2) byCost else byCost.reverse
       for ((name, i) <- order.zipWithIndex
            if elapsedSec < budgetSec - reserveSec) {
-        val t = try timed(name) catch { case _: Throwable => -1.0 }
+        val t = attempt(name)
         if (t >= 0 && (sample(name) < 0 || t < sample(name)))
           sample(name) = t
         if ((i + 1) % 20 == 0) flush(sample)
@@ -202,7 +222,7 @@ object Bench {
         }
       }
     for ((name, i) <- outlierOrder.zipWithIndex if elapsedSec < budgetSec) {
-      val t = try timed(name) catch { case _: Throwable => -1.0 }
+      val t = attempt(name)
       if (t >= 0 && (sample(name) < 0 || t < sample(name)))
         sample(name) = t
       if ((i + 1) % 20 == 0) flush(sample)
@@ -211,10 +231,10 @@ object Bench {
     val total = names.map(sample(_)).filter(_ >= 0).sum
     // COMPACT stdout line: the driver keeps a 2,000-char stdout tail, so the
     // per-query inline form (~8.5 KB at 283 queries) can never parse there —
-    // ten straight rounds of `parsed: null`. Total + count + file pointer
+    // ten straight rounds of `parsed: null`. Total + counts + file pointer
     // fits with room to spare; the full per-query record is in `outFile`.
     val compact =
-      s"""{"metric":"total","value":$total,"unit":"sec","n":${names.size},"queries_out":"$outFile","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n":${names.size},"failed":${failed.size},"queries_out":"$outFile","sf":"$sfDir"}"""
     spark.stop()
     // Under `sbt runMain`, System.out is sbt's logger — every println gets an
     // "[info] " prefix, which broke the harness's JSON parse in r1 AND r2

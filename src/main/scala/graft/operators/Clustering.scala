@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.CheckpointUtils
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.VectorFunctions._
 
@@ -37,49 +40,96 @@ object Clustering {
       cosineArgmaxCell(col(vec), l2Norm(col(vec)), centroids))
 
   /** Lloyd iterations; returns the final centroids (≤ k × dim doubles —
-    * fewer than k only when `df` has fewer than k rows). Seeding is
-    * deterministic max-min (Gonzalez k-center): the first seed is the
-    * smallest-md5(id) row, each next seed the row with the LOWEST best
-    * cosine to any chosen seed (ties by id) — well-separated modes each get
-    * a seed, which plain hash seeding does not guarantee.
+    * fewer than k only when the seeding sample holds fewer than k ids).
+    * Seeding is deterministic max-min (Gonzalez k-center) over ONE sample,
+    * the [[SeedSampleRows]] smallest-(md5(id), id) rows, collected in a
+    * single job and seeded on the driver: the first seed is the
+    * smallest-md5 row, each next seed the sampled row with the LOWEST best
+    * cosine to any chosen seed, ties by id in Spark's string order (UTF-8
+    * bytes). Well-separated modes each get a seed, which plain hash
+    * seeding does not guarantee. A chosen id retires every row carrying
+    * it; rows with a null id or vector take no part in seeding (Lloyd
+    * skips a null vector too).
+    *
+    * A row's cosine to a seed c is the kernel's arithmetic (see
+    * [[org.apache.spark.sql.graftx.CosineArgmaxCell]]): the ascending-
+    * index double dot of its float→double elements over `‖v‖ · ‖c‖`, with
+    * `‖c‖ = 0` read as 1. A zero-norm row therefore scores NaN, which
+    * orders above every cosine: it is seeded only once every other id is.
     *
     * Convergence is max squared centroid movement under 1e-9 (computed on
-    * the driver for free from the same collect), else `maxIter`. Empty
-    * cells keep their previous centroid. The iterated (id, vec, norm)
-    * projection is staged once with localCheckpoint so the seeding scans
-    * and the Lloyd rounds don't re-read the source; at cluster scale stage
-    * with persist(DISK_ONLY) instead.
+    * the driver for free from the same collect), else `maxIter`
+    * (`maxIter = 0` returns the seeds). Empty cells keep their previous
+    * centroid. The iterated (id, vec, norm) projection is staged once with
+    * localCheckpoint so the seeding sample and the Lloyd rounds don't
+    * re-read the source; at cluster scale stage with persist(DISK_ONLY)
+    * instead.
     */
   def fit(df: DataFrame, id: String, vec: String, k: Int,
       maxIter: Int = 10): Seq[Seq[Double]] = {
-    val base = df.select(col(id).cast("string").as("__id"), col(vec).as("__v"))
-      .withColumn("__nrm", l2Norm(col("__v")))
-      .localCheckpoint()
-    try {
-      def vecOf(r: org.apache.spark.sql.Row): Seq[Double] =
-        r.getSeq[Any](0).map(_.asInstanceOf[Number].doubleValue).toSeq
-      val first = base.withColumn("__h", md5(col("__id")))
-        .orderBy(col("__h"), col("__id"))
-        .limit(1).select(col("__v"), col("__id")).collect()
-      var centroids: Seq[Seq[Double]] = first.toSeq.map(vecOf)
-      var chosen: Set[String] = first.map(_.getString(1)).toSet
-      while (centroids.nonEmpty && centroids.size < k) {
-        val bestCos = centroids.map { cvec =>
-          val cn = math.sqrt(cvec.map(x => x * x).sum)
-          val safe = if (cn == 0.0) 1.0 else cn
-          dot(col("__v"), typedlit(cvec)) / (col("__nrm") * lit(safe))
+    require(k >= 1, s"k must be >= 1, got $k")
+    val (base, _) = CheckpointUtils.materialize(
+      df.select(col(id).cast("string").as("__id"), col(vec).as("__v"))
+        .withColumn("__nrm", l2Norm(col("__v"))))
+    try lloyd(base, seeds(base, k), maxIter)
+    finally CheckpointUtils.unpersistLocalCheckpoint(base)
+  }
+
+  /** Rows in the seeding sample, bounded by driver memory: the sample
+    * lives there as S × dim doubles (64 MB at 1,024 dims). Every input
+    * that reaches [[fit]] at the shipped scales is smaller (the
+    * embeddings table has 500 rows at sf0.01 and 2,000 at sf0.1), so its
+    * seeds are max-min over the whole input. Above S, the seeds come from
+    * the S smallest-md5(id) rows only, a uniform hash sample.
+    */
+  private[graft] val SeedSampleRows = 8192
+
+  /** Gonzalez max-min seeds of the staged `(__id, __v, __nrm)` frame: one
+    * collect of the sample, then one driver pass over it per seed, each
+    * folding the new seed into a running best cosine per row.
+    */
+  private def seeds(base: DataFrame, k: Int): Seq[Seq[Double]] = {
+    val rows = base.filter(col("__id").isNotNull && col("__v").isNotNull)
+      .orderBy(md5(col("__id")), col("__id")).limit(SeedSampleRows)
+      .select(col("__v"), col("__id"), col("__nrm")).collect()
+    val n = rows.length
+    val vs = rows.map(_.getSeq[Any](0).iterator
+      .map(_.asInstanceOf[Number].doubleValue).toArray)
+    val ids = rows.map(r => UTF8String.fromString(r.getString(1)))
+    val nrm = rows.map(_.getDouble(2))
+    val best = Array.fill(n)(Double.NegativeInfinity)
+    val retired = new Array[Boolean](n)
+    // Spark's ascending (best cosine, id) order: NaN last, -0.0 = 0.0
+    def before(i: Int, j: Int): Boolean = {
+      val byCos = SQLOrderingUtil.compareDoubles(best(i), best(j))
+      byCos < 0 || byCos == 0 && ids(i).binaryCompare(ids(j)) < 0
+    }
+    val picked = scala.collection.mutable.ArrayBuffer[Int]()
+    var next = if (n == 0) -1 else 0
+    while (next >= 0 && picked.size < k) {
+      val p = next
+      picked += p
+      val c = vs(p)
+      val cn = math.sqrt(c.foldLeft(0.0)((a, x) => a + x * x))
+      val safe = if (cn == 0.0) 1.0 else cn
+      next = -1
+      var i = 0
+      while (i < n) {
+        if (ids(i) == ids(p)) retired(i) = true
+        if (!retired(i)) {
+          val v = vs(i)
+          val m = math.min(v.length, c.length)
+          var d = 0.0
+          var j = 0
+          while (j < m) { d += v(j) * c(j); j += 1 }
+          val s = d / (nrm(i) * safe)
+          if (SQLOrderingUtil.compareDoubles(s, best(i)) > 0) best(i) = s
+          if (next < 0 || before(i, next)) next = i
         }
-        val next = base.filter(!col("__id").isInCollection(chosen))
-          .orderBy(array_max(array(bestCos: _*)).asc, col("__id"))
-          .limit(1).select(col("__v"), col("__id")).collect()
-        if (next.isEmpty) // fewer rows than k: proceed with what exists
-          return lloyd(base, centroids, maxIter)
-        centroids = centroids :+ vecOf(next(0))
-        chosen = chosen + next(0).getString(1)
+        i += 1
       }
-      lloyd(base, centroids, maxIter)
-    } finally org.apache.spark.sql.graftx.CheckpointUtils
-      .unpersistLocalCheckpoint(base)
+    }
+    picked.map(i => vs(i).toSeq).toSeq
   }
 
   private def lloyd(base: DataFrame, seeds: Seq[Seq[Double]],

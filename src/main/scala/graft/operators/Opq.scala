@@ -99,11 +99,11 @@ object Opq {
       init: Option[(Array[Double], Array[Array[Double]])] = None): Model = {
     import graft.ops.Aggregations.sumStable
     require(alternations >= 1, "need at least one alternation")
-    val base = df.select(col(id).as("__id"),
-        col(vec).cast("array<double>").as("__v"))
-      .localCheckpoint()
+    val (base, seen) = org.apache.spark.sql.graftx.CheckpointUtils.materialize(
+      df.select(col(id).as("__id"), col(vec).cast("array<double>").as("__v")),
+      max(size(col("__v"))).as("dim"))
     try {
-      val dim = base.select(size(col("__v"))).head().getInt(0)
+      val dim = Pq.stagedDim(seen, "Opq.fit")
       val (mean, rot0) = init.getOrElse {
         val pca = Pca.fit(base, "__v", dim, dim)
         (pca.mean, pca.components)

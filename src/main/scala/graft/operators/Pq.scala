@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.CheckpointUtils
 
 
 /** Product quantization for approximate nearest-neighbor search (Jégou,
@@ -48,17 +49,29 @@ object Pq {
     * any partitioning). Each Lloyd round is ONE corpus scan — all
     * subspaces assigned in the same projection, partial sums shuffled as
     * k·D narrow accumulator rows. Empty cells keep their previous
-    * centroid. Returns codebooks[m][cell][dim].
+    * centroid. The staging job also observes the dimension; an input
+    * without a non-null vector is an IllegalArgumentException. Returns
+    * codebooks[m][cell][dim].
     */
   def trainCodebooks(df: DataFrame, id: String, vec: String, m: Int, k: Int,
       maxIter: Int = 5): Seq[Seq[Seq[Double]]] = {
-    val base = df.select(col(id).cast("string").as("__id"),
-        col(vec).cast("array<double>").as("__v"))
-      .localCheckpoint()
-    try seedAndLloyd(base, base.select(size(col("__v"))).head().getInt(0),
-      m, k, maxIter)
-    finally org.apache.spark.sql.graftx.CheckpointUtils
-      .unpersistLocalCheckpoint(base)
+    val (base, seen) = CheckpointUtils.materialize(
+      df.select(col(id).cast("string").as("__id"),
+        col(vec).cast("array<double>").as("__v")),
+      max(size(col("__v"))).as("dim"))
+    try seedAndLloyd(base, stagedDim(seen, "trainCodebooks"), m, k, maxIter)
+    finally CheckpointUtils.unpersistLocalCheckpoint(base)
+  }
+
+  /** The vector dimension a staging job observed as `max(size(__v))` —
+    * null when the staged frame held no vector, which no codebook can be
+    * trained on.
+    */
+  private[operators] def stagedDim(seen: CheckpointUtils.Observed,
+      caller: String): Int = seen("dim") match {
+    case d: Int => d
+    case _ => throw new IllegalArgumentException(
+      s"$caller needs at least one non-null vector")
   }
 
   /** [[trainCodebooks]] on a frame the caller has already staged, with
@@ -102,8 +115,7 @@ object Pq {
         .groupBy(col("__m"), col("__cell"), col("__d"))
         .agg(sumStable(col("__x")).as("__s"), count(lit(1)).as("__n"))
         .collect()
-      org.apache.spark.sql.graftx.CheckpointUtils
-        .unpersistLocalCheckpoint(staged)
+      CheckpointUtils.unpersistLocalCheckpoint(staged)
       val acc = Array.fill(m)(Array.fill(k)(new Array[Double](sub)))
       val cnt = Array.fill(m)(new Array[Long](k))
       sums.foreach { r =>

@@ -555,8 +555,8 @@ object SimilarityQueries extends QueryPack {
 
     // Spherical k-means verification: fit 8 cells, then recompute every
     // row's best centroid through a DIFFERENT mechanism — centroids as a
-    // broadcast DataFrame + window argmax instead of folded-literal struct
-    // max. Both paths left-fold the same doubles, so the gate is exact:
+    // broadcast DataFrame + window argmax instead of the CosineArgmaxCell
+    // kernel. Both paths left-fold the same doubles, so the gate is exact:
     // assign_suboptimal must be 0, and the fit must fill at most 8 cells.
     "v_kmeans_check" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window

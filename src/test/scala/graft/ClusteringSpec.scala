@@ -206,6 +206,134 @@ class ClusteringSpec extends AnyFunSuite {
     assert(assigned.select(col("cell")).distinct().count() == 2)
   }
 
+  /** Reference seeding: the distributed max-min loop `fit` ran before its
+    * seeding moved to the driver — one ordered scan per seed over the
+    * staged frame, ranking every unchosen row by its best cosine (one
+    * literal dot per chosen seed) and then its id. `fit(…, maxIter = 0)`
+    * returns the seeds, so the two are compared value for value.
+    */
+  private def scanSeeds(df: org.apache.spark.sql.DataFrame, k: Int)
+      : Seq[Seq[Double]] = {
+    import graft.functions.VectorFunctions.{dot, l2Norm}
+    val base = df.select(col("vec_id").cast("string").as("__id"),
+        col("embedding").as("__v"))
+      .withColumn("__nrm", l2Norm(col("__v")))
+      .localCheckpoint()
+    try {
+      def vecOf(r: org.apache.spark.sql.Row): Seq[Double] =
+        r.getSeq[Any](0).map(_.asInstanceOf[Number].doubleValue).toSeq
+      val first = base.orderBy(md5(col("__id")), col("__id"))
+        .limit(1).select(col("__v"), col("__id")).collect()
+      var centroids: Seq[Seq[Double]] = first.toSeq.map(vecOf)
+      var chosen: Set[String] = first.map(_.getString(1)).toSet
+      var exhausted = false
+      while (!exhausted && centroids.size < k) {
+        val bestCos = centroids.map { cvec =>
+          val cn = math.sqrt(cvec.map(x => x * x).sum)
+          val safe = if (cn == 0.0) 1.0 else cn
+          dot(col("__v"), typedlit(cvec)) / (col("__nrm") * lit(safe))
+        }
+        val next = base.filter(!col("__id").isInCollection(chosen))
+          .orderBy(array_max(array(bestCos: _*)).asc, col("__id"))
+          .limit(1).select(col("__v"), col("__id")).collect()
+        if (next.isEmpty) exhausted = true
+        else {
+          centroids = centroids :+ vecOf(next(0))
+          chosen = chosen + next(0).getString(1)
+        }
+      }
+      centroids
+    } finally org.apache.spark.sql.graftx.CheckpointUtils
+      .unpersistLocalCheckpoint(base)
+  }
+
+  private def seedsOf(df: org.apache.spark.sql.DataFrame, k: Int) =
+    Clustering.fit(df, "vec_id", "embedding", k, maxIter = 0)
+
+  test("driver seeding equals the distributed max-min loop: planted " +
+      "fixture, duplicate vectors, k above the distinct points and rows") {
+    val df = planted()
+    for (k <- Seq(1, 3, 8)) assert(seedsOf(df, k) == scanSeeds(df, k), s"k=$k")
+    // six rows, two distinct vectors: after both, every row ties at
+    // cosine 1 and the id order picks; k = 10 stops at the six rows
+    val dups = (1L to 6L).map(i =>
+        i -> (if (i % 2 == 0) Seq(1.0f, 0.5f) else Seq(-0.25f, 1.0f)))
+      .toDF("vec_id", "embedding")
+    for (k <- Seq(2, 4, 10)) {
+      val got = seedsOf(dups, k)
+      assert(got == scanSeeds(dups, k), s"k=$k")
+      assert(got.size == math.min(k, 6), s"k=$k: ${got.size} seeds")
+    }
+  }
+
+  test("driver seeding breaks best-cosine ties by id in Spark's string " +
+      "order (UTF-8 bytes), as the distributed loop does") {
+    // id 6 has the smallest md5 and seeds first; 9 and 10 both score
+    // cosine 0 against it, and "10" < "9" as strings
+    val byNum = Seq(6L -> Seq(1.0f, 0.0f), 9L -> Seq(0.0f, 1.0f),
+      10L -> Seq(0.0f, -1.0f)).toDF("vec_id", "embedding")
+    assert(seedsOf(byNum, 2) == Seq(Seq(1.0, 0.0), Seq(0.0, -1.0)))
+    assert(seedsOf(byNum, 3) == scanSeeds(byNum, 3))
+    // "a" seeds first; U+FF21 precedes U+1F600 in UTF-8 bytes, while
+    // String.compareTo (UTF-16 units, a surrogate first) orders them the
+    // other way round
+    val byBytes = Seq("a" -> Seq(1.0f, 0.0f), "\uFF21" -> Seq(0.0f, 1.0f),
+      "\uD83D\uDE00" -> Seq(0.0f, -1.0f)).toDF("vec_id", "embedding")
+    assert(seedsOf(byBytes, 2) == Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)))
+    assert(seedsOf(byBytes, 3) == scanSeeds(byBytes, 3))
+  }
+
+  test("fit accepts an all-zero vector: it scores NaN, as in the assign " +
+      "kernel, and seeds last") {
+    // id 1 seeds first (smallest md5); the zero row 5 is not a seed until
+    // every other id is
+    val df = Seq(1L -> Seq(1.0f, 0.0f), 2L -> Seq(0.0f, 1.0f),
+      3L -> Seq(1.0f, 1.0f), 5L -> Seq(0.0f, 0.0f))
+      .toDF("vec_id", "embedding")
+    assert(seedsOf(df, 3) == Seq(Seq(1.0, 0.0), Seq(0.0, 1.0), Seq(1.0, 1.0)))
+    assert(seedsOf(df, 4).last == Seq(0.0, 0.0))
+    val cs = Clustering.fit(df, "vec_id", "embedding", 3)
+    assert(cs.size == 3)
+    assert(Clustering.assign(df, "embedding", cs).count() == 4)
+    assert(Clustering.semDeDupLabels(df, "vec_id", "embedding", k = 3,
+      tau = 0.99).count() == 4)
+  }
+
+  test("above the seeding sample: every seed is among the sample's " +
+      "smallest-md5 rows, and the fit is equal across partitionings") {
+    val n = Clustering.SeedSampleRows + 808
+    // the row with the largest md5 points away from every other row, so
+    // max-min over the whole input would seed it
+    def md5Hex(i: Int) = java.security.MessageDigest.getInstance("MD5")
+      .digest(i.toString.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    val outlier = (0 until n).maxBy(md5Hex)
+    val df = (0 until n).map { i =>
+      val v = if (i == outlier) Seq(-1.0f, -1.0f, -1.0f, -1.0f)
+        else Seq(1.0f + i % 7, 1.0f + i % 11, 1.0f + i % 13, 0.001f * i)
+      (i.toLong, v)
+    }.toDF("vec_id", "embedding")
+    val sampled = df.orderBy(md5(col("vec_id").cast("string")),
+        col("vec_id").cast("string"))
+      .limit(Clustering.SeedSampleRows).select(col("embedding"))
+      .collect().map(_.getSeq[Float](0).map(_.toDouble)).toSet
+    val seeds = seedsOf(df, 8)
+    assert(seeds.size == 8 && seeds.forall(sampled.contains), seeds)
+    val c1 = Clustering.fit(df.repartition(1), "vec_id", "embedding", 8,
+      maxIter = 3)
+    val c2 = Clustering.fit(df.repartition(7), "vec_id", "embedding", 8,
+      maxIter = 3)
+    assert(c1 == c2)
+  }
+
+  test("fit(k = 8) seeds in one job: staging, one sample, the Lloyd " +
+      "rounds") {
+    val df = planted()
+    val jobs = org.apache.spark.sql.graftx.ListenerHook.countJobs(spark)(
+      Clustering.fit(df, "vec_id", "embedding", 8))
+    // 8 measured; a scan per seed launched 15
+    assert(jobs <= 8, s"Clustering.fit launched $jobs jobs")
+  }
+
   test("assignment is a narrow projection — no exchange in the plan") {
     val df = planted()
     val cs = Clustering.fit(df, "vec_id", "embedding", 3)

@@ -290,9 +290,20 @@ class PqSpec extends AnyFunSuite {
       Opq.fit(df, "vec_id", "embedding", m = 2, k = 4, alternations = 2,
         initIters = 1))
     // a re-staged training frame costs one more checkpoint job per
-    // training call (1 + alternations here), and a second dimension probe
-    // one more job
-    assert(jobs <= 23, s"Opq.fit launched $jobs jobs")
+    // training call (1 + alternations here), and a dimension probe apart
+    // from the staging job one more job
+    assert(jobs <= 22, s"Opq.fit launched $jobs jobs")
+  }
+
+  test("trainCodebooks and Opq.fit reject an input without a vector") {
+    import graft.operators.Opq
+    val empty = correlated().limit(0)
+    val pq = intercept[IllegalArgumentException](
+      Pq.trainCodebooks(empty, "vec_id", "embedding", m = 2, k = 4))
+    assert(pq.getMessage.contains("trainCodebooks"), pq.getMessage)
+    val opq = intercept[IllegalArgumentException](
+      Opq.fit(empty, "vec_id", "embedding", m = 2, k = 4))
+    assert(opq.getMessage.contains("Opq.fit"), opq.getMessage)
   }
 
   test("procrustesRotation recovers a planted orthogonal map from the " +
