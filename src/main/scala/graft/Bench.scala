@@ -13,8 +13,14 @@ import scala.util.control.NonFatal
   * expensive queries first. With budget to spare every published number is
   * a warm steady-state min (what a long-lived cluster sees); under a
   * starved budget round-1 samples can stand — fewer good samples beats the
-  * empty artifact a fixed four-pass schedule produced when the host was
-  * slow (r9: rc=124).
+  * empty artifact a fixed-pass schedule leaves when a slow host outruns
+  * the harness timeout.
+  *
+  * `SPARK_GRAFT_ONLY=q1,q2` (the filter Verify honours) times just the
+  * named queries through the same rounds — with the budget to spare, each
+  * gets round 1, three re-measure rounds and the outlier pass, and
+  * publishes the min. Point `SPARK_GRAFT_BENCH_OUT` elsewhere for such a
+  * run, or it replaces the full artifact with the subset.
   *
   * A query that throws (any non-fatal exception) in a sample keeps its
   * other samples; the file names it under `failed` with its exception's
@@ -26,18 +32,16 @@ import scala.util.control.NonFatal
   * or kill mid-run still leaves a complete per-query artifact on disk. The
   * stdout line is COMPACT (total + query count + file pointer, well under
   * 2,000 chars) because the driver retains only a 2,000-char stdout tail —
-  * a 283-query inline line (~8.5 KB) can never sit inside that window, so
-  * r1-r10 all shipped `parsed: null` despite healthy runs.
+  * a 283-query inline line (~8.5 KB) can never sit inside that window.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // WALL-CLOCK BUDGET (seconds): the r9 driver bench exited rc=124 — the
-    // suite's 4 passes (warmup + 3 rounds) outgrew the harness timeout on a
-    // slow host and the round shipped with NO official perf artifact. A
-    // bench that sometimes emits nothing is worse than one that emits
-    // fewer samples: the budget makes completion unconditional. Round 1
+    // WALL-CLOCK BUDGET (seconds): a bench that sometimes emits nothing
+    // (a fixed schedule outgrowing the harness timeout on a slow host) is
+    // worse than one that emits fewer samples: the budget makes
+    // completion unconditional. Round 1
     // always covers every query; re-measure rounds spend whatever budget
     // remains sharpening the min, most expensive queries first.
     val budgetSec = sys.env.get("SPARK_GRAFT_BENCH_BUDGET_SEC")
@@ -46,15 +50,14 @@ object Bench {
     def elapsedSec: Double = (System.nanoTime() - t0) / 1e9
     val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    // between-samples hygiene, shared with BenchOne — rationale and the
-    // measured justification live on the helper
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(SparkEntry.selected)
+    // between-samples hygiene — rationale and the measured justification
+    // live on the helper
     def purgeLeakedRdds(): Unit = org.apache.spark.sql.graftx
       .CheckpointUtils.purgeAllPersisted(spark)
     // per-query successful-sample counts: a published number with k = 1 is
     // a single (possibly cold or contention-burst) sample, k ≥ 2 a warm
-    // min — the r11 driver artifact published 160× single-sample phantoms
-    // with nothing in the file marking them (VERDICT r11 Missing #1)
+    // min, and the file says which
     val sampleCount = scala.collection.mutable.Map[String, Long]()
     def timed(name: String): Double = {
       val t0 = System.nanoTime()
@@ -87,8 +90,7 @@ object Bench {
     // shuffle paths (hash agg, sort-merge join) + a parquet read footer
     // path. Without it, round-1 samples on a slow host carry cold-JIT cost
     // 10-20× the steady state, and under a starved budget those samples
-    // PUBLISH — r10's driver artifact read p_pretrain_e2e at 139 s vs
-    // 10.7 s warm. Two seconds of JIT here buys every round-1 sample down
+    // PUBLISH. Two seconds of JIT here buys every round-1 sample down
     // to ~warm for the classes of code the suite exercises.
     try {
       import spark.implicits._
@@ -111,13 +113,9 @@ object Bench {
     // its per-query seconds are the reference the starved-budget outlier
     // pass ranks against — read BEFORE the skeleton flush overwrites it
     val prior: Map[String, Double] = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(outFile)), "UTF-8")
-      val m = """"([A-Za-z0-9_]+)":(-?[0-9][0-9.eE+-]*)""".r
-      m.findAllMatchIn(txt)
-        .map(g => g.group(1) -> g.group(2).toDouble)
+      priorSeconds(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(outFile)), "UTF-8"))
         .filter { case (k, v) => names.contains(k) && v >= 0 }
-        .toMap
     } catch { case _: Throwable => Map.empty }
     def fullJson(sample: collection.Map[String, Double]): String = {
       val results = names.map(name => name -> sample.getOrElse(name, -1.0))
@@ -135,8 +133,7 @@ object Bench {
         s""""sf":"$sfDir"}"""
     }
     // Incremental flush: a timeout/kill mid re-measure round still leaves
-    // the last complete per-query artifact on disk (r9's rc=124 would have
-    // shipped full round-1 numbers under this protocol). Write-temp-rename
+    // the last complete per-query artifact on disk. Write-temp-rename
     // so a kill mid-WRITE can't leave a torn file either. A flush failure
     // must not kill the run (the numbers still accumulate in memory and
     // later flushes may succeed) but it must not be SILENT either — the
@@ -177,16 +174,16 @@ object Bench {
     // Re-measure rounds while budget remains, each taking the min (which
     // discards the cold round-1 sample and rejects the host VM's
     // multi-second CPU-steal bursts — a single sample can do neither).
-    // Round 2 runs DESCENDING current estimate — the expensive head is
-    // where cold/burst distortion is worth the most seconds each — but a
-    // partial descending round alone leaves the long CHEAP tail on
-    // single round-1 samples (sub-second queries published 3-6× readings
-    // that way), so round 3 sweeps ASCENDING: at ~1-2 s per query the
-    // same leftover budget re-measures a hundred tail queries instead of
-    // a dozen more head ones. Round 4, budget permitting, is descending
-    // again. The loop aborts between queries once the budget is spent,
+    // The first re-measure round runs DESCENDING current estimate — the
+    // expensive head is where cold/burst distortion is worth the most
+    // seconds each — but a partial descending round alone leaves the long
+    // CHEAP tail on single round-1 samples (sub-second queries published
+    // 3-6× readings that way), so the second sweeps ASCENDING: at ~1-2 s
+    // per query the same leftover budget re-measures a hundred tail
+    // queries instead of a dozen more head ones. The third, budget
+    // permitting, is descending again. The loop aborts between queries once the budget is spent,
     // so a partial round still fixes the worst numbers in its order.
-    // RESERVED OUTLIER SLICE (VERDICT r11 Missing #2): the general
+    // RESERVED OUTLIER SLICE: the general
     // re-measure rounds stop 10% short of the budget, and that slice is
     // spent re-checking the samples most inflated vs the PRIOR committed
     // artifact (read above, before the skeleton flush overwrote it). On a
@@ -211,7 +208,7 @@ object Bench {
     }
     // outlier pass: rank by inflation over the prior artifact (absent a
     // prior — first run on a host, renamed output — fall back to current
-    // cost, the round-2 order), re-measure while the full budget lasts
+    // cost, the descending order), re-measure while the full budget lasts
     val outlierOrder = names
       .filter(n => sample.getOrElse(n, -1.0) >= 0)
       .sortBy { n =>
@@ -230,15 +227,15 @@ object Bench {
     flush(sample)
     val total = names.map(sample(_)).filter(_ >= 0).sum
     // COMPACT stdout line: the driver keeps a 2,000-char stdout tail, so the
-    // per-query inline form (~8.5 KB at 283 queries) can never parse there —
-    // ten straight rounds of `parsed: null`. Total + counts + file pointer
+    // per-query inline form (~8.5 KB at 283 queries) can never parse there.
+    // Total + counts + file pointer
     // fits with room to spare; the full per-query record is in `outFile`.
     val compact =
       s"""{"metric":"total","value":$total,"unit":"sec","n":${names.size},"failed":${failed.size},"queries_out":"$outFile","sf":"$sfDir"}"""
     spark.stop()
     // Under `sbt runMain`, System.out is sbt's logger — every println gets an
-    // "[info] " prefix, which broke the harness's JSON parse in r1 AND r2
-    // ("parsed": null both rounds). Writing to the process's real fd 1
+    // "[info] " prefix, which breaks a JSON parse of the line. Writing to
+    // the process's real fd 1
     // bypasses the redirected System.out, so one clean unprefixed line
     // reaches the parent regardless of how this main was launched. The line
     // is emitted exactly ONCE (no println fallback — a duplicate line can
@@ -249,5 +246,22 @@ object Bench {
       raw.println(compact)
       raw.flush()
     } catch { case _: Throwable => () }
+  }
+
+  /** Per-query seconds of a `bench_out.json` artifact: the entries of its
+    * `"queries"` object only. The `"samples"` object that follows it has
+    * the same key shape (query → sample count), so a scan of the whole
+    * file would let the counts overwrite the seconds.
+    */
+  private[graft] def priorSeconds(artifact: String): Map[String, Double] = {
+    val key = "\"queries\":{"
+    val start = artifact.indexOf(key)
+    if (start < 0) Map.empty
+    else {
+      val body = artifact.substring(start + key.length,
+        artifact.indexOf('}', start))
+      """"([A-Za-z0-9_]+)":(-?[0-9][0-9.eE+-]*)""".r.findAllMatchIn(body)
+        .map(g => g.group(1) -> g.group(2).toDouble).toMap
+    }
   }
 }

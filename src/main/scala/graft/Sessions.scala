@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared SparkSession construction for the runnable mains (Bench,
-  * BenchOne, Verify, PlanDump, PipelineApp) — one place for the session
+  * Verify, PlanDump, PipelineApp) — one place for the session
   * config so the bench, the correctness dump, plan capture and the
   * pipeline CLI all run the SAME engine setup.
   *
@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   *    128 → 131072. Hypothesis: the default 128 in-memory groups degrades
   *    every >128-key TypedImperativeAggregate (betweenness vector sums,
   *    HyperANF HLL unions, sketches) to sort-based aggregation, so
-  *    raising it should win. Measured (BenchOne min-of-3, sf0.1):
+  *    raising it should win. Measured (isolated min-of-3, sf0.1):
   *    a_betweenness 27.2 → 34.1 s min with 56 s median (object hash map
   *    of ~20k × 1.6 KB buffers per task churns allocation + lookups and
   *    loses to the fallback's tight sort-merge of pre-serialized rows),

@@ -42,4 +42,13 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     packs.flatMap(_.oracleSql).toMap
+
+  /** The query filter the Verify and Bench mains share:
+    * `SPARK_GRAFT_ONLY=q1,q2` keeps only the named queries, unset keeps
+    * every query. A local iteration aid; the full runs leave it unset.
+    */
+  private[graft] val selected: String => Boolean = {
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+    name => only.forall(_.contains(name))
+  }
 }

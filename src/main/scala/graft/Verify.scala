@@ -15,12 +15,8 @@ object Verify {
     val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=q1,q2 restricts the dump to named queries — local
-    // iteration aid; the driver leaves it unset and dumps everything
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
     val failed = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => SparkEntry.selected(name) }
       .flatMap { case (name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -44,7 +40,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
+      .filter { case (k, _) => SparkEntry.selected(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     Files.writeString(Paths.get(s"$outDir/verify_failed.json"), failed

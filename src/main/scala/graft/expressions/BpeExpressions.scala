@@ -24,8 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * unseen characters pass through as single-char tokens, so encoding is
   * total and round-trips: concat(tokens) == strip-spaces(normalize(text)).
   */
-case class BpeEncode(child: Expression, merges: Seq[(String, String)],
-    unicode: Boolean = false)
+case class BpeEncode(child: Expression, merges: Seq[(String, String)])
     extends UnaryExpression with ExpectsInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
@@ -64,8 +63,7 @@ case class BpeEncode(child: Expression, merges: Seq[(String, String)],
   }
 
   def encode(input: UTF8String): ArrayData = {
-    val normalized = if (unicode) TextNormalize.normalizeUnicode(input, nfkc = true)
-      else TextNormalize.normalize(input)
+    val normalized = TextNormalize.normalize(input)
     val out = new java.util.ArrayList[UTF8String]()
     if (normalized.nonEmpty) {
       val words = normalized.split(" ", -1)
@@ -91,8 +89,6 @@ case class BpeEncode(child: Expression, merges: Seq[(String, String)],
 
 object BpeExpressions {
   /** Column-level BPE encoding backed by [[BpeEncode]]. */
-  def bpeEncode(text: Column, merges: Seq[(String, String)],
-      unicode: Boolean = false): Column =
-    ExpressionUtils.column(BpeEncode(
-      ExpressionUtils.expression(text), merges, unicode))
+  def bpeEncode(text: Column, merges: Seq[(String, String)]): Column =
+    ExpressionUtils.column(BpeEncode(ExpressionUtils.expression(text), merges))
 }

@@ -22,8 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * 100 TB is a zero-shuffle whole-stage-codegen projection, like
   * [[BpeEncode]].
   */
-case class CharLmScore(child: Expression, alphabet: String, tableQ: Seq[Long],
-    unicode: Boolean = false)
+case class CharLmScore(child: Expression, alphabet: String, tableQ: Seq[Long])
     extends UnaryExpression with ExpectsInputTypes {
 
   require(tableQ.length == alphabet.length * alphabet.length,
@@ -38,31 +37,18 @@ case class CharLmScore(child: Expression, alphabet: String, tableQ: Seq[Long],
 
   @transient private lazy val table: Array[Long] = tableQ.toArray
 
-  // dense ASCII fast path + map fallback keeps the per-char lookup O(1)
-  // without assuming an ASCII-only alphabet in unicode mode
+  // normalize emits only [a-z0-9 ], so a dense ASCII index covers the
+  // alphabet; any other char is out of it
   @transient private lazy val asciiIdx: Array[Int] = {
     val a = Array.fill(128)(-1)
     alphabet.zipWithIndex.foreach { case (c, i) => if (c < 128) a(c) = i }
     a
   }
-  @transient private lazy val wideIdx: java.util.HashMap[Character, Integer] = {
-    val m = new java.util.HashMap[Character, Integer]()
-    alphabet.zipWithIndex.foreach { case (c, i) =>
-      if (c >= 128) m.put(Char.box(c), Int.box(i))
-    }
-    m
-  }
 
-  private def idxOf(c: Char): Int =
-    if (c < 128) asciiIdx(c)
-    else {
-      val v = wideIdx.get(Char.box(c))
-      if (v == null) -1 else v.intValue()
-    }
+  private def idxOf(c: Char): Int = if (c < 128) asciiIdx(c) else -1
 
   def score(input: UTF8String): InternalRow = {
-    val normalized = if (unicode) TextNormalize.normalizeUnicode(input, nfkc = true)
-      else TextNormalize.normalize(input)
+    val normalized = TextNormalize.normalize(input)
     val a = alphabet.length
     var n = 0L
     var sum = 0L
@@ -100,15 +86,14 @@ case class CharLmScore(child: Expression, alphabet: String, tableQ: Seq[Long],
   * position — O(len²) per document; this is the count-pass feeder for
   * [[graft.ops.CharLm]] so it must be linear.
   */
-case class CharBigrams(child: Expression, unicode: Boolean = false)
+case class CharBigrams(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
   def bigramsOf(input: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val normalized = if (unicode) TextNormalize.normalizeUnicode(input, nfkc = true)
-      else TextNormalize.normalize(input)
+    val normalized = TextNormalize.normalize(input)
     val len = normalized.length
     val n = math.max(len - 1, 0)
     val out = new Array[AnyRef](n)
@@ -136,13 +121,11 @@ case class CharBigrams(child: Expression, unicode: Boolean = false)
 
 object CharLmExpressions {
   /** Column-level adjacent-char pairs backed by [[CharBigrams]]. */
-  def charBigrams(text: Column, unicode: Boolean = false): Column =
-    ExpressionUtils.column(CharBigrams(
-      ExpressionUtils.expression(text), unicode))
+  def charBigrams(text: Column): Column =
+    ExpressionUtils.column(CharBigrams(ExpressionUtils.expression(text)))
 
   /** Column-level LM scoring backed by [[CharLmScore]]. */
-  def charLmScore(text: Column, model: graft.ops.CharLm.Model,
-      unicode: Boolean = false): Column =
+  def charLmScore(text: Column, model: graft.ops.CharLm.Model): Column =
     ExpressionUtils.column(CharLmScore(
-      ExpressionUtils.expression(text), model.alphabet, model.tableQ, unicode))
+      ExpressionUtils.expression(text), model.alphabet, model.tableQ))
 }

@@ -97,7 +97,7 @@ object CheckpointUtils {
     * across repeated samples the pinned sf0.1 materializations squeeze
     * execution memory under the unified manager and shuffle-heavy
     * queries start spilling (d_dedup_clusters measured 12.1 s in-bench
-    * vs 3.2 s isolated before the purge; a multi-query BenchOne list
+    * vs 3.2 s isolated before the purge; a multi-query timing list
     * manufactured a 1.4× phantom the same way). BLOCKING because an
     * async unpersist bleeds its block-removal churn into the next timed
     * sample (measured: the query after a heavy purge inflates 2-4×).

@@ -30,7 +30,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * O(len²) — see [[CharBigrams]]).
   */
 case class CdcChunks(child: Expression, window: Int = 16, maskBits: Int = 6,
-    minLen: Int = 32, maxLen: Int = 256, unicode: Boolean = false)
+    minLen: Int = 32, maxLen: Int = 256)
     extends UnaryExpression with ExpectsInputTypes {
 
   require(window >= 2 && maskBits >= 1 && minLen >= window &&
@@ -51,8 +51,7 @@ case class CdcChunks(child: Expression, window: Int = 16, maskBits: Int = 6,
   private val mask = (1L << maskBits) - 1L
 
   def chunksOf(input: UTF8String): ArrayData = {
-    val t = if (unicode) TextNormalize.normalizeUnicode(input, nfkc = true)
-      else TextNormalize.normalize(input)
+    val t = TextNormalize.normalize(input)
     val len = t.length
     val out = new java.util.ArrayList[UTF8String]()
     var start = 0
@@ -91,8 +90,7 @@ case class CdcChunks(child: Expression, window: Int = 16, maskBits: Int = 6,
 object ChunkExpressions {
   /** Column-level content-defined chunks backed by [[CdcChunks]]. */
   def cdcChunks(text: Column, window: Int = 16, maskBits: Int = 6,
-      minLen: Int = 32, maxLen: Int = 256, unicode: Boolean = false): Column =
+      minLen: Int = 32, maxLen: Int = 256): Column =
     ExpressionUtils.column(CdcChunks(
-      ExpressionUtils.expression(text), window, maskBits, minLen, maxLen,
-      unicode))
+      ExpressionUtils.expression(text), window, maskBits, minLen, maxLen))
 }

@@ -55,14 +55,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       arity("rolling_fingerprint", args, 1); RollingFingerprint(args(0))
     })
     register("unicode_normalize_text", { args =>
-      require(args.length == 1 || args.length == 2,
-        s"unicode_normalize_text expects 1-2 arguments, got ${args.length}")
-      val nfkc = args.lift(1).map {
-        case Literal(v: Boolean, org.apache.spark.sql.types.BooleanType) => v
-        case other => throw new IllegalArgumentException(
-          s"unicode_normalize_text: argument 2 must be a boolean literal, got $other")
-      }.getOrElse(true)
-      UnicodeNormalizeText(args(0), nfkc)
+      arity("unicode_normalize_text", args, 1); UnicodeNormalizeText(args(0))
     })
     register("bounded_levenshtein", { args =>
       arity("bounded_levenshtein", args, 3)

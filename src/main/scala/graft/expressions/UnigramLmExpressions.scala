@@ -25,8 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * is the task binary.
   */
 case class UnigramEncode(child: Expression, pieces: Seq[(String, Long)],
-    maxPieceLen: Int = 4, oovPenalty: Long = -30000000L,
-    unicode: Boolean = false)
+    maxPieceLen: Int = 4, oovPenalty: Long = -30000000L)
     extends UnaryExpression with ExpectsInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
@@ -35,8 +34,7 @@ case class UnigramEncode(child: Expression, pieces: Seq[(String, Long)],
   @transient private lazy val lp: Map[String, Long] = pieces.toMap
 
   def encode(input: UTF8String): ArrayData = {
-    val normalized = if (unicode) TextNormalize.normalizeUnicode(input, nfkc = true)
-      else TextNormalize.normalize(input)
+    val normalized = TextNormalize.normalize(input)
     val out = new java.util.ArrayList[UTF8String]()
     if (normalized.nonEmpty) {
       val words = normalized.split(" ", -1)
@@ -69,9 +67,7 @@ object UnigramLmExpressions {
     * `pieces` = (piece, micro-nat log-prob).
     */
   def unigramEncode(text: Column, pieces: Seq[(String, Long)],
-      maxPieceLen: Int = 4, oovPenalty: Long = -30000000L,
-      unicode: Boolean = false): Column =
+      maxPieceLen: Int = 4, oovPenalty: Long = -30000000L): Column =
     ExpressionUtils.column(UnigramEncode(
-      ExpressionUtils.expression(text), pieces, maxPieceLen, oovPenalty,
-      unicode))
+      ExpressionUtils.expression(text), pieces, maxPieceLen, oovPenalty))
 }

@@ -153,24 +153,22 @@ private[graftx] object TextNormalize {
       .replaceAll(" ").trim
   }
 
-  /** Unicode-aware normalize: compose (NFC, or NFKC to also fold
+  /** Unicode-aware normalize: NFKC compose (which also folds
     * compatibility forms — ligatures, full-width), lowercase (Locale.ROOT —
     * locale-independent, unlike `String.toLowerCase()`'s default-locale
     * surprise), keep only letters/numbers/space, squeeze, trim. A CJK or
     * accented document survives this chain — the ASCII [[normalize]] maps
     * it to "" and makes every sketch silently blind to non-English corpora.
     *
-    * Oracle contract: NFC mode is `trim(regexp_replace(regexp_replace(
+    * Oracle contract: on text free of compatibility characters (where
+    * NFKC ≡ NFC) this is `trim(regexp_replace(regexp_replace(
     * lower(nfc_normalize(x)), '[^\p{L}\p{N} ]', '', 'g'), ' +', ' ', 'g'))`
-    * in DuckDB. DuckDB has no NFKC function, so NFKC-mode results are only
-    * oracle-comparable on text free of compatibility characters (where
-    * NFKC ≡ NFC); the NFKC extras are spec-locked engine-side instead.
+    * in DuckDB, which has no NFKC function; the NFKC extras are spec-locked
+    * engine-side instead.
     */
-  def normalizeUnicode(s: org.apache.spark.unsafe.types.UTF8String,
-      nfkc: Boolean): String = {
-    val form = if (nfkc) java.text.Normalizer.Form.NFKC
-      else java.text.Normalizer.Form.NFC
-    val composed = java.text.Normalizer.normalize(s.toString, form)
+  def normalizeUnicode(s: org.apache.spark.unsafe.types.UTF8String): String = {
+    val composed = java.text.Normalizer.normalize(s.toString,
+      java.text.Normalizer.Form.NFKC)
     val lowered = composed.toLowerCase(java.util.Locale.ROOT)
     MultiSpace.matcher(NonWord.matcher(lowered).replaceAll(""))
       .replaceAll(" ").trim
@@ -178,13 +176,13 @@ private[graftx] object TextNormalize {
 }
 
 /** Unicode-aware text normalization as a single per-row native evaluation:
-  * NFC/NFKC compose + Locale.ROOT lowercase + strip non-\p{L}\p{N} + space
+  * NFKC compose + Locale.ROOT lowercase + strip non-\p{L}\p{N} + space
   * squeeze + trim (see [[TextNormalize.normalizeUnicode]] for the exact
   * chain and the DuckDB oracle mirror). There is no Spark built-in for
   * Unicode normalization forms, so the Column-DSL cannot express this —
   * a native expression is the only UDF-free formulation.
   */
-case class UnicodeNormalizeText(child: Expression, nfkc: Boolean)
+case class UnicodeNormalizeText(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
@@ -193,7 +191,7 @@ case class UnicodeNormalizeText(child: Expression, nfkc: Boolean)
   def normalizedOf(input: org.apache.spark.unsafe.types.UTF8String)
       : org.apache.spark.unsafe.types.UTF8String =
     org.apache.spark.unsafe.types.UTF8String.fromString(
-      TextNormalize.normalizeUnicode(input, nfkc))
+      TextNormalize.normalizeUnicode(input))
 
   override def nullSafeEval(input: Any): Any =
     normalizedOf(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
@@ -296,7 +294,7 @@ case class ShingleArray(child: Expression, n: Int, unicode: Boolean = false,
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
   def shinglesOf(input: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
-    val normalized = if (unicode) TextNormalize.normalizeUnicode(input, nfkc = true)
+    val normalized = if (unicode) TextNormalize.normalizeUnicode(input)
       else TextNormalize.normalize(input)
     val out: java.util.Collection[org.apache.spark.unsafe.types.UTF8String] =
       if (distinct) new java.util.LinkedHashSet[org.apache.spark.unsafe.types.UTF8String]()
@@ -337,15 +335,14 @@ case class ShingleArray(child: Expression, n: Int, unicode: Boolean = false,
   * costs 64 × |tokens| interpreted expression walks per row and gets
   * re-inlined into every plan site that references the column.
   */
-case class SimHash64(child: Expression, unicode: Boolean = false)
+case class SimHash64(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = LongType
 
   def simhashOf(input: org.apache.spark.unsafe.types.UTF8String): Long = {
-    val normalized = if (unicode) TextNormalize.normalizeUnicode(input, nfkc = true)
-      else TextNormalize.normalize(input)
+    val normalized = TextNormalize.normalize(input)
     val counts = new Array[Int](64)
     if (normalized.nonEmpty) {
       val toks = normalized.split(" ", -1)
@@ -390,15 +387,14 @@ case class SimHash64(child: Expression, unicode: Boolean = false)
   * bit-identical to the HOF formulation in
   * `TextFunctions.rollingFingerprintHof`.
   */
-case class RollingFingerprint(child: Expression, unicode: Boolean = false)
+case class RollingFingerprint(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = LongType
 
   def fingerprintOf(input: org.apache.spark.unsafe.types.UTF8String): Long = {
-    val normalized = if (unicode) TextNormalize.normalizeUnicode(input, nfkc = true)
-      else TextNormalize.normalize(input)
+    val normalized = TextNormalize.normalize(input)
     var acc = 0L
     if (normalized.nonEmpty) {
       val toks = normalized.split(" ", -1)
@@ -555,13 +551,13 @@ object VectorExpressions {
   /** Positional (non-distinct) word-n-gram shingles: one element per gram
     * POSITION, document order, multiplicity kept — for dup-span counting.
     */
-  def shingleArrAll(text: Column, n: Int, unicode: Boolean = false): Column =
+  def shingleArrAll(text: Column, n: Int): Column =
     ExpressionUtils.column(ShingleArray(ExpressionUtils.expression(text), n,
-      unicode, distinct = false))
+      distinct = false))
 
   /** Column-level 64-bit SimHash backed by [[SimHash64]]. */
-  def simhash(text: Column, unicode: Boolean = false): Column =
-    ExpressionUtils.column(SimHash64(ExpressionUtils.expression(text), unicode))
+  def simhash(text: Column): Column =
+    ExpressionUtils.column(SimHash64(ExpressionUtils.expression(text)))
 
   /** Column-level banded hyperplane buckets backed by [[HyperplaneBands]]. */
   def hyperplaneBands(v: Column, bands: Int, bitsPerBand: Int): Column =
@@ -569,10 +565,10 @@ object VectorExpressions {
       ExpressionUtils.expression(v), bands, bitsPerBand))
 
   /** Column-level rolling fingerprint backed by [[RollingFingerprint]]. */
-  def rollingFp(text: Column, unicode: Boolean = false): Column =
-    ExpressionUtils.column(RollingFingerprint(ExpressionUtils.expression(text), unicode))
+  def rollingFp(text: Column): Column =
+    ExpressionUtils.column(RollingFingerprint(ExpressionUtils.expression(text)))
 
   /** Column-level Unicode normalization backed by [[UnicodeNormalizeText]]. */
-  def normalizeUnicode(text: Column, nfkc: Boolean = true): Column =
-    ExpressionUtils.column(UnicodeNormalizeText(ExpressionUtils.expression(text), nfkc))
+  def normalizeUnicode(text: Column): Column =
+    ExpressionUtils.column(UnicodeNormalizeText(ExpressionUtils.expression(text)))
 }

@@ -31,7 +31,7 @@ object TextFunctions {
   def normalize(c: Column): Column =
     trim(regexp_replace(regexp_replace(lower(c), "[^a-z0-9 ]", ""), " +", " "))
 
-  /** Unicode-aware normalize: NFC/NFKC compose, Locale.ROOT lower, keep
+  /** Unicode-aware normalize: NFKC compose, Locale.ROOT lower, keep
     * letters/numbers/space (`\p{L}\p{N}` — any script), squeeze, trim.
     * Backed by the native
     * [[org.apache.spark.sql.graftx.UnicodeNormalizeText]] (Spark has no
@@ -39,8 +39,8 @@ object TextFunctions {
     * chain). The ASCII [[normalize]] maps CJK/Cyrillic/accented text to ""
     * — use this form for any multilingual corpus.
     */
-  def normalizeUnicode(c: Column, nfkc: Boolean = true): Column =
-    org.apache.spark.sql.graftx.VectorExpressions.normalizeUnicode(c, nfkc)
+  def normalizeUnicode(c: Column): Column =
+    org.apache.spark.sql.graftx.VectorExpressions.normalizeUnicode(c)
 
   /** Whitespace tokens of the normalized text; empty text → empty array
     * (split of "" would yield [""]).
@@ -51,13 +51,13 @@ object TextFunctions {
   }
 
   /** Whitespace tokens of the Unicode-normalized text. */
-  def tokensUnicode(c: Column, nfkc: Boolean = true): Column = {
-    val n = normalizeUnicode(c, nfkc)
+  def tokensUnicode(c: Column): Column = {
+    val n = normalizeUnicode(c)
     when(length(n) === 0, array().cast("array<string>")).otherwise(split(n, " "))
   }
 
-  def wsTokenCountUnicode(c: Column, nfkc: Boolean = true): Column =
-    size(tokensUnicode(c, nfkc))
+  def wsTokenCountUnicode(c: Column): Column =
+    size(tokensUnicode(c))
 
   def wsTokenCount(c: Column): Column = size(tokens(c))
 
@@ -125,12 +125,13 @@ object TextFunctions {
   def fingerprintMd5(c: Column): Column = md5(normalize(c))
 
   /** Unicode-aware content fingerprint: md5 of the Unicode-normalized text
-    * (UTF-8 bytes — identical hex in any engine). NFC mode mirrors exactly
-    * in DuckDB (`md5(nfc_normalize`-chain`)`); NFKC additionally folds
-    * ligatures/full-width forms (better dedup key, engine-side spec only).
+    * (UTF-8 bytes — identical hex in any engine). On text free of
+    * compatibility characters it mirrors DuckDB's
+    * `md5(nfc_normalize`-chain`)`; NFKC also folds ligatures/full-width
+    * forms (a better dedup key, spec-locked engine-side).
     */
-  def fingerprintMd5Unicode(c: Column, nfkc: Boolean = true): Column =
-    md5(normalizeUnicode(c, nfkc))
+  def fingerprintMd5Unicode(c: Column): Column =
+    md5(normalizeUnicode(c))
 
   /** 64-bit rolling hash over normalized tokens: chained
     * `acc ← xxhash64(acc, token)` — an order-sensitive document fingerprint

@@ -325,13 +325,6 @@ object Warc {
     new RecordIterator(in)
   }
 
-  /** Parse every complete WARC record out of (possibly gzipped) archive
-    * bytes — [[parseArchiveIterator]] materialized (tests and small
-    * archives; the Spark path stays lazy).
-    */
-  def parseArchive(bytes: Array[Byte]): Seq[WarcParsed] =
-    parseArchiveIterator(bytes).toSeq
-
   /** Parsed-document row: the pipeline-facing projection of one record. */
   final case class WarcDoc(
       archive: String,

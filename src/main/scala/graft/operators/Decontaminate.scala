@@ -25,33 +25,33 @@ object Decontaminate {
     * 0/1 `contaminated` flag at `minHits`. Every corpus document appears,
     * including those with fewer than `n` tokens (`n_hits = 0`).
     *
-    * `hashGrams` joins on xxhash64 of the gram instead of the string: a 64-bit
-    * key is collision-free at benchmark-set cardinalities and shrinks the
+    * The join key is xxhash64 of the gram, not the string: a 64-bit key is
+    * collision-free at benchmark-set cardinalities and shrinks the
     * broadcast ~10×. The gram sets are distinct on both sides, so the join
     * match count IS the distinct-overlap count.
     */
   def contaminationReport(corpus: DataFrame, id: String, text: String,
       benchmark: DataFrame, benchText: String,
-      n: Int = 13, minHits: Int = 1, hashGrams: Boolean = true,
-      unicode: Boolean = false): DataFrame = {
-    // hash AFTER explode and only non-null grams: Spark's xxhash64 hashes a
-    // NULL input to the seed constant rather than NULL, which would let the
-    // explode_outer placeholder row of a short document spuriously equi-join
-    def key(c: org.apache.spark.sql.Column) =
-      if (hashGrams) when(c.isNotNull, xxhash64(c)) else c
+      n: Int = 13, minHits: Int = 1): DataFrame = {
     val benchGrams = benchmark
-      .select(explode(VectorExpressions.shingleArr(col(benchText), n, unicode)).as("g"))
-      .select(key(col("g")).as("gram")).distinct()
+      .select(explode(VectorExpressions.shingleArr(col(benchText), n)).as("g"))
+      .select(gramKey(col("g")).as("gram")).distinct()
       .withColumn("__hit", lit(1))
     corpus
       .select(col(id),
-        explode_outer(VectorExpressions.shingleArr(col(text), n, unicode)).as("g"))
-      .select(col(id), key(col("g")).as("gram"))
+        explode_outer(VectorExpressions.shingleArr(col(text), n)).as("g"))
+      .select(col(id), gramKey(col("g")).as("gram"))
       .join(broadcast(benchGrams), Seq("gram"), "left")
       .groupBy(col(id))
       .agg(coalesce(sum(col("__hit")), lit(0)).cast("long").as("n_hits"))
       .withColumn("contaminated", (col("n_hits") >= minHits).cast("int"))
   }
+
+  // hash AFTER explode and only non-null grams: Spark's xxhash64 hashes a
+  // NULL input to the seed constant rather than NULL, which would let the
+  // explode_outer placeholder row of a short document spuriously equi-join
+  private def gramKey(c: org.apache.spark.sql.Column) =
+    when(c.isNotNull, xxhash64(c))
 
   /** Per-document duplicated-span fraction (after Lee et al.,
     * "Deduplicating Training Data Makes Language Models Better", 2022 —
@@ -64,24 +64,21 @@ object Decontaminate {
     * to a threshold filter to drop boilerplate-heavy documents, or the
     * flagged positions to a span trimmer.
     *
-    * Scale: with `hashGrams` the wide stages carry one xxhash64 long per
+    * Scale: the wide stages carry one xxhash64 long per
     * position, never the gram text; the plan is one window count partitioned
     * by gram key and one groupBy(id) — two narrow-key shuffles, no joins,
     * no broadcast, no driver state.
     */
-  def dupSpanReport(corpus: DataFrame, id: String, text: String, n: Int = 13,
-      hashGrams: Boolean = true, unicode: Boolean = false): DataFrame = {
+  def dupSpanReport(corpus: DataFrame, id: String, text: String,
+      n: Int = 13): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def key(c: org.apache.spark.sql.Column) =
-      if (hashGrams) when(c.isNotNull, xxhash64(c)) else c
     // native positional shingles: ONE normalize+tokenize pass per row (the
     // Column-DSL transform/slice/array_join formulation is interpreted per
     // position and ~10× slower end-to-end)
     val pos = corpus
       .select(col(id),
-        explode_outer(VectorExpressions.shingleArrAll(col(text), n, unicode))
-          .as("g"))
-      .select(col(id), key(col("g")).as("gram"))
+        explode_outer(VectorExpressions.shingleArrAll(col(text), n)).as("g"))
+      .select(col(id), gramKey(col("g")).as("gram"))
     val wg = Window.partitionBy(col("gram"))
     pos.withColumn("__c", when(col("gram").isNotNull, count(lit(1)).over(wg)))
       .groupBy(col(id))
@@ -109,14 +106,14 @@ object Decontaminate {
     * removed, then collapses through a distinct and an anti-join keyed on
     * (id, position) longs. Reassembly is one groupBy(id) sort-collect.
     */
-  def removeDupSpans(corpus: DataFrame, id: String, text: String, n: Int = 13,
-      unicode: Boolean = false): DataFrame = {
+  def removeDupSpans(corpus: DataFrame, id: String, text: String,
+      n: Int = 13): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val tokArr = VectorExpressions.shingleArrAll(col(text), 1, unicode)
+    val tokArr = VectorExpressions.shingleArrAll(col(text), 1)
     val toks = corpus.select(col(id), posexplode(tokArr).as(Seq("p", "tok")))
     val grams = corpus
       .select(col(id),
-        posexplode(VectorExpressions.shingleArrAll(col(text), n, unicode))
+        posexplode(VectorExpressions.shingleArrAll(col(text), n))
           .as(Seq("pos", "g")))
       .select(col(id), col("pos"), xxhash64(col("g")).as("gram"))
     val wg = Window.partitionBy(col("gram")).orderBy(col(id), col("pos"))

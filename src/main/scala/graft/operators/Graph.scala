@@ -130,7 +130,7 @@ object Graph {
     * Output: (`vertex`, `rank`) — `rank` in `1/scale` units.
     */
   def pageRankInt(edges: DataFrame, src: String, dst: String,
-      iters: Int = 3, scale: Long = 1000000L, saltBuckets: Int = 1): DataFrame = {
+      iters: Int = 3, scale: Long = 1000000L): DataFrame = {
     require(iters >= 1, "pageRankInt needs at least one round")
     val e = edges.select(col(src).cast("long").as("a"),
         col(dst).cast("long").as("b"))
@@ -144,19 +144,11 @@ object Graph {
     val base = (15L * scale) / 100L
     var r = verts.withColumn("r", lit(scale))
     for (_ <- 1 to iters) {
-      // per-source (rank, degree) row — narrow, one row per vertex, so
-      // this join is skew-free; the edge join below is where a hub SOURCE
-      // (one `a` with millions of out-edges) lands on a single reducer.
-      // saltBuckets > 1 spreads it with the deterministic Skew scheme
-      // (edge side salted, per-vertex side replicated buckets×); the
-      // groupBy(b) sum needs nothing — its map-side partial aggregation
-      // already collapses a hub DESTINATION to ≤ partitions rows, and long
-      // sums are order-insensitive, so ranks are bit-identical either way.
+      // per-source (rank, degree) row — narrow, one row per vertex; the
+      // groupBy(b) sum's map-side partial aggregation collapses a hub
+      // DESTINATION to ≤ partitions rows
       val rd = deg.join(r.withColumnRenamed("v", "a"), Seq("a"))
-      val joined =
-        if (saltBuckets == 1) e.join(rd, Seq("a"))
-        else graft.ops.Skew.saltedInnerJoin(e, rd, Seq("a"), saltBuckets)
-      val contrib = joined
+      val contrib = e.join(rd, Seq("a"))
         .groupBy(col("b").as("v"))
         .agg(sum(expr("r div d")).as("s"))
       r = verts.join(contrib, Seq("v"), "left")
@@ -174,8 +166,8 @@ object Graph {
     *   rₖ₊₁(v) = (15·scale·[v ∈ S]) div 100
     *              + (85 · Σ_{(u,v)∈E} (rₖ(u) div deg(u))) div 100
     *
-    * Same integer fixed-point arithmetic, per-round shape, overflow bound,
-    * salted-hub-join option, and oracle-unrollability as [[pageRankInt]];
+    * Same integer fixed-point arithmetic, per-round shape, overflow bound
+    * and oracle-unrollability as [[pageRankInt]];
     * the only change is the seed indicator riding the vertex frame (one
     * broadcast-friendly left-semi flag, checkpointed with it). Vertices
     * unreachable from the seeds stay at rank 0 — the property that makes
@@ -185,7 +177,7 @@ object Graph {
     */
   def personalizedPageRankInt(edges: DataFrame, src: String, dst: String,
       seeds: DataFrame, seedCol: String, iters: Int = 3,
-      scale: Long = 1000000L, saltBuckets: Int = 1): DataFrame = {
+      scale: Long = 1000000L): DataFrame = {
     require(iters >= 1, "personalizedPageRankInt needs at least one round")
     val e = edges.select(col(src).cast("long").as("a"),
         col(dst).cast("long").as("b"))
@@ -203,14 +195,8 @@ object Graph {
     var r = verts.withColumn("r", col("__seed") * scale)
       .select(col("v"), col("r"))
     for (_ <- 1 to iters) {
-      // same hub-source mitigation as pageRankInt: the edge side salts,
-      // the one-row-per-vertex (rank, degree) side replicates buckets×;
-      // long sums are order-insensitive, so ranks are bit-identical
       val rd = deg.join(r.withColumnRenamed("v", "a"), Seq("a"))
-      val joined =
-        if (saltBuckets == 1) e.join(rd, Seq("a"))
-        else graft.ops.Skew.saltedInnerJoin(e, rd, Seq("a"), saltBuckets)
-      val contrib = joined
+      val contrib = e.join(rd, Seq("a"))
         .groupBy(col("b").as("v"))
         .agg(sum(expr("r div d")).as("s"))
       r = verts.join(contrib, Seq("v"), "left")
@@ -917,8 +903,7 @@ object Graph {
     *   mₖ₊₁(v,l) = (15·scale·[v ∈ S_l]) div 100
     *               + (85 · Σ_{(u,v)∈E} (mₖ(u,l) div deg(u))) div 100
     *
-    * Same overflow bound and salting considerations as PPR (multiply the
-    * bound by |L| classes). Ties break to the SMALLEST label; vertices
+    * Same overflow bound as PPR (multiply it by |L| classes). Ties break to the SMALLEST label; vertices
     * reached by no class mass emit null.
     *
     * Output: (`vertex`, `label`, `mass`) — the winning class and its

@@ -33,10 +33,9 @@ object Bpe {
     * whitespace tokenize chain). One explode + one map-side-combinable
     * groupBy; the result is dictionary-sized.
     */
-  def wordCounts(corpus: DataFrame, text: String,
-      unicode: Boolean = false): DataFrame =
+  def wordCounts(corpus: DataFrame, text: String): DataFrame =
     corpus
-      .select(explode(VectorExpressions.shingleArrAll(col(text), 1, unicode))
+      .select(explode(VectorExpressions.shingleArrAll(col(text), 1))
         .as("word"))
       .groupBy(col("word"))
       .agg(count(lit(1)).as("c"))
@@ -50,8 +49,8 @@ object Bpe {
     * BEFORE rows reach the driver, not after.
     */
   def topWordCountsFrame(corpus: DataFrame, text: String,
-      maxDictWords: Int = 1000000, unicode: Boolean = false): DataFrame =
-    wordCounts(corpus, text, unicode)
+      maxDictWords: Int = 1000000): DataFrame =
+    wordCounts(corpus, text)
       .orderBy(col("c").desc, col("word"))
       .limit(maxDictWords)
 
@@ -61,9 +60,8 @@ object Bpe {
     * the same (count desc, word asc) key.
     */
   def topWordCounts(corpus: DataFrame, text: String,
-      maxDictWords: Int = 1000000,
-      unicode: Boolean = false): Seq[(String, Long)] =
-    topWordCountsFrame(corpus, text, maxDictWords, unicode)
+      maxDictWords: Int = 1000000): Seq[(String, Long)] =
+    topWordCountsFrame(corpus, text, maxDictWords)
       .collect().iterator
       .map(r => (r.getString(0), r.getLong(1))).toVector
 

@@ -31,28 +31,25 @@ object CharLm {
   /** Bigram counts over the normalized text of `corpus` (space included —
     * it models word boundaries). Result is alphabet²-sized.
     */
-  def bigramCounts(corpus: DataFrame, text: String,
-      unicode: Boolean = false): DataFrame =
+  def bigramCounts(corpus: DataFrame, text: String): DataFrame =
     corpus
       .select(explode(org.apache.spark.sql.graftx.CharLmExpressions
-        .charBigrams(col(text), unicode)).as("p"))
+        .charBigrams(col(text))).as("p"))
       .select(substring(col("p"), 1, 1).as("c1"),
         substring(col("p"), 2, 1).as("c2"))
       .groupBy(col("c1"), col("c2"))
       .agg(count(lit(1)).as("b"))
 
-  /** Bounded driver handoff for [[bigramCounts]]: alphabet² is ~1.4k rows
-    * for ASCII corpora, but a raw-unicode crawl (CJK, emoji, mojibake) can
-    * push distinct bigrams toward hundreds of millions — so the handoff is
+  /** Bounded driver handoff for [[bigramCounts]]: the normalized alphabet
+    * `[a-z0-9 ]` gives at most 37² ≈ 1.4k rows, and the handoff is still
     * capped at the `maxPairs` heaviest bigrams (count desc, then c1/c2 asc:
     * deterministic under ties) INSIDE the plan, same shape as
-    * [[Bpe.topWordCountsFrame]]. The cap never binds on a sane alphabet;
-    * when it does, the model trains on the dominant sub-alphabet instead of
-    * OOMing the driver.
+    * [[Bpe.topWordCountsFrame]]. The cap never binds at the default; when a
+    * caller lowers it, the model trains on the dominant sub-alphabet.
     */
   def topBigramCountsFrame(corpus: DataFrame, text: String,
-      maxPairs: Int = 1 << 20, unicode: Boolean = false): DataFrame =
-    bigramCounts(corpus, text, unicode)
+      maxPairs: Int = 1 << 20): DataFrame =
+    bigramCounts(corpus, text)
       .orderBy(col("b").desc, col("c1"), col("c2"))
       .limit(maxPairs)
 
@@ -60,9 +57,8 @@ object CharLm {
     * driver by construction.
     */
   def topBigramCounts(corpus: DataFrame, text: String,
-      maxPairs: Int = 1 << 20,
-      unicode: Boolean = false): Seq[((String, String), Long)] =
-    topBigramCountsFrame(corpus, text, maxPairs, unicode)
+      maxPairs: Int = 1 << 20): Seq[((String, String), Long)] =
+    topBigramCountsFrame(corpus, text, maxPairs)
       .collect().iterator
       .map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toVector
 

@@ -27,25 +27,14 @@ object Drift {
 
   /** Per-bucket PSI report: `bucket, ref_count, cur_count, psi_q`
     * (micro-nats; Σ psi_q over buckets = the headline PSI).
-    *
-    * `sketchEdges = true` switches ONLY the edge derivation to the
-    * mergeable Greenwald-Khanna sketch behind `percentile_approx`
-    * (`1/sketchAccuracy` rank error): no global sort of the reference
-    * anywhere in the plan — the 100 TB regime where even the reference
-    * slice is too big to window. Bucket counts, smoothing, and the
-    * micro-nat quantization are unchanged; edges a few ranks off move
-    * O(n/sketchAccuracy) rows between adjacent buckets, which perturbs PSI
-    * by O(1/sketchAccuracy) — well under any alerting threshold. The
-    * exact path remains the default (and the oracle gate's form).
     */
   def psiReport(ref: DataFrame, cur: DataFrame, valueCol: String,
-      buckets: Int = 10, sketchEdges: Boolean = false,
-      sketchAccuracy: Int = 10000): DataFrame = {
+      buckets: Int = 10): DataFrame = {
     val v = col(valueCol)
     // edges: value at rank ceil(n·j/buckets), j = 1..buckets-1. Ordering by
     // value alone is deterministic HERE: ties share the value, and the
     // picked element is a value, not a row.
-    lazy val exactEdges = {
+    val edges = {
       val w = Window.orderBy(v)
       val ranked = ref.select(v)
         .withColumn("__rn", row_number().over(w))
@@ -55,13 +44,6 @@ object Drift {
           .as(s"e$j"))
       ranked.agg(edgeCols.head, edgeCols.tail: _*)
     }
-    lazy val sketchedEdges = ref
-      .agg(percentile_approx(v,
-        typedlit((1 until buckets).map(_.toDouble / buckets)),
-        lit(sketchAccuracy)).as("__es"))
-      .select((1 until buckets).map(j =>
-        element_at(col("__es"), j).as(s"e$j")): _*)
-    val edges = if (sketchEdges) sketchedEdges else exactEdges
 
     def bucketed(df: DataFrame): DataFrame = {
       val b = (1 until buckets)

@@ -658,8 +658,9 @@ object TextQueries extends QueryPack {
     // a punctuation/case/spacing-jittered variant normalizes to the same
     // fingerprint and the same bigram-shingle set. The ASCII normalize
     // chain strips every non-[a-z0-9] char and is blind here; this query
-    // gates the \p{L}\p{N}+NFC chain against DuckDB's independent
-    // nfc_normalize + RE2 evaluation, value by value.
+    // gates the \p{L}\p{N}+NFKC chain against DuckDB's independent
+    // nfc_normalize + RE2 evaluation, value by value (the corpus has no
+    // compatibility characters, so NFKC ≡ NFC on it).
     "t_unicode_dedup" -> ((s, dir) => {
       val uni = translate(
         regexp_replace(col("text"), "data", "数据"),
@@ -1217,7 +1218,7 @@ object TextQueries extends QueryPack {
       "SELECT CAST(0 AS BIGINT) AS native_hof_mismatches",
 
     "t_unicode_dedup" -> {
-      // DuckDB mirror of TextNormalize.normalizeUnicode (NFC mode): RE2's
+      // DuckDB mirror of TextNormalize.normalizeUnicode (NFKC ≡ NFC here): RE2's
       // \p{L}\p{N} are the same Unicode categories as Java's, utf8proc
       // lower == Locale.ROOT lower on this corpus, nfc_normalize == NFC.
       def uNorm(c: String) =

@@ -283,32 +283,26 @@ class GraphSpec extends AnyFunSuite {
       (1L, 3L, 3 * w2), (2L, 4L, 2 * w3), (2L, 5L, 2 * w3), (4L, 5L, 2 * w3)))
   }
 
-  test("salted pagerank is bit-identical on a hub-source star graph") {
-    // hub 0 has out-degree 400 — the exact shape that makes join key a=0
-    // hot; with salting on, ranks must still match the unsalted run AND
-    // the independent fold exactly (long sums are order-insensitive)
+  test("pagerank is bit-identical to the integer fold on a hub-source star graph") {
+    // hub 0 has out-degree 400 — the shape that makes join key a=0 hot;
+    // ranks must match the independent fold exactly (long sums are
+    // order-insensitive)
     val star = (1L to 400L).flatMap(i => Seq((0L, i), (i, 0L)))
     val df = star.toDF("a", "b")
-    val salted = Graph.pageRankInt(df, "a", "b", iters = 3, saltBuckets = 8)
+    val got = Graph.pageRankInt(df, "a", "b", iters = 3)
       .as[(Long, Long)].collect().toMap
-    val plain = Graph.pageRankInt(df, "a", "b", iters = 3)
-      .as[(Long, Long)].collect().toMap
-    assert(salted === plain)
-    assert(salted === prRef(star, 3))
-    assert(salted(0L) > salted(1L))
+    assert(got === prRef(star, 3))
+    assert(got(0L) > got(1L))
   }
 
-  test("salted personalized pagerank is bit-identical on a hub-source star") {
-    // same hub shape as the pageRankInt salting spec, seeded at a leaf:
-    // salted ≡ unsalted ≡ the in-memory integer fold
+  test("personalized pagerank is bit-identical to the seeded fold on a hub-source star") {
+    // same hub shape as the pageRankInt spec, seeded at a leaf: the
+    // operator ≡ the in-memory integer fold
     val star = (1L to 400L).flatMap(i => Seq((0L, i), (i, 0L)))
     val df = star.toDF("a", "b")
     val seeds = Seq(Tuple1(7L)).toDF("s")
-    val salted = Graph.personalizedPageRankInt(df, "a", "b", seeds, "s",
-      iters = 3, saltBuckets = 8).as[(Long, Long)].collect().toMap
-    val plain = Graph.personalizedPageRankInt(df, "a", "b", seeds, "s",
+    val got = Graph.personalizedPageRankInt(df, "a", "b", seeds, "s",
       iters = 3).as[(Long, Long)].collect().toMap
-    assert(salted === plain)
     // independent fold of the seeded recurrence
     val adj = star.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     val vs = adj.keySet
@@ -319,7 +313,7 @@ class GraphSpec extends AnyFunSuite {
       r = vs.map(v => v ->
         ((if (v == 7L) 150000L else 0L) + 85L * contrib(v) / 100L)).toMap
     }
-    assert(salted === r)
+    assert(got === r)
   }
 
   test("star variant handles a random multi-component graph") {

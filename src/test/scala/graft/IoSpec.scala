@@ -82,7 +82,7 @@ class IoSpec extends AnyFunSuite {
     val magics = bytes.sliding(2).count(p =>
       (p(0) & 0xFF) == 0x1F && (p(1) & 0xFF) == 0x8B)
     assert(magics >= 3)
-    val parsed = Warc.parseArchive(bytes)
+    val parsed = Warc.parseArchiveIterator(bytes).toSeq
     assert(parsed.size == 3)
     parsed.zip(recs).foreach { case (p, r) =>
       assert(p.version == "WARC/1.0")
@@ -94,7 +94,7 @@ class IoSpec extends AnyFunSuite {
     }
     // uncompressed WARC (no gzip) parses identically
     val plain = recs.flatMap(Warc.encodeRecord).toArray
-    assert(Warc.parseArchive(plain).size == 3)
+    assert(Warc.parseArchiveIterator(plain).size == 3)
   }
 
   test("warc: truncation and corruption keep completed records and never " +
@@ -105,7 +105,7 @@ class IoSpec extends AnyFunSuite {
       (s"body number $i, " * 10).getBytes("UTF-8")))
     val bytes = Warc.encodeArchive(recs)
     // truncate inside the LAST member: first records survive
-    val cut = Warc.parseArchive(bytes.dropRight(25))
+    val cut = Warc.parseArchiveIterator(bytes.dropRight(25)).toSeq
     assert(cut.size >= 2 && cut.size < 4)
     assert(cut.head.headers("warc-record-id") == "urn:graft:1")
     // corrupt the SECOND member's gzip magic: member 1 survives, the
@@ -113,17 +113,17 @@ class IoSpec extends AnyFunSuite {
     val starts = (0 until bytes.length - 1).filter(i =>
       (bytes(i) & 0xFF) == 0x1F && (bytes(i + 1) & 0xFF) == 0x8B)
     val corrupt = bytes.clone(); corrupt(starts(1)) = 0x00.toByte
-    val c = Warc.parseArchive(corrupt)
+    val c = Warc.parseArchiveIterator(corrupt).toSeq
     assert(c.size == 1 && c.head.headers("warc-record-id") == "urn:graft:1")
     // junk bytes between plain records: the scan resumes at the next
     // version line
     val junky = Warc.encodeRecord(recs(0)) ++
       "NOISE NOISE".getBytes("UTF-8") ++ Warc.encodeRecord(recs(1))
-    assert(Warc.parseArchive(junky).size == 2)
+    assert(Warc.parseArchiveIterator(junky).size == 2)
     // a record with a declared length past the buffer is dropped
     val r = Warc.encodeRecord(recs(0))
-    assert(Warc.parseArchive(r.dropRight(10)).isEmpty)
-    assert(Warc.parseArchive(Array.fill(64)(0x41.toByte)).isEmpty)
+    assert(Warc.parseArchiveIterator(r.dropRight(10)).isEmpty)
+    assert(Warc.parseArchiveIterator(Array.fill(64)(0x41.toByte)).isEmpty)
   }
 
   test("warc: a THROWN upstream failure propagates out of the streamed " +
@@ -212,7 +212,7 @@ class IoSpec extends AnyFunSuite {
       s"got ${got.size} records; the capped record must read as damage")
     assert(it.highWater <= 64 * 1024, "the cap bounds the working set")
     // an uncapped parse of the same bytes yields all three (sanity)
-    assert(Warc.parseArchive(bytes).size == 3)
+    assert(Warc.parseArchiveIterator(bytes).size == 3)
     // cap domain is enforced: 0 and >2^30 would each reintroduce the
     // arithmetic the guard exists to prevent
     intercept[IllegalArgumentException] {
@@ -237,11 +237,11 @@ class IoSpec extends AnyFunSuite {
       (bytes(i) & 0xFF) == 0x1F && (bytes(i + 1) & 0xFF) == 0x8B)
     assert(starts.size >= 3)
     // cut at the third member's first byte: members 1-2 are complete
-    val atBoundary = Warc.parseArchive(bytes.take(starts(2)))
+    val atBoundary = Warc.parseArchiveIterator(bytes.take(starts(2))).toSeq
     assert(atBoundary.map(_.headers("warc-record-id")) ==
       Seq("urn:graft:1", "urn:graft:2"))
     // cut mid-member-2: member 1 survives
-    val midMember = Warc.parseArchive(bytes.take(starts(1) + 7))
+    val midMember = Warc.parseArchiveIterator(bytes.take(starts(1) + 7)).toSeq
     assert(midMember.map(_.headers("warc-record-id")) == Seq("urn:graft:1"))
   }
 
@@ -302,8 +302,8 @@ class IoSpec extends AnyFunSuite {
       (d.record_id, d.target_uri, d.content_length, d.text)
     val streamed = Warc.warcScan(spark, dir).collect().map(key).toSet
     val inMemory = new java.io.File(dir).listFiles().flatMap { f =>
-      Warc.parseArchive(
-        java.nio.file.Files.readAllBytes(f.toPath)).map(p =>
+      Warc.parseArchiveIterator(
+        java.nio.file.Files.readAllBytes(f.toPath)).toSeq.map(p =>
         (p.headers("warc-record-id"), p.headers("warc-target-uri"),
           p.body.length.toLong, new String(p.body, "UTF-8")))
     }.toSet

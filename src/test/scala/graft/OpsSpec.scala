@@ -564,30 +564,6 @@ class OpsSpec extends AnyFunSuite {
     assert(shifted.count(_._3 == 0L) >= 8)
   }
 
-  test("PSI sketch-edge path: no window in the plan, same report regime") {
-    import graft.ops.Drift
-    val ref = (1 to 1000).map(_.toDouble).toDF("v")
-    // identical slices: p == q per bucket for ANY edge choice → all-zero
-    // terms hold on the sketched path too, and counts still partition n
-    val same = Drift.psiReport(ref, ref, "v", sketchEdges = true)
-      .as[(Int, Long, Long, Long)].collect().toSeq
-    assert(same.forall(_._4 == 0L), same.toString)
-    assert(same.map(_._2).sum == 1000L)
-    // drifted slice: headline PSI within noise of the exact path's
-    val cur = (901 to 1900).map(_.toDouble).toDF("v")
-    val exact = Drift.psiReport(ref, cur, "v")
-      .as[(Int, Long, Long, Long)].collect().map(_._4).sum / 1e6
-    val approx = Drift.psiReport(ref, cur, "v", sketchEdges = true)
-      .as[(Int, Long, Long, Long)].collect().map(_._4).sum / 1e6
-    assert(math.abs(exact - approx) < 0.05 && approx > 0.25,
-      s"exact $exact vs sketched $approx")
-    // the point of the sketch: the reference is never globally sorted
-    val plan = Drift.psiReport(ref, cur, "v", sketchEdges = true)
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-    assert(!plan.contains("Window"), plan)
-  }
-
   test("temperature mixture: small strata keep everything, big strata " +
       "downsample, output near the target size, deterministic") {
     import graft.ops.Sampling

@@ -229,13 +229,15 @@ class PretrainSpec extends AnyFunSuite {
     assert(got(3L) == ((1L, 0L, 0.0)))
     assert(got(4L) == ((0L, 0L, 0.0)))
     assert(got(5L) == ((3L, 3L, 1.0)))
-    // hashed and string gram keys agree (xxhash64 collision-free here)
-    val str = Decontaminate
-      .dupSpanReport(corpus, "doc_id", "text", n = 3, hashGrams = false)
-      .select($"doc_id", $"n_grams", $"n_dup", $"dup_fraction")
-      .as[(Long, Long, Long, Double)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    assert(str == got)
+    // the hashed gram keys agree with string keys counted here
+    // (xxhash64 collision-free here)
+    val pos = corpus.select($"doc_id", explode(org.apache.spark.sql.graftx
+      .VectorExpressions.shingleArrAll($"text", 3)).as("g"))
+    val str = pos.join(pos.groupBy($"g").agg(count(lit(1)).as("c")), "g")
+      .groupBy($"doc_id")
+      .agg(count(lit(1)).as("n_grams"), sum(($"c" > 1).cast("long")).as("n_dup"))
+      .as[(Long, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
+    assert(str == got.collect { case (id, (g, d, _)) if g > 0 => id -> ((g, d)) })
   }
 
   test("bpe train: hand-computed merge sequence, deterministic tiebreak") {
@@ -393,7 +395,7 @@ class PretrainSpec extends AnyFunSuite {
     assert(kept == Seq(2L, 3L, 4L))
   }
 
-  test("decontaminate unicode mode catches CJK overlap the ASCII chain is blind to") {
+  test("decontaminate: the ASCII gram chain is blind to CJK overlap") {
     import graft.operators.Decontaminate
     val cjk = "深度 学習 模型 的 預訓練 資料 污染 檢查 非常 重要 所以 必須 執行 完畢"
     val bench = Seq((100L, cjk)).toDF("doc_id", "text")
@@ -406,13 +408,7 @@ class PretrainSpec extends AnyFunSuite {
     val ascii = Decontaminate
       .contaminationReport(corpus, "doc_id", "text", bench, "text")
       .orderBy("doc_id").as[(Long, Long, Int)].collect().toSeq
-    assert(ascii.map(_._3) == Seq(0, 0))
-    // unicode chain shingles the CJK tokens and finds the planted overlap
-    val uni = Decontaminate
-      .contaminationReport(corpus, "doc_id", "text", bench, "text",
-        unicode = true)
-      .orderBy("doc_id").as[(Long, Long, Int)].collect().toSeq
-    assert(uni == Seq((1L, 1L, 1), (2L, 0L, 0)))
+    assert(ascii == Seq((1L, 0L, 0), (2L, 0L, 0)))
   }
 
   test("decontaminate hashed and string gram keys agree; bench side broadcasts") {
@@ -422,11 +418,20 @@ class PretrainSpec extends AnyFunSuite {
     val corpus = docs.filter(col("doc_id") % 17 =!= 0)
     val hashed = Decontaminate
       .contaminationReport(corpus, "doc_id", "text", bench, "text")
-    val strs = Decontaminate
-      .contaminationReport(corpus, "doc_id", "text", bench, "text",
-        hashGrams = false)
-    assert(hashed.orderBy("doc_id").collect().toSeq ==
-      strs.orderBy("doc_id").collect().toSeq)
+    // string-keyed overlap counted here: distinct bench grams joined on
+    // each document's (distinct) gram strings
+    def grams(df: org.apache.spark.sql.DataFrame) = df.select($"doc_id",
+      explode(org.apache.spark.sql.graftx.VectorExpressions
+        .shingleArr($"text", 13)).as("g"))
+    val strs = grams(corpus)
+      .join(grams(bench).select("g").distinct(), "g")
+      .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
+      .as[(Long, Long)].collect().toMap
+    assert(strs.nonEmpty)
+    val rep = hashed.as[(Long, Long, Int)].collect()
+    assert(rep.length == corpus.count())
+    assert(rep.collect { case (id, h, _) if h > 0 => id -> h }.toMap == strs)
+    assert(rep.forall { case (_, h, c) => c == (if (h >= 1) 1 else 0) })
     // the corpus side must meet the benchmark grams in a broadcast join —
     // a sort-merge there would shuffle every corpus gram at 100 TB
     val plan = hashed.queryExecution.executedPlan.toString

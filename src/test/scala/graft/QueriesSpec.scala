@@ -220,4 +220,19 @@ class QueriesSpec extends AnyFunSuite {
     assert(dupO.isEmpty, s"duplicate oracle names across packs: $dupO")
   }
 
+  test("bench prior artifact: per-query seconds come from the queries " +
+    "object, not the sample counts that follow it") {
+    // the shape Bench writes to bench_out.json: `samples` repeats every
+    // query key with an integer count after `queries`
+    val artifact =
+      """{"metric":"total","value":5.4,"unit":"sec",""" +
+        """"queries":{"a_approx_distinct":1.705508603,"q1_agg":3.7,"x_fail":-1.0},""" +
+        """"failed":{"x_fail":"java.lang.RuntimeException"},""" +
+        """"samples":{"a_approx_distinct":1,"q1_agg":4,"x_fail":0},""" +
+        """"prewarm_sec":2.1,"loadavg_start":"0.5 0.4 0.3","sf":"/data/sf0.1"}"""
+    assert(Bench.priorSeconds(artifact) == Map(
+      "a_approx_distinct" -> 1.705508603, "q1_agg" -> 3.7, "x_fail" -> -1.0))
+    assert(Bench.priorSeconds("""{"metric":"total"}""").isEmpty)
+  }
+
 }
